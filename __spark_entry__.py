@@ -75,7 +75,7 @@ def _kg_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             TJ.write_synthetic_tacred_json(path, n=24, seed=11)
         feats = TJ.tacred_to_candidates(TJ.read_tacred_json(spark, path))
         feats = feats.withColumn(
-            "label_id", M.label_to_id(F.col("gold_relation")).cast("long")
+            "label_id", F.expr(M.label_to_id_sql("gold_relation")).cast("long")
         ).repartition(2).cache()
         vocab = {CN.PAD_TOKEN: 0, CN.UNK_TOKEN: 1}
         for r in feats.select("masked_tokens").collect():

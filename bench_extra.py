@@ -2,13 +2,13 @@
 """Round-8 optimization measurement harness (guide §1).
 
 Separate from the FROZEN bench.py: this file isolates the expensive
-paths with noop sinks, splits walls by stage, and dumps
-``.explain("formatted")`` plans to plans/r08/.  Usage:
+paths with noop sinks, splits walls by stage, and dumps normalized
+``.explain("formatted")`` plans.  Usage:
 
     python bench_extra.py stages     # kg pipeline stage split
     python bench_extra.py fold       # incremental_fold breakdown
     python bench_extra.py queries q1_pricing_summary dup_clusters ...
-    python bench_extra.py plans [names...]   # dump explain(formatted)
+    python bench_extra.py plans OUT_DIR [names...]   # dump explain(formatted)
     python bench_extra.py profile    # cProfile of the inference UDF body
 
 Environment contract matches bench.py ($SPARK_GRAFT_SF_DIR /
@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -135,23 +136,47 @@ def section_queries(spark, names: list[str]) -> None:
     print(json.dumps({"queries": out}))
 
 
-def section_plans(spark, names: list[str]) -> None:
+def _renumber(pattern: str, fmt: str, text: str) -> str:
+    seen: dict[str, int] = {}
+    return re.sub(
+        pattern, lambda m: fmt.format(seen.setdefault(m.group(1), len(seen))),
+        text,
+    )
+
+
+def normalize_plan(text: str) -> str:
+    """Make dumps of the same plan from two sessions and checkouts
+    diff-equal: the checkout and the testdata directory become
+    ``<repo>`` and ``<sf_dir>``, and every per-session id is renumbered
+    in order of first appearance: lambda variables (``x_54``, ``sp``,
+    ... -> ``v0``, ``v1``, ...), ``#<exprId>`` suffixes, ``plan_id=``
+    and ``RDD[<id>]``.  Lambda variables are keyed by exprId, not name,
+    so a name reused across lambdas (SQL text) and a fresh name per
+    lambda (the Column API) normalize alike."""
+    text = text.replace(os.path.dirname(os.path.abspath(__file__)), "<repo>")
+    text = text.replace(os.path.abspath(SF_DIR), "<sf_dir>")
+    text = _renumber(r"lambda \w+#(\d+)", "lambda v{}", text)
+    text = _renumber(r"#(\d+)", "#{}", text)
+    text = _renumber(r"plan_id=(\d+)", "plan_id={}", text)
+    return _renumber(r"RDD\[(\d+)\]", "RDD[{}]", text)
+
+
+def section_plans(spark, out_dir: str, names: list[str]) -> None:
     import __spark_entry__ as entry
 
     qs = entry.queries()
     # match the bench's warehouse-section scan config so adaptive reads
     # (tb) see the same split counts the timed run sees
     spark.conf.set("spark.sql.files.maxPartitionBytes", "128m")
-    os.makedirs("plans/r08", exist_ok=True)
-    suffix = os.environ.get("SPARK_GRAFT_PLAN_SUFFIX", "before")
+    os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = qs[name](spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        path = f"plans/r08/{name}_{suffix}.txt"
+        path = os.path.join(out_dir, f"{name}.txt")
         with open(path, "w") as fh:
-            fh.write(plan)
+            fh.write(normalize_plan(plan))
         print(f"wrote {path} ({len(plan.splitlines())} lines)")
 
 
@@ -246,7 +271,7 @@ def main() -> None:
     elif mode == "queries":
         section_queries(spark, sys.argv[2:])
     elif mode == "plans":
-        section_plans(spark, sys.argv[2:])
+        section_plans(spark, sys.argv[2], sys.argv[3:])
     elif mode == "profile":
         section_profile(spark)
     else:

@@ -5,31 +5,48 @@ array; the small fixed dictionaries (POS/NER/DEPREL/labels) become map
 literals with an UNK fallback (ref:data/loader.py:107-116,287-289).
 The large word vocab is handled separately (broadcast dict inside the
 Arrow inference UDF) because a 50k-entry map literal would bloat the plan.
+
+Each builder returns Spark SQL text over column names (or other SQL
+expressions) for one ``F.expr`` call: built as pyspark Columns, every
+node and literal of these wide expressions is its own py4j round trip
+at plan construction, while SQL text crosses to the JVM once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from .. import constants as C
-from . import exprcache as XC
 
 
-def lower_tokens(tokens: Column) -> Column:
+def sql_literal(value: str | int) -> str:
+    """Spark SQL literal text for a string or int.  Strings use Spark's
+    default backslash-escaped literal syntax, so keys such as ``''``,
+    ``\\`` or ``O'Brien`` survive the round trip through the parser."""
+    if isinstance(value, str):
+        return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return str(int(value))
+
+
+def sql_map(d: dict) -> str:
+    """``map(k1, v1, ...)`` literal text, entries in ``d``'s order."""
+    return "map(" + ", ".join(
+        f"{sql_literal(k)}, {sql_literal(v)}" for k, v in d.items()
+    ) + ")"
+
+
+def lower_tokens_sql(tokens: str) -> str:
     """P1 (ref:data/loader.py:101-103)."""
-    return F.transform(tokens, F.lower)
+    return f"transform({tokens}, x -> lower(x))"
 
 
-def mask_entity_spans(
-    tokens: Column,
-    subj_start: Column,
-    subj_end: Column,
-    obj_start: Column,
-    obj_end: Column,
-    subj_type: Column,
-    obj_type: Column,
-) -> Column:
+def mask_entity_spans_sql(
+    tokens: str,
+    subj_start: str,
+    subj_end: str,
+    obj_start: str,
+    obj_end: str,
+    subj_type: str,
+    obj_type: str,
+) -> str:
     """P2: overwrite the subject span with ``SUBJ-<type>`` and the object
     span with ``OBJ-<type>`` (ref:data/loader.py:107-110).
 
@@ -37,68 +54,38 @@ def mask_entity_spans(
     on overlapping spans the object mask wins — replicated by checking the
     object span first here.
     """
-    return F.transform(
-        tokens,
-        lambda x, i: F.when(
-            (i >= obj_start) & (i <= obj_end), F.concat(F.lit("OBJ-"), obj_type)
-        )
-        .when(
-            (i >= subj_start) & (i <= subj_end), F.concat(F.lit("SUBJ-"), subj_type)
-        )
-        .otherwise(x),
+    return (
+        f"transform({tokens}, (x, i) -> "
+        f"CASE WHEN i >= {obj_start} AND i <= {obj_end} "
+        f"THEN concat('OBJ-', {obj_type}) "
+        f"WHEN i >= {subj_start} AND i <= {subj_end} "
+        f"THEN concat('SUBJ-', {subj_type}) "
+        "ELSE x END)"
     )
 
 
-def _map_literal(d: dict[str, int]) -> Column:
-    # literal maps are pure functions of their entries: memoize the
-    # Column so repeated plan constructions skip the 2x|d| py4j literal
-    # roundtrips (r8, functions/exprcache.py)
-    def build() -> Column:
-        pairs: list[Column] = []
-        for k, v in d.items():
-            pairs.append(F.lit(k))
-            pairs.append(F.lit(v))
-        return F.create_map(*pairs)
-
-    return XC.cached_column(
-        ("map_literal", tuple(d.items())), build
-    )
-
-
-def map_tags_to_ids(tags: Column, tag_dict: dict[str, int]) -> Column:
+def map_tags_to_ids_sql(tags: str, tag_dict: dict[str, int]) -> str:
     """P4: tag-sequence -> id-sequence with UNK fallback
     (ref:data/loader.py:114-116,287-289)."""
-    m = _map_literal(tag_dict)
-    return F.transform(
-        tags, lambda x: F.coalesce(F.element_at(m, x), F.lit(C.UNK_ID))
+    return (
+        f"transform({tags}, x -> "
+        f"coalesce(element_at({sql_map(tag_dict)}, x), {C.UNK_ID}))"
     )
 
 
-def label_to_id(label: Column) -> Column:
+def label_to_id_sql(label: str) -> str:
     """P5 forward map (ref:data/loader.py:188)."""
-    m = _map_literal(C.LABEL_TO_ID)
-    return F.coalesce(F.element_at(m, label), F.lit(C.LABEL_TO_ID[C.NO_RELATION]))
+    return (
+        f"coalesce(element_at({sql_map(C.LABEL_TO_ID)}, {label}), "
+        f"{C.LABEL_TO_ID[C.NO_RELATION]})"
+    )
 
 
-def id_to_label(label_id: Column) -> Column:
+def id_to_label_sql(label_id: str) -> str:
     """P5 inverse map (ref:runner.py:245, ref:eval.py:77)."""
-
-    def build() -> Column:
-        pairs: list[Column] = []
-        for i, name in C.ID_TO_LABEL.items():
-            pairs.append(F.lit(i))
-            pairs.append(F.lit(name))
-        return F.create_map(*pairs)
-
-    m = XC.cached_column(("id_to_label_map",), build)
-    return F.element_at(m, label_id.cast("int"))
+    return f"element_at({sql_map(C.ID_TO_LABEL)}, CAST({label_id} AS INT))"
 
 
-def normalize_glove_token(token: Column) -> Column:
+def normalize_glove_token_sql(token: str) -> str:
     """P12: bracket-token normalization (ref:utils/vocab.py:46-55)."""
-    pairs: list[Column] = []
-    for k, v in C.GLOVE_NORMALIZE.items():
-        pairs.append(F.lit(k))
-        pairs.append(F.lit(v))
-    sm = F.create_map(*pairs)
-    return F.coalesce(F.element_at(sm, token), token)
+    return f"coalesce(element_at({sql_map(C.GLOVE_NORMALIZE)}, {token}), {token})"

@@ -32,8 +32,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from . import exprcache as XC
-
 MINHASH_K = 8
 MINHASH_BANDS = 2  # 2 bands x 4 rows
 
@@ -46,10 +44,10 @@ def _affine_consts(k: int) -> tuple[int, int]:
     return a, b
 
 
-def base_hash(col: Column) -> Column:
+def base_hash_sql(x: str) -> str:
     """Shingle -> 60-bit integer: md5 hex chars [2..16] as BIGINT
     (identical in DuckDB: see BASE_HASH_DUCK)."""
-    return F.conv(F.substring(F.md5(col), 2, 15), 16, 10).cast("long")
+    return f"CAST(conv(substring(md5({x}), 2, 15), 16, 10) AS BIGINT)"
 
 
 BASE_HASH_DUCK = "CAST(('0x' || substr(md5({x}), 2, 15)) AS BIGINT)"
@@ -60,7 +58,7 @@ BASE_HASH_DUCK = "CAST(('0x' || substr(md5({x}), 2, 15)) AS BIGINT)"
 _WORD_A = 1103515245
 
 
-def word_shingle_hashes(col: Column, n: int = 3) -> Column:
+def word_shingle_hashes_sql(text: str, n: int = 3) -> str:
     """Word n-gram shingle HASHES without building shingle strings: hash
     each token once (md5 -> 60-bit -> mod P), then combine n consecutive
     token hashes with a Horner chain mod P.  Round 3 measurement: the
@@ -69,26 +67,26 @@ def word_shingle_hashes(col: Column, n: int = 3) -> Column:
     arithmetically removes the string building entirely.  Short texts
     fall back to the whole-text hash (one shingle).  DuckDB twin:
     :func:`duck_word_shingle_hashes` (identical arithmetic)."""
-    th = F.transform(F.split(col, " "), lambda t: base_hash(t) % _P)
+    th = f"transform(split({text}, ' '), t -> {base_hash_sql('t')} % {_P})"
     # Horner chain via slice + zip_with, NOT element_at inside a lambda:
     # a lambda body referencing th would re-evaluate the whole token-hash
     # array per element (O(len^2) md5s — measured 10x slower); as slice
     # arguments th is a top-level subexpression, computed once per row
-    m = F.size(th) - (n - 1)
-    acc = F.slice(th, 1, m)
+    m = f"size({th}) - {n - 1}"
+    acc = f"slice({th}, 1, {m})"
     for j in range(1, n):
-        acc = F.zip_with(
-            acc,
-            F.slice(th, 1 + j, m),
-            lambda a, b: (a * F.lit(_WORD_A) + b) % _P,
+        acc = (
+            f"zip_with({acc}, slice({th}, {1 + j}, {m}), "
+            f"(a, b) -> (a * {_WORD_A} + b) % {_P})"
         )
-    return F.when(F.size(th) >= n, acc).otherwise(
-        F.array(base_hash(col) % _P)
+    return (
+        f"CASE WHEN size({th}) >= {n} THEN {acc} "
+        f"ELSE array({base_hash_sql(text)} % {_P}) END"
     )
 
 
 def duck_word_shingle_hashes(text_col: str, n: int = 3) -> str:
-    """DuckDB twin of :func:`word_shingle_hashes` — same base hash, same
+    """DuckDB twin of :func:`word_shingle_hashes_sql` — same base hash, same
     mod-P Horner combination, 1-based list indexing.  The token-hash
     array is inlined at each use (no CTE/subquery needed by callers); the
     oracle recomputing it is irrelevant at gate scale."""
@@ -118,35 +116,35 @@ def word_shingles(col: Column, n: int = 3) -> Column:
     ).otherwise(F.array(col))
 
 
-def char_shingles(col: Column, n: int = 3) -> Column:
-    """Character n-gram shingles of ^col$ (boundary-marked); short strings
-    fall back to the whole marked string."""
-    s = F.concat(F.lit("^"), col, F.lit("$"))
-    return F.when(
-        F.length(s) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.length(s) - n + 1),
-            lambda i: s.substr(i, F.lit(n)),
-        ),
-    ).otherwise(F.array(s))
+def char_shingles_sql(text: str, n: int = 3) -> str:
+    """Character n-gram shingles of ^text$ (boundary-marked); short
+    strings fall back to the whole marked string."""
+    s = f"concat('^', {text}, '$')"
+    return (
+        f"CASE WHEN length({s}) >= {n} "
+        f"THEN transform(sequence(1, length({s}) - {n} + 1), "
+        f"i -> substr({s}, i, {n})) "
+        f"ELSE array({s}) END"
+    )
 
 
 def minhash_bands(
     df: DataFrame,
     id_col: str,
-    shingles: Column | None = None,
+    shingles: str | None = None,
     k: int = MINHASH_K,
     bands: int = MINHASH_BANDS,
-    hashes: Column | None = None,
+    hashes: str | None = None,
 ) -> DataFrame:
-    """(id_col, shingle-array expr) -> (id_col, band, band_hash), one row
+    """(id_col, shingle-array SQL) -> (id_col, band, band_hash), one row
     per band.  Signature i = min over shingles of the i-th universal
     affine transform of the shingle's base hash.
 
-    Pass either ``shingles`` (string array; each element is md5-hashed
-    here — the char-shingle path) or ``hashes`` (precomputed integer
-    hash array — the word path via :func:`word_shingle_hashes`, which
-    skips shingle string construction).
+    Pass, as SQL text, either ``shingles`` (string array; each element
+    is md5-hashed here — the char-shingle path) or ``hashes``
+    (precomputed integer hash array — the word path via
+    :func:`word_shingle_hashes_sql`, which skips shingle string
+    construction).
 
     Narrow by construction: hash array in one projection, then k
     ``array_min(transform(...))`` projections — no explode, no groupBy,
@@ -154,24 +152,16 @@ def minhash_bands(
     if hashes is None:
         if shingles is None:
             raise ValueError("minhash_bands: pass either shingles or hashes")
-        hashes = F.transform(shingles, lambda s: base_hash(s))
+        hashes = f"transform({shingles}, s -> {base_hash_sql('s')})"
     rows_per_band = k // bands
-    hashed = df.select(id_col, hashes.alias("__hs"))
-
-    # the k signature projections are pure functions of (i,) over the
-    # __hs column — memoized so repeated plan constructions (the band
-    # build runs per query invocation on the dedup, cluster and
-    # canonicalization paths) skip their py4j lambda roundtrips (r8,
-    # functions/exprcache.py)
-    def _sig_col(i: int):
-        return XC.cached_column(
-            ("minhash_sig", i),
-            lambda: F.array_min(
-                F.transform(F.col("__hs"), lambda h: _affine_sig(h, i))
-            ).alias(f"sig{i}"),
-        )
-
-    sigs = hashed.select(id_col, *[_sig_col(i) for i in range(k)])
+    hashed = df.selectExpr(id_col, f"{hashes} AS __hs")
+    sigs = hashed.selectExpr(
+        id_col,
+        *[
+            f"array_min(transform(__hs, h -> {_affine_sql('h', i)})) AS sig{i}"
+            for i in range(k)
+        ],
+    )
     band_cols = [
         f"{b}, md5(concat_ws('|', "
         + ", ".join(
@@ -187,9 +177,11 @@ def minhash_bands(
     )
 
 
-def _affine_sig(h: Column, k: int) -> Column:
+def _affine_sql(h: str, k: int) -> str:
+    """The k-th universal affine transform of hash ``h``; the same text
+    is valid Spark SQL and DuckDB."""
     a, b = _affine_consts(k)
-    return ((h % _P) * F.lit(a) + F.lit(b)) % _P
+    return f"(({h} % {_P}) * {a} + {b}) % {_P}"
 
 
 # ---- DuckDB twins (used by plans/sql_queries.py and plans/kg_sql.py) ----
@@ -230,11 +222,7 @@ def duck_minhash_ctes(
     of the same base hashes, so values are identical).  Embed after a
     WITH keyword."""
     rows_per_band = k // bands
-    sig_cols = ", ".join(
-        f"MIN(((h % {_P}) * {_affine_consts(i)[0]} + {_affine_consts(i)[1]}) "
-        f"% {_P}) AS sig{i}"
-        for i in range(k)
-    )
+    sig_cols = ", ".join(f"MIN({_affine_sql('h', i)}) AS sig{i}" for i in range(k))
     band_selects = " UNION ALL ".join(
         f"SELECT {id_col}, {b} AS band, md5(concat_ws('|', "
         + ", ".join(

@@ -14,6 +14,8 @@ All are expressed as Spark SQL array expressions (no UDFs).  The binning is
 implemented as an integer-exact CASE chain (bit-length) rather than
 ``floor(log2(x))`` so results cannot drift across libm implementations;
 a DuckDB-dialect builder shares the same chain for oracle queries.
+The Spark builders return SQL text for one ``F.expr`` call (see
+functions/masking.py for why).
 """
 
 from __future__ import annotations
@@ -28,11 +30,11 @@ from .. import constants as C
 _MAX_BIN = 31
 
 
-def log2_bin_sql(var: str) -> str:
+def log2_bin_duckdb(var: str) -> str:
     """CASE-chain SQL for sign(x)*(floor(log2(|x|))+1), 0 -> 0.
 
     Integer-exact: bin(x) = bit_length(x) for x > 0.  Valid in both Spark
-    SQL and DuckDB (plain CASE/WHEN on integers).
+    SQL and DuckDB (plain CASE/WHEN on integers); the DuckDB oracle uses it.
     """
     pos_whens = " ".join(
         f"WHEN {var} >= {1 << (b - 1)} THEN {b}" for b in range(_MAX_BIN, 0, -1)
@@ -47,34 +49,34 @@ def log2_bin_sql(var: str) -> str:
     )
 
 
-def log2_bin(col: Column) -> Column:
-    """Column form of :func:`log2_bin_sql` for scalar int columns.
+def log2_bin_sql(var: str) -> str:
+    """Spark SQL for sign(x)*(floor(log2(|x|))+1), 0 -> 0, over a scalar
+    int expression.
 
-    Integer-exact like the SQL CASE chain, but via ``length(bin(|x|))``
-    (= bit_length for positive ints — the same trick sketches.py uses
-    for the HLL rho): the binning runs once per array ELEMENT on the
-    inference hot path, and one bin/length pair is ~3x cheaper than the
-    62-branch CASE chain the previous form compiled to (r8 measured;
-    values identical on the full int32 range, pinned by the golden
-    vectors in tests/test_positions.py)."""
-    mag_bits = F.length(F.bin(F.abs(col).cast("bigint"))).cast("int")
+    Integer-exact like :func:`log2_bin_duckdb`, but via
+    ``length(bin(|x|))`` (= bit_length for positive ints — the same
+    trick sketches.py uses for the HLL rho): the binning runs once per
+    array ELEMENT on the inference hot path, and one bin/length pair is
+    ~3x cheaper than the 62-branch CASE chain (measured).  Values
+    match the CASE chain for |x| <= 2^31-1, pinned by the golden vectors
+    in tests/test_positions.py; INT_MIN and bigints >= 2^31 are outside
+    that tested domain."""
+    mag_bits = f"CAST(length(bin(CAST(abs({var}) AS BIGINT))) AS INT)"
     return (
-        F.when(col == 0, F.lit(0))
-        .when(col > 0, mag_bits)
-        .otherwise(-mag_bits)
+        f"CASE WHEN {var} = 0 THEN 0 WHEN {var} > 0 THEN {mag_bits} "
+        f"ELSE -{mag_bits} END"
     )
 
 
-def bin_positions(arr: Column) -> Column:
+def bin_positions_sql(arr: str) -> str:
     """P9: bin every element of an int array (ref:data/loader.py:214-228)."""
-    return F.transform(arr, log2_bin)
+    return f"transform({arr}, x -> {log2_bin_sql('x')})"
 
 
-def _empty_int_array() -> Column:
-    return F.array().cast("array<int>")
+_EMPTY_INT_ARRAY = "CAST(array() AS ARRAY<INT>)"
 
 
-def get_positions(start: Column, end: Column, length: Column) -> Column:
+def get_positions_sql(start: str, end: str, length: str) -> str:
     """P8: position sequence relative to a [start, end] span
     (ref:data/loader.py:292-295).
 
@@ -82,21 +84,25 @@ def get_positions(start: Column, end: Column, length: Column) -> Column:
 
     Guards against Spark's descending ``sequence`` when a side is empty.
     """
-    head = F.when(start > 0, F.sequence(-start, F.lit(-1))).otherwise(
-        _empty_int_array()
+    head = (
+        f"CASE WHEN {start} > 0 THEN sequence(-{start}, -1) "
+        f"ELSE {_EMPTY_INT_ARRAY} END"
     )
-    mid = F.array_repeat(F.lit(0), (end - start + 1).cast("int"))
-    tail_n = (length - end - 1).cast("int")
-    tail = F.when(tail_n > 0, F.sequence(F.lit(1), tail_n)).otherwise(
-        _empty_int_array()
+    mid = f"array_repeat(0, CAST({end} - {start} + 1 AS INT))"
+    tail_n = f"CAST({length} - {end} - 1 AS INT)"
+    tail = (
+        f"CASE WHEN {tail_n} > 0 THEN sequence(1, {tail_n}) "
+        f"ELSE {_EMPTY_INT_ARRAY} END"
     )
-    return F.concat(head.cast("array<int>"), mid, tail.cast("array<int>"))
+    return (
+        f"concat(CAST({head} AS ARRAY<INT>), {mid}, CAST({tail} AS ARRAY<INT>))"
+    )
 
 
-def binned_span_positions(start: Column, end: Column, length: Column) -> Column:
+def binned_span_positions_sql(start: str, end: str, length: str) -> str:
     """get_positions followed by log2 binning, as used on the inference path
     (ref:data/loader.py:166-184)."""
-    return bin_positions(get_positions(start, end, length))
+    return bin_positions_sql(get_positions_sql(start, end, length))
 
 
 def relative_position_range(length: Column, max_len: int = C.ABS_MAX_LEN) -> Column:
@@ -104,7 +110,7 @@ def relative_position_range(length: Column, max_len: int = C.ABS_MAX_LEN) -> Col
     (length ``2l-1``) (ref:data/loader.py:142-143)."""
     return F.when(
         length > 0, F.sequence(F.lit(max_len) - length, F.lit(max_len) + length - 2)
-    ).otherwise(_empty_int_array()).cast("array<int>")
+    ).otherwise(F.array().cast("array<int>")).cast("array<int>")
 
 
 def inst_position(token_ids: Column) -> Column:
@@ -130,4 +136,4 @@ def get_positions_duckdb(start: str, end: str, length: str) -> str:
 
 
 def bin_positions_duckdb(arr_expr: str) -> str:
-    return f"list_transform({arr_expr}, __x -> ({log2_bin_sql('__x')}))"
+    return f"list_transform({arr_expr}, __x -> ({log2_bin_duckdb('__x')}))"

@@ -43,8 +43,9 @@ def _softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
 def _linear(x: np.ndarray, p: Params, name: str) -> np.ndarray:
     # For stacked inputs (B, l, d), np.matmul dispatches B separate
     # skinny (l, d) GEMMs; flattening to one (B*l, d) GEMM is ~1.5x
-    # faster (measured, r8) and bit-identical — every output row is the
-    # same row-by-matrix product either way, only the call count changes.
+    # faster (measured) and numerically equivalent (last-ulp may
+    # differ by BLAS build) — every output row is the same row-by-matrix
+    # product either way, only the call count changes.
     w, b = p[f"{name}_w"], p[f"{name}_b"]
     if x.ndim > 2:
         flat = x.reshape(-1, x.shape[-1])
@@ -203,7 +204,8 @@ def lstm_forward(
         c = np.zeros((B, H), dtype=out.dtype)
         # hoist the input projection out of the time loop (one GEMM);
         # flatten (B, l, d) -> (B*l, d) so it IS one GEMM, not B skinny
-        # ones (bit-identical, see _linear)
+        # ones (numerically equivalent, last-ulp may differ by BLAS
+        # build; see _linear)
         xg = (
             out.reshape(-1, d) @ w_ih.T + bias
         ).reshape(B, l, -1)                 # (B, l, 4H)

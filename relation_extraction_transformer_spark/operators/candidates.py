@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import exprcache as XC
+from ..functions import masking as M
 
 SUBJECT_TYPES = ("PERSON", "ORGANIZATION")
 
@@ -23,29 +23,13 @@ def generate_pairs(
 ) -> DataFrame:
     """mentions_df: url, sent_id, tokens, mentions array<struct<m_start,
     m_end, surface, ner_type>> (sorted) -> one row per candidate pair."""
-    def _capped():
-        subjects = F.filter(
-            "mentions", lambda m: m["ner_type"].isin(*SUBJECT_TYPES)
-        )
-        pairs = F.flatten(
-            F.transform(
-                subjects,
-                lambda s: F.transform(
-                    F.filter(
-                        "mentions",
-                        lambda o: (o["m_start"] != s["m_start"])
-                        | (o["m_end"] != s["m_end"]),
-                    ),
-                    lambda o: F.struct(s.alias("s"), o.alias("o")),
-                ),
-            )
-        )
-        return F.slice(pairs, 1, max_pairs_per_sentence)
-
-    # memoized per cap — references only the "mentions" column (r8,
-    # exprcache: plan-construction py4j cost, rebuilt per invocation)
-    capped = XC.cached_column(
-        ("generate_pairs_capped", max_pairs_per_sentence), _capped
+    subject_types = ", ".join(M.sql_literal(t) for t in SUBJECT_TYPES)
+    capped = (
+        "slice(flatten(transform("
+        f"filter(mentions, m -> m.ner_type IN ({subject_types})), "
+        "s -> transform("
+        "filter(mentions, o -> o.m_start != s.m_start OR o.m_end != s.m_end), "
+        f"o -> struct(s AS s, o AS o)))), 1, {max_pairs_per_sentence})"
     )
 
     passthrough = ["url", "sent_id", "tokens"] + [
@@ -53,7 +37,7 @@ def generate_pairs(
     ]
     exploded = mentions_df.select(
         *passthrough,
-        F.posexplode(capped).alias("pair_id", "pair"),
+        F.posexplode(F.expr(capped)).alias("pair_id", "pair"),
     )
     return exploded.select(
         *(passthrough[:2] + ["pair_id"] + passthrough[2:]),

@@ -23,8 +23,6 @@ from pyspark.sql import functions as F
 
 from ..functions import minhash as MH
 
-_char_shingles = MH.char_shingles  # shared LSH core (functions/minhash.py)
-
 
 def minhash_band_hashes(
     df: DataFrame, text_col: str, k: int = MH.MINHASH_K,
@@ -33,13 +31,9 @@ def minhash_band_hashes(
     """Append ``band`` / ``band_hash`` rows (one per band) for LSH blocking.
     df must have a unique ``node_id`` column.  Delegates to the shared
     minhash core so entity and document LSH parameters cannot diverge."""
-    from ..functions import exprcache as XC
-
-    shingles = XC.cached_column(
-        ("char_shingles", text_col),
-        lambda: MH.char_shingles(F.col(text_col)),
+    return MH.minhash_bands(
+        df, "node_id", MH.char_shingles_sql(text_col), k=k, bands=bands
     )
-    return MH.minhash_bands(df, "node_id", shingles, k=k, bands=bands)
 
 
 def candidate_pairs(bands_df: DataFrame) -> DataFrame:
@@ -57,11 +51,11 @@ def verify_pairs_jaccard(
     """
     n1 = names.select(
         F.col("node_id").alias("src"),
-        F.array_distinct(_char_shingles(F.col("name"))).alias("s1"),
+        F.expr(f"array_distinct({MH.char_shingles_sql('name')})").alias("s1"),
     )
     n2 = names.select(
         F.col("node_id").alias("dst"),
-        F.array_distinct(_char_shingles(F.col("name"))).alias("s2"),
+        F.expr(f"array_distinct({MH.char_shingles_sql('name')})").alias("s2"),
     )
     j = (
         pairs.join(n1, "src").join(n2, "dst")
@@ -101,18 +95,21 @@ def connected_components(
 
     # Convergence detection via the label-sum invariant (r8): min-label
     # propagation is MONOTONE (a node's label never increases), so for
-    # NUMERIC node ids the label multiset changed this round iff its
-    # exact DECIMAL sum strictly decreased.  One trivial aggregation job
-    # per round on the already-checkpointed labels replaces the previous
-    # join + limit(1) count job, and the propagate + shortcut pair
-    # materializes ONCE per round instead of twice (round walls in
-    # OPTIMIZATION_r08.md).  String-labeled graphs (kg_wcc over entity
-    # names) have no monotone numeric image, so they keep the join-based
-    # changed check against the previous round's checkpointed labels.
-    from pyspark.sql.types import NumericType
+    # INTEGRAL node ids (integer types, scale-0 decimals) the label
+    # multiset changed this round iff its exact decimal(38,0) sum
+    # strictly decreased.  One trivial aggregation job per round on the
+    # already-checkpointed labels replaces the previous join + limit(1)
+    # count job, and the propagate + shortcut pair materializes ONCE per
+    # round instead of twice (round walls in OPTIMIZATION_r08.md).  Other
+    # ids keep the join-based changed check against the previous round's
+    # checkpointed labels: strings (kg_wcc over entity names) have no
+    # numeric image, and fractional ids round in the decimal(38,0) sum
+    # (0.01 .. 0.08 all sum to 0), which would stop the loop early.
+    from pyspark.sql.types import DecimalType, IntegralType
 
-    numeric_ids = isinstance(
-        labels.schema["component"].dataType, NumericType
+    id_type = labels.schema["component"].dataType
+    integral_ids = isinstance(id_type, IntegralType) or (
+        isinstance(id_type, DecimalType) and id_type.scale == 0
     )
 
     def label_sum(df: DataFrame):
@@ -120,7 +117,7 @@ def connected_components(
             F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
         ).collect()[0][0]
 
-    prev_sum = label_sum(labels) if numeric_ids else None
+    prev_sum = label_sum(labels) if integral_ids else None
     for _ in range(max_iter):
         # each node proposes its current label to every neighbor
         msgs = (
@@ -149,7 +146,7 @@ def connected_components(
             )
             .localCheckpoint(eager=True)
         )
-        if numeric_ids:
+        if integral_ids:
             labels = shortcut
             cur_sum = label_sum(labels)
             if cur_sum == prev_sum:

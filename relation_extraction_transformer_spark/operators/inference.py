@@ -26,7 +26,7 @@ from pyspark.sql import types as T
 
 from .. import constants as C
 from ..config import ModelConfig
-from ..functions.masking import id_to_label
+from ..functions.masking import id_to_label_sql
 from ..kernel import forward_batch
 
 #: columns the operator consumes (produced by operators.preprocess)
@@ -148,7 +148,7 @@ def predict_relations(
             yield out
 
     result = candidates.mapInPandas(run, schema=schema)
-    return result.withColumn("pred_label", id_to_label(F.col("pred")))
+    return result.withColumn("pred_label", F.expr(id_to_label_sql("pred")))
 
 
 def triples_from_predictions(predicted: DataFrame) -> DataFrame:

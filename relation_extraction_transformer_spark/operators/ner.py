@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import exprcache as XC
+from ..functions import masking as M
 from ..sources import gazetteer as G
 
 SENTENCE_SPLIT_REGEX = r"(?<=\.)\s+"
@@ -40,20 +40,20 @@ def tokenize(sentences: DataFrame) -> DataFrame:
     return sentences.withColumn("tokens", F.split(F.col("sentence"), " "))
 
 
-def pos_tags(tokens_col):
+def pos_tags_sql(tokens: str) -> str:
     """Rule POS tagger as a JVM CASE chain (== gazetteer.pos_tag)."""
-    verbs = F.array(*[F.lit(v) for v in G._VERBS])
-    preps = F.array(*[F.lit(p) for p in G._PREPS])
-    dets = F.array(*[F.lit(d) for d in G._DETS])
-    return F.transform(
-        tokens_col,
-        lambda t: F.when(t.isin(".", ","), t)
-        .when(t.rlike("^[0-9]+$"), F.lit("CD"))
-        .when(F.array_contains(dets, t), F.lit("DT"))
-        .when(F.array_contains(preps, t), F.lit("IN"))
-        .when(F.array_contains(verbs, t), F.lit("VBZ"))
-        .when(t.rlike("^[A-Z]"), F.lit("NNP"))
-        .otherwise(F.lit("NN")),
+
+    def words(ws) -> str:
+        return "array(" + ", ".join(M.sql_literal(w) for w in ws) + ")"
+
+    return (
+        f"transform({tokens}, t -> CASE WHEN t IN ('.', ',') THEN t "
+        "WHEN t RLIKE '^[0-9]+$' THEN 'CD' "
+        f"WHEN array_contains({words(G._DETS)}, t) THEN 'DT' "
+        f"WHEN array_contains({words(G._PREPS)}, t) THEN 'IN' "
+        f"WHEN array_contains({words(G._VERBS)}, t) THEN 'VBZ' "
+        "WHEN t RLIKE '^[A-Z]' THEN 'NNP' "
+        "ELSE 'NN' END)"
     )
 
 
@@ -64,21 +64,6 @@ def gazetteer_df(spark: SparkSession) -> DataFrame:
     ]
     return spark.createDataFrame(
         rows, "phrase string, ner_type string, n_tokens int"
-    )
-
-
-def _containment_filter(ms):
-    """Drop spans strictly contained in a longer kept span."""
-    return F.array_sort(
-        F.filter(
-            ms,
-            lambda m: ~F.exists(
-                ms,
-                lambda o: (o["m_start"] <= m["m_start"])
-                & (o["m_end"] >= m["m_end"])
-                & ((o["m_end"] - o["m_start"]) > (m["m_end"] - m["m_start"])),
-            ),
-        )
     )
 
 
@@ -98,89 +83,56 @@ def detect_mentions(
     Output: url, sent_id, tokens, mentions array<struct> (sorted).
     """
     gaz_map = gaz_map if gaz_map is not None else G.build_gazetteer()
-    gaz_items = tuple(sorted(gaz_map.items()))
-    # the full mentions expression references only the "tokens" column,
-    # so it is memoized per (dictionary, max_phrase_tokens) — building
-    # it costs ~0.8 s of py4j roundtrips (254 literals + nested
-    # lambdas), which the flagship otherwise pays on EVERY plan
-    # construction (r8; see functions/exprcache.py)
-    mentions = XC.cached_column(
-        ("detect_mentions", gaz_items, max_phrase_tokens),
-        lambda: _mentions_expr(gaz_items, max_phrase_tokens),
+    mentions = _mentions_sql(sorted(gaz_map.items()), max_phrase_tokens)
+    return tokenized.select(
+        "url", "sent_id", "tokens", F.expr(mentions).alias("mentions")
     )
-    return tokenized.select("url", "sent_id", "tokens", mentions)
 
 
-def _mentions_expr(
-    gaz_items: tuple[tuple[str, str], ...], max_phrase_tokens: int
-):
-    """Build the (cacheable) mentions Column over the ``tokens`` column."""
-    pairs: list = []
-    for phrase, typ in gaz_items:
-        pairs.append(F.lit(phrase))
-        pairs.append(F.lit(typ))
-    gmap = F.create_map(*pairs)
+def _mentions_sql(
+    gaz_items: list[tuple[str, str]], max_phrase_tokens: int
+) -> str:
+    """The mentions expression over the ``tokens`` column, as SQL text."""
+    gmap = M.sql_map(dict(gaz_items))
     # Catalyst's GetMapValue on a literal map is a LINEAR scan of all
     # entries per lookup; gate it behind a hashed InSet test on the
     # span's FIRST TOKEN (derived from the same dictionary, so the
     # result set is provably unchanged: a phrase match implies its
     # first word is in this set).  Most spans fail the set test and
-    # never pay the O(|dict|) scan — measured ~2x on the NER stage (r8).
-    first_words = sorted({phrase.split(" ")[0] for phrase, _ in gaz_items})
-
+    # never pay the O(|dict|) scan — measured ~2x on the NER stage.
+    first_words = ", ".join(
+        M.sql_literal(w) for w in sorted({p.split(" ")[0] for p, _ in gaz_items})
+    )
     # span candidates carry only (m_start, m_end) — the surface STRING
     # (a concat_ws over a token slice) is built only for spans whose
     # first token passes the InSet test, i.e. for the tiny fraction that
-    # can possibly match (r8; previously every n-gram of every sentence
-    # allocated its surface up front)
-    toks = F.col("tokens")
-
-    def _bare_spans(n: int):
-        # NOTE: a `lambda i, n=n` default-arg capture would change the
-        # lambda's ARITY, which pyspark's transform() reads as the
-        # (element, index) form — hence the explicit closure factory
-        return F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - n),
-                lambda i: F.struct(
-                    i.alias("m_start"), (i + n - 1).alias("m_end")
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<m_start:int,m_end:int>>"))
-
-    bare = F.concat(
-        *[_bare_spans(n) for n in range(1, max_phrase_tokens + 1)]
+    # can possibly match
+    bare = ", ".join(
+        f"CASE WHEN size(tokens) >= {n} "
+        f"THEN transform(sequence(0, size(tokens) - {n}), "
+        f"i -> struct(i AS m_start, i + {n} - 1 AS m_end)) "
+        "ELSE CAST(array() AS ARRAY<STRUCT<m_start: INT, m_end: INT>>) END"
+        for n in range(1, max_phrase_tokens + 1)
     )
-    candidates = F.transform(
-        F.filter(
-            bare,
-            lambda sp: F.element_at(toks, sp["m_start"] + 1).isin(
-                *first_words
-            ),
-        ),
-        lambda sp: F.struct(
-            sp["m_start"].alias("m_start"),
-            sp["m_end"].alias("m_end"),
-            F.concat_ws(
-                " ",
-                F.slice(toks, sp["m_start"] + 1, sp["m_end"] - sp["m_start"] + 1),
-            ).alias("surface"),
-        ),
+    candidates = (
+        f"transform(filter(concat({bare}), "
+        f"sp -> element_at(tokens, sp.m_start + 1) IN ({first_words})), "
+        "sp -> struct(sp.m_start AS m_start, sp.m_end AS m_end, "
+        "concat_ws(' ', slice(tokens, sp.m_start + 1, "
+        "sp.m_end - sp.m_start + 1)) AS surface))"
     )
-    typed = F.filter(
-        F.transform(
-            candidates,
-            lambda sp: F.struct(
-                sp["m_start"].alias("m_start"),
-                sp["m_end"].alias("m_end"),
-                sp["surface"].alias("surface"),
-                F.element_at(gmap, sp["surface"]).alias("ner_type"),
-            ),
-        ),
-        lambda m: m["ner_type"].isNotNull(),
+    typed = (
+        f"filter(transform({candidates}, "
+        "sp -> struct(sp.m_start AS m_start, sp.m_end AS m_end, "
+        f"sp.surface AS surface, element_at({gmap}, sp.surface) AS ner_type)), "
+        "m -> m.ner_type IS NOT NULL)"
     )
-    return _containment_filter(typed).alias("mentions")
+    # drop spans strictly contained in a longer kept span
+    return (
+        f"array_sort(filter({typed}, m -> NOT exists({typed}, "
+        "o -> o.m_start <= m.m_start AND o.m_end >= m.m_end "
+        "AND o.m_end - o.m_start > m.m_end - m.m_start)))"
+    )
 
 
 def detect_mentions_join(
@@ -263,20 +215,9 @@ def detect_mentions_join(
 def ner_tags_from_mentions(kept: DataFrame) -> DataFrame:
     """Project mention spans back to a per-token NER tag sequence
     (the synthetic ``stanford_ner`` field)."""
-    ner = XC.cached_column(
-        ("ner_tags_from_mentions",),
-        lambda: F.transform(
-            F.sequence(F.lit(0), F.size("tokens") - 1),
-            lambda i: F.coalesce(
-                F.try_element_at(
-                    F.filter(
-                        "mentions",
-                        lambda m: (i >= m["m_start"]) & (i <= m["m_end"]),
-                    ),
-                    F.lit(1),
-                )["ner_type"],
-                F.lit("O"),
-            ),
-        ),
+    ner = (
+        "transform(sequence(0, size(tokens) - 1), i -> coalesce("
+        "try_element_at(filter(mentions, m -> i >= m.m_start AND i <= m.m_end), 1)"
+        ".ner_type, 'O'))"
     )
-    return kept.withColumn("ner", ner)
+    return kept.withColumn("ner", F.expr(ner))

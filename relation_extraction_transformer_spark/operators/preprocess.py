@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import constants as C
-from ..functions import exprcache as XC
 from ..functions import masking as M
 from ..functions import positions as P
 from . import ner as N
@@ -26,23 +25,14 @@ from . import ner as N
 
 def preprocess_candidates(pairs: DataFrame, lower: bool = False) -> DataFrame:
     """pairs (from candidates.generate_pairs) -> model feature columns."""
-    # every feature expression below references plain column names, so
-    # the whole set is memoized per (lower,) — construction is ~0.4 s
-    # of py4j roundtrips otherwise rebuilt per plan (r8, exprcache)
-    def _masked():
-        toks = F.col("tokens")
-        if lower:
-            toks = M.lower_tokens(toks)  # P1; shipped config lower=False
-        return M.mask_entity_spans(
-            toks,
-            F.col("subj_start"), F.col("subj_end"),
-            F.col("obj_start"), F.col("obj_end"),
-            F.col("subj_type"), F.col("obj_type"),
-        )
-
+    # P1; shipped config lower=False
+    toks = M.lower_tokens_sql("tokens") if lower else "tokens"
     df = pairs.withColumn(
         "masked_tokens",
-        XC.cached_column(("preprocess_masked", lower), _masked),
+        F.expr(M.mask_entity_spans_sql(
+            toks, "subj_start", "subj_end", "obj_start", "obj_end",
+            "subj_type", "obj_type",
+        )),
     )
     n = F.size("masked_tokens")
     if "pos_ids" not in df.columns:
@@ -51,22 +41,14 @@ def preprocess_candidates(pairs: DataFrame, lower: bool = False) -> DataFrame:
         df = attach_tag_ids(df)
     df = df.withColumn(
         "subj_positions",
-        XC.cached_column(
-            ("preprocess_subj_positions",),
-            lambda: P.binned_span_positions(
-                F.col("subj_start"), F.col("subj_end"),
-                F.size("masked_tokens"),
-            ),
-        ),
+        F.expr(P.binned_span_positions_sql(
+            "subj_start", "subj_end", "size(masked_tokens)"
+        )),
     ).withColumn(
         "obj_positions",
-        XC.cached_column(
-            ("preprocess_obj_positions",),
-            lambda: P.binned_span_positions(
-                F.col("obj_start"), F.col("obj_end"),
-                F.size("masked_tokens"),
-            ),
-        ),
+        F.expr(P.binned_span_positions_sql(
+            "obj_start", "obj_end", "size(masked_tokens)"
+        )),
     )
     # sentences longer than the reference's hard cap are dropped
     # (ref:data/loader.py:18 ABS_MAX_LEN = 96)
@@ -76,12 +58,8 @@ def preprocess_candidates(pairs: DataFrame, lower: bool = False) -> DataFrame:
 def attach_tag_ids(df: DataFrame, ner_col: str = "ner") -> DataFrame:
     """POS ids from the rule tagger; NER ids from the projected mention
     tags (P4, ref:data/loader.py:114-116)."""
-    pos_ids = XC.cached_column(
-        ("attach_pos_ids",),
-        lambda: M.map_tags_to_ids(N.pos_tags(F.col("tokens")), C.POS_TO_ID),
+    pos_ids = M.map_tags_to_ids_sql(N.pos_tags_sql("tokens"), C.POS_TO_ID)
+    ner_ids = M.map_tags_to_ids_sql(ner_col, C.NER_TO_ID)
+    return df.withColumn("pos_ids", F.expr(pos_ids)).withColumn(
+        "ner_ids", F.expr(ner_ids)
     )
-    ner_ids = XC.cached_column(
-        ("attach_ner_ids", ner_col),
-        lambda: M.map_tags_to_ids(F.col(ner_col), C.NER_TO_ID),
-    )
-    return df.withColumn("pos_ids", pos_ids).withColumn("ner_ids", ner_ids)

@@ -575,7 +575,7 @@ def fit(
 
     from pyspark.sql import functions as F
 
-    from ..functions.masking import id_to_label
+    from ..functions.masking import id_to_label_sql
     from . import inference as INF
     from . import scorer as SC
 
@@ -638,7 +638,7 @@ def fit(
         params_bc = spark.sparkContext.broadcast(params)
         pred = INF.predict_relations(
             dev_features, params_bc, cfg, vocab_bc=vocab_bc, keep_probs=False
-        ).withColumn("guess", id_to_label(F.col("pred")))
+        ).withColumn("guess", F.expr(id_to_label_sql("pred")))
         dev_f1 = float(
             SC.score_micro(
                 pred.select(F.col(gold_col).alias("gold"), "guess")

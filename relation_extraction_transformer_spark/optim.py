@@ -292,11 +292,6 @@ def epoch_noam_lr(epoch: int) -> float:
     return 10 * (360 ** (-0.5) * min(epoch ** (-0.5), epoch * 15 ** (-1.5)))
 
 
-def decay_lr(current_lr: float, lr_decay: float = 0.9) -> float:
-    """ref:runner.py:342: multiplicative decay when dev F1 stalls."""
-    return current_lr * lr_decay
-
-
 def get_optimizer(name: str, lr: float) -> Optimizer:
     """ref:utils/torch_utils.py:242-289, minus the torch-only exotics."""
     if name == "sgd":

@@ -28,7 +28,6 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions import exprcache as XC
 from ..functions import positions as POS
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
@@ -853,7 +852,7 @@ _DUCK_SHINGLES = MH.duck_word_shingles("text")  # Jaccard verify stage
 
 # the DuckDB twin of MH.minhash_bands over the documents table; embed
 # after WITH (defines mh_sh / mh_sigs / mh_bands).  The minhash path
-# uses arithmetic token-hash shingles (word_shingle_hashes — no shingle
+# uses arithmetic token-hash shingles (word_shingle_hashes_sql — no shingle
 # string construction); the Jaccard VERIFY stage still compares real
 # string shingle sets.
 _DUCK_MH_CTES = MH.duck_minhash_ctes(
@@ -871,10 +870,7 @@ def _spark_minhash_bands(spark, sf):
     return MH.minhash_bands(
         tb(spark, sf, "documents"),
         "doc_id",
-        hashes=XC.cached_column(
-            ("word_shingle_hashes", "text"),
-            lambda: MH.word_shingle_hashes(F.col("text")),
-        ),
+        hashes=MH.word_shingle_hashes_sql("text"),
         k=_MINHASH_K,
         bands=_MINHASH_BANDS,
     )
@@ -1571,7 +1567,7 @@ register(
 register(
     "binned_offsets",  # P9 on generic ints derived from lineitem
     f"""
-    SELECT v, {POS.log2_bin_sql('v')} AS binned, COUNT(*) AS cnt
+    SELECT v, {POS.log2_bin_duckdb('v')} AS binned, COUNT(*) AS cnt
     FROM (SELECT CAST(l_partkey % 200 - 100 AS INTEGER) AS v FROM lineitem)
     GROUP BY v
     """,
@@ -1580,7 +1576,7 @@ register(
     .select((F.col("l_partkey") % 200 - 100).cast("int").alias("v"))
     .groupBy("v")
     .agg(F.count(F.lit(1)).alias("cnt"))
-    .select("v", POS.log2_bin(F.col("v")).alias("binned"), "cnt")
+    .select("v", F.expr(POS.log2_bin_sql("v")).alias("binned"), "cnt")
 )
 
 
@@ -1616,12 +1612,12 @@ register(
     )
     .select(
         "p_partkey",
-        POS.get_positions(F.col("s"), F.col("e"), F.col("l")).alias("posv"),
+        F.expr(POS.get_positions_sql("s", "e", "l")).alias("posv"),
     )
     .select(
         "p_partkey",
         F.posexplode("posv").alias("idx", "relpos"),
-        POS.bin_positions(F.col("posv")).alias("binned_arr"),
+        F.expr(POS.bin_positions_sql("posv")).alias("binned_arr"),
     )
     .select(
         "p_partkey", "idx", "relpos",

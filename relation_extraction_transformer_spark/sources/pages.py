@@ -85,18 +85,6 @@ def synthetic_pages(
     return rng_df.mapInPandas(gen, schema=schema)
 
 
-def write_pages(df: DataFrame, path: str, partition_by_lang: bool = True) -> None:
-    """Materialize pages as a partitioned lakehouse table (Iceberg on a
-    real cluster, parquet here — see sources/tables.py).  Partitioning by
-    lang makes the pipeline's ``lang = 'en'`` filter a partition-pruning
-    predicate instead of a row filter."""
-    from .tables import write_table
-
-    write_table(
-        df, path, partition_by=["lang"] if partition_by_lang else None
-    )
-
-
 def extract_text(pages: DataFrame) -> DataFrame:
     """Byte-identical text extraction per url (north-rule invariant).
 

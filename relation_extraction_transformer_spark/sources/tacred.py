@@ -46,30 +46,26 @@ def tacred_to_candidates(examples: DataFrame, lower: bool = False) -> DataFrame:
     """The reference's preprocess pipeline (ref:data/loader.py:68-197) over
     TACRED rows -> the inference operator's feature columns.  Pure Spark
     SQL expressions; ``example_id`` replaces positional alignment."""
-    toks = F.col("token")
-    if lower:
-        toks = M.lower_tokens(toks)
+    toks = M.lower_tokens_sql("token") if lower else "token"
     n = F.size("token")
     df = examples.select(
         F.col("id").alias("example_id"),
         F.col("relation").alias("gold_relation"),
-        M.mask_entity_spans(
-            toks,
-            F.col("subj_start"), F.col("subj_end"),
-            F.col("obj_start"), F.col("obj_end"),
-            F.col("subj_type"), F.col("obj_type"),
-        ).alias("masked_tokens"),
-        M.map_tags_to_ids(F.col("stanford_pos"), C.POS_TO_ID).alias("pos_ids"),
-        M.map_tags_to_ids(F.col("stanford_ner"), C.NER_TO_ID).alias("ner_ids"),
-        M.map_tags_to_ids(
-            F.col("stanford_deprel"), C.DEPREL_TO_ID
+        F.expr(M.mask_entity_spans_sql(
+            toks, "subj_start", "subj_end", "obj_start", "obj_end",
+            "subj_type", "obj_type",
+        )).alias("masked_tokens"),
+        F.expr(M.map_tags_to_ids_sql("stanford_pos", C.POS_TO_ID)).alias("pos_ids"),
+        F.expr(M.map_tags_to_ids_sql("stanford_ner", C.NER_TO_ID)).alias("ner_ids"),
+        F.expr(
+            M.map_tags_to_ids_sql("stanford_deprel", C.DEPREL_TO_ID)
         ).alias("deprel_ids"),
-        P.binned_span_positions(
-            F.col("subj_start"), F.col("subj_end"), n
-        ).alias("subj_positions"),
-        P.binned_span_positions(
-            F.col("obj_start"), F.col("obj_end"), n
-        ).alias("obj_positions"),
+        F.expr(P.binned_span_positions_sql(
+            "subj_start", "subj_end", "size(token)"
+        )).alias("subj_positions"),
+        F.expr(P.binned_span_positions_sql(
+            "obj_start", "obj_end", "size(token)"
+        )).alias("obj_positions"),
     )
     return df.filter((n >= 1) & (n <= C.ABS_MAX_LEN))
 

@@ -79,7 +79,7 @@ def main() -> None:
         feats = (
             TJ.tacred_to_candidates(TJ.read_tacred_json(spark, path))
             .withColumn(
-                "label_id", M.label_to_id(F.col("gold_relation")).cast("long")
+                "label_id", F.expr(M.label_to_id_sql("gold_relation")).cast("long")
             )
             .repartition(parts)
             .cache()

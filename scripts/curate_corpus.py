@@ -126,7 +126,7 @@ def curate(
     # deterministic answer under any partitioning (the dup_clusters
     # contract query's semantics).
     bands = MH.minhash_bands(
-        kept, "doc_id", hashes=MH.word_shingle_hashes(F.col("text"))
+        kept, "doc_id", hashes=MH.word_shingle_hashes_sql("text")
     )
     # thread persisted_out so the MEMORY_AND_DISK bands cache is released
     # with the packer handle in main()/tests (ADVICE r4: without it each

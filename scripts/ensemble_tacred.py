@@ -75,7 +75,7 @@ def main() -> None:
     def load(path):
         feats = TJ.tacred_to_candidates(TJ.read_tacred_json(spark, path))
         return feats.withColumn(
-            "label_id", M.label_to_id(F.col("gold_relation")).cast("long")
+            "label_id", F.expr(M.label_to_id_sql("gold_relation")).cast("long")
         ).cache()
 
     train = load(args.train)
@@ -113,7 +113,7 @@ def main() -> None:
     scored_input = (
         eval_df.select("example_id", F.col("gold_relation").alias("gold"))
         .join(voted, "example_id")
-        .select("gold", M.id_to_label(F.col("voted_pred")).alias("guess"))
+        .select("gold", F.expr(M.id_to_label_sql("voted_pred")).alias("guess"))
     )
     micro = SC.score_micro(scored_input).first()
     print(

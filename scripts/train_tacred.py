@@ -86,7 +86,7 @@ def main() -> None:
     def load(path):
         feats = TJ.tacred_to_candidates(TJ.read_tacred_json(spark, path))
         return feats.withColumn(
-            "label_id", M.label_to_id(F.col("gold_relation")).cast("long")
+            "label_id", F.expr(M.label_to_id_sql("gold_relation")).cast("long")
         ).cache()
 
     train = load(args.train)

@@ -31,6 +31,20 @@ def test_connected_components_long_chain(spark):
     assert comps.agg(F.min("component")).first()[0] == 0
 
 
+def test_connected_components_fractional_ids(spark):
+    # every double id 0.01 .. 0.08 rounds to 0 in a decimal(38,0) label
+    # sum, so a label-sum convergence check would stop after round one
+    ids = [round(0.01 * k, 2) for k in range(1, 9)]
+    edges = spark.createDataFrame(
+        list(zip(ids, ids[1:])), "src: double, dst: double"
+    )
+    got = {
+        r.node_id: r.component
+        for r in CANON.connected_components(edges).collect()
+    }
+    assert got == {i: 0.01 for i in ids}
+
+
 def test_linking_best_candidate(spark):
     dictionary = LINK.entity_dictionary(spark)
     df = spark.createDataFrame(

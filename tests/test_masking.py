@@ -28,23 +28,47 @@ def test_mask_entity_spans(spark, tokens, ss, se, os_, oe, st, ot):
         "st: string, ot: string",
     )
     out = df.select(
-        M.mask_entity_spans(
-            F.col("tokens"), F.col("ss"), F.col("se"), F.col("os"),
-            F.col("oe"), F.col("st"), F.col("ot"),
-        ).alias("m")
+        F.expr(M.mask_entity_spans_sql(
+            "tokens", "ss", "se", "os", "oe", "st", "ot"
+        )).alias("m")
     ).first()["m"]
     assert out == _ref_mask(tokens, ss, se, os_, oe, st, ot)
 
 
 def test_map_tags_to_ids(spark):
-    df = spark.createDataFrame(
-        [(["NNP", "VBZ", "???", "NN"],)], "tags: array<string>"
-    )
+    # the quote, backquote, dollar, comma and bracket tags are the keys a
+    # broken SQL-literal escape would silently map to UNK
+    tags = ["NNP", "VBZ", "???", "NN", "''", "``", "$", ",", "-LRB-"]
+    df = spark.createDataFrame([(tags,)], "tags: array<string>")
     out = df.select(
-        M.map_tags_to_ids(F.col("tags"), C.POS_TO_ID).alias("ids")
+        F.expr(M.map_tags_to_ids_sql("tags", C.POS_TO_ID)).alias("ids")
     ).first()["ids"]
-    assert out == [
-        C.POS_TO_ID["NNP"], C.POS_TO_ID["VBZ"], C.UNK_ID, C.POS_TO_ID["NN"]
+    assert out == [C.POS_TO_ID.get(t, C.UNK_ID) for t in tags]
+    assert out.count(C.UNK_ID) == 1
+
+
+def test_detect_mentions_quoted_phrases(spark):
+    # phrases with a quote or a backslash must reach both the map literal
+    # and the first-word prefilter intact
+    from relation_extraction_transformer_spark.operators import ner as N
+
+    gaz = {
+        "O'Brien Holdings": "ORGANIZATION",
+        "back\\slash": "MISC",
+        "Alice": "PERSON",
+    }
+    tokens = "O'Brien Holdings hired Alice at back\\slash .".split(" ")
+    df = spark.createDataFrame(
+        [("u", 0, tokens)], "url string, sent_id int, tokens array<string>"
+    )
+    got = [
+        (m.m_start, m.m_end, m.surface, m.ner_type)
+        for m in N.detect_mentions(df, gaz_map=gaz).first().mentions
+    ]
+    assert got == [
+        (0, 1, "O'Brien Holdings", "ORGANIZATION"),
+        (3, 3, "Alice", "PERSON"),
+        (5, 5, "back\\slash", "MISC"),
     ]
 
 
@@ -52,8 +76,8 @@ def test_label_roundtrip(spark):
     labels = ["per:title", "no_relation", "org:founded_by", "bogus"]
     df = spark.createDataFrame([(l,) for l in labels], "label: string")
     out = df.select(
-        M.label_to_id(F.col("label")).alias("id"),
-        M.id_to_label(M.label_to_id(F.col("label"))).alias("back"),
+        F.expr(M.label_to_id_sql("label")).alias("id"),
+        F.expr(M.id_to_label_sql(M.label_to_id_sql("label"))).alias("back"),
     ).collect()
     assert [r["id"] for r in out] == [1, 0, 25, 0]
     assert [r["back"] for r in out] == [
@@ -66,14 +90,14 @@ def test_normalize_glove(spark):
         [("-LRB-",), ("-RSB-",), ("word",)], "t: string"
     )
     out = [r["n"] for r in df.select(
-        M.normalize_glove_token(F.col("t")).alias("n")
+        F.expr(M.normalize_glove_token_sql("t")).alias("n")
     ).collect()]
     assert out == ["(", "]", "word"]
 
 
 def test_lower_tokens(spark):
     df = spark.createDataFrame([(["Ab", "CD", "ef"],)], "t: array<string>")
-    assert df.select(M.lower_tokens(F.col("t")).alias("l")).first()["l"] == [
+    assert df.select(F.expr(M.lower_tokens_sql("t")).alias("l")).first()["l"] == [
         "ab", "cd", "ef"
     ]
 

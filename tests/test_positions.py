@@ -32,16 +32,17 @@ GOLDEN_BINNING = [
 @pytest.mark.parametrize("inp,expected", GOLDEN_BINNING)
 def test_bin_positions_golden(spark, inp, expected):
     df = spark.createDataFrame([(inp,)], "arr: array<int>")
-    out = df.select(P.bin_positions(F.col("arr")).alias("b")).first()["b"]
+    out = df.select(F.expr(P.bin_positions_sql("arr")).alias("b")).first()["b"]
     assert out == expected
 
 
 def test_bin_positions_large_values(spark):
     # generic ints, not just sentence positions
-    inp = [1023, 1024, 1025, -1023, -1024, 2**30, -(2**30)]
-    exp = [10, 11, 11, -10, -11, 31, -31]
+    inp = [1023, 1024, 1025, -1023, -1024, 2**30, -(2**30), 2**31 - 1,
+           -(2**31 - 1)]
+    exp = [10, 11, 11, -10, -11, 31, -31, 31, -31]
     df = spark.createDataFrame([(inp,)], "arr: array<int>")
-    out = df.select(P.bin_positions(F.col("arr")).alias("b")).first()["b"]
+    out = df.select(F.expr(P.bin_positions_sql("arr")).alias("b")).first()["b"]
     assert out == exp
 
 
@@ -57,7 +58,7 @@ def _py_get_positions(s, e, n):
 def test_get_positions(spark, s, e, n):
     df = spark.createDataFrame([(s, e, n)], "s: int, e: int, n: int")
     out = df.select(
-        P.get_positions(F.col("s"), F.col("e"), F.col("n")).alias("p")
+        F.expr(P.get_positions_sql("s", "e", "n")).alias("p")
     ).first()["p"]
     assert out == _py_get_positions(s, e, n)
 

@@ -136,10 +136,10 @@ def test_trained_model_scorer_parity_end_to_end(spark, tmp_path):
     TJ.write_synthetic_tacred_json(dev_path, n=24, seed=7)
     train_feats = TJ.tacred_to_candidates(
         TJ.read_tacred_json(spark, train_path)
-    ).withColumn("label_id", M.label_to_id(F.col("gold_relation")).cast("long"))
+    ).withColumn("label_id", F.expr(M.label_to_id_sql("gold_relation")).cast("long"))
     dev_feats = TJ.tacred_to_candidates(TJ.read_tacred_json(spark, dev_path))
     dev_feats = dev_feats.withColumn(
-        "label_id", M.label_to_id(F.col("gold_relation")).cast("long")
+        "label_id", F.expr(M.label_to_id_sql("gold_relation")).cast("long")
     ).cache()
 
     # closed vocab over train+dev (deterministic)
@@ -166,7 +166,7 @@ def test_trained_model_scorer_parity_end_to_end(spark, tmp_path):
         vocab_bc=spark.sparkContext.broadcast(vocab),
     )
     pairs = predicted.select(
-        "example_id", M.id_to_label(F.col("pred")).alias("guess")
+        "example_id", F.expr(M.id_to_label_sql("pred")).alias("guess")
     ).join(dev_feats.select("example_id", "gold_relation"), "example_id")
     pairs = pairs.select("gold_relation", "guess")
     spark_rel = {

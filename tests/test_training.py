@@ -186,7 +186,7 @@ def _tacred_features(spark, tmp_path, n=24):
     TJ.write_synthetic_tacred_json(path, n=n, seed=11)
     feats = TJ.tacred_to_candidates(TJ.read_tacred_json(spark, path))
     return feats.withColumn(
-        "label_id", M.label_to_id(F.col("gold_relation")).cast("long")
+        "label_id", F.expr(M.label_to_id_sql("gold_relation")).cast("long")
     )
 
 
@@ -425,9 +425,6 @@ def test_trained_ensemble_majority_vote(spark, tmp_path):
     """ref:ensemble.sh end-to-end with actually TRAINED models: k
     differently-initialized models fine-tuned with fit(), then the
     ensemble vote over their predictions (key = example_id)."""
-    from relation_extraction_transformer_spark.functions.masking import (
-        id_to_label,
-    )
     from relation_extraction_transformer_spark.operators import (
         ensemble as EN,
     )
