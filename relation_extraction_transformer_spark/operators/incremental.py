@@ -34,7 +34,9 @@ shuffle-reuse join).
 from __future__ import annotations
 
 import os
-from typing import NamedTuple
+import shutil
+import uuid
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -141,14 +143,14 @@ def conflicts_from_stats(stats: DataFrame, preds: tuple[str, ...]) -> DataFrame:
     )
 
 
-def write_edge_state(state: EdgeState, path: str, mode: str = "overwrite") -> None:
+def write_edge_state(state: EdgeState, path: str) -> None:
     """Persist standing state as two parquet datasets (``stats/`` and
     ``regs/``) — the durable handoff between daily fold-in jobs.  Both
     frames are edge-keyed aggregates, orders of magnitude smaller than
     the raw crawl; writing them partitioned-as-aggregated keeps the next
     fold's merge a local groupBy after the union."""
-    state.stats.write.mode(mode).parquet(os.path.join(path, "stats"))
-    state.regs.write.mode(mode).parquet(os.path.join(path, "regs"))
+    state.stats.write.mode("overwrite").parquet(os.path.join(path, "stats"))
+    state.regs.write.mode("overwrite").parquet(os.path.join(path, "regs"))
 
 
 def read_edge_state(spark: SparkSession, path: str) -> EdgeState:
@@ -159,75 +161,92 @@ def read_edge_state(spark: SparkSession, path: str) -> EdgeState:
     )
 
 
-def latest_version(state_dir: str) -> int:
-    """Current state version per the ``LATEST`` marker (0 = no state)."""
-    marker = os.path.join(state_dir, "LATEST")
-    if not os.path.exists(marker):
-        return 0
-    return int(open(marker).read().strip())
-
-
-def committed_versions(
-    state_dir: str, datasets: tuple[str, ...] = ("stats", "regs")
-) -> list[int]:
-    """Every version whose datasets ALL carry ``_SUCCESS`` markers,
-    ascending.  This is the durable truth about what was folded; the
-    ``LATEST`` marker is only a convenience pointer that may lag one
-    behind after a crash between the state write and the flip.
-    ``datasets`` names the per-version parquet subdirectories (edge
-    state: stats+regs; canonical-map state: nodes+bands)."""
-    out = []
+def committed_versions(state_dir: str) -> list[int]:
+    """Every committed state version, ascending.  A version is
+    committed exactly when a directory ``v<N>`` exists under
+    ``state_dir``: :func:`fold_version` writes each version elsewhere
+    and renames it into place in one step, so a ``v<N>`` directory is
+    always complete."""
     if not os.path.isdir(state_dir):
-        return out
-    for name in os.listdir(state_dir):
-        if not (name.startswith("v") and name[1:].isdigit()):
-            continue
-        if all(
-            os.path.exists(os.path.join(state_dir, name, d, "_SUCCESS"))
-            for d in datasets
-        ):
-            out.append(int(name[1:]))
-    return sorted(out)
+        return []
+    return sorted(
+        int(name[1:])
+        for name in os.listdir(state_dir)
+        if name.startswith("v") and name[1:].isdigit()
+    )
 
 
-def _flip_latest(state_dir: str, version: int) -> None:
-    """Atomically point ``LATEST`` at ``version`` (write-tmp + rename).
-    ``os.replace`` is atomic on POSIX filesystems; an object store
-    deployment would condition this on a compare-and-swap or a catalog
-    transaction instead — the marker is advisory either way, because
-    readers can always recover the durable truth from
-    :func:`committed_versions`."""
-    tmp = os.path.join(state_dir, "LATEST.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(tmp, os.path.join(state_dir, "LATEST"))
+def latest_version(state_dir: str) -> int:
+    """The newest committed state version (0 = no state)."""
+    committed = committed_versions(state_dir)
+    return committed[-1] if committed else 0
 
 
-def vacuum_state(
+def fold_version(
     state_dir: str,
-    keep_last_k: int,
-    datasets: tuple[str, ...] = ("stats", "regs"),
-) -> list[int]:
-    """Retention for the 24/7 loop: delete committed versions older than
-    the newest ``keep_last_k``, never touching the version ``LATEST``
-    points at, the maximum committed version, or any UNcommitted
-    directory (a concurrent writer may be mid-commit there).  Returns
-    the versions removed.  Without this, a daily fold accumulates state
-    versions forever (each is edge-keyed aggregate data — small next to
-    the crawl, but unbounded over years)."""
-    import shutil
+    version: int | None,
+    write: Callable[[str | None, str], dict],
+) -> dict:
+    """The version protocol shared by every fold over ``state_dir``.
 
+    The base is the newest committed version; ``version`` defaults to
+    the one after it.  A ``version`` already committed is a replay and
+    writes nothing: a caller that derives it from a durable sequence
+    (e.g. a Structured Streaming ``batch_id``) gets exactly-once state
+    when a batch is re-delivered after a crash.  An uncommitted version
+    at or below the base is rejected, because folding it would merge
+    against a later state.
+
+    Otherwise ``write(base_dir, out_dir)`` writes the new version into
+    a fresh staging directory (``base_dir`` is None when there is no
+    state yet) and returns fold statistics; the commit is one
+    ``os.rename`` of the staging directory to ``v<version>``.  A
+    failure before the rename leaves the base current.  A concurrent
+    writer that committed the same version first makes the rename fail
+    (the target is a non-empty directory), so the loser raises.  Either
+    way the staging directory is removed; one left by a killed process
+    is never read.
+    """
+    cur = latest_version(state_dir)
+    if version is None:
+        version = cur + 1
+    summary = {"state_version": version, "bootstrap": cur == 0}
+    target = os.path.join(state_dir, f"v{version}")
+    if os.path.isdir(target):
+        return {**summary, "replayed": True}
+    if version <= cur:
+        raise ValueError(
+            f"version {version} <= current version {cur} but v{version} was "
+            f"never committed; use a fresh state_dir for this source"
+        )
+    os.makedirs(state_dir, exist_ok=True)
+    # any name that is not v<digits> is invisible to committed_versions;
+    # mkdir, not mkdtemp, so the committed version keeps umask permissions
+    staging = os.path.join(state_dir, f"_v{version}.{uuid.uuid4().hex}")
+    os.mkdir(staging)
+    try:
+        base = os.path.join(state_dir, f"v{cur}") if cur else None
+        stats = write(base, staging)
+        os.rename(staging, target)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    return {**summary, "replayed": False, **stats}
+
+
+def vacuum_state(state_dir: str, keep_last_k: int) -> list[int]:
+    """Retention for the 24/7 loop: delete committed versions older than
+    the newest ``keep_last_k``, oldest first, and return the versions
+    removed.  The newest version is never touched, so an interrupted
+    vacuum leaves it readable; an older version it left half-deleted is
+    removed by the next vacuum.  Without this, a daily fold accumulates
+    state versions forever (each is edge-keyed aggregate data — small
+    next to the crawl, but unbounded over years)."""
     if keep_last_k < 1:
         raise ValueError("keep_last_k must be >= 1")
-    committed = committed_versions(state_dir, datasets)
-    keep = set(committed[-keep_last_k:])
-    keep.add(latest_version(state_dir))
-    removed = []
-    for v in committed:
-        if v in keep:
-            continue
+    removed = committed_versions(state_dir)[:-keep_last_k]
+    for v in removed:
         shutil.rmtree(os.path.join(state_dir, f"v{v}"))
-        removed.append(v)
     return removed
 
 
@@ -239,53 +258,12 @@ def fold_pages_delta(
 ) -> dict:
     """Fold one crawl delta of pages into the standing state under
     ``state_dir``: extract triples (the audited narrow batch plan), fold
-    into delta state, merge with the persisted standing version, write
-    ``v<version>`` and flip the ``LATEST`` marker.
-
-    Versioning makes the fold replay-safe: a caller that derives
-    ``version`` from a durable sequence (e.g. a Structured Streaming
-    ``batch_id``) gets exactly-once state even when the framework
-    re-delivers a batch after a crash — an already-written version is
-    skipped, and LATEST only ever moves forward.  Left at ``None`` (the
-    batch-job path), the version is one past the max COMMITTED version
-    (falling back to LATEST), so a crash between the state write and
-    the LATEST flip can never make a later run mistake its fresh delta
-    for a replay.
-    """
+    into delta state, merge with the newest committed version and
+    commit ``v<version>`` — versioning, replays and the commit follow
+    :func:`fold_version`."""
     from ..plans import pipeline as PL
 
-    cur = latest_version(state_dir)
-    if version is None:
-        # Derive the next version from the DURABLE truth (max committed
-        # v* dir), not the LATEST pointer: after a crash between
-        # write_edge_state and the flip, a committed v(cur+1) exists
-        # that LATEST does not name.  Using LATEST+1 would alias
-        # TODAY'S different delta onto the crashed run's _SUCCESS
-        # markers, classify it 'replayed', and silently drop the new
-        # data while flipping LATEST (ADVICE r6).  A committed-but-
-        # unflipped version is valid already-folded state — today's
-        # delta folds on top of it.  (Only the batch path needs this;
-        # the streaming path ties ``version`` to the batch_id, so a
-        # replay really is the same delta.)
-        committed = committed_versions(state_dir)
-        cur = max(cur, committed[-1] if committed else 0)
-        version = cur + 1
-    new_dir = os.path.join(state_dir, f"v{version}")
-    # a version counts as written only when BOTH datasets committed
-    replayed = all(
-        os.path.exists(os.path.join(new_dir, d, "_SUCCESS"))
-        for d in ("stats", "regs")
-    )
-    if not replayed:
-        if version <= cur:
-            # an unwritten version at-or-below LATEST is a misuse (e.g.
-            # a fresh stream pointed at a batch-advanced state dir):
-            # folding it would merge against a LATER state.  Replays of
-            # committed versions are handled above; reject the rest.
-            raise ValueError(
-                f"version {version} <= LATEST {cur} but v{version} was "
-                f"never committed; use a fresh state_dir for this source"
-            )
+    def write(base: str | None, out: str) -> dict:
         triples = PL.triples_plan(pages, spark, keep_probs=False)
         obs = triples.select("url", "subj", "pred", "obj", "prob").join(
             pages.select(
@@ -303,19 +281,12 @@ def fold_pages_delta(
         # fold wall, measured in OPTIMIZATION_r08.md).
         obs = obs.localCheckpoint(eager=True)
         delta = edge_state(obs)
-        if cur > 0:
-            standing = read_edge_state(
-                spark, os.path.join(state_dir, f"v{cur}")
-            )
-            delta = merge_edge_state(standing, delta)
-        write_edge_state(delta, new_dir)
-    if version > cur:
-        _flip_latest(state_dir, version)
-    return {
-        "state_version": version,
-        "bootstrap": cur == 0,
-        "replayed": replayed,
-    }
+        if base is not None:
+            delta = merge_edge_state(read_edge_state(spark, base), delta)
+        write_edge_state(delta, out)
+        return {}
+
+    return fold_version(state_dir, version, write)
 
 
 def edge_report(state: EdgeState) -> DataFrame:

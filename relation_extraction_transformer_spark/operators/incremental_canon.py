@@ -29,9 +29,10 @@ The trick that makes the fold exact AND delta-sized:
    label a full rebuild assigns.  Hence the fold law holds exactly:
    ``fold(d1); fold(d2) == rebuild(d1 ∪ d2)`` for any split.
 
-State layout (same versioned-directory pattern as the edge rollup in
-operators/incremental.py — ``v<N>/nodes``, ``v<N>/bands``, atomic
-``LATEST`` flip, max-committed crash recovery, vacuum):
+State layout (the same versioned directories as the edge rollup in
+operators/incremental.py — ``v<N>/nodes``, ``v<N>/bands``; a version
+is committed by renaming its fully written staging directory to
+``v<N>``, and the newest ``v<N>`` is the standing state):
 
 - ``nodes``:  (node_id, name, component)
 - ``bands``:  (node_id, band, band_hash)
@@ -58,8 +59,6 @@ from pyspark.sql import functions as F
 
 from . import canonicalize as CANON
 from . import incremental as INC
-
-CANON_DATASETS = ("nodes", "bands")
 
 
 def canon_state(
@@ -191,32 +190,15 @@ def fold_mentions_delta(
     jaccard_threshold: float = 0.6,
 ) -> dict:
     """Fold one delta of entity mentions — (node_id, name) rows — into
-    the standing canonical map under ``state_dir``.  Versioning follows
-    operators/incremental.py exactly: explicit ``version`` for
-    streaming exactly-once, max-committed+1 for the batch path, atomic
-    LATEST flip, committed replays are no-ops."""
-    cur = INC.latest_version(state_dir)
-    if version is None:
-        committed = INC.committed_versions(state_dir, CANON_DATASETS)
-        cur = max(cur, committed[-1] if committed else 0)
-        version = cur + 1
-    new_dir = os.path.join(state_dir, f"v{version}")
-    replayed = all(
-        os.path.exists(os.path.join(new_dir, d, "_SUCCESS"))
-        for d in CANON_DATASETS
-    )
-    stats = {"new_nodes": 0, "touched_components": 0}
-    if not replayed:
-        if version <= cur:
-            raise ValueError(
-                f"version {version} <= LATEST {cur} but v{version} was "
-                f"never committed; use a fresh state_dir for this source"
-            )
+    the standing canonical map under ``state_dir``.  Versioning,
+    replays and the commit follow operators/incremental.py's
+    :func:`~.incremental.fold_version`, exactly as the edge fold does;
+    a replay reports zero new nodes and touched components."""
+
+    def write(base: str | None, out: str) -> dict:
         delta_names = mentions.select("node_id", "name").distinct()
-        if cur > 0:
-            std_nodes, std_bands = read_canon_state(
-                spark, os.path.join(state_dir, f"v{cur}")
-            )
+        if base is not None:
+            std_nodes, std_bands = read_canon_state(spark, base)
             nodes, bands, new_names, touched = fold_into(
                 std_nodes, std_bands, delta_names, jaccard_threshold
             )
@@ -230,12 +212,11 @@ def fold_mentions_delta(
                 "new_nodes": delta_names.count(),
                 "touched_components": 0,
             }
-        write_canon_state(nodes, bands, new_dir)
-    if version > cur:
-        INC._flip_latest(state_dir, version)
+        write_canon_state(nodes, bands, out)
+        return stats
+
     return {
-        "state_version": version,
-        "bootstrap": cur == 0,
-        "replayed": replayed,
-        **stats,
+        "new_nodes": 0,
+        "touched_components": 0,
+        **INC.fold_version(state_dir, version, write),
     }

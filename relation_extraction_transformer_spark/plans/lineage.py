@@ -26,6 +26,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Observation
 from pyspark.sql import functions as F
 
@@ -46,12 +47,18 @@ def _manifest_path(out_path: str) -> str:
 
 
 def completed_buckets(spark: SparkSession, out_path: str) -> set[int]:
+    """Buckets recorded in the manifest; none when it does not exist
+    yet.  Any other read failure (a corrupt manifest, a session error)
+    raises: treating it as "nothing done" would recompute and
+    re-append every bucket."""
     try:
         return {
             r.bucket
             for r in spark.read.parquet(_manifest_path(out_path)).collect()
         }
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return set()
 
 

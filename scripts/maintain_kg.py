@@ -15,14 +15,13 @@ The daily job a production KG runs instead of a full rebuild:
     spark-submit --py-files ret_spark.zip scripts/maintain_kg.py \
         --pages /path/to/todays_pages.parquet --state /path/to/kg_state
 
-State versioning: each fold writes ``<state>/v<N+1>`` and then updates
-``<state>/LATEST``; the job never overwrites the version it is lazily
-reading (Spark cannot overwrite its own input), old versions remain for
-rollback (prune them with ``--keep-last-k``), and a crash before
-LATEST flips is harmless: the next run derives its version from the
-max COMMITTED ``v*`` directory, so the committed-but-unflipped state
-becomes the base it folds onto — never mistaken for a replay of the
-new delta.
+State versioning: each fold writes the new state into a staging
+directory under ``<state>`` and commits it by renaming it to
+``<state>/v<N+1>``; the newest ``v*`` directory is the standing state.
+The job never overwrites the version it is lazily reading (Spark cannot
+overwrite its own input), old versions remain for rollback (prune them
+with ``--keep-last-k``), and a crash before the rename is harmless: the
+previous version stays current and the next run folds onto it.
 
 The stage logic lives in :func:`maintain` so tests drive it directly
 (tests/test_maintain_kg.py proves a two-day simulation lands on exactly
@@ -110,7 +109,7 @@ def maintain(
         }
         if keep_last_k is not None:
             summary["canon"]["vacuumed"] = INC.vacuum_state(
-                canon_state_dir, keep_last_k, IC.CANON_DATASETS
+                canon_state_dir, keep_last_k
             )
 
     # everything user-facing comes off the persisted state — the raw
@@ -127,8 +126,7 @@ def maintain(
     )
     if keep_last_k is not None:
         # retention AFTER the fold + reads above: never deletes the
-        # version just written (it is the max committed) nor the one
-        # LATEST names
+        # version just written (it is the newest committed)
         summary["vacuumed"] = INC.vacuum_state(state_dir, keep_last_k)
     return report, conflicts, summary
 
@@ -145,8 +143,8 @@ def main(argv=None) -> int:
     )
     ap.add_argument(
         "--keep-last-k", type=int, default=None,
-        help="retention: delete committed state versions older than the "
-        "newest K (never the one LATEST names); default keeps all",
+        help="retention: delete committed state versions (v<N> "
+        "directories) older than the newest K; default keeps all",
     )
     args = ap.parse_args(argv)
 

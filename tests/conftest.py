@@ -7,6 +7,27 @@ os.environ.setdefault("OMP_NUM_THREADS", "1")
 os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
 
 
+@pytest.fixture
+def fail_at(monkeypatch):
+    """Inject a crash: ``fail_at(owner, "name", call=n)`` makes the
+    n-th call of ``owner.name`` raise OSError; every other call runs
+    the real function."""
+
+    def patch(owner, name, call=1):
+        real = getattr(owner, name)
+        calls = [0]
+
+        def wrapper(*args, **kwargs):
+            calls[0] += 1
+            if calls[0] == call:
+                raise OSError(f"injected failure in {name}")
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(owner, name, wrapper)
+
+    return patch
+
+
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
     s = (

@@ -109,8 +109,8 @@ def test_bridge_merges_standing_components_min_id_wins(spark, tmp_path):
     )
 
 
-def test_replay_is_noop_and_crash_recovery_uses_max_committed(
-    spark, tmp_path
+def test_replay_is_noop_and_crash_before_commit_keeps_previous_version(
+    spark, tmp_path, fail_at
 ):
     rows = _corpus()
     d1, d2 = rows[:5], rows[5:]
@@ -123,17 +123,23 @@ def test_replay_is_noop_and_crash_recovery_uses_max_committed(
     s = IC.fold_mentions_delta(spark, _df(spark, d2), state_dir, version=2)
     assert s["replayed"] is True
     assert _nodes_map(spark, state_dir, 2) == v2
-    # crash between state write and flip: LATEST lags at 1
-    INC._flip_latest(state_dir, 1)
+    # crash after the state write, before the rename commits it
     delta = [(200, "freshly crawled surface after the crash")]
+    fail_at(os, "rename")
+    with pytest.raises(OSError, match="injected"):
+        IC.fold_mentions_delta(spark, _df(spark, delta), state_dir)
+    assert INC.latest_version(state_dir) == 2
+    assert _nodes_map(spark, state_dir, 2) == v2
+    assert sorted(os.listdir(state_dir)) == ["v1", "v2"]
+    # the same delta folds again as the next version, on top of v2
     s = IC.fold_mentions_delta(spark, _df(spark, delta), state_dir)
     assert s["state_version"] == 3 and not s["replayed"]
     v3 = _nodes_map(spark, state_dir, 3)
-    assert set(v3) == set(v2) | {200}, "crashed fold's work must be kept"
+    assert set(v3) == set(v2) | {200}
     for nid, val in v2.items():
         assert v3[nid] == val
-    # vacuum with the canon datasets: old versions pruned, state intact
-    removed = INC.vacuum_state(state_dir, 1, IC.CANON_DATASETS)
+    # vacuum: old versions pruned, state intact
+    removed = INC.vacuum_state(state_dir, 1)
     assert removed == [1, 2]
-    assert INC.committed_versions(state_dir, IC.CANON_DATASETS) == [3]
+    assert INC.committed_versions(state_dir) == [3]
     assert _nodes_map(spark, state_dir, 3) == v3

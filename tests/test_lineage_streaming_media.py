@@ -46,6 +46,27 @@ def test_resumable_materialization(spark, tmp_path):
     assert {r.run_id for r in m.collect()} >= {"r1", "r3"}
 
 
+def test_unreadable_manifest_raises_instead_of_recomputing(spark, tmp_path):
+    """Only a missing manifest means "no bucket done"; a manifest that
+    cannot be read must stop the run before it recomputes and
+    re-appends every bucket."""
+    import os
+
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    out = str(tmp_path / "kg_out")
+    os.makedirs(out)
+    with open(f"{out}/_manifest", "w") as fh:
+        fh.write("not parquet\n")
+    pages = PG.synthetic_pages(spark, 8, seed=5, partitions=2)
+    with pytest.raises(AnalysisException):
+        LIN.materialize_triples_resumable(
+            spark, pages, out, run_id="r1", n_buckets=4, buckets_per_group=4
+        )
+    assert not os.path.exists(f"{out}/triples")
+
+
 def test_observed_metrics(spark):
     pages = PG.synthetic_pages(spark, 30, seed=9, partitions=3)
     m = LIN.observed_pipeline_metrics(spark, pages)

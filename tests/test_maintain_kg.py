@@ -44,8 +44,8 @@ def test_two_day_fold_equals_full_rebuild(spark, tmp_path, split_pages):
     assert s1["bootstrap"] and s1["state_version"] == 1
     report2, conflicts2, s2 = maintain(spark, day2, state_dir)
     assert not s2["bootstrap"] and s2["state_version"] == 2
-    # both versions persisted; LATEST points at v2
-    assert sorted(os.listdir(state_dir)) == ["LATEST", "v1", "v2"]
+    # both versions persisted, nothing else left in the state dir
+    assert sorted(os.listdir(state_dir)) == ["v1", "v2"]
 
     # single-pass rebuild from the full crawl
     triples = PL.triples_plan(full, spark, keep_probs=False)

@@ -2,6 +2,7 @@
 must land on exactly the single-pass batch rebuild, and a re-delivered
 batch must be a no-op (exactly-once via durable batch-id versions)."""
 
+import errno
 import os
 
 from pyspark.sql import functions as F
@@ -118,12 +119,14 @@ def test_streamed_canon_fold_equals_batch_rebuild_and_replay_is_noop(
     assert {
         (r.node_id): (r.name, r.component) for r in after.collect()
     } == streamed
-    assert _os.path.exists(os.path.join(state_dir, "LATEST"))
+    assert sorted(_os.listdir(state_dir)) == sorted(
+        f"v{i}" for i in range(1, n_versions + 1)
+    ), "a replay writes nothing, not even a staging directory"
 
 
 def test_unwritten_out_of_order_version_is_rejected(spark, tmp_path):
-    """A fresh (never-committed) version at-or-below LATEST must raise —
-    folding it would merge against a later state."""
+    """A fresh (never-committed) version at or below the current one
+    must raise — folding it would merge against a later state."""
     import pytest
 
     pages = spark.read.parquet(PAGES)
@@ -139,13 +142,45 @@ def test_unwritten_out_of_order_version_is_rejected(spark, tmp_path):
         INC.fold_pages_delta(spark, pages, state_dir, version=1)
 
 
-def test_crash_before_latest_flip_does_not_swallow_next_delta(
-    spark, tmp_path
+def _n_obs(spark, state_dir, version):
+    return (
+        INC.read_edge_state(spark, f"{state_dir}/v{version}")
+        .stats.agg(F.sum("n_obs")).collect()[0][0]
+    )
+
+
+def _report(spark, state_dir, version):
+    return sorted(
+        map(
+            tuple,
+            INC.edge_report(
+                INC.read_edge_state(spark, f"{state_dir}/v{version}")
+            ).collect(),
+        )
+    )
+
+
+def _tree(path):
+    """Every file under ``path`` with its bytes."""
+    out = {}
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            with open(full, "rb") as fh:
+                out[os.path.relpath(full, path)] = fh.read()
+    return out
+
+
+def test_crash_before_commit_does_not_swallow_next_delta(
+    spark, tmp_path, fail_at
 ):
-    """ADVICE r6: batch path, crash AFTER write_edge_state but BEFORE
-    the LATEST flip.  The next run (a DIFFERENT pages delta) must fold
-    on top of the committed-but-unflipped version — never classify
-    itself as a replay and silently drop its data."""
+    """Batch path, crash after the new state is written but before the
+    rename commits it.  The previous version stays current and intact,
+    the staging directory is gone, and the next run of the same delta
+    folds on top of the previous version — never classified as a
+    replay, never dropping its data."""
+    import pytest
+
     pages = spark.read.parquet(PAGES)
     urls = sorted(r.url for r in pages.select("url").distinct().collect())
     half = set(urls[: len(urls) // 2])
@@ -154,68 +189,99 @@ def test_crash_before_latest_flip_does_not_swallow_next_delta(
 
     state_dir = str(tmp_path / "state")
     os.makedirs(state_dir)
-    INC.fold_pages_delta(spark, d1, state_dir)  # v1, LATEST=1
-    INC.fold_pages_delta(spark, d2, state_dir)  # v2, LATEST=2
-    # simulate the crash: v2 is committed but LATEST still says 1
-    INC._flip_latest(state_dir, 1)
-    v2_obs = (
-        INC.read_edge_state(spark, f"{state_dir}/v2")
-        .stats.agg(F.sum("n_obs")).collect()[0][0]
-    )
-    d2_obs = _obs(spark, d2).count()
+    INC.fold_pages_delta(spark, d1, state_dir)  # v1
+    v1_report = _report(spark, state_dir, 1)
+    fail_at(os, "rename")
+    with pytest.raises(OSError, match="injected"):
+        INC.fold_pages_delta(spark, d2, state_dir)
+    assert INC.latest_version(state_dir) == 1
+    assert _report(spark, state_dir, 1) == v1_report
+    assert os.listdir(state_dir) == ["v1"], "staging directory left behind"
 
-    # the next run folds d2's pages AGAIN as a fresh delta (a distinct
-    # delivery, so its observations must ADD — under the old LATEST+1
-    # law this run would alias onto v2's _SUCCESS markers, classify
-    # itself 'replayed', and silently drop the data)
     s = INC.fold_pages_delta(spark, d2, state_dir)
-    assert s["state_version"] == 3, "must base on max committed, not LATEST"
-    assert s["replayed"] is False
-    assert INC.latest_version(state_dir) == 3
-    v3_obs = (
-        INC.read_edge_state(spark, f"{state_dir}/v3")
-        .stats.agg(F.sum("n_obs")).collect()[0][0]
+    assert s == {"state_version": 2, "bootstrap": False, "replayed": False}
+    # exact integer law: the new version is the old one plus the delta
+    assert _n_obs(spark, state_dir, 2) == (
+        _n_obs(spark, state_dir, 1) + _obs(spark, d2).count()
     )
-    # exact integer law: the crashed fold's work (v2 = d1+d2) was kept
-    # AND the new delta's observations landed on top
-    assert v3_obs == v2_obs + d2_obs
+
+
+def test_second_writer_of_a_version_raises_and_leaves_it_intact(
+    spark, tmp_path
+):
+    """Two writers fold the same version: the one that renames second
+    fails loudly, and the winner's ``v<N>`` stays byte-identical."""
+    import pytest
+
+    pages = spark.read.parquet(PAGES)
+    state_dir = str(tmp_path / "state")
+    committed = {}
+
+    def write(base, out):
+        # the loser has chosen v1 and is writing it; meanwhile the
+        # winner folds and commits v1
+        assert base is None
+        INC.fold_pages_delta(spark, pages, state_dir)
+        committed.update(_tree(os.path.join(state_dir, "v1")))
+        INC.write_edge_state(INC.edge_state(_obs(spark, pages)), out)
+        return {}
+
+    with pytest.raises(OSError) as err:
+        INC.fold_version(state_dir, None, write)
+    assert err.value.errno in (errno.ENOTEMPTY, errno.EEXIST)
+    assert committed
+    assert _tree(os.path.join(state_dir, "v1")) == committed
+    assert os.listdir(state_dir) == ["v1"], "staging directory left behind"
 
 
 def test_vacuum_prunes_old_versions_and_fold_still_equals_rebuild(
-    spark, tmp_path
+    spark, tmp_path, fail_at
 ):
-    """keep_last_k retention: old committed versions are deleted, the
-    LATEST / max-committed versions survive, and the next fold after a
-    vacuum still equals the full rebuild."""
+    """keep_last_k retention: old committed versions are deleted and the
+    newest survives — also when the vacuum is interrupted after its
+    first delete — and the next fold after a vacuum still equals the
+    full rebuild."""
+    import shutil
+
     import pytest
 
     pages = spark.read.parquet(PAGES)
     urls = sorted(r.url for r in pages.select("url").distinct().collect())
-    third = max(1, len(urls) // 3)
+    quarter = max(1, len(urls) // 4)
     parts = [
-        pages.where(F.col("url").isin(set(urls[i * third: (i + 1) * third])))
-        for i in range(2)
-    ] + [pages.where(~F.col("url").isin(set(urls[: 2 * third])))]
+        pages.where(
+            F.col("url").isin(set(urls[i * quarter: (i + 1) * quarter]))
+        )
+        for i in range(3)
+    ] + [pages.where(~F.col("url").isin(set(urls[: 3 * quarter])))]
 
     state_dir = str(tmp_path / "state")
     os.makedirs(state_dir)
-    for d in parts[:2]:
+    for d in parts[:3]:
         INC.fold_pages_delta(spark, d, state_dir)
-    removed = INC.vacuum_state(state_dir, keep_last_k=1)
-    assert removed == [1]
+    v3_report = _report(spark, state_dir, 3)
+    # interrupted: v1 is deleted, the delete of v2 fails
+    fail_at(shutil, "rmtree", call=2)
+    with pytest.raises(OSError, match="injected"):
+        INC.vacuum_state(state_dir, keep_last_k=1)
     assert not os.path.exists(os.path.join(state_dir, "v1"))
-    assert INC.committed_versions(state_dir) == [2]
-    assert INC.latest_version(state_dir) == 2
+    assert INC.latest_version(state_dir) == 3
+    assert _report(spark, state_dir, 3) == v3_report
+    # the next vacuum finishes the job
+    removed = INC.vacuum_state(state_dir, keep_last_k=1)
+    assert removed == [2]
+    assert INC.committed_versions(state_dir) == [3]
+    assert INC.latest_version(state_dir) == 3
 
-    INC.fold_pages_delta(spark, parts[2], state_dir)  # folds onto v2
-    # exact integer law: vacuuming v1 must not lose any folded
-    # observation (v3 = all three deltas; probs regroup across batch
-    # boundaries at ~1e-6, so counts are the precision-safe comparison)
-    v3 = INC.read_edge_state(spark, f"{state_dir}/v3")
-    got_obs = v3.stats.agg(F.sum("n_obs")).collect()[0][0]
+    INC.fold_pages_delta(spark, parts[3], state_dir)  # folds onto v3
+    # exact integer law: vacuuming must not lose any folded observation
+    # (v4 = all four deltas; probs regroup across batch boundaries at
+    # ~1e-6, so counts are the precision-safe comparison)
+    v4 = INC.read_edge_state(spark, f"{state_dir}/v4")
+    got_obs = v4.stats.agg(F.sum("n_obs")).collect()[0][0]
     want_obs = _obs(spark, pages).count()
     assert got_obs == want_obs
-    got_edges = v3.stats.count()
+    got_edges = v4.stats.count()
     want_edges = (
         INC.edge_state(_obs(spark, pages)).stats.count()
     )
