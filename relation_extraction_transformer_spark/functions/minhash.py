@@ -260,33 +260,21 @@ def band_candidate_pairs(
     id_col: str,
     out_a: str = "src",
     out_b: str = "dst",
-    persist: bool = True,
-    persisted_out: list | None = None,
 ) -> DataFrame:
     """Self-equi-join on (band, band_hash), id_a < id_b, distinct.  The
     only join in the near-dup path — AQE-skew-splittable at scale.
 
-    ``persist`` (default) caches the band rows before the self-join so the
-    shingle explode + K-min-hash aggregation — the dominant cost of the
-    whole dedup path — runs ONCE instead of once per join side (round 2
-    computed it twice here and a third time in the Jaccard verify stage).
-    Spark's cache manager is plan-keyed, so repeated calls over the same
-    input reuse one entry, and downstream consumers of the same bands plan
-    (the Jaccard verify join) hit the cache too.  MEMORY_AND_DISK: band
-    rows are 2 small rows/doc — at true 100 TB scale a pipeline would
-    materialize them to a table instead, which is the same idea durable.
-
-    Cache lifetime: a long-lived session calling this over many distinct
-    inputs would otherwise accumulate cache entries — pass a list as
-    ``persisted_out`` to receive the persisted handle and
-    ``.unpersist()`` it once the pairs (and any band-blocked verify
-    stage sharing the plan) have been consumed."""
-    if persist:
-        from pyspark import StorageLevel
-
-        bands_df = bands_df.persist(StorageLevel.MEMORY_AND_DISK)
-        if persisted_out is not None:
-            persisted_out.append(bands_df)
+    The band rows are ``localCheckpoint``ed (eagerly) before the
+    self-join, so the shingle hashing + k min-hash projections — the
+    dominant cost of the whole dedup path — run ONCE instead of once per
+    join side.  Unlike a ``persist()``, the checkpoint leaves no entry in
+    the session's cache manager: Spark's context cleaner frees its blocks
+    once the returned plan is garbage-collected, so a long-lived session
+    calling this per rebuild or per fold accumulates nothing.  The join
+    re-shuffles on (band, band_hash) either way.  Band rows are a few
+    small rows per input row; at true 100 TB scale a pipeline would
+    materialize them to a table instead, the same idea durable."""
+    bands_df = bands_df.localCheckpoint(eager=True)
     a, b = bands_df.alias("a"), bands_df.alias("b")
     return (
         a.join(

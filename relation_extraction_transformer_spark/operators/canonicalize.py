@@ -77,7 +77,8 @@ def connected_components(
     one shuffle; ``localCheckpoint`` truncates lineage so the plan does not
     grow exponentially across iterations.  Converges in O(log d) rounds via
     label shortcutting (labels jump to the component minimum, not just the
-    neighbor minimum).
+    neighbor minimum).  Raises ``RuntimeError`` if labels still change
+    in round ``max_iter`` rather than return unconverged labels.
     """
     # the symmetric edge list is referenced by EVERY round's propagation
     # join; checkpoint it once so rounds read a materialized frame
@@ -163,4 +164,9 @@ def connected_components(
             labels = shortcut
             if changed == 0:
                 break
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} "
+            "rounds: labels still changed in the last one"
+        )
     return labels

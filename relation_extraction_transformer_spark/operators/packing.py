@@ -80,8 +80,6 @@ def packed_token_offsets(
     order_col: str = "doc_id",
     group_cols: tuple[str, ...] = (),
     n_shards: int | None = None,
-    persist: bool = False,
-    persisted_out: list | None = None,
 ) -> DataFrame:
     """Distributed global (or per-group) running token total.
 
@@ -91,25 +89,14 @@ def packed_token_offsets(
     packing).  Equivalent to a single unpartitioned window cumsum, but
     with no single-task stage.
 
-    ``persist=True`` caches the input before the three actions that
-    consume it (the bounds aggregate, the Phase-B totals collect, and
-    the returned frame) — without it, a heavy upstream plan (curation's
-    LSH near-dedup + BPE encode) recomputes per action.  Off by default
-    so repeated calls in a long-lived session (the driver's query
-    battery) don't accumulate cache entries; opt in for heavy inputs
-    and pass a list as ``persisted_out`` to receive the handle and
-    ``.unpersist()`` it once the packed output is consumed (same
-    lifetime contract as functions/minhash.band_candidate_pairs).
+    ``docs`` is consumed by three actions (the bounds aggregate, the
+    Phase-B totals collect, and the returned frame).  A caller with a
+    heavy upstream plan (curation's LSH near-dedup + BPE encode) passes
+    ``docs.localCheckpoint(eager=True)`` so that plan runs once.
     """
     spark = docs.sparkSession
     if n_shards is None:
         n_shards = spark.sparkContext.defaultParallelism * 4
-    if persist:
-        from pyspark import StorageLevel
-
-        docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
-        if persisted_out is not None:
-            persisted_out.append(docs)
 
     bounds = docs.agg(
         F.min(order_col).alias("lo"), F.max(order_col).alias("hi")
@@ -179,16 +166,13 @@ def pack_segments(
     order_col: str = "doc_id",
     group_cols: tuple[str, ...] = (),
     n_shards: int | None = None,
-    persist: bool = False,
-    persisted_out: list | None = None,
 ) -> DataFrame:
     """Assign every document its (pack_id, pack_offset) under fixed-length
     packing, plus a ``crosses_boundary`` flag for docs split across
-    packs.  Scale-safe: see module docstring.  ``persist`` /
-    ``persisted_out``: see :func:`packed_token_offsets`."""
+    packs.  Scale-safe: see module docstring.  ``docs`` is read three
+    times: see :func:`packed_token_offsets`."""
     cum = packed_token_offsets(
-        docs, tokens_col, order_col, group_cols, n_shards,
-        persist=persist, persisted_out=persisted_out,
+        docs, tokens_col, order_col, group_cols, n_shards
     )
     start = F.col("cum_tokens") - F.col(tokens_col)
     end_incl = F.col("cum_tokens") - 1

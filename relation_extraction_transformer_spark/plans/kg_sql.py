@@ -871,28 +871,12 @@ KG_REGISTRY["kg_pagerank"] = QuerySpec(
 )
 
 
-
-# plan-inspection (materialize=False) callers need the persisted edge
-# frame alive so the returned plan prints the production
-# InMemoryTableScan shape — but never releasing it leaks one pinned
-# MEMORY_AND_DISK entry per call in the long-lived session (ADVICE r6).
-# Compromise: at most ONE inspection cache is alive; each call releases
-# the previous call's frame.
-_PLAN_INSPECT_CACHE: list = []
-
-
-def _plan_inspect_keepalive(df: DataFrame) -> None:
-    while _PLAN_INSPECT_CACHE:
-        _PLAN_INSPECT_CACHE.pop().unpersist()
-    _PLAN_INSPECT_CACHE.append(df)
-
-
 def _materialize_release(df: DataFrame, *handles: DataFrame) -> DataFrame:
     """Eagerly materialize a (small) query result, then unpersist the
     intermediate caches that fed it.  The graph-analytics queries run
     inside the driver's long-lived 50+-query session; without this,
     every invocation pins new MEMORY_AND_DISK entries for the session's
-    lifetime (the cache-lifetime leak band_candidate_pairs documents)."""
+    lifetime."""
     out = df.localCheckpoint(eager=True)
     for h in handles:
         h.unpersist()
@@ -1200,7 +1184,6 @@ def _kg_khop_spark(
     sf_dir: str,
     triples: DataFrame | None = None,
     k: int = _KHOP_K,
-    materialize: bool = True,
 ) -> DataFrame:
     """Multi-source BFS over the directed entity graph: min hop distance
     from the {_KHOP_SEEDS} highest-out-degree nodes (the hub entities a
@@ -1245,12 +1228,6 @@ def _kg_khop_spark(
         )
         dist = dist.unionAll(frontier)
     out = dist.groupBy("node").agg(F.min("dist").alias("dist"))
-    if not materialize:  # plan-inspection path: caller sees the raw plan
-        # the cache must stay alive for the plan to print its
-        # InMemoryTableScan shape; the keepalive bounds the session to
-        # one pinned inspection frame (ADVICE r6)
-        _plan_inspect_keepalive(edges)
-        return out
     return _materialize_release(out, edges)
 
 
@@ -1288,7 +1265,6 @@ def _kg_link_prediction_spark(
     sf_dir: str,
     triples: DataFrame | None = None,
     max_middle_degree: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Common-neighbor link prediction over the undirected entity graph:
     for every NON-adjacent pair sharing >= {_LP_MIN_CN} neighbors, the
@@ -1356,9 +1332,6 @@ def _kg_link_prediction_spark(
             "u", "w", "cn", F.col("aa_dec").cast("double").alias("aa_score")
         )
     )
-    if not materialize:  # plan-inspection path: caller sees the raw plan
-        _plan_inspect_keepalive(und)
-        return out
     return _materialize_release(out, und)
 
 

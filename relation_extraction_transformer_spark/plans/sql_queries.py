@@ -1863,9 +1863,8 @@ register(
             "vec_a", "vec_b", F.round("cosine_raw", 6).alias("cosine")
         )
     )(
-        # persist the quantize+bucket projection so it runs once, not once
-        # per self-join side (the LSH-bands persist pattern; plan-keyed
-        # cache, so repeated query builds reuse one entry)
+        # checkpoint the quantize+bucket projection so it runs once, not
+        # once per self-join side (as band_candidate_pairs does)
         (
             lambda emb: emb.unionAll(
                 emb.filter(F.col("vec_id") % 50 == 0).select(
@@ -1889,7 +1888,7 @@ register(
                 ],
                 F.lit(0),
             ).cast("long").alias("bucket"),
-        ).persist()
+        ).localCheckpoint(eager=True)
     )
 )
 

@@ -51,7 +51,6 @@ def curate(
     sem_threshold: float = 0.999,
     sem_cell_size: int = 512,
     sem_cell_cap: int = 4096,
-    persisted_out: list | None = None,
 ):
     """Run the curation funnel over a (doc_id, lang, text) DataFrame.
 
@@ -128,12 +127,7 @@ def curate(
     bands = MH.minhash_bands(
         kept, "doc_id", hashes=MH.word_shingle_hashes_sql("text")
     )
-    # thread persisted_out so the MEMORY_AND_DISK bands cache is released
-    # with the packer handle in main()/tests (ADVICE r4: without it each
-    # curate() call leaked one cache entry in a long-lived session)
-    pairs = MH.band_candidate_pairs(
-        bands, "doc_id", "doc_a", "doc_b", persisted_out=persisted_out
-    )
+    pairs = MH.band_candidate_pairs(bands, "doc_id", "doc_a", "doc_b")
     sh = kept.select(
         "doc_id", F.array_distinct(MH.word_shingles(F.col("text"))).alias("s")
     )
@@ -210,17 +204,14 @@ def curate(
     # (operators/packing.py).  A plain Window.partitionBy("lang") would
     # funnel the dominant-language stratum through one task; the packer
     # range-shards WITHIN each language and offsets by broadcast shard
-    # totals, so no single task ever sees a whole stratum.
-    # persist=True: the packer runs three actions over this frame, whose
-    # plan carries the whole funnel (LSH near-dedup, optionally a
-    # corpus-wide BPE encode) — cache it once; the caller releases the
-    # handle via persisted_out after materializing the packed output
+    # totals, so no single task ever sees a whole stratum.  The packer
+    # runs three actions over its input, whose plan carries the whole
+    # funnel (LSH near-dedup, optionally a corpus-wide BPE encode):
+    # checkpoint it so that plan runs once.
     packed = PK.pack_segments(
-        to_pack,
+        to_pack.localCheckpoint(eager=True),
         pack_len=pack_len,
         group_cols=("lang",),
-        persist=True,
-        persisted_out=persisted_out,
     ).select("doc_id", "lang", "text", "n_tokens", "pack_id", "pack_offset")
     stages["packed"] = packed
     return stages, report
@@ -263,7 +254,6 @@ def main() -> None:
         if "vec_id" in embeddings.columns:
             embeddings = embeddings.withColumnRenamed("vec_id", "doc_id")
         embeddings = embeddings.select("doc_id", "embedding")
-    persisted: list = []
     stages, report = curate(
         spark,
         docs,
@@ -272,11 +262,8 @@ def main() -> None:
         keep_rate_other=args.keep_rate_other,
         bpe_merges=args.bpe_merges,
         embeddings=embeddings,
-        persisted_out=persisted,
     )
     TB.write_table(stages["packed"], os.path.join(args.out, "curated"))
-    for h in persisted:
-        h.unpersist()
     report["packs"] = (
         spark.read.parquet(os.path.join(args.out, "curated"))
         .select("lang", "pack_id").distinct().count()

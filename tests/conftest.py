@@ -28,6 +28,26 @@ def fail_at(monkeypatch):
     return patch
 
 
+@pytest.fixture
+def raw_graph_plans(monkeypatch):
+    """Make the graph-analytics queries return their plan unmaterialized
+    (``kg_sql._materialize_release`` passes its input through), so a test
+    can inspect the plan over the persisted frames; those frames are
+    unpersisted at test end."""
+    from relation_extraction_transformer_spark.plans import kg_sql as KQ
+
+    handles = []
+
+    def passthrough(df, *persisted):
+        handles.extend(persisted)
+        return df
+
+    monkeypatch.setattr(KQ, "_materialize_release", passthrough)
+    yield
+    for h in handles:
+        h.unpersist()
+
+
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
     s = (

@@ -1,5 +1,7 @@
 """Entity linking, canonicalization, and graph materialization tests."""
 
+import os
+
 import pyspark.sql.functions as F
 
 from relation_extraction_transformer_spark.operators import canonicalize as CANON
@@ -43,6 +45,50 @@ def test_connected_components_fractional_ids(spark):
         for r in CANON.connected_components(edges).collect()
     }
     assert got == {i: 0.01 for i in ids}
+
+
+def test_resolution_leaves_no_cache_entries(spark, tmp_path):
+    """A long-lived session that rebuilds the graph, folds name deltas
+    and runs the LSH queries must not accumulate cache entries: every
+    intermediate an operator materializes is released by that operator."""
+    import __spark_entry__ as entry
+    from relation_extraction_transformer_spark.operators import (
+        incremental_canon as IC,
+    )
+
+    triples = spark.createDataFrame(
+        [
+            ("Alice Turner", "works_for", "Acme Corp", 0.9, "u1"),
+            ("alice turner", "works_for", "Acme Corp.", 0.8, "u2"),
+            ("Bob Stone", "lives_in", "Springfield", 0.7, "u3"),
+        ],
+        "subj string, pred string, obj string, prob double, url string",
+    )
+    state_dir = str(tmp_path / "canon")
+    os.makedirs(state_dir)
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    spark.createDataFrame(
+        [(1, text), (2, text), (3, "an unrelated short note")],
+        "doc_id long, text string",
+    ).write.parquet(str(tmp_path / "sf" / "documents.parquet"))
+    spark.catalog.clearCache()
+    for run in range(2):
+        nodes, edges = GRAPH.build_graph(triples, spark)
+        GRAPH.write_graph(nodes, edges, str(tmp_path / f"graph{run}"))
+    for delta in (
+        [(1, "kumquat zeppelin alpha"), (2, "kumquat zeppelin alphq")],
+        [(3, "kumquat zeppelin alpha x"), (4, "lonely surface")],
+    ):
+        IC.fold_mentions_delta(
+            spark,
+            spark.createDataFrame(delta, "node_id long, name string"),
+            state_dir,
+        )
+    pairs = entry.queries()["minhash_candidate_pairs"](
+        spark, str(tmp_path / "sf")
+    ).collect()
+    assert [(r.doc_a, r.doc_b) for r in pairs] == [(1, 2)]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_linking_best_candidate(spark):
@@ -536,7 +582,7 @@ def test_link_prediction_matches_python_brute_force(spark):
         assert abs(got[p][1] - want[p][1]) < 1e-8, p
 
 
-def test_link_prediction_hub_cap(spark):
+def test_link_prediction_hub_cap(spark, raw_graph_plans):
     """max_middle_degree: capped output is the brute force restricted to
     middles of degree <= cap (a subset of uncapped pairs, never larger
     cn), and the degree filter sits BELOW the wedge self-join in the
@@ -587,9 +633,7 @@ def test_link_prediction_hub_cap(spark):
     # plan shape: the cap filter prints BELOW (after) the wedge
     # self-join line — i.e. it executes before the join, in its inputs
     plan = (
-        KQ._kg_link_prediction_spark(
-            spark, "", max_middle_degree=cap, materialize=False
-        )
+        KQ._kg_link_prediction_spark(spark, "", max_middle_degree=cap)
         ._jdf.queryExecution().optimizedPlan().toString()
     )
     lines = plan.splitlines()

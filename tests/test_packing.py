@@ -100,7 +100,7 @@ def test_pack_segments_survives_null_group_values(spark):
     rows = [(i, None if i % 3 == 0 else f"l{i % 2}", 100) for i in range(30)]
     docs = spark.createDataFrame(rows, "doc_id long, lang string, n_tokens long")
     out = PK.pack_segments(
-        docs, pack_len=256, group_cols=("lang",), n_shards=4, persist=False
+        docs, pack_len=256, group_cols=("lang",), n_shards=4
     ).collect()
     assert len(out) == 30
     # within each group (incl. the null group) the running total over

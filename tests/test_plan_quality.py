@@ -95,17 +95,20 @@ def test_ann_ivf_broadcasts_centroids(spark):
 
 def test_band_self_join_reuses_cached_signatures(spark):
     """Round-2 verdict item 2: the LSH band self-join must not compute the
-    minhash signatures once per join side.  band_candidate_pairs persists
-    the band rows, so BOTH sides of the self-join (and the downstream
-    Jaccard verify stage) read InMemoryTableScan instead of re-running the
-    explode + 8-min aggregation."""
+    minhash signatures once per join side.  band_candidate_pairs
+    checkpoints the band rows, so BOTH sides of the self-join read them
+    back (Scan ExistingRDD) and the plan holds no signature computation
+    (no array_min over shingle hashes)."""
     import __spark_entry__ as entry
 
     for name in ("minhash_candidate_pairs", "ngram_jaccard_buckets"):
         df = entry.queries()[name](spark, "/root/testdata/sf0.001")
         plan = _plan(df)
-        assert "InMemoryTableScan" in plan, (
-            f"{name}: band rows must come from the cache, not be recomputed"
+        assert "Scan ExistingRDD" in plan, (
+            f"{name}: band rows must come from the checkpoint"
+        )
+        assert "array_min" not in plan, (
+            f"{name}: minhash signatures must not be recomputed"
         )
 
 
@@ -123,9 +126,6 @@ def test_minhash_bands_plan_is_narrow(spark):
     # computation itself must still never shuffle, so any exchange in
     # the plan must be the round-robin one, never a hash repartition
     # of shingles or an aggregation exchange
-    # (the same round-robin exchange can appear twice when a prior query
-    # left the bands cache materialized — once live, once inside the
-    # InMemoryRelation's plan — so the guard is per-line, not a count)
     for line in plan.splitlines():
         if "Exchange" in line:
             assert "RoundRobinPartitioning" in line, (
@@ -265,7 +265,9 @@ def test_cms_plan_is_jvm_side_with_partial_aggregation(spark):
     assert "Exchange SinglePartition" not in plan
 
 
-def test_khop_seed_pick_and_frontier_joins_are_scale_shaped(spark):
+def test_khop_seed_pick_and_frontier_joins_are_scale_shaped(
+    spark, raw_graph_plans
+):
     """kg_khop's seed pick must plan as TakeOrderedAndProject (per-
     partition top-k + driver merge of 2 rows), never a global sort
     through one partition; each BFS round must broadcast the (small)
@@ -275,7 +277,7 @@ def test_khop_seed_pick_and_frontier_joins_are_scale_shaped(spark):
     Python."""
     from relation_extraction_transformer_spark.plans import kg_sql as KQ
 
-    out = KQ._kg_khop_spark(spark, "", materialize=False)
+    out = KQ._kg_khop_spark(spark, "")
     plan = _plan(out)
     assert "TakeOrderedAndProject" in plan, "seed pick must be top-k"
     assert "Exchange SinglePartition" not in plan
@@ -331,21 +333,3 @@ def test_ntriples_serialization_plan(spark):
     assert "prob" not in read and "url" not in read, (
         f"export must prune to subj/pred/obj: {read}"
     )
-
-
-def test_plan_inspection_cache_is_bounded(spark):
-    """materialize=False plan-inspection calls keep their edge cache
-    alive (the plan must print InMemoryTableScan) but at most ONE
-    inspection frame may stay pinned — repeated calls release the
-    previous one instead of leaking an entry per call (ADVICE r6)."""
-    from relation_extraction_transformer_spark.plans import kg_sql as KQ
-
-    def n_cached():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-    KQ._kg_khop_spark(spark, "", materialize=False)
-    base = n_cached()
-    KQ._kg_khop_spark(spark, "", materialize=False)
-    KQ._kg_link_prediction_spark(spark, "", materialize=False)
-    KQ._kg_khop_spark(spark, "", materialize=False)
-    assert n_cached() <= base, "inspection calls must not accumulate caches"

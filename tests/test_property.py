@@ -1,6 +1,7 @@
 """Property-based and randomized cross-checks (hypothesis)."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from relation_extraction_transformer_spark import oracle
@@ -82,6 +83,19 @@ def test_connected_components_random_graph_vs_union_find(spark):
         ).collect()
     }
     assert got == want
+
+
+def test_connected_components_raises_when_iteration_cap_hit(spark):
+    # a 6-node path needs more than one propagation round
+    path = [(i, i + 1) for i in range(5)]
+    edges = spark.createDataFrame(path, "src: long, dst: long")
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        CANON.connected_components(edges, max_iter=1)
+    got = {
+        r.node_id: r.component
+        for r in CANON.connected_components(edges).collect()
+    }
+    assert got == _py_union_find(path)
 
 
 def test_spark_binning_bulk_matches_python(spark):
