@@ -18,7 +18,7 @@ canonical node:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions import minhash as MH
@@ -77,8 +77,10 @@ def connected_components(
     one shuffle; ``localCheckpoint`` truncates lineage so the plan does not
     grow exponentially across iterations.  Converges in O(log d) rounds via
     label shortcutting (labels jump to the component minimum, not just the
-    neighbor minimum).  Raises ``RuntimeError`` if labels still change
-    in round ``max_iter`` rather than return unconverged labels.
+    neighbor minimum).  Stops at the first round in which no label
+    changed, counted by an ``Observation`` on that round's own checkpoint
+    (no extra job, any id type).  Raises ``RuntimeError`` if labels still
+    change in round ``max_iter`` rather than return unconverged labels.
     """
     # the symmetric edge list is referenced by EVERY round's propagation
     # join; checkpoint it once so rounds read a materialized frame
@@ -93,77 +95,50 @@ def connected_components(
         .withColumn("component", F.col("node_id"))
         .localCheckpoint(eager=True)
     )
-
-    # Convergence detection via the label-sum invariant (r8): min-label
-    # propagation is MONOTONE (a node's label never increases), so for
-    # INTEGRAL node ids (integer types, scale-0 decimals) the label
-    # multiset changed this round iff its exact decimal(38,0) sum
-    # strictly decreased.  One trivial aggregation job per round on the
-    # already-checkpointed labels replaces the previous join + limit(1)
-    # count job, and the propagate + shortcut pair materializes ONCE per
-    # round instead of twice (round walls in OPTIMIZATION_r08.md).  Other
-    # ids keep the join-based changed check against the previous round's
-    # checkpointed labels: strings (kg_wcc over entity names) have no
-    # numeric image, and fractional ids round in the decimal(38,0) sum
-    # (0.01 .. 0.08 all sum to 0), which would stop the loop early.
-    from pyspark.sql.types import DecimalType, IntegralType
-
-    id_type = labels.schema["component"].dataType
-    integral_ids = isinstance(id_type, IntegralType) or (
-        isinstance(id_type, DecimalType) and id_type.scale == 0
-    )
-
-    def label_sum(df: DataFrame):
-        return df.agg(
-            F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-        ).collect()[0][0]
-
-    prev_sum = label_sum(labels) if integral_ids else None
     for _ in range(max_iter):
-        # each node proposes its current label to every neighbor
+        # each node proposes its current label to every neighbor; only
+        # the node's own row carries its pre-round label ``old``.  sym is
+        # symmetric, so every message target is a src of sym and has an
+        # own row: ``old`` is never NULL after the aggregation
         msgs = (
             sym.join(labels, sym["src"] == labels["node_id"])
             .select(F.col("dst").alias("node_id"), "component")
         )
         new_labels = (
-            labels.select("node_id", "component")
-            .union(msgs)
+            labels.withColumn("old", F.col("component"))
+            .unionByName(msgs, allowMissingColumns=True)
             .groupBy("node_id")
-            .agg(F.min("component").alias("component"))
+            .agg(
+                F.min("component").alias("component"),
+                F.max("old").alias("old"),
+            )
         )
         # label shortcutting: re-point every label at its label's label
-        # (the aggregation subtree appears on both join sides; Spark
-        # reuses the exchange, so it computes once per round)
         lbl2 = new_labels.select(
             F.col("node_id").alias("c_node"), F.col("component").alias("c_comp")
         )
-        shortcut = (
+        # the round's own checkpoint counts the changed labels: a retried
+        # task or re-run stage can only inflate a non-zero count, never
+        # move it to or from 0, so the stop test is exact
+        changed = Observation()
+        labels = (
             new_labels.join(
                 lbl2, new_labels["component"] == lbl2["c_node"], "left"
             )
             .select(
                 "node_id",
                 F.coalesce("c_comp", "component").alias("component"),
+                "old",
             )
+            .observe(
+                changed,
+                F.count_if(F.col("component") != F.col("old")).alias("n"),
+            )
+            .select("node_id", "component")
             .localCheckpoint(eager=True)
         )
-        if integral_ids:
-            labels = shortcut
-            cur_sum = label_sum(labels)
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-        else:
-            changed = (
-                shortcut.alias("n")
-                .join(labels.alias("o"), "node_id")
-                .filter(F.col("n.component") != F.col("o.component"))
-                .limit(1)
-                .count()
-            )
-            labels = shortcut
-            if changed == 0:
-                break
+        if changed.get["n"] == 0:
+            break
     else:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} "

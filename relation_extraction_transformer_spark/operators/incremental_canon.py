@@ -54,7 +54,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import canonicalize as CANON
@@ -100,16 +100,21 @@ def fold_into(
     std_bands: DataFrame,
     delta_names: DataFrame,
     jaccard_threshold: float = 0.6,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, dict]:
     """The pure fold: standing (nodes, bands) + delta mentions -> new
-    (nodes, bands, new_names, touched_relabel_map).  Disk-free core
-    shared by :func:`fold_mentions_delta` and the in-memory
+    (nodes, bands, stats), stats = the ``new_nodes`` and
+    ``touched_components`` counts, observed on checkpoints the fold
+    takes anyway (no extra job).  Disk-free core shared by
+    :func:`fold_mentions_delta` and the in-memory
     ``kg_canonical_map_incremental`` oracle query (whose DuckDB twin
     rebuilds in one pass — the hash compare IS fold==rebuild,
     cross-engine)."""
-    new_names = delta_names.join(
-        std_nodes.select("node_id"), "node_id", "left_anti"
-    ).localCheckpoint(eager=True)
+    n_new, n_touched = Observation(), Observation()
+    new_names = (
+        delta_names.join(std_nodes.select("node_id"), "node_id", "left_anti")
+        .observe(n_new, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
     dbands = CANON.minhash_band_hashes(new_names, "name")
     dd = CANON.candidate_pairs(dbands)
     # delta × standing: every (new, known) pair sharing a band.
@@ -157,6 +162,7 @@ def fold_into(
             F.col("component").alias("new_component"),
         )
         .filter(F.col("old_component") != F.col("new_component"))
+        .observe(n_touched, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
     nodes_kept = (
@@ -179,7 +185,11 @@ def fold_into(
     bands = std_bands.unionByName(
         dbands.select("node_id", "band", "band_hash")
     )
-    return nodes, bands, new_names, touched
+    stats = {
+        "new_nodes": n_new.get["n"],
+        "touched_components": n_touched.get["n"],
+    }
+    return nodes, bands, stats
 
 
 def fold_mentions_delta(
@@ -199,13 +209,9 @@ def fold_mentions_delta(
         delta_names = mentions.select("node_id", "name").distinct()
         if base is not None:
             std_nodes, std_bands = read_canon_state(spark, base)
-            nodes, bands, new_names, touched = fold_into(
+            nodes, bands, stats = fold_into(
                 std_nodes, std_bands, delta_names, jaccard_threshold
             )
-            stats = {
-                "new_nodes": new_names.count(),
-                "touched_components": touched.count(),
-            }
         else:
             nodes, bands = canon_state(delta_names, jaccard_threshold)
             stats = {

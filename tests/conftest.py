@@ -48,6 +48,29 @@ def raw_graph_plans(monkeypatch):
         h.unpersist()
 
 
+def _union_find(edges):
+    parent = {}
+
+    def find(a):
+        while parent.setdefault(a, a) != a:
+            parent[a] = parent[parent[a]]
+            a = parent[a]
+        return a
+
+    for u, v in edges:
+        ra, rb = find(u), find(v)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+@pytest.fixture
+def union_find():
+    """Pure-Python connected components: ``union_find(edges)`` maps every
+    endpoint to the smallest id of its component."""
+    return _union_find
+
+
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
     s = (

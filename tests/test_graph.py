@@ -1,8 +1,10 @@
 """Entity linking, canonicalization, and graph materialization tests."""
 
 import os
+from decimal import Decimal
 
 import pyspark.sql.functions as F
+import pytest
 
 from relation_extraction_transformer_spark.operators import canonicalize as CANON
 from relation_extraction_transformer_spark.operators import linking as LINK
@@ -33,18 +35,66 @@ def test_connected_components_long_chain(spark):
     assert comps.agg(F.min("component")).first()[0] == 0
 
 
-def test_connected_components_fractional_ids(spark):
-    # every double id 0.01 .. 0.08 rounds to 0 in a decimal(38,0) label
-    # sum, so a label-sum convergence check would stop after round one
-    ids = [round(0.01 * k, 2) for k in range(1, 9)]
-    edges = spark.createDataFrame(
-        list(zip(ids, ids[1:])), "src: double, dst: double"
-    )
-    got = {
-        r.node_id: r.component
-        for r in CANON.connected_components(edges).collect()
-    }
-    assert got == {i: 0.01 for i in ids}
+_DEC = [Decimal(9 * 10**37 + i) for i in range(7)]
+
+
+@pytest.mark.parametrize(
+    "ids, id_type, ansi",
+    [
+        # 0.01 .. 0.08: distinct doubles that all round to the same integer
+        ([round(0.01 * k, 2) for k in range(1, 9)], "double", None),
+        ([f"n{k:03d}" for k in range(12)], "string", None),
+        # ids near the decimal(38,0) ceiling: any sum of labels overflows
+        (_DEC, "decimal(38,0)", None),
+        (_DEC, "decimal(38,0)", "false"),
+    ],
+    ids=["fractional_double", "string", "decimal_ansi_default",
+         "decimal_ansi_off"],
+)
+def test_connected_components_id_types(spark, union_find, ids, id_type, ansi):
+    # the stop test counts changed labels, so it never depends on the
+    # ids' numeric image
+    path = list(zip(ids, ids[1:]))
+    edges = spark.createDataFrame(path, f"src {id_type}, dst {id_type}")
+    key = "spark.sql.ansi.enabled"
+    before = spark.conf.get(key)
+    try:
+        if ansi is not None:
+            spark.conf.set(key, ansi)
+        got = {
+            r.node_id: r.component
+            for r in CANON.connected_components(edges).collect()
+        }
+    finally:
+        spark.conf.set(key, before)
+    assert got == union_find(path)
+
+
+def test_connected_components_convergence_adds_no_job(
+    spark, union_find, monkeypatch
+):
+    """Only CC's own localCheckpoints act: the stop test rides the
+    round's checkpoint, so no collect/count/first/take runs."""
+    paths = [
+        [(i, i + 1) for i in range(60)],
+        [(f"s{i:03d}", f"s{i + 1:03d}") for i in range(60)],
+    ]
+    frames = [
+        spark.createDataFrame(paths[0], "src long, dst long"),
+        spark.createDataFrame(paths[1], "src string, dst string"),
+    ]
+
+    def no_action(*args, **kwargs):
+        raise AssertionError("connected_components ran a driver action")
+
+    for name in ("collect", "count", "first", "take"):
+        monkeypatch.setattr(type(frames[0]), name, no_action)
+    comps = [CANON.connected_components(f) for f in frames]
+    monkeypatch.undo()
+    for path, comp in zip(paths, comps):
+        assert {
+            r.node_id: r.component for r in comp.collect()
+        } == union_find(path)
 
 
 def test_resolution_leaves_no_cache_entries(spark, tmp_path):

@@ -53,29 +53,13 @@ def test_get_positions_properties(args):
         assert seq[-1] == n - 1 - e
 
 
-def _py_union_find(edges):
-    parent = {}
-
-    def find(a):
-        while parent.setdefault(a, a) != a:
-            parent[a] = parent[parent[a]]
-            a = parent[a]
-        return a
-
-    for u, v in edges:
-        ra, rb = find(u), find(v)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {n: find(n) for n in parent}
-
-
-def test_connected_components_random_graph_vs_union_find(spark):
+def test_connected_components_random_graph_vs_union_find(spark, union_find):
     rng = np.random.default_rng(17)
     edges = [
         (int(rng.integers(0, 120)), int(rng.integers(0, 120)))
         for _ in range(150)
     ]
-    want = _py_union_find(edges)
+    want = union_find(edges)
     got = {
         r.node_id: r.component
         for r in CANON.connected_components(
@@ -85,7 +69,7 @@ def test_connected_components_random_graph_vs_union_find(spark):
     assert got == want
 
 
-def test_connected_components_raises_when_iteration_cap_hit(spark):
+def test_connected_components_raises_when_iteration_cap_hit(spark, union_find):
     # a 6-node path needs more than one propagation round
     path = [(i, i + 1) for i in range(5)]
     edges = spark.createDataFrame(path, "src: long, dst: long")
@@ -95,7 +79,7 @@ def test_connected_components_raises_when_iteration_cap_hit(spark):
         r.node_id: r.component
         for r in CANON.connected_components(edges).collect()
     }
-    assert got == _py_union_find(path)
+    assert got == union_find(path)
 
 
 def test_spark_binning_bulk_matches_python(spark):
