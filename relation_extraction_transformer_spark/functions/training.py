@@ -1,4 +1,4 @@
-"""Training-side data operators (SURVEY O1, O2, P10).
+"""Training-side data operators (SURVEY P10).
 
 Inference never uses these (the reference applies them only when
 ``evaluation=False``); they exist so a training-data pipeline built on
@@ -11,18 +11,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import constants as C
-
-
-def seeded_shuffle(df: DataFrame, seed: int, key_cols: list[str]) -> DataFrame:
-    """O1 (ref:data/loader.py:53-56): deterministic global shuffle.
-
-    ``rand(seed)`` is partition-layout dependent in Spark, so we order by a
-    seeded HASH of the row key instead — same permutation on any cluster
-    size (the distributed-correct form of the reference's seeded
-    random.shuffle)."""
-    return df.orderBy(
-        F.xxhash64(F.concat_ws("\x1f", F.lit(str(seed)), *key_cols))
-    )
 
 
 def word_dropout(ids: F.Column, rate: float, seed: int, row_key: F.Column):
@@ -46,19 +34,6 @@ def word_dropout(ids: F.Column, rate: float, seed: int, row_key: F.Column):
             F.lit(C.UNK_ID),
         ).otherwise(x),
     )
-
-
-def length_sorted(df: DataFrame, tokens_col: str = "masked_tokens",
-                  partitions: int | None = None) -> DataFrame:
-    """O2 (ref:data/loader.py:249-251,319-325): cluster rows by sentence
-    length so each Arrow batch holds few distinct lengths (bigger
-    same-length GEMM stacks in the inference UDF).  Correctness-neutral:
-    results are batch-composition invariant; this only changes efficiency.
-    """
-    n = F.size(tokens_col)
-    if partitions:
-        return df.repartitionByRange(partitions, n)
-    return df.sortWithinPartitions(n)
 
 
 def word_dropout_tokens(tokens_col, rate: float, seed: int, row_key):

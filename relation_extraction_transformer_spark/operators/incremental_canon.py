@@ -38,8 +38,8 @@ is committed by renaming its fully written staging directory to
 - ``bands``:  (node_id, band, band_hash)
 
 ``node_id`` must be a deterministic function of the normalized name
-(the convention plans/graph.py already uses — linking's entity id), so
-re-observing a known surface is a no-op (dropped by an anti-join).
+(the rule :func:`mention_names` applies), so re-observing a known
+surface is a no-op (dropped by an anti-join).
 
 Scale shape: one anti-join (new vs known), one band build over the
 delta only, two equi-joins for candidates, pairwise Jaccard on
@@ -59,6 +59,20 @@ from pyspark.sql import functions as F
 
 from . import canonicalize as CANON
 from . import incremental as INC
+from . import linking as LINK
+
+
+def mention_names(triples: DataFrame) -> DataFrame:
+    """The fold's input from extracted triples: every distinct
+    normalized subj/obj surface as (node_id, name), node_id the
+    ``stable_id`` of the normalized name."""
+    return (
+        triples.select(F.col("subj").alias("surface"))
+        .unionAll(triples.select(F.col("obj").alias("surface")))
+        .select(LINK.normalize_surface(F.col("surface")).alias("name"))
+        .distinct()
+        .select(LINK.stable_id(F.col("name")).alias("node_id"), "name")
+    )
 
 
 def canon_state(

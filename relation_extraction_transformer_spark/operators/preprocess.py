@@ -24,7 +24,12 @@ from . import ner as N
 
 
 def preprocess_candidates(pairs: DataFrame, lower: bool = False) -> DataFrame:
-    """pairs (from candidates.generate_pairs) -> model feature columns."""
+    """pairs (from candidates.generate_pairs) -> model feature columns.
+
+    ``pairs`` must already carry ``pos_ids``/``ner_ids``: tag ids are
+    per-sentence, so :func:`attach_tag_ids` runs upstream of the pair
+    explode (as ``plans.pipeline.candidates_plan`` does) instead of once
+    per candidate here."""
     # P1; shipped config lower=False
     toks = M.lower_tokens_sql("tokens") if lower else "tokens"
     df = pairs.withColumn(
@@ -35,10 +40,6 @@ def preprocess_candidates(pairs: DataFrame, lower: bool = False) -> DataFrame:
         )),
     )
     n = F.size("masked_tokens")
-    if "pos_ids" not in df.columns:
-        # tag ids are per-sentence; computing them upstream of the pair
-        # explode avoids recomputing per candidate — this is the fallback
-        df = attach_tag_ids(df)
     df = df.withColumn(
         "subj_positions",
         F.expr(P.binned_span_positions_sql(

@@ -1,10 +1,10 @@
 """Optimizer zoo + gradient clipping + LR schedules, torch semantics.
 
 NumPy re-implementation of the reference's training machinery
-(ref:utils/torch_utils.py:242-289 ``get_optimizer``, :12-93 ``MyAdagrad``,
-:224-240 ``NoamOpt.rate``; ref:runner.py:145,151,342,350-352 for the
-epoch-level schedules; clipping = ``torch.nn.utils.clip_grad_norm_`` as
-called in ref:model/relation_model.py:74).
+(ref:utils/torch_utils.py:242-289 ``get_optimizer``, :12-93 ``MyAdagrad``;
+clipping = ``torch.nn.utils.clip_grad_norm_`` as called in
+ref:model/relation_model.py:74).  The epoch-level decay-on-plateau
+lives with the epoch loop (operators/train.py).
 
 Every ``step`` mutates ``params`` in place and keeps its state in a plain
 dict so a whole optimizer is one picklable object (checkpointable through
@@ -277,19 +277,6 @@ class OpenAIAdam(Optimizer):
             params[k] = params[k] - step_size * m / (np.sqrt(v) + self.eps)
             if (params[k].ndim > 1 or self.vector_l2) and self.l2 > 0:
                 params[k] = params[k] - lr_sched * self.l2 * params[k]
-
-
-def noam_rate(step: int, model_size: int = 360, factor: float = 1.0,
-              warmup: int = 200) -> float:
-    """ref:utils/torch_utils.py:231-238 (NoamOpt.rate)."""
-    return factor * (
-        model_size ** (-0.5) * min(step ** (-0.5), step * warmup ** (-1.5))
-    )
-
-
-def epoch_noam_lr(epoch: int) -> float:
-    """ref:runner.py:350: per-epoch schedule for the noopt_* optimizers."""
-    return 10 * (360 ** (-0.5) * min(epoch ** (-0.5), epoch * 15 ** (-1.5)))
 
 
 def get_optimizer(name: str, lr: float) -> Optimizer:

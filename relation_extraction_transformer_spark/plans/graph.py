@@ -98,44 +98,14 @@ def build_graph(
     return nodes, edges
 
 
-def merge_edge_deltas(
-    old_edges: DataFrame, delta_edges: DataFrame
-) -> DataFrame:
-    """Append-only edge maintenance: merge a new batch's edge aggregates
-    into an existing edges table — weights add, max_prob maxes, source
-    url sets union.  One groupBy over the union; at scale this is the
-    cheap between-rebuilds path because it touches only edge aggregates
-    (entity-pair cardinality), never the raw triples.
-
-    Precondition: the canonical entity map must be stable between the two
-    inputs — true whenever the delta introduces no NEW surface forms that
-    canonicalize into existing components (entity ids are deterministic
-    ``stable_id``s, so dictionary-linked entities never shift).  When new
-    unlinked surfaces arrive, rebuild with :func:`build_graph` over the
-    append-only triples table instead (the resumable-materialization
-    pattern in plans/lineage.py keeps that table incremental)."""
-    return (
-        old_edges.unionByName(delta_edges)
-        .groupBy("src", "pred", "dst")
-        .agg(
-            F.sum("weight").alias("weight"),
-            F.max("max_prob").alias("max_prob"),
-            F.sort_array(
-                F.array_distinct(F.flatten(F.collect_list("source_urls")))
-            ).alias("source_urls"),
-        )
-    )
-
-
 def degree_distribution(
     pairs: DataFrame, src: str = "subj", dst: str = "obj"
 ) -> DataFrame:
     """In/out degree distribution over the distinct ``(src -> dst)`` edge
     set: rows ``(direction, degree, n_nodes)``.  Works over raw triples
     (subj/obj) or the canonical edges table (src/dst) — the shared core
-    of the registered ``kg_degree_distribution`` query AND the
-    streaming-refresh path (analytics re-run on the incrementally merged
-    graph, tests/test_lineage_streaming_media.py)."""
+    of the registered ``kg_degree_distribution`` query and of analytics
+    re-run over streamed triples (tests/test_lineage_streaming_media.py)."""
     edges = pairs.select(
         F.col(src).alias("_s"), F.col(dst).alias("_d")
     ).distinct()

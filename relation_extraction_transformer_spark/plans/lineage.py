@@ -16,9 +16,10 @@ Mechanism:
 - on restart, completed buckets are read from the manifest and skipped —
   an idempotent resume with no partial-output risk (parquet dir per
   bucket is overwritten atomically per group),
-- stage-level metrics (pages/sentences/candidates/triples counts) are
-  captured with ``DataFrame.observe`` — zero extra actions — and appended
-  to ``out/_metrics``.
+- each group's triples count (``rows_out``) is captured with
+  ``DataFrame.observe`` on the write itself — zero extra actions — and
+  appended with the group's wall time to ``out/_metrics``; no other
+  stage's count is recorded.
 """
 
 from __future__ import annotations
@@ -145,50 +146,3 @@ def materialize_triples_resumable(
         rows_out=rows_total,
     )
 
-
-def observed_pipeline_metrics(
-    spark: SparkSession, pages: DataFrame, cfg: PipelineConfig = DEFAULT_PIPELINE
-) -> dict[str, int]:
-    """One-action stage-count instrumentation of the flagship plan using
-    ``observe`` (no extra jobs): pages/sentences/candidates in, triples out.
-    """
-    from ..operators import ner as NER
-    from ..sources import pages as PG
-
-    obs_pages = Observation("pages")
-    obs_sent = Observation("sentences")
-    obs_cand = Observation("candidates")
-
-    arts = PL.build_artifacts(spark, cfg)
-    extracted = PG.extract_text(pages).observe(
-        obs_pages, F.count(F.lit(1)).alias("n")
-    ).filter(F.col("lang") == "en")
-    sentences = NER.split_sentences(extracted, text_col="extracted_text").observe(
-        obs_sent, F.count(F.lit(1)).alias("n")
-    )
-    tokenized = NER.tokenize(sentences)
-    kept = NER.detect_mentions(tokenized)
-    tagged = NER.ner_tags_from_mentions(kept)
-    from ..operators import candidates as CAND
-    from ..operators import preprocess as PRE
-    from ..operators import inference as INF
-
-    pairs = CAND.generate_pairs(tagged, cfg.max_pairs_per_sentence)
-    feats = PRE.preprocess_candidates(pairs, lower=cfg.model.lower).observe(
-        obs_cand, F.count(F.lit(1)).alias("n")
-    )
-    slim = feats.select(
-        "url", "sent_id", "pair_id", "masked_tokens", "pos_ids", "ner_ids",
-        "subj_positions", "obj_positions",
-    )
-    predicted = INF.predict_relations(
-        slim, arts.params_bc, cfg.model, vocab_bc=arts.vocab_bc, keep_probs=False
-    )
-    n_triples = INF.triples_from_predictions(predicted).count()
-
-    return {
-        "pages": int(obs_pages.get["n"]),
-        "sentences": int(obs_sent.get["n"]),
-        "candidates": int(obs_cand.get["n"]),
-        "triples": n_triples,
-    }

@@ -29,6 +29,36 @@ EVENTS_SCHEMA = (
     "value double, props string"
 )
 
+#: seconds a ``once=True`` run may take before it is stopped
+_ONCE_TIMEOUT_S = 300
+
+
+def _read_pages(
+    spark: SparkSession, pages_dir: str, max_files_per_trigger: int
+) -> DataFrame:
+    return (
+        spark.readStream.schema(PAGES_SCHEMA)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(pages_dir)
+    )
+
+
+def _start(writer, once: bool):
+    """Start ``writer``.  ``once=True`` processes all available input
+    and returns the query only after it has terminated; a run that
+    outlasts ``_ONCE_TIMEOUT_S`` is stopped and raises ``TimeoutError``,
+    so no query is left writing behind the caller."""
+    if not once:
+        return writer.start()
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(_ONCE_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.id} did not finish within "
+            f"{_ONCE_TIMEOUT_S} s; stopped"
+        )
+    return q
+
 
 def streaming_triples(
     spark: SparkSession,
@@ -41,11 +71,7 @@ def streaming_triples(
     The batch plan composes unchanged onto a streaming source because every
     stage before the sink is stateless (no global aggregation on the hot
     path) — exactly why the candidate pipeline was built narrow."""
-    pages = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(pages_dir)
-    )
+    pages = _read_pages(spark, pages_dir, max_files_per_trigger)
     return PL.triples_plan(pages, spark, cfg=cfg, keep_probs=False)
 
 
@@ -83,7 +109,8 @@ def run_stream_to_parquet(
 ):
     """Drive a streaming DataFrame into parquet with offset checkpointing;
     ``once=True`` processes all available input then stops (test/batch-
-    catchup mode)."""
+    catchup mode); a run that does not finish in time is stopped and
+    raises ``TimeoutError``."""
     # parquet sink supports append only; the watermark finalizes windows so
     # the windowed aggregation is append-compatible
     writer = (
@@ -92,11 +119,7 @@ def run_stream_to_parquet(
         .format("parquet")
         .option("path", out_path)
     )
-    if once:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination(300)
-        return q
-    return writer.start()
+    return _start(writer, once)
 
 
 def streaming_hll_registers(
@@ -150,11 +173,7 @@ def run_streaming_edge_fold(
     by the batch script (those versions would read as replays)."""
     from ..operators import incremental as INC
 
-    pages = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(pages_dir)
-    )
+    pages = _read_pages(spark, pages_dir, max_files_per_trigger)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         INC.fold_pages_delta(
@@ -164,11 +183,7 @@ def run_streaming_edge_fold(
     writer = pages.writeStream.foreachBatch(fold).option(
         "checkpointLocation", checkpoint_path
     )
-    if once:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination(300)
-        return q
-    return writer.start()
+    return _start(writer, once)
 
 
 def run_streaming_canon_fold(
@@ -193,40 +208,18 @@ def run_streaming_canon_fold(
     mentions actually connect.  The standing band index makes per-batch
     work delta-sized (delta×delta + delta×standing candidate joins,
     reduced-graph CC), never a re-canonicalization of the world."""
-    from pyspark.sql import functions as F
-
     from ..operators import incremental_canon as IC
-    from ..operators import linking as LINK
-    from ..plans import pipeline as PL
 
-    pages = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(pages_dir)
-    )
+    pages = _read_pages(spark, pages_dir, max_files_per_trigger)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         triples = PL.triples_plan(batch_df, spark, keep_probs=False)
-        mentions = (
-            triples.select(F.col("subj").alias("surface"))
-            .unionAll(triples.select(F.col("obj").alias("surface")))
-            .select(
-                LINK.normalize_surface(F.col("surface")).alias("name")
-            )
-            .distinct()
-            .select(
-                LINK.stable_id(F.col("name")).alias("node_id"), "name"
-            )
-        )
         IC.fold_mentions_delta(
-            spark, mentions, state_dir, version=int(batch_id) + 1
+            spark, IC.mention_names(triples), state_dir,
+            version=int(batch_id) + 1,
         )
 
     writer = pages.writeStream.foreachBatch(fold).option(
         "checkpointLocation", checkpoint_path
     )
-    if once:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination(300)
-        return q
-    return writer.start()
+    return _start(writer, once)

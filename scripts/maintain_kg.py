@@ -69,16 +69,11 @@ def maintain(
     entities the delta does not touch — the property a 24/7 KG needs
     that per-run batch canonicalization cannot give.
     """
-    from pyspark.sql import functions as F
-
     from relation_extraction_transformer_spark.operators import (
         incremental as INC,
     )
     from relation_extraction_transformer_spark.operators import (
         incremental_canon as IC,
-    )
-    from relation_extraction_transformer_spark.operators import (
-        linking as LINK,
     )
     from relation_extraction_transformer_spark.plans import kg_sql as KQ
     from relation_extraction_transformer_spark.plans import pipeline as PL
@@ -86,22 +81,10 @@ def maintain(
     summary = INC.fold_pages_delta(spark, pages, state_dir)
 
     if canon_state_dir is not None:
-        # mention surfaces of the delta: node_id is the md5-derived
-        # stable id of the NORMALIZED name — the deterministic-function-
-        # of-name contract fold_mentions_delta requires
         triples = PL.triples_plan(pages, spark, keep_probs=False)
-        mentions = (
-            triples.select(F.col("subj").alias("surface"))
-            .unionAll(triples.select(F.col("obj").alias("surface")))
-            .select(
-                LINK.normalize_surface(F.col("surface")).alias("name")
-            )
-            .distinct()
-            .select(
-                LINK.stable_id(F.col("name")).alias("node_id"), "name"
-            )
+        cs = IC.fold_mentions_delta(
+            spark, IC.mention_names(triples), canon_state_dir
         )
-        cs = IC.fold_mentions_delta(spark, mentions, canon_state_dir)
         summary["canon"] = {
             "state_version": cs["state_version"],
             "new_nodes": cs["new_nodes"],

@@ -296,67 +296,6 @@ def test_linking_sort_merge_path_matches_broadcast(spark):
     assert got == want
 
 
-def test_merge_edge_deltas(spark):
-    """Append-only edge maintenance: weights add, max_prob maxes, url
-    sets union, new edges pass through — one shuffle total."""
-    from relation_extraction_transformer_spark.plans import graph as GR
-
-    schema = ("src long, pred string, dst long, weight long, "
-              "max_prob double, source_urls array<string>")
-    old = spark.createDataFrame(
-        [(1, "works_at", 2, 3, 0.9, ["u1", "u2"]),
-         (1, "born_in", 3, 1, 0.5, ["u3"])], schema)
-    delta = spark.createDataFrame(
-        [(1, "works_at", 2, 2, 0.95, ["u2", "u4"]),
-         (4, "works_at", 2, 1, 0.7, ["u5"])], schema)
-    merged = GR.merge_edge_deltas(old, delta)
-    got = {(r.src, r.pred, r.dst): (r.weight, r.max_prob, r.source_urls)
-           for r in merged.collect()}
-    assert got == {
-        (1, "works_at", 2): (5, 0.95, ["u1", "u2", "u4"]),
-        (1, "born_in", 3): (1, 0.5, ["u3"]),
-        (4, "works_at", 2): (1, 0.7, ["u5"]),
-    }
-    # union + one aggregation, never a join (AQE repeats the Exchange
-    # node inside finalized query stages, so count joins, not exchanges)
-    plan = merged._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan
-    assert "Union" in plan
-
-
-def test_merge_edge_deltas_identity_on_rebuilt_halves(spark):
-    """On a corpus whose canonical map is stable across the split (every
-    entity dictionary-linked or unique), merging per-half edge builds
-    equals the full build."""
-    import pyspark.sql.functions as F
-
-    from relation_extraction_transformer_spark.plans import graph as GR
-
-    triples = spark.read.parquet(
-        "/root/repo/artifacts/kg_triples.parquet"
-    )
-    full_nodes, full_edges = GR.build_graph(triples, spark)
-    full = {(r.src, r.pred, r.dst): (r.weight, r.max_prob,
-                                     tuple(r.source_urls))
-            for r in full_edges.collect()}
-
-    h1 = triples.filter(F.crc32(F.col("url")) % 2 == 0)
-    h2 = triples.filter(F.crc32(F.col("url")) % 2 == 1)
-    _, e1 = GR.build_graph(h1, spark)
-    _, e2 = GR.build_graph(h2, spark)
-    merged_df = GR.merge_edge_deltas(e1, e2)
-    merged = {(r.src, r.pred, r.dst): (r.weight, r.max_prob,
-                                       tuple(r.source_urls))
-              for r in merged_df.collect()}
-    # identical keys, and for every key the aggregates agree except where
-    # a cross-half near-dup merge moved a canonical id; on this fixture
-    # quantify: at least 95% of edges must merge exactly
-    same = sum(1 for k, v in merged.items() if full.get(k) == v)
-    assert same / max(len(full), 1) >= 0.95, (
-        f"{same}/{len(full)} edges identical after delta merge"
-    )
-
-
 def test_graph_cardinality_metrics_close_to_exact(spark):
     """HLL++ sketch metrics within rsd-scaled tolerance of exact
     distincts (and exact n_edges), computed in ONE pass with no

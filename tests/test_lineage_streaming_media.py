@@ -67,15 +67,6 @@ def test_unreadable_manifest_raises_instead_of_recomputing(spark, tmp_path):
     assert not os.path.exists(f"{out}/triples")
 
 
-def test_observed_metrics(spark):
-    pages = PG.synthetic_pages(spark, 30, seed=9, partitions=3)
-    m = LIN.observed_pipeline_metrics(spark, pages)
-    assert m["pages"] == 30
-    assert m["sentences"] > 0
-    assert m["candidates"] > 0
-    assert 0 < m["triples"] <= m["candidates"]
-
-
 def test_streaming_windowed_counts(spark, tmp_path):
     src = str(tmp_path / "events_src")
     spark.read.parquet("/root/testdata/sf0.001/events.parquet").write.parquet(src)
@@ -424,15 +415,15 @@ def test_session_fn_empty_batch_keeps_state():
     assert not fresh.exists
 
 
-def test_streaming_triples_match_batch_and_feed_incremental_graph(
+def test_streaming_triples_match_batch_and_feed_degree_distribution(
     spark, tmp_path
 ):
-    """System-level incremental-KG loop: streamed extraction over an
-    append-only pages directory must equal the batch plan's triples
-    exactly (same plan composed onto readStream), and merging the second
-    batch's edge delta into the first batch's graph must reproduce the
-    full rebuild (same >=95% bar as the rebuilt-halves test — a
-    cross-batch near-dup merge can legitimately move a canonical id)."""
+    """Streamed extraction over an append-only pages directory must
+    equal the batch plan's triples exactly (same plan composed onto
+    readStream), the second trigger must append exactly the new pages'
+    triples, and analytics over the streamed triples must equal the
+    batch analytics.  The incremental edge fold over a stream is
+    covered by tests/test_streaming_fold.py."""
     from relation_extraction_transformer_spark.plans import graph as GR
     from relation_extraction_transformer_spark.plans import pipeline as PL
 
@@ -446,8 +437,7 @@ def test_streaming_triples_match_batch_and_feed_incremental_graph(
     all_pages = PG.synthetic_pages(spark, 36, seed=51, partitions=3)
     all_pages.filter(page_id < 24).write.parquet(src)
     ST.run_stream_to_parquet(ST.streaming_triples(spark, src), out, ck, once=True)
-    t1 = spark.read.parquet(out).cache()
-    n1 = t1.count()
+    n1 = spark.read.parquet(out).count()
     assert n1 > 0
 
     all_pages.filter(page_id >= 24).write.mode("append").parquet(src)
@@ -464,23 +454,8 @@ def test_streaming_triples_match_batch_and_feed_incremental_graph(
         t_all.select(*key).exceptAll(batch.select(*key)).count() == 0
     ), "streaming plan diverged from the batch plan"
 
-    # 2) incremental edge maintenance reproduces the full rebuild
-    delta = t_all.filter(page_id >= 24)
-    assert delta.count() == t_all.count() - n1
-    _, e_full = GR.build_graph(t_all, spark)
-    _, e1 = GR.build_graph(t1, spark)
-    _, e_delta = GR.build_graph(delta, spark)
-    merged = GR.merge_edge_deltas(e1, e_delta)
-    full = {(r.src, r.pred, r.dst): (r.weight, r.max_prob,
-                                     tuple(r.source_urls))
-            for r in e_full.collect()}
-    got = {(r.src, r.pred, r.dst): (r.weight, r.max_prob,
-                                    tuple(r.source_urls))
-           for r in merged.collect()}
-    same = sum(1 for k, v in got.items() if full.get(k) == v)
-    assert same / max(len(full), 1) >= 0.95, (
-        f"{same}/{len(full)} edges identical after streaming delta merge"
-    )
+    # 2) the second trigger appended exactly batch B's triples
+    assert t_all.filter(page_id >= 24).count() == t_all.count() - n1
 
     # 3) stream -> analytics loop closes (VERDICT r4 #5): the degree
     # distribution refreshed over the streamed triples must EXACTLY equal
@@ -494,25 +469,6 @@ def test_streaming_triples_match_batch_and_feed_incremental_graph(
         tuple(r) for r in GR.degree_distribution(batch).collect()
     )
     assert got_dist == want_dist, "streamed degree distribution diverged"
-    # and over the incrementally MERGED canonical edges: when the merge
-    # reproduced the rebuild exactly (same == len(full)), its analytics
-    # must too; under the documented <=5% canonical-id drift the
-    # distributions stay within the same slack
-    merged_dist = {
-        (r.direction, r.degree): r.n_nodes
-        for r in GR.degree_distribution(merged, "src", "dst").collect()
-    }
-    full_dist = {
-        (r.direction, r.degree): r.n_nodes
-        for r in GR.degree_distribution(e_full, "src", "dst").collect()
-    }
-    if same == len(full) and len(got) == len(full):
-        assert merged_dist == full_dist
-    else:
-        overlap = sum(
-            1 for k, v in merged_dist.items() if full_dist.get(k) == v
-        )
-        assert overlap / max(len(full_dist), 1) >= 0.9
 
 
 def test_session_fn_resolves_late_chain_before_forward_split():

@@ -319,3 +319,36 @@ def test_empty_delta_fold_is_a_version_bump_noop(spark, tmp_path):
         )
     )
     assert after == before
+
+
+def test_once_run_that_times_out_is_stopped_and_raises(
+    spark, tmp_path, monkeypatch
+):
+    """A ``once=True`` run whose wait times out must stop its query and
+    raise, for every stream driver: a query returned still running
+    would keep committing versions into ``state_dir`` while the caller
+    reads or vacuums it."""
+    import pytest
+    from pyspark.sql.streaming import StreamingQuery
+
+    pages_dir = str(tmp_path / "pages")
+    spark.read.parquet(PAGES).limit(4).write.parquet(pages_dir)
+    monkeypatch.setattr(
+        StreamingQuery, "awaitTermination", lambda self, timeout=None: False
+    )
+    runs = {
+        "parquet": lambda d: ST.run_stream_to_parquet(
+            ST.streaming_triples(spark, pages_dir), f"{d}/out", f"{d}/ckpt"
+        ),
+        "edge_fold": lambda d: ST.run_streaming_edge_fold(
+            spark, pages_dir, f"{d}/state", f"{d}/ckpt"
+        ),
+        "canon_fold": lambda d: ST.run_streaming_canon_fold(
+            spark, pages_dir, f"{d}/state", f"{d}/ckpt"
+        ),
+    }
+    for name, run in runs.items():
+        os.makedirs(tmp_path / name / "state")
+        with pytest.raises(TimeoutError):
+            run(str(tmp_path / name))
+        assert spark.streams.active == [], name

@@ -71,21 +71,6 @@ def test_tacred_preprocess_matches_oracle(spark, tmp_path):
         assert list(r.obj_positions) == ex.obj_positions
 
 
-def test_seeded_shuffle_deterministic_across_partitioning(spark):
-    df4 = spark.range(100, numPartitions=4).withColumn(
-        "k", F.col("id").cast("string")
-    )
-    df9 = spark.range(100, numPartitions=9).withColumn(
-        "k", F.col("id").cast("string")
-    )
-    o1 = [r.id for r in TR.seeded_shuffle(df4, 42, ["k"]).collect()]
-    o2 = [r.id for r in TR.seeded_shuffle(df9, 42, ["k"]).collect()]
-    o3 = [r.id for r in TR.seeded_shuffle(df4, 43, ["k"]).collect()]
-    assert o1 == o2                 # partition-count independent
-    assert o1 != sorted(o1)         # actually shuffled
-    assert o1 != o3                 # seed-sensitive
-
-
 def test_word_dropout_semantics(spark):
     df = spark.createDataFrame(
         [("r1", [5, 1, 9, 12, 7, 3, 8, 20] * 50)],
@@ -106,15 +91,6 @@ def test_word_dropout_semantics(spark):
         .alias("d")
     ).first()["d"]
     assert list(out) == list(again)
-
-
-def test_length_sorted_preserves_rows(spark):
-    df = spark.createDataFrame(
-        [(i, ["x"] * (1 + i % 7)) for i in range(50)],
-        "i: int, masked_tokens: array<string>",
-    )
-    out = TR.length_sorted(df, partitions=3)
-    assert sorted(r.i for r in out.collect()) == list(range(50))
 
 
 def test_trained_model_scorer_parity_end_to_end(spark, tmp_path):

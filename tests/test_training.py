@@ -156,16 +156,6 @@ def test_clip_grad_norm_torch_semantics():
     np.testing.assert_allclose(g2["a_w"], [0.3])
 
 
-def test_noam_rate_reference_constants():
-    """ref:runner.py:350 and ref:torch_utils.py:231-238 agree at warmup."""
-    assert OPT.epoch_noam_lr(15) == pytest.approx(
-        10 * 360 ** -0.5 * 15 ** -0.5
-    )
-    assert OPT.noam_rate(200, 360, 1.0, 200) == pytest.approx(
-        360 ** -0.5 * 200 ** -0.5
-    )
-
-
 def test_bn_running_stats_update():
     cfg = tiny_cfg()
     rng = np.random.default_rng(5)
