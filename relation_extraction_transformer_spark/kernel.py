@@ -18,11 +18,10 @@ Eval-mode simplifications (ref:relation_model.py:96, eval.py:82):
 Arithmetic dtype follows the parameter arrays (float64 for the oracle,
 float32 on the pipeline hot path — see PipelineConfig.inference_dtype; the
 end-to-end test pins fp32-vs-fp64 triple equality).  Results are
-batch-invariant up to BLAS GEMM
-blocking noise (the stacked-matrix height changes dgemm's summation order,
-perturbing the last float bit); predictions (argmax) are stable, and parity
-tests compare probs at rtol 1e-9.  Pin BLAS to one thread per Spark task
-(OMP_NUM_THREADS=1) — parallelism comes from partitions, not BLAS.
+bit-identical whatever the batch composition: every GEMM whose row count
+grows with the batch goes through :func:`_gemm`, which pads the rows to a
+multiple of ``_GEMM_ROWS`` (see there).  Pin BLAS to one thread per Spark
+task (OMP_NUM_THREADS=1) — parallelism comes from partitions, not BLAS.
 """
 
 from __future__ import annotations
@@ -40,17 +39,32 @@ def _softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
     return e / e.sum(axis=axis, keepdims=True)
 
 
+# BLAS computes the rows of a GEMM's last partial row tile with a
+# different micro-kernel than full tiles, so the same row can round
+# differently in the last float bit depending on how many rows share
+# its GEMM (at float32, enough to move a probability in its 7th digit).
+# With the row count padded to a multiple of 32 every row sits in a full
+# tile and its result depends on its own values only
+# (tests/test_kernel.py pins this bit for bit at float32).
+_GEMM_ROWS = 32
+
+
+def _gemm(x: np.ndarray, w: np.ndarray) -> np.ndarray:
+    """``x @ w.T`` over the last axis of ``x`` as ONE GEMM over the
+    flattened rows (for stacked (B, l, d) inputs ~1.5x faster than the B
+    skinny GEMMs np.matmul would dispatch), with the rows zero-padded to
+    a multiple of ``_GEMM_ROWS``."""
+    flat = x.reshape(-1, x.shape[-1])
+    m = flat.shape[0]
+    pad = -m % _GEMM_ROWS
+    if pad:
+        zeros = np.zeros((pad, flat.shape[1]), flat.dtype)
+        flat = np.concatenate([flat, zeros])
+    return (flat @ w.T)[:m].reshape(*x.shape[:-1], w.shape[0])
+
+
 def _linear(x: np.ndarray, p: Params, name: str) -> np.ndarray:
-    # For stacked inputs (B, l, d), np.matmul dispatches B separate
-    # skinny (l, d) GEMMs; flattening to one (B*l, d) GEMM is ~1.5x
-    # faster (measured) and numerically equivalent (last-ulp may
-    # differ by BLAS build) — every output row is the same row-by-matrix
-    # product either way, only the call count changes.
-    w, b = p[f"{name}_w"], p[f"{name}_b"]
-    if x.ndim > 2:
-        flat = x.reshape(-1, x.shape[-1])
-        return (flat @ w.T + b).reshape(*x.shape[:-1], w.shape[0])
-    return x @ w.T + b
+    return _gemm(x, p[f"{name}_w"]) + p[f"{name}_b"]
 
 
 def _batch_norm_eval(x: np.ndarray, p: Params, pre: str) -> np.ndarray:
@@ -202,16 +216,11 @@ def lstm_forward(
         bias = p[pre + "b_ih"] + p[pre + "b_hh"]
         h = np.zeros((B, H), dtype=out.dtype)
         c = np.zeros((B, H), dtype=out.dtype)
-        # hoist the input projection out of the time loop (one GEMM);
-        # flatten (B, l, d) -> (B*l, d) so it IS one GEMM, not B skinny
-        # ones (numerically equivalent, last-ulp may differ by BLAS
-        # build; see _linear)
-        xg = (
-            out.reshape(-1, d) @ w_ih.T + bias
-        ).reshape(B, l, -1)                 # (B, l, 4H)
+        # hoist the input projection out of the time loop (one GEMM)
+        xg = _gemm(out, w_ih) + bias        # (B, l, 4H)
         seq = np.empty_like(out)
         for t in range(l):
-            g = xg[:, t] + h @ w_hh.T       # (B, 4H)
+            g = xg[:, t] + _gemm(h, w_hh)   # (B, 4H)
             i = _sigmoid(g[:, 0:H])
             f = _sigmoid(g[:, H:2 * H])
             gg = np.tanh(g[:, 2 * H:3 * H])

@@ -1,10 +1,12 @@
 import os
 
-import pytest
-from pyspark.sql import SparkSession
-
+# one BLAS thread, in this process too: set before pyspark pulls in NumPy,
+# whose OpenBLAS reads these once at load
 os.environ.setdefault("OMP_NUM_THREADS", "1")
 os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
+
+import pytest  # noqa: E402
+from pyspark.sql import SparkSession  # noqa: E402
 
 
 @pytest.fixture

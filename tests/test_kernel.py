@@ -56,23 +56,49 @@ def test_batch_composition_invariance():
     e = _random_example(rng, 11)
     others = [_random_example(rng, 11) for _ in range(7)]
 
-    def run(batch):
-        words = np.array([x.word_ids for x in batch])
-        pos = np.array([x.pos_ids for x in batch])
-        ner = np.array([x.ner_ids for x in batch])
-        sp = np.array([x.subj_positions for x in batch])
-        op = np.array([x.obj_positions for x in batch])
-        return kernel.forward_batch(PARAMS, CFG, words, pos, ner, sp, op)
-
-    preds_alone, probs_alone = run([e])
-    preds_crowded, probs_crowded = run([e] + others)
-    # bitwise equality is not achievable: BLAS GEMM blocking depends on the
-    # stacked matrix height, so summation order (and the last float bit)
-    # varies with batch size.  Semantically the result is batch-invariant.
-    np.testing.assert_allclose(
-        probs_alone[0], probs_crowded[0], rtol=1e-9, atol=1e-12
-    )
+    preds_alone, probs_alone = _run(PARAMS, CFG, [e])
+    preds_crowded, probs_crowded = _run(PARAMS, CFG, [e] + others)
+    np.testing.assert_array_equal(probs_alone[0], probs_crowded[0])
     assert preds_alone[0] == preds_crowded[0]
+
+
+def _run(params, cfg, batch):
+    words = np.array([x.word_ids for x in batch])
+    pos = np.array([x.pos_ids for x in batch])
+    ner = np.array([x.ner_ids for x in batch])
+    sp = np.array([x.subj_positions for x in batch])
+    op = np.array([x.obj_positions for x in batch])
+    return kernel.forward_batch(params, cfg, words, pos, ner, sp, op)
+
+
+@pytest.mark.parametrize("self_att", [True, False], ids=["attention", "lstm"])
+def test_float32_rows_bit_identical_alone_crowded_and_at_every_position(
+    self_att,
+):
+    """At the pipeline's float32, a row's probs must not move in the last
+    bit with the batch: alone, in crowds whose GEMM row counts leave
+    partial BLAS tiles at every offset (l=7: 7, 14, 49, 217, 287 rows),
+    and at every position inside them.  Without this, one page extracted
+    in two different Arrow batches gets two probabilities, and a folded
+    edge state stops equaling a one-pass rebuild."""
+    from relation_extraction_transformer_spark.operators.inference import (
+        as_dtype,
+    )
+
+    cfg = ModelConfig(vocab_size=500, self_att=self_att)
+    params = as_dtype(generate_weights(cfg), np.float32)
+    rng = np.random.default_rng(5)
+    e = _random_example(rng, 7)
+    others = [_random_example(rng, 7) for _ in range(40)]
+    _, alone = _run(params, cfg, [e])
+    assert alone.dtype == np.float32
+    for n in (1, 6, 30, 40):
+        for k in range(n + 1):
+            batch = others[:k] + [e] + others[k:n]
+            _, probs = _run(params, cfg, batch)
+            np.testing.assert_array_equal(
+                probs[k], alone[0], err_msg=f"{n=} {k=}"
+            )
 
 
 def test_predictions_are_diverse():
