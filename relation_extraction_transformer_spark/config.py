@@ -69,20 +69,6 @@ class PipelineConfig:
 
     model: ModelConfig = field(default_factory=ModelConfig)
 
-    # Arrow batch size is our analog of the reference batch_size=50
-    # (ref:runner.py:150); larger batches amortize NumPy matmuls better.
-    arrow_batch_rows: int = 512
-
-    # shuffle sizing; overridden by callers that know their cluster
-    shuffle_partitions: int = 32
-
-    # salting fan-out for skewed hosts/languages
-    skew_salt_buckets: int = 8
-
-    # number of hash tables / signature length for minhash canonicalization
-    minhash_signatures: int = 16
-    minhash_bands: int = 4
-
     # candidate-pair cap per sentence to bound the explode fan-out
     max_pairs_per_sentence: int = 12
 

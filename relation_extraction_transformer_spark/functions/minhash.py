@@ -1,7 +1,8 @@
 """Shared MinHash / LSH-band core.
 
 One parameterized implementation used by BOTH near-dup surfaces so the
-LSH parameters (k, bands, salt format, band digest) cannot diverge:
+LSH parameters (k, bands, salt format, band digest) and the exact
+Jaccard verification (:func:`verify_pairs`) cannot diverge:
 
 - document near-dup (plans/sql_queries.py: minhash_bands,
   minhash_candidate_pairs, ngram_jaccard_buckets) over word 3-gram
@@ -287,4 +288,33 @@ def band_candidate_pairs(
             F.col(f"a.{id_col}").alias(out_a), F.col(f"b.{id_col}").alias(out_b)
         )
         .distinct()
+    )
+
+
+def verify_pairs(
+    pairs: DataFrame,
+    sets: DataFrame,
+    id_col: str,
+    threshold: float,
+    out_a: str = "src",
+    out_b: str = "dst",
+) -> DataFrame:
+    """Exact Jaccard verification of LSH candidates: ``(out_a, out_b)``
+    pairs and ``(id_col, s)`` DISTINCT shingle sets, which each caller
+    builds (char trigrams of names, word 3-grams of documents) ->
+    ``(out_a, out_b, jac)`` for the pairs with ``jac >= threshold``.
+    Two equi-joins with the sets table, then array ops per pair."""
+    def side(out: str, s: str) -> DataFrame:
+        return sets.select(F.col(id_col).alias(out), F.col("s").alias(s))
+
+    return (
+        pairs.join(side(out_a, "s1"), out_a)
+        .join(side(out_b, "s2"), out_b)
+        .withColumn("inter", F.size(F.array_intersect("s1", "s2")))
+        .withColumn(
+            "jac",
+            F.col("inter") / (F.size("s1") + F.size("s2") - F.col("inter")),
+        )
+        .filter(F.col("jac") >= threshold)
+        .select(out_a, out_b, "jac")
     )

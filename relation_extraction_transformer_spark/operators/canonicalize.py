@@ -5,15 +5,20 @@ names ("Alice Turner" / "alice turner" / "Turner") are merged into one
 canonical node:
 
 1. minhash signatures over character 3-gram shingles of the normalized
-   name (pure SQL: md5-salted min over a shingle array)
+   name (pure SQL: one md5 base hash per shingle, k affine minima over
+   it — the shared core in functions/minhash.py)
 2. LSH band self-join -> candidate equivalence edges (only pairs sharing
    a band are ever compared: at 10^12 scale this is the only join that
    matters, and it is an equi-join on band_hash, AQE-skew-splittable)
-3. verification: trigram Jaccard >= threshold on candidate pairs
+3. verification: trigram Jaccard >= threshold on candidate pairs (the
+   shared ``MH.verify_pairs``, also used by document dedup)
 4. connected components by iterative min-label propagation with
    ``localCheckpoint`` per iteration to cut lineage growth (SURVEY §4) —
    the Spark-idiomatic form of map-side label exchange; iteration count
    is O(log(diameter)) for name-similarity graphs (tiny diameters).
+5. labelling: every item takes its component's lowest id; an item in no
+   verified pair is its own component (:func:`label_components`, also
+   used by document dedup).
 """
 
 from __future__ import annotations
@@ -24,16 +29,11 @@ from pyspark.sql import functions as F
 from ..functions import minhash as MH
 
 
-def minhash_band_hashes(
-    df: DataFrame, text_col: str, k: int = MH.MINHASH_K,
-    bands: int = MH.MINHASH_BANDS,
-) -> DataFrame:
+def minhash_band_hashes(df: DataFrame, text_col: str) -> DataFrame:
     """Append ``band`` / ``band_hash`` rows (one per band) for LSH blocking.
     df must have a unique ``node_id`` column.  Delegates to the shared
     minhash core so entity and document LSH parameters cannot diverge."""
-    return MH.minhash_bands(
-        df, "node_id", MH.char_shingles_sql(text_col), k=k, bands=bands
-    )
+    return MH.minhash_bands(df, "node_id", MH.char_shingles_sql(text_col))
 
 
 def candidate_pairs(bands_df: DataFrame) -> DataFrame:
@@ -44,29 +44,44 @@ def candidate_pairs(bands_df: DataFrame) -> DataFrame:
 def verify_pairs_jaccard(
     pairs: DataFrame, names: DataFrame, threshold: float = 0.6
 ) -> DataFrame:
-    """Exact trigram-Jaccard verification of LSH candidates.
+    """Exact trigram-Jaccard verification of LSH candidates: names
+    (node_id, name) -> the (src, dst) pairs at or above ``threshold``,
+    verified by the shared ``MH.verify_pairs`` over the distinct char
+    trigrams of ``^name$``."""
+    sets = names.select(
+        "node_id",
+        F.expr(f"array_distinct({MH.char_shingles_sql('name')})").alias("s"),
+    )
+    return MH.verify_pairs(pairs, sets, "node_id", threshold).select(
+        "src", "dst"
+    )
 
-    names: (node_id, name).  Pure array ops after two joins with the
-    (small relative to pairs) names table.
-    """
-    n1 = names.select(
-        F.col("node_id").alias("src"),
-        F.expr(f"array_distinct({MH.char_shingles_sql('name')})").alias("s1"),
+
+def canonical_components(
+    names: DataFrame, threshold: float = 0.6
+) -> tuple[DataFrame, DataFrame]:
+    """names (node_id, name) -> (components, bands): LSH bands, their
+    candidate pairs, the Jaccard-verified pairs and the connected
+    components over those.  ``components`` holds only the names in some
+    verified pair; :func:`label_components` labels the rest."""
+    bands = minhash_band_hashes(names, "name")
+    verified = verify_pairs_jaccard(candidate_pairs(bands), names, threshold)
+    return connected_components(verified), bands
+
+
+def label_components(
+    items: DataFrame,
+    components: DataFrame,
+    id_col: str = "node_id",
+    out: str = "component",
+) -> DataFrame:
+    """``items`` with ``out`` appended: the lowest id of the item's
+    component in ``components`` (:func:`connected_components`' output);
+    an item in no verified pair is its own component."""
+    comps = components.select(F.col("node_id").alias(id_col), "component")
+    return items.join(comps, id_col, "left").select(
+        *items.columns, F.coalesce("component", id_col).alias(out)
     )
-    n2 = names.select(
-        F.col("node_id").alias("dst"),
-        F.expr(f"array_distinct({MH.char_shingles_sql('name')})").alias("s2"),
-    )
-    j = (
-        pairs.join(n1, "src").join(n2, "dst")
-        .withColumn("inter", F.size(F.array_intersect("s1", "s2")))
-        .withColumn(
-            "jac",
-            F.col("inter")
-            / (F.size("s1") + F.size("s2") - F.col("inter")),
-        )
-    )
-    return j.filter(F.col("jac") >= threshold).select("src", "dst")
 
 
 def connected_components(

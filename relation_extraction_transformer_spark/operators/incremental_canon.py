@@ -82,15 +82,8 @@ def canon_state(
     ``mentions`` = (node_id, name) with node_id a deterministic function
     of name.  Returns (nodes, bands)."""
     names = mentions.select("node_id", "name").distinct()
-    bands = CANON.minhash_band_hashes(names, "name")
-    pairs = CANON.candidate_pairs(bands)
-    verified = CANON.verify_pairs_jaccard(pairs, names, jaccard_threshold)
-    comps = CANON.connected_components(verified)
-    nodes = names.join(comps, "node_id", "left").select(
-        "node_id", "name",
-        F.coalesce("component", "node_id").alias("component"),
-    )
-    return nodes, bands.select("node_id", "band", "band_hash")
+    comps, bands = CANON.canonical_components(names, jaccard_threshold)
+    return CANON.label_components(names, comps), bands
 
 
 def write_canon_state(
@@ -191,10 +184,7 @@ def fold_into(
             F.coalesce("new_component", "component").alias("component"),
         )
     )
-    nodes_new = new_names.join(rcomp, "node_id", "left").select(
-        "node_id", "name",
-        F.coalesce("component", "node_id").alias("component"),
-    )
+    nodes_new = CANON.label_components(new_names, rcomp)
     nodes = nodes_kept.unionByName(nodes_new)
     bands = std_bands.unionByName(
         dbands.select("node_id", "band", "band_hash")

@@ -49,24 +49,15 @@ def build_graph(
     )
 
     # canonicalization: LSH blocking -> exact verify -> components
-    bands = CANON.minhash_band_hashes(
-        raw_nodes.select("node_id", LINK.normalize_surface(F.col("name")).alias("name")),
-        "name",
+    comps, _ = CANON.canonical_components(
+        raw_nodes.select(
+            "node_id", LINK.normalize_surface(F.col("name")).alias("name")
+        ),
+        jaccard_threshold,
     )
-    cand = CANON.candidate_pairs(bands)
-    verified = CANON.verify_pairs_jaccard(
-        cand,
-        raw_nodes.select("node_id", LINK.normalize_surface(F.col("name")).alias("name")),
-        threshold=jaccard_threshold,
-    )
-    comps = CANON.connected_components(verified)
-
-    canon_map = raw_nodes.join(comps, "node_id", "left").select(
-        "node_id",
-        F.coalesce("component", "node_id").alias("canonical_id"),
-        "name",
-        "mention_count",
-    )
+    canon_map = CANON.label_components(
+        raw_nodes, comps, out="canonical_id"
+    ).select("node_id", "canonical_id", "name", "mention_count")
 
     nodes = canon_map.groupBy("canonical_id").agg(
         F.min_by("name", "node_id").alias("name"),

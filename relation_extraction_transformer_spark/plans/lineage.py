@@ -11,11 +11,14 @@ Mechanism:
   be stored bucketed/partitioned by the same key so the per-group filter
   prunes at the source instead of rescanning,
 - buckets are processed in groups; each group's triples are written to
-  ``out/triples/bucket=<b>/`` and a manifest row (bucket, rows_out,
-  wall_ms, finished_ts) is appended ONLY after the group commits,
+  ``out/triples/bucket=<b>/`` and a manifest row (bucket, n_buckets,
+  rows_out, wall_ms, finished_ts) is appended ONLY after the group
+  commits,
 - on restart, completed buckets are read from the manifest and skipped —
   an idempotent resume with no partial-output risk (parquet dir per
-  bucket is overwritten atomically per group),
+  bucket is overwritten atomically per group); a resume or a
+  pre-bucketed input under another ``n_buckets`` raises instead of
+  skipping or dropping pages,
 - each group's triples count (``rows_out``) is captured with
   ``DataFrame.observe`` on the write itself — zero extra actions — and
   appended with the group's wall time to ``out/_metrics``; no other
@@ -47,20 +50,20 @@ def _manifest_path(out_path: str) -> str:
     return f"{out_path}/_manifest"
 
 
-def completed_buckets(spark: SparkSession, out_path: str) -> set[int]:
-    """Buckets recorded in the manifest; none when it does not exist
-    yet.  Any other read failure (a corrupt manifest, a session error)
-    raises: treating it as "nothing done" would recompute and
-    re-append every bucket."""
+def _manifest(spark: SparkSession, out_path: str) -> list:
+    """The manifest rows; none when it does not exist yet.  Any other
+    read failure (a corrupt manifest, a session error) raises: treating
+    it as "nothing done" would recompute and re-append every bucket."""
     try:
-        return {
-            r.bucket
-            for r in spark.read.parquet(_manifest_path(out_path)).collect()
-        }
+        return spark.read.parquet(_manifest_path(out_path)).collect()
     except AnalysisException as e:
         if e.getCondition() != "PATH_NOT_FOUND":
             raise
-        return set()
+        return []
+
+
+def _bucket(n_buckets: int):
+    return F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
 
 
 def write_bucketed_pages(
@@ -68,9 +71,9 @@ def write_bucketed_pages(
 ) -> None:
     """Materialize pages partitioned by the resume bucket key (the
     production layout: each resume group then prunes to its own files)."""
-    pages.withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-    ).write.mode("overwrite").partitionBy("bucket").parquet(path)
+    pages.withColumn("bucket", _bucket(n_buckets)).write.mode(
+        "overwrite"
+    ).partitionBy("bucket").parquet(path)
 
 
 def materialize_triples_resumable(
@@ -82,19 +85,36 @@ def materialize_triples_resumable(
     buckets_per_group: int = 4,
     cfg: PipelineConfig = DEFAULT_PIPELINE,
 ) -> RunReport:
-    done = completed_buckets(spark, out_path)
+    """Raises ``ValueError`` before any group runs if the manifest or a
+    stored ``bucket`` column of ``pages`` has another ``n_buckets``:
+    either would silently skip or drop pages."""
+    manifest = _manifest(spark, out_path)
+    # a manifest row written without n_buckets reads as None: refused
+    stored = {r.asDict().get("n_buckets") for r in manifest} - {n_buckets}
+    if stored:
+        raise ValueError(
+            f"{out_path} was materialized with n_buckets in {stored}, "
+            f"not {n_buckets}"
+        )
+    done = {r.bucket for r in manifest}
     pending = [b for b in range(n_buckets) if b not in done]
 
     if "bucket" in pages.columns:
         # the input table is already partitioned by the bucket key (the
         # production layout written by write_bucketed_pages): the per-group
         # filter below becomes a PARTITION-PRUNING predicate — each group
-        # reads only its own files instead of rescanning the table
+        # reads only its own files instead of rescanning the table.  One
+        # probe checks that it was bucketed with this n_buckets
+        if pages.filter(
+            ~F.col("bucket").eqNullSafe(_bucket(n_buckets))
+        ).limit(1).collect():
+            raise ValueError(
+                "pages carry a bucket column not equal to "
+                f"pmod(xxhash64(url), {n_buckets})"
+            )
         bucketed_pages = pages
     else:
-        bucketed_pages = pages.withColumn(
-            "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-        )
+        bucketed_pages = pages.withColumn("bucket", _bucket(n_buckets))
 
     rows_total = 0
     done_now: list[int] = []
@@ -106,9 +126,7 @@ def materialize_triples_resumable(
         group_pages = bucketed_pages.filter(F.col("bucket").isin(group))
         triples = PL.triples_plan(
             group_pages.drop("bucket"), spark, cfg=cfg, keep_probs=False
-        ).withColumn(
-            "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-        ).observe(
+        ).withColumn("bucket", _bucket(n_buckets)).observe(
             obs, F.count(F.lit(1)).alias("rows_out")
         )
 
@@ -124,12 +142,13 @@ def materialize_triples_resumable(
 
         # lineage rows: one per bucket, appended only after the commit
         manifest_rows = [
-            (run_id, b, rows_out, wall_ms, int(time.time())) for b in group
+            (run_id, b, n_buckets, rows_out, wall_ms, int(time.time()))
+            for b in group
         ]
         spark.createDataFrame(
             manifest_rows,
-            "run_id string, bucket int, group_rows_out long, wall_ms long, "
-            "finished_ts long",
+            "run_id string, bucket int, n_buckets int, group_rows_out long, "
+            "wall_ms long, finished_ts long",
         ).write.mode("append").parquet(_manifest_path(out_path))
 
         spark.createDataFrame(

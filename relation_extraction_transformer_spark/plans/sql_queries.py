@@ -909,29 +909,9 @@ def _spark_ngram_jaccard(spark, sf):
     sh = tb(spark, sf, "documents").select(
         "doc_id", F.array_distinct(_spark_shingles(F.col("text"))).alias("s")
     )
-    j = (
-        pairs.join(
-            sh.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("sa")),
-            "doc_a",
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("sb")),
-            "doc_b",
-        )
-        .withColumn("inter_cnt", F.size(F.array_intersect("sa", "sb")))
-        .withColumn("na", F.size("sa"))
-        .withColumn("nb", F.size("sb"))
-    )
-    return j.filter(
-        F.col("inter_cnt") * 10 >= (F.col("na") + F.col("nb") - F.col("inter_cnt"))
-    ).select(
-        "doc_a", "doc_b",
-        F.round(
-            F.col("inter_cnt").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("inter_cnt")),
-            6,
-        ).alias("jaccard"),
-    )
+    return MH.verify_pairs(
+        pairs, sh, "doc_id", 0.1, "doc_a", "doc_b"
+    ).select("doc_a", "doc_b", F.round("jac", 6).alias("jaccard"))
 
 
 register(
@@ -3043,22 +3023,10 @@ def _spark_dup_clusters(spark, sf):
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
     labels = CANON.connected_components(pairs)
-    return (
-        t(spark, sf, "documents")
-        .select("doc_id")
-        .join(
-            labels.select(
-                F.col("node_id").alias("doc_id"), "component"
-            ),
-            "doc_id",
-            "left",
-        )
-        .select(
-            "doc_id",
-            F.coalesce("component", F.col("doc_id")).alias("cluster_id"),
-        )
-        .withColumn("keep", F.col("cluster_id") == F.col("doc_id"))
-    )
+    return CANON.label_components(
+        t(spark, sf, "documents").select("doc_id"), labels, "doc_id",
+        "cluster_id",
+    ).withColumn("keep", F.col("cluster_id") == F.col("doc_id"))
 
 
 def _dup_clusters_oracle() -> str:

@@ -127,31 +127,18 @@ def curate(
     bands = MH.minhash_bands(
         kept, "doc_id", hashes=MH.word_shingle_hashes_sql("text")
     )
-    pairs = MH.band_candidate_pairs(bands, "doc_id", "doc_a", "doc_b")
     sh = kept.select(
         "doc_id", F.array_distinct(MH.word_shingles(F.col("text"))).alias("s")
     )
-    verified = (
-        pairs.join(sh.select(F.col("doc_id").alias("doc_a"),
-                             F.col("s").alias("sa")), "doc_a")
-        .join(sh.select(F.col("doc_id").alias("doc_b"),
-                        F.col("s").alias("sb")), "doc_b")
-        .withColumn("inter", F.size(F.array_intersect("sa", "sb")))
-        .withColumn(
-            "jac",
-            F.col("inter").cast("double")
-            / (F.size("sa") + F.size("sb") - F.col("inter")),
-        )
-        .filter(F.col("jac") >= jaccard)
-        .select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        )
+    verified = MH.verify_pairs(
+        MH.band_candidate_pairs(bands, "doc_id"), sh, "doc_id", jaccard
     )
     labels = CANON.connected_components(verified)
-    drop = labels.filter(
-        F.col("component") != F.col("node_id")
-    ).select(F.col("node_id").alias("doc_id"))
-    kept = kept.join(drop, "doc_id", "left_anti")
+    kept = (
+        CANON.label_components(kept, labels, "doc_id")
+        .filter(F.col("component") == F.col("doc_id"))
+        .drop("component")
+    )
     stages["near_dedup"] = kept
     report["after_near_dedup"] = kept.count()
 

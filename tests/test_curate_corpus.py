@@ -134,6 +134,54 @@ def test_funnel_counts_golden(run):
     }
 
 
+def _word_trigram_jaccard(x, y):
+    def grams(text):
+        toks = text.split(" ")
+        if len(toks) < 3:
+            return {text}
+        return {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+
+    a, b = grams(x), grams(y)
+    return len(a & b) / len(a | b)
+
+
+def test_near_dedup_keepers_match_union_find(run, union_find):
+    """The near-dedup stage against an independent resolver: every LSH
+    candidate over the exact-dedup survivors is re-scored with
+    pure-Python word 3-gram Jaccard, and the engine must verify exactly
+    those at or above 0.1.  A union-find merges them, and the stage must
+    keep exactly the lowest doc_id of each component plus every doc in
+    no verified pair."""
+    from relation_extraction_transformer_spark.functions import minhash as MH
+
+    stages, _ = run
+    exact = stages["exact_dedup"]
+    texts = {r.doc_id: r.text for r in exact.collect()}
+    cand = MH.band_candidate_pairs(
+        MH.minhash_bands(
+            exact, "doc_id", hashes=MH.word_shingle_hashes_sql("text")
+        ),
+        "doc_id",
+    )
+    sets = exact.select(
+        "doc_id", F.array_distinct(MH.word_shingles(F.col("text"))).alias("s")
+    )
+    verified = {
+        (r.src, r.dst)
+        for r in MH.verify_pairs(cand, sets, "doc_id", 0.1).collect()
+    }
+    want = {
+        (r.src, r.dst)
+        for r in cand.collect()
+        if _word_trigram_jaccard(texts[r.src], texts[r.dst]) >= 0.1
+    }
+    assert verified == want and want
+    comp = union_find(want)
+    keepers = {d for d in texts if comp.get(d, d) == d}
+    got = {r.doc_id for r in stages["near_dedup"].select("doc_id").collect()}
+    assert got == keepers
+
+
 def test_curate_releases_all_cache_entries(spark):
     """A long-lived session must not accumulate cache entries per
     curate() call: after clearCache(), a curate() run (near-dedup bands,

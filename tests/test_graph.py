@@ -230,6 +230,89 @@ def test_build_graph_end_to_end(spark):
     assert edges.agg(F.max("weight")).first()[0] >= 1
 
 
+def _char_trigram_jaccard(x, y):
+    def grams(name):
+        s = f"^{name}$"
+        return {s[i:i + 3] for i in range(len(s) - 2)}
+
+    a, b = grams(x), grams(y)
+    return len(a & b) / len(a | b)
+
+
+def test_build_graph_canonical_ids_match_union_find(spark, union_find):
+    """build_graph's canonical ids against an independent resolver.
+    Every LSH candidate is re-scored with pure-Python Jaccard over the
+    char trigrams of ``^name$``: the engine must verify exactly the
+    candidates at or above the threshold.  Those pairs are merged by a
+    union-find, and each raw node must carry its component's lowest id:
+    one nodes row per component with its member count, and every triple
+    counted on the edge between its endpoints' components."""
+    import re
+    from collections import Counter
+
+    planted = [
+        # a chain: holdings~holding and holdings~holdngs verify,
+        # holding~holdngs is below the threshold
+        ("Quintar Holdings", "owns", "Zorblax Industries"),
+        ("quintar holding", "owns", "Zorblax Industrie"),
+        ("Quintar  Holdngs", "owns", "zorblax industry"),
+        ("Quintar Holdings Ltd", "owns", "Zorblax Indust"),
+        ("Merovia Bank", "funds", "Zorblax Industries Inc"),
+        ("merovia banks", "funds", "Quintar Holdings"),
+        ("Alice Turner", "works_for", "Acme Corp"),
+        ("alice turner", "works_for", "Merovia Bank"),
+    ]
+    triples = spark.createDataFrame(
+        [(s, p, o, 0.9, f"u{i}") for i, (s, p, o) in enumerate(planted)],
+        "subj string, pred string, obj string, prob double, url string",
+    )
+    nodes, edges = GRAPH.build_graph(triples, spark, jaccard_threshold=0.6)
+
+    linked = LINK.link_triples(
+        triples.withColumn("subj_type", F.lit(None).cast("string"))
+        .withColumn("obj_type", F.lit(None).cast("string")),
+        LINK.entity_dictionary(spark),
+    ).collect()
+    surfaces = {}
+    for r in linked:
+        for nid, name in ((r.subj_entity_id, r.subj_canonical),
+                          (r.obj_entity_id, r.obj_canonical)):
+            surfaces.setdefault(nid, set()).add(
+                re.sub(r"\s+", " ", name.strip().lower())
+            )
+    names = {nid: min(v) for nid, v in surfaces.items()}
+    ndf = spark.createDataFrame(
+        list(names.items()), "node_id long, name string"
+    )
+    cdf = CANON.candidate_pairs(CANON.minhash_band_hashes(ndf, "name"))
+    cand = {(r.src, r.dst) for r in cdf.collect()}
+    verified = {
+        (r.src, r.dst)
+        for r in CANON.verify_pairs_jaccard(cdf, ndf, 0.6).collect()
+    }
+    want = {
+        (a, b) for a, b in cand
+        if _char_trigram_jaccard(names[a], names[b]) >= 0.6
+    }
+    assert verified == want
+    comp = union_find(want)
+    label = {nid: comp.get(nid, nid) for nid in names}
+    # the planted chain is one component although its ends do not verify
+    by_name = {v: k for k, v in names.items()}
+    chain = ("quintar holdings", "quintar holding", "quintar holdngs")
+    assert len({label[by_name[n]] for n in chain}) == 1
+
+    assert {
+        r.canonical_id: r.merged_surface_forms for r in nodes.collect()
+    } == Counter(label.values())
+    assert {
+        (r.src, r.pred, r.dst): r.weight for r in edges.collect()
+    } == Counter(
+        (label[r.subj_entity_id], r.pred, label[r.obj_entity_id])
+        for r in linked
+    )
+
+
 def test_linking_dictionary_reduction_preserves_argmin(spark):
     """The per-(alias, rank, type) min-entity reduction must not change
     any link: verify against a brute-force pandas argmin over the FULL

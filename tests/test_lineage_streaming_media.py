@@ -1,8 +1,10 @@
 """Checkpoint-resume, streaming, and multimodal plumbing tests."""
 
+import os
 import shutil
 
 import pyspark.sql.functions as F
+import pytest
 
 from relation_extraction_transformer_spark.operators import multimodal as MM
 from relation_extraction_transformer_spark.plans import lineage as LIN
@@ -50,9 +52,6 @@ def test_unreadable_manifest_raises_instead_of_recomputing(spark, tmp_path):
     """Only a missing manifest means "no bucket done"; a manifest that
     cannot be read must stop the run before it recomputes and
     re-appends every bucket."""
-    import os
-
-    import pytest
     from pyspark.errors import AnalysisException
 
     out = str(tmp_path / "kg_out")
@@ -184,6 +183,50 @@ def test_bucketed_input_partition_pruning(spark, tmp_path):
     t2 = {tuple(x) for x in spark.read.parquet(f"{out2}/triples")
           .select("url", "sent_id", "pair_id", "pred").collect()}
     assert t1 == t2 and r.rows_out == r2.rows_out
+
+
+@pytest.mark.parametrize("stored", [16, 4])
+def test_bucketed_input_of_another_bucket_count_raises(
+    spark, tmp_path, stored
+):
+    """A pre-bucketed input written with another bucket count stops the
+    run before any group: trusting its stored bucket column would drop
+    the pages filed under buckets >= n_buckets (16 -> 8) or file pages
+    under the wrong bucket (4 -> 8)."""
+    src = str(tmp_path / "bucketed_pages")
+    out = str(tmp_path / "out")
+    pages = PG.synthetic_pages(spark, 40, seed=5, partitions=4)
+    LIN.write_bucketed_pages(pages, src, n_buckets=stored)
+    with pytest.raises(ValueError, match="bucket"):
+        LIN.materialize_triples_resumable(
+            spark, spark.read.parquet(src), out, run_id="b1", n_buckets=8,
+            buckets_per_group=4,
+        )
+    assert not os.path.exists(f"{out}/triples")
+
+
+def test_resume_with_another_bucket_count_raises(spark, tmp_path):
+    """The manifest records n_buckets: a resume under another count
+    would read bucket ids of the old partitioning as done."""
+    out = str(tmp_path / "kg_out")
+    pages = PG.synthetic_pages(spark, 16, seed=5, partitions=2)
+    LIN.materialize_triples_resumable(
+        spark, pages, out, run_id="r1", n_buckets=4, buckets_per_group=4
+    )
+    with pytest.raises(ValueError, match="n_buckets"):
+        LIN.materialize_triples_resumable(
+            spark, pages, out, run_id="r2", n_buckets=8, buckets_per_group=4
+        )
+    manifest = spark.read.parquet(f"{out}/_manifest")
+    assert {r.run_id for r in manifest.collect()} == {"r1"}
+    # a manifest that does not record its bucket count is refused too
+    rows = manifest.drop("n_buckets").collect()
+    shutil.rmtree(f"{out}/_manifest")
+    spark.createDataFrame(rows).write.parquet(f"{out}/_manifest")
+    with pytest.raises(ValueError, match="n_buckets"):
+        LIN.materialize_triples_resumable(
+            spark, pages, out, run_id="r3", n_buckets=4, buckets_per_group=4
+        )
 
 
 def test_resize_images_plumbing(spark):
