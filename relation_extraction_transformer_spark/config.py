@@ -72,11 +72,6 @@ class PipelineConfig:
     # candidate-pair cap per sentence to bound the explode fan-out
     max_pairs_per_sentence: int = 12
 
-    # inference arithmetic: float32 halves GEMM memory traffic (the
-    # multi-core scaling limiter); the end-to-end parity test verifies the
-    # fp32 pipeline still reproduces the fp64 oracle's triples exactly
-    inference_dtype: str = "float32"
-
 
 DEFAULT_MODEL = ModelConfig()
 DEFAULT_PIPELINE = PipelineConfig()

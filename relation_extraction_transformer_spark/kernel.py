@@ -16,7 +16,7 @@ Eval-mode simplifications (ref:relation_model.py:96, eval.py:82):
 - RReLU acts as LeakyReLU with slope (lower+upper)/2
 
 Arithmetic dtype follows the parameter arrays (float64 for the oracle,
-float32 on the pipeline hot path — see PipelineConfig.inference_dtype; the
+float32 on the pipeline hot path — see pipeline.build_artifacts; the
 end-to-end test pins fp32-vs-fp64 triple equality).  Results are
 bit-identical whatever the batch composition: every GEMM whose row count
 grows with the batch goes through :func:`_gemm`, which pads the rows to a

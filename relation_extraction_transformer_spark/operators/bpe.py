@@ -203,20 +203,3 @@ def bpe_encode(
             yield pdf
 
     return docs.mapInPandas(encode_batches, schema=out_schema)
-
-
-def save_merges(spark, merges: list[tuple[str, str]], path: str) -> None:
-    """Persist a learned merge table as a tiny parquet (rank, left,
-    right) — the tokenizer artifact a training pipeline ships alongside
-    the corpus (the parquet twin of sentencepiece's .model / HF's
-    merges.txt).  Rank order IS the table; loads sort by it."""
-    rows = [(i, a, b) for i, (a, b) in enumerate(merges)]
-    spark.createDataFrame(
-        rows, "rank int, left string, right string"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_merges(spark, path: str) -> list[tuple[str, str]]:
-    """Load a merge table saved by :func:`save_merges`, in rank order."""
-    rows = spark.read.parquet(path).orderBy("rank").collect()
-    return [(r.left, r.right) for r in rows]

@@ -17,13 +17,8 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from ..config import PipelineConfig, ModelConfig, DEFAULT_PIPELINE
-from .. import weights as W
-from ..sources import gazetteer as G
-from . import inference as INF
 
 KEY = ["url", "sent_id", "pair_id"]
 
@@ -48,28 +43,3 @@ def majority_vote(
         .filter(F.col("rn") == 1)
         .select(*key, F.col("pred").alias("voted_pred"))
     )
-
-
-def ensemble_predict(
-    candidates: DataFrame,
-    spark: SparkSession,
-    seeds: list[int],
-    cfg: PipelineConfig = DEFAULT_PIPELINE,
-) -> DataFrame:
-    """Run the inference UDF once per seeded model (the Spark analog of
-    ref:ensemble.sh training k seeds) and vote."""
-    vocab = G.static_vocab()
-    vocab_bc = spark.sparkContext.broadcast(vocab)
-    preds = []
-    for seed in seeds:
-        mcfg = ModelConfig(**{**cfg.model.to_dict(), "seed": seed})
-        params_bc = spark.sparkContext.broadcast(
-            W.generate_weights(mcfg, vocab_size=len(vocab))
-        )
-        preds.append(
-            INF.predict_relations(
-                candidates, params_bc, mcfg, vocab_bc=vocab_bc,
-                keep_probs=False,
-            )
-        )
-    return majority_vote(preds)

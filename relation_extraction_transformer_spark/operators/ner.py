@@ -8,14 +8,14 @@ deterministically from raw text, entirely JVM-side:
 - tokens: whitespace split (corpus is pre-tokenized web text)
 - POS: rule CASE expression mirroring sources.gazetteer.pos_tag
 - mentions: candidate n-grams (``transform`` over index sequences)
-  broadcast-hash-joined against the gazetteer — the Spark-native form of
-  dictionary NER.  No shuffle: the gazetteer side is broadcast, the
-  containment filter is an array expression, not a self-join.
+  looked up in a map literal of the gazetteer — dictionary NER with no
+  join and no shuffle; the containment filter is an array expression,
+  not a self-join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import masking as M
@@ -57,16 +57,6 @@ def pos_tags_sql(tokens: str) -> str:
     )
 
 
-def gazetteer_df(spark: SparkSession) -> DataFrame:
-    rows = [
-        (phrase, typ, len(phrase.split(" ")))
-        for phrase, typ in sorted(G.build_gazetteer().items())
-    ]
-    return spark.createDataFrame(
-        rows, "phrase string, ner_type string, n_tokens int"
-    )
-
-
 def detect_mentions(
     tokenized: DataFrame,
     gaz_map: dict[str, str] | None = None,
@@ -76,9 +66,6 @@ def detect_mentions(
     array expressions over a map literal — no join, no explode, no shuffle.
     The whole sentence->mentions stage stays narrow, which is what makes
     the candidate generation embarrassingly parallel at 100 TB.
-
-    For dictionaries too large for a map literal, use
-    :func:`detect_mentions_join` (broadcast join path) instead.
 
     Output: url, sent_id, tokens, mentions array<struct> (sorted).
     """
@@ -133,83 +120,6 @@ def _mentions_sql(
         "o -> o.m_start <= m.m_start AND o.m_end >= m.m_end "
         "AND o.m_end - o.m_start > m.m_end - m.m_start)))"
     )
-
-
-def detect_mentions_join(
-    tokenized: DataFrame,
-    gaz: DataFrame,
-    max_phrase_tokens: int = G.MAX_PHRASE_TOKENS,
-) -> DataFrame:
-    """Longest-match gazetteer NER via broadcast join — the scale path for
-    dictionaries with millions of surface forms (entity-linking style).
-
-    1. generate all n-gram spans (n = 1..max) as (start, end, phrase)
-    2. broadcast join against the gazetteer
-    3. drop mentions strictly contained in a longer mention of the same
-       sentence (leftmost-longest semantics for the nested case)
-
-    Output: url, sent_id, tokens, mentions array<struct> (sorted).
-    """
-    grams = None
-    for n in range(1, max_phrase_tokens + 1):
-        g = tokenized.filter(F.size("tokens") >= n).select(
-            "url", "sent_id", "tokens",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("tokens") - n),
-                    lambda i: F.struct(
-                        i.alias("m_start"),
-                        (i + n - 1).alias("m_end"),
-                        F.concat_ws(
-                            " ", F.slice(F.col("tokens"), i + 1, n)
-                        ).alias("surface"),
-                    ),
-                )
-            ).alias("span"),
-        )
-        grams = g if grams is None else grams.unionByName(g)
-
-    hits = (
-        grams.select(
-            "url", "sent_id", "tokens",
-            F.col("span.m_start").alias("m_start"),
-            F.col("span.m_end").alias("m_end"),
-            F.col("span.surface").alias("surface"),
-        )
-        .join(
-            F.broadcast(gaz.withColumnRenamed("phrase", "surface")),
-            on="surface",
-            how="inner",
-        )
-    )
-
-    # containment removal without a self-join: collect each sentence's
-    # mention spans once, keep spans not strictly inside another
-    per_sent = hits.groupBy("url", "sent_id", "tokens").agg(
-        F.collect_list(
-            F.struct("m_start", "m_end", "surface", "ner_type")
-        ).alias("ms")
-    )
-    kept = per_sent.select(
-        "url", "sent_id", "tokens",
-        # array_sort fixes the nondeterministic collect_list order (structs
-        # compare field-by-field: m_start, then m_end)
-        F.array_sort(
-            F.filter(
-                "ms",
-                lambda m: ~F.exists(
-                    "ms",
-                    lambda o: (o["m_start"] <= m["m_start"])
-                    & (o["m_end"] >= m["m_end"])
-                    & (
-                        (o["m_end"] - o["m_start"])
-                        > (m["m_end"] - m["m_start"])
-                    ),
-                ),
-            )
-        ).alias("mentions"),
-    )
-    return kept
 
 
 def ner_tags_from_mentions(kept: DataFrame) -> DataFrame:

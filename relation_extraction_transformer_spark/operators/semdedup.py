@@ -305,12 +305,3 @@ def semdedup(
             F.coalesce("dropped", F.lit(False)).alias("dropped"),
         )
     )
-
-
-def semdedup_keep(df: DataFrame, id_col: str, vec_col: str,
-                  **kwargs) -> DataFrame:
-    """Convenience: the deduplicated corpus (rows semdedup keeps)."""
-    flags = semdedup(df, id_col, vec_col, **kwargs)
-    return df.join(
-        flags.filter(~F.col("dropped")).select(id_col), id_col, "semi"
-    )

@@ -7,8 +7,7 @@ ref:model/relation_model.py:74).  The epoch-level decay-on-plateau
 lives with the epoch loop (operators/train.py).
 
 Every ``step`` mutates ``params`` in place and keeps its state in a plain
-dict so a whole optimizer is one picklable object (checkpointable through
-weights.to_bytes-style blobs).
+dict so a whole optimizer is one picklable object.
 """
 
 from __future__ import annotations

@@ -114,25 +114,6 @@ def degree_distribution(
     )
 
 
-def graph_cardinality_metrics(edges: DataFrame, rsd: float = 0.02) -> DataFrame:
-    """Mergeable cardinality metrics over the edges table via HLL++
-    (``approx_count_distinct``): distinct subjects / objects / predicates
-    and (src,dst) pair cardinality.  At 10^12 edges an exact
-    COUNT(DISTINCT entity) shuffles the whole key space; HLL sketches
-    combine map-side into a few KB per partition, which is what a
-    per-run metrics row (plans/lineage.py) can afford to compute every
-    batch."""
-    return edges.agg(
-        F.count(F.lit(1)).alias("n_edges"),
-        F.approx_count_distinct("src", rsd).alias("approx_subjects"),
-        F.approx_count_distinct("dst", rsd).alias("approx_objects"),
-        F.approx_count_distinct(
-            F.concat_ws("|", "src", "dst"), rsd
-        ).alias("approx_pairs"),
-        F.approx_count_distinct("pred", rsd).alias("approx_predicates"),
-    )
-
-
 def write_graph(
     nodes: DataFrame, edges: DataFrame, base_path: str
 ) -> None:

@@ -2,15 +2,15 @@
 
 Declarative end to end; the only Python is the single Arrow inference UDF.
 Catalyst sees one linear plan, so column pruning reaches the page scan
-(html/binary is never read once text is extracted) and the gazetteer join
-is a broadcast hash join.
+(html/binary is never read once text is extracted) and gazetteer NER is
+array expressions over a map literal (no join, no shuffle).
 
 Stage map (SURVEY §3.1 translated):
   driver: broadcast weights + vocab (ref:runner.py:206-219 analog)
   scan pages            -> S1
   extract_text          -> UDF surface #1 (JVM regex here)
   sentence/tokenize     -> P-ops
-  gazetteer NER         -> broadcast join (J1 analog)
+  gazetteer NER         -> map-literal array ops (no join)
   pair generation       -> array ops + single explode
   preprocess            -> P1-P9
   predict               -> K1-K19 in one mapInPandas
@@ -40,30 +40,28 @@ class PipelineArtifacts:
 
     params_bc: object
     vocab_bc: object
-    gaz: DataFrame
 
 
-_ARTIFACT_CACHE: dict[int, PipelineArtifacts] = {}
+_ARTIFACT_CACHE: dict[tuple, PipelineArtifacts] = {}
 
 
 def build_artifacts(
     spark: SparkSession, cfg: PipelineConfig = DEFAULT_PIPELINE
 ) -> PipelineArtifacts:
-    key = id(spark) ^ hash(
-        (cfg.model.seed, cfg.model.vocab_size, cfg.inference_dtype)
-    )
+    # a broadcast belongs to its application, and every model field may
+    # shape the weights, so key on both
+    key = (spark.sparkContext.applicationId, cfg.model)
     if key not in _ARTIFACT_CACHE:
-        from ..operators.inference import as_dtype
-
         vocab = G.static_vocab()
-        params = as_dtype(
-            W.generate_weights(cfg.model, vocab_size=len(vocab)),
-            cfg.inference_dtype,
+        # float32 inference halves GEMM memory traffic (the multi-core
+        # scaling limiter); the end-to-end parity test verifies the fp32
+        # pipeline still reproduces the fp64 oracle's triples exactly
+        params = INF.as_dtype(
+            W.generate_weights(cfg.model, vocab_size=len(vocab)), "float32"
         )
         _ARTIFACT_CACHE[key] = PipelineArtifacts(
             params_bc=spark.sparkContext.broadcast(params),
             vocab_bc=spark.sparkContext.broadcast(vocab),
-            gaz=NER.gazetteer_df(spark),
         )
     return _ARTIFACT_CACHE[key]
 
@@ -75,8 +73,7 @@ def candidates_plan(
     extracted = PAGES.extract_text(pages).filter(F.col("lang") == "en")
     sentences = NER.split_sentences(extracted, text_col="extracted_text")
     tokenized = NER.tokenize(sentences)
-    # small closed-world dictionary -> shuffle-free inline NER; the
-    # broadcast-join path (detect_mentions_join) covers big dictionaries
+    # closed-world dictionary -> shuffle-free inline NER
     kept = NER.detect_mentions(tokenized)
     tagged = NER.ner_tags_from_mentions(kept)
     # per-sentence tag ids BEFORE the pair explode (computed once per

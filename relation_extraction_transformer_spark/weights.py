@@ -130,12 +130,6 @@ def load_npz(path: str) -> Params:
         return {k: z[k] for k in z.files}
 
 
-def to_bytes(params: Params) -> bytes:
-    buf = io.BytesIO()
-    np.savez_compressed(buf, **params)
-    return buf.getvalue()
-
-
 def from_bytes(blob: bytes) -> Params:
     with np.load(io.BytesIO(blob)) as z:
         return {k: z[k] for k in z.files}

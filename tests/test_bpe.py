@@ -127,20 +127,3 @@ def test_bpe_encode_handles_empty_and_null_text(spark):
     out = {r.doc_id: list(r.bpe_tokens) for r in BPE.bpe_encode(docs, merges).collect()}
     assert out[2] == [] and out[3] == [] and out[4] == []
     assert "".join(out[1]) == "low" + BPE.EOW + "lower" + BPE.EOW
-
-
-def test_merge_table_roundtrip(spark, tmp_path):
-    """save_merges/load_merges: the persisted tokenizer artifact must
-    reproduce the in-memory table exactly (order included), and encoding
-    with the loaded table must equal encoding with the original."""
-    docs = spark.read.parquet(SF_DOCS)
-    merges = BPE.learn_bpe(docs, n_merges=35)
-    path = str(tmp_path / "merges.parquet")
-    BPE.save_merges(spark, merges, path)
-    loaded = BPE.load_merges(spark, path)
-    assert loaded == merges
-    got = {r.doc_id: tuple(r.bpe_tokens)
-           for r in BPE.bpe_encode(docs.select("doc_id", "text"), loaded).collect()}
-    want = {r.doc_id: tuple(r.bpe_tokens)
-            for r in BPE.bpe_encode(docs.select("doc_id", "text"), merges).collect()}
-    assert got == want

@@ -9,7 +9,9 @@ import pyspark.sql.functions as F
 
 from relation_extraction_transformer_spark import weights as W
 from relation_extraction_transformer_spark import oracle_pipeline as OP
-from relation_extraction_transformer_spark.config import DEFAULT_PIPELINE
+from relation_extraction_transformer_spark.config import (
+    DEFAULT_PIPELINE, ModelConfig, PipelineConfig,
+)
 from relation_extraction_transformer_spark.plans import pipeline as PL
 from relation_extraction_transformer_spark.sources import gazetteer as G
 from relation_extraction_transformer_spark.sources import pages as PG
@@ -93,3 +95,15 @@ def test_triple_precision_recall_meets_north_rule(spark):
     recall = inter / len(want)
     assert precision >= 0.95 and recall >= 0.95, (precision, recall)
     assert precision == 1.0 and recall == 1.0, (precision, recall)
+
+
+def test_build_artifacts_caches_weights_per_model_config(spark):
+    """Cached broadcast weights belong to one model config: a model with
+    another FFN width gets weights of its own shape, and the default
+    model keeps its own."""
+    narrow = PipelineConfig(model=ModelConfig(hidden_self=64))
+    other = PL.build_artifacts(spark, narrow).params_bc.value
+    default = PL.build_artifacts(spark).params_bc.value
+    assert other["l0_ffn1_w"].shape == (64, 360)
+    assert default["l0_ffn1_w"].shape == (130, 360)
+    assert other["l0_ffn1_w"].dtype == "float32"

@@ -379,38 +379,6 @@ def test_linking_sort_merge_path_matches_broadcast(spark):
     assert got == want
 
 
-def test_graph_cardinality_metrics_close_to_exact(spark):
-    """HLL++ sketch metrics within rsd-scaled tolerance of exact
-    distincts (and exact n_edges), computed in ONE pass with no
-    distinct shuffle."""
-    import pyspark.sql.functions as F
-
-    from relation_extraction_transformer_spark.plans import graph as GR
-
-    triples = spark.read.parquet(
-        "/root/repo/artifacts/kg_triples.parquet"
-    )
-    _, edges = GR.build_graph(triples, spark)
-    edges = edges.cache()
-    m = GR.graph_cardinality_metrics(edges, rsd=0.02).first()
-    exact = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("src").alias("s"),
-        F.countDistinct("dst").alias("o"),
-        F.countDistinct("src", "dst").alias("p"),
-        F.countDistinct("pred").alias("r"),
-    ).first()
-    assert m.n_edges == exact.n
-    for approx, truth in ((m.approx_subjects, exact.s),
-                          (m.approx_objects, exact.o),
-                          (m.approx_pairs, exact.p),
-                          (m.approx_predicates, exact.r)):
-        assert abs(approx - truth) <= max(2, 0.1 * truth), (approx, truth)
-    plan = GR.graph_cardinality_metrics(edges)._jdf.queryExecution(
-    ).executedPlan().toString()
-    assert "approx_count_distinct" in plan or "HyperLogLog" in plan
-
-
 def test_triangle_count_matches_bruteforce(spark):
     """kg_triangle_count's degree-oriented compact-forward join vs an
     independent adjacency-set brute force over the frozen triples

@@ -168,13 +168,6 @@ def test_oversized_identical_group_terminates_and_dedups(spark):
     assert all(got[i] for i in range(1, 20))
 
 
-def test_semdedup_keep_returns_deduplicated_corpus(spark):
-    corpus = _corpus(spark)
-    kept = SEM.semdedup_keep(corpus, "id", "emb", n_cells=4)
-    assert kept.count() == 120  # originals only; every planted copy gone
-    assert kept.filter("id >= 100000").count() == 0
-
-
 def test_invalid_knobs_raise(spark):
     corpus = _corpus(spark, n=10)
     with pytest.raises(ValueError, match="split_factor"):

@@ -1,15 +1,12 @@
-"""Vocab build, scorer aggregation, ensemble vote, skew salting tests."""
+"""Vocab build, scorer aggregation, skew salting tests."""
 
 import numpy as np
 import pyspark.sql.functions as F
 
 from relation_extraction_transformer_spark import constants as C
 from relation_extraction_transformer_spark.functions import skew as SKEW
-from relation_extraction_transformer_spark.operators import ensemble as ENS
 from relation_extraction_transformer_spark.operators import scorer as SCORE
 from relation_extraction_transformer_spark.operators import vocab as V
-from relation_extraction_transformer_spark.plans import pipeline as PL
-from relation_extraction_transformer_spark.sources import pages as PG
 
 
 def test_vocab_build_and_embedding(spark, tmp_path):
@@ -139,36 +136,6 @@ def test_scorer_guessed_zero_precision_one(spark):
     )
     r = SCORE.score_per_relation(df).first()
     assert r.prec == 1.0 and r.recall == 0.0 and r.f1 == 0.0
-
-
-def test_ensemble_vote_and_agreement(spark):
-    pages = PG.synthetic_pages(spark, 20, seed=21, partitions=2)
-    arts = PL.build_artifacts(spark)
-    feats = PL.candidates_plan(pages, arts).select(
-        "url", "sent_id", "pair_id", "masked_tokens", "pos_ids", "ner_ids",
-        "subj_positions", "obj_positions",
-    )
-    voted = ENS.ensemble_predict(feats, spark, seeds=[1234, 1234, 99])
-    rows = voted.collect()
-    assert len(rows) == feats.count()
-    # two identical-seed models always outvote the third: the vote must
-    # equal the seed-1234 single-model prediction
-    from relation_extraction_transformer_spark.sources import gazetteer as G
-    from relation_extraction_transformer_spark import weights as W
-    from relation_extraction_transformer_spark.operators import inference as INF
-
-    vocab = G.static_vocab()
-    params_bc = spark.sparkContext.broadcast(
-        W.generate_weights(arts_cfg := PL.DEFAULT_PIPELINE.model,
-                           vocab_size=len(vocab))
-    )
-    single = INF.predict_relations(
-        feats, params_bc, arts_cfg,
-        vocab_bc=spark.sparkContext.broadcast(vocab), keep_probs=False,
-    )
-    sd = {(r.url, r.sent_id, r.pair_id): r.pred for r in single.collect()}
-    for r in rows:
-        assert sd[(r.url, r.sent_id, r.pair_id)] == r.voted_pred
 
 
 def test_salted_repartition_spreads_hot_key(spark):
