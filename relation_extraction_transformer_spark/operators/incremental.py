@@ -33,6 +33,7 @@ shuffle-reuse join).
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
@@ -234,20 +235,136 @@ def fold_version(
     return {**summary, "replayed": False, **stats}
 
 
+def staged_version(staging: str) -> int:
+    """The version the staging directory :func:`fold_version` handed to
+    ``write`` commits as."""
+    return int(os.path.basename(staging)[2:].split(".")[0])
+
+
+MANIFEST = "manifest.json"
+
+
+def write_manifest(version_dir: str, segments: dict) -> None:
+    """Record the segments a version's state is made of:
+    ``{dataset: [[version, rows], ...]}``, oldest first.  Segment
+    ``[k, rows]`` of ``dataset`` is the directory ``dataset`` that
+    version ``k`` wrote (see :func:`segment_path`); a version's own
+    segment is its last entry.  Written into the staging directory, so
+    it commits with the version."""
+    with open(os.path.join(version_dir, MANIFEST), "w") as fh:
+        json.dump(segments, fh)
+
+
+def read_manifest(version_dir: str) -> dict:
+    """The segments recorded by :func:`write_manifest` ({} for a
+    version that keeps its whole state, like the edge state)."""
+    path = os.path.join(version_dir, MANIFEST)
+    if not os.path.exists(path):
+        return {}
+    with open(path) as fh:
+        return json.load(fh)
+
+
+def segment_path(state_dir: str, version: int, dataset: str) -> str:
+    """Where the ``dataset`` segment written by ``version`` lives: in
+    ``v<version>`` while that version is committed, in ``_r<version>``
+    once :func:`vacuum_state` retired it."""
+    path = os.path.join(state_dir, f"v{version}", dataset)
+    if os.path.exists(path):
+        return path
+    return os.path.join(state_dir, f"_r{version}", dataset)
+
+
 def vacuum_state(state_dir: str, keep_last_k: int) -> list[int]:
-    """Retention for the 24/7 loop: delete committed versions older than
+    """Retention for the 24/7 loop: remove committed versions older than
     the newest ``keep_last_k``, oldest first, and return the versions
-    removed.  The newest version is never touched, so an interrupted
-    vacuum leaves it readable; an older version it left half-deleted is
-    removed by the next vacuum.  Without this, a daily fold accumulates
-    state versions forever (each is edge-keyed aggregate data — small
-    next to the crawl, but unbounded over years)."""
+    removed.  Without this, a daily fold accumulates state versions
+    forever.
+
+    A removed version whose segments a kept version's manifest still
+    lists (:func:`write_manifest`) is retired, not deleted: ``v<k>`` is
+    renamed to ``_r<k>`` — which uncommits it in one step — and every
+    entry of ``_r<k>`` no kept manifest lists is deleted.  The rest is
+    deleted whole.  The newest version and every file it lists survive,
+    so an interrupted vacuum leaves it readable, and the next vacuum
+    finishes whatever the interrupted one left.  A DataFrame read from
+    the state before a vacuum must be read again after it, because the
+    files it lists may have moved to ``_r<k>``."""
     if keep_last_k < 1:
         raise ValueError("keep_last_k must be >= 1")
-    removed = committed_versions(state_dir)[:-keep_last_k]
+    committed = committed_versions(state_dir)
+    removed = committed[:-keep_last_k]
+    listed: dict[int, set[str]] = {}
+    for v in committed[-keep_last_k:]:
+        manifest = read_manifest(os.path.join(state_dir, f"v{v}"))
+        for dataset, segments in manifest.items():
+            for k, _rows in segments:
+                listed.setdefault(k, set()).add(dataset)
     for v in removed:
-        shutil.rmtree(os.path.join(state_dir, f"v{v}"))
+        path = os.path.join(state_dir, f"v{v}")
+        if v in listed:
+            os.rename(path, os.path.join(state_dir, f"_r{v}"))
+        else:
+            shutil.rmtree(path)
+    for name in sorted(os.listdir(state_dir)):
+        if not (name.startswith("_r") and name[2:].isdigit()):
+            continue
+        path = os.path.join(state_dir, name)
+        keep = listed.get(int(name[2:]), set())
+        if not keep:
+            shutil.rmtree(path)
+            continue
+        for entry in os.listdir(path):
+            if entry not in keep:
+                p = os.path.join(path, entry)
+                if os.path.isdir(p):
+                    shutil.rmtree(p)
+                else:
+                    os.remove(p)
     return removed
+
+
+def page_observations(spark: SparkSession, pages: DataFrame) -> DataFrame:
+    """The edge fold's input from a crawl delta: the triples the audited
+    narrow batch plan extracts, as ``(url, subj, pred, obj, prob, ts)``
+    observation rows."""
+    from ..plans import pipeline as PL
+
+    triples = PL.triples_plan(pages, spark, keep_probs=False)
+    return triples.select("url", "subj", "pred", "obj", "prob").join(
+        pages.select(
+            "url", F.unix_timestamp("warc_ts").cast("bigint").alias("ts")
+        ),
+        "url",
+    )
+
+
+def _write_edge_fold(
+    spark: SparkSession, obs: DataFrame, base: str | None, out: str
+) -> dict:
+    delta = edge_state(obs)
+    if base is not None:
+        delta = merge_edge_state(read_edge_state(spark, base), delta)
+    write_edge_state(delta, out)
+    return {}
+
+
+def fold_observations_delta(
+    spark: SparkSession,
+    obs: DataFrame,
+    state_dir: str,
+    version: int | None = None,
+) -> dict:
+    """Fold observation rows (:func:`page_observations`) into the
+    standing state under ``state_dir`` — versioning, replays and the
+    commit follow :func:`fold_version`.  ``obs`` is read once per state
+    dataset, so pass it materialized (``localCheckpoint``); a caller
+    that also derives the delta's mentions from it then extracts the
+    crawl once."""
+    return fold_version(
+        state_dir, version,
+        lambda base, out: _write_edge_fold(spark, obs, base, out),
+    )
 
 
 def fold_pages_delta(
@@ -257,34 +374,21 @@ def fold_pages_delta(
     version: int | None = None,
 ) -> dict:
     """Fold one crawl delta of pages into the standing state under
-    ``state_dir``: extract triples (the audited narrow batch plan), fold
-    into delta state, merge with the newest committed version and
-    commit ``v<version>`` — versioning, replays and the commit follow
-    :func:`fold_version`."""
-    from ..plans import pipeline as PL
+    ``state_dir``: extract its observations, fold them into delta
+    state, merge with the newest committed version and commit
+    ``v<version>`` — versioning, replays and the commit follow
+    :func:`fold_version`; a replay extracts nothing."""
 
     def write(base: str | None, out: str) -> dict:
-        triples = PL.triples_plan(pages, spark, keep_probs=False)
-        obs = triples.select("url", "subj", "pred", "obj", "prob").join(
-            pages.select(
-                "url",
-                F.unix_timestamp("warc_ts").cast("bigint").alias("ts"),
-            ),
-            "url",
-        )
-        # write_edge_state below is TWO actions (stats, regs), and both
+        # write_edge_state is TWO actions (stats, regs), and both
         # datasets derive from obs — without a materialization the full
         # delta extraction (the Arrow inference pipeline, the dominant
         # fold cost) runs once per dataset.  Checkpoint the edge-keyed
         # observation rows once; both aggregations then read the
         # delta-sized checkpoint (r8: halves the extract share of the
         # fold wall, measured in OPTIMIZATION_r08.md).
-        obs = obs.localCheckpoint(eager=True)
-        delta = edge_state(obs)
-        if base is not None:
-            delta = merge_edge_state(read_edge_state(spark, base), delta)
-        write_edge_state(delta, out)
-        return {}
+        obs = page_observations(spark, pages).localCheckpoint(eager=True)
+        return _write_edge_fold(spark, obs, base, out)
 
     return fold_version(state_dir, version, write)
 

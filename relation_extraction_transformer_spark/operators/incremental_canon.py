@@ -29,37 +29,62 @@ The trick that makes the fold exact AND delta-sized:
    label a full rebuild assigns.  Hence the fold law holds exactly:
    ``fold(d1); fold(d2) == rebuild(d1 ∪ d2)`` for any split.
 
-State layout (the same versioned directories as the edge rollup in
-operators/incremental.py — ``v<N>/nodes``, ``v<N>/bands``; a version
-is committed by renaming its fully written staging directory to
-``v<N>``, and the newest ``v<N>`` is the standing state):
+State layout: the versioned directories of the edge rollup in
+operators/incremental.py (a version is committed by renaming its fully
+written staging directory to ``v<N>``; the newest ``v<N>`` is the
+standing state), but each version holds only what its fold ADDED, as
+one immutable parquet **segment** per dataset, plus a manifest
+(:func:`~.incremental.write_manifest`) listing, oldest first, the
+segments of every version that make up its state:
 
-- ``nodes``:  (node_id, name, component)
-- ``bands``:  (node_id, band, band_hash)
+- ``nodes``:  (node_id, name, component) — the fold's new nodes plus
+  the standing members of every component it relabelled.  A node's row
+  is the one in the newest segment that holds it (:func:`resolve_nodes`).
+- ``bands``:  (node_id, band, band_hash) — the new nodes' band rows
+  only; bands are a pure function of the name and never change.
+
+Segments are merged by size alone, like an LSM tree's binary counter:
+the log keeps every segment larger than all newer segments together,
+so after a fold appends its rows, the segments from the oldest one that
+no longer is are rewritten as one (:func:`_merge_from`).  The row
+counts from each segment on thus at least double towards the oldest,
+and the live segment count per dataset stays at most 1 + log2(total
+rows / newest segment's rows).  :func:`~.incremental.vacuum_state`
+retires a removed version whose segments a kept manifest lists instead
+of deleting it.
 
 ``node_id`` must be a deterministic function of the normalized name
 (the rule :func:`mention_names` applies), so re-observing a known
 surface is a no-op (dropped by an anti-join).
 
-Scale shape: one anti-join (new vs known), one band build over the
-delta only, two equi-joins for candidates, pairwise Jaccard on
-candidates, CC on the reduced graph, and one equi-join on ``component``
-to relabel touched components (the relabel map is delta-sized and
+Scale shape: the standing nodes are resolved once per fold (one
+shuffle on node_id over the live segments, checkpointed); then one
+anti-join (new vs known), one band build over the delta only, two
+equi-joins for candidates, pairwise Jaccard on candidates, CC on the
+reduced graph, and one equi-join on ``component`` to pick out the
+members of touched components (the relabel map is delta-sized and
 broadcastable).  Nothing scales with total corpus except the standing
 band index join — an equi-join on (band, band_hash), the same shape as
-the batch LSH join.
+the batch LSH join — and the node resolution.  What a version writes
+is delta-sized (new nodes + relabelled members, and their bands), except
+when a merge lands on it; as in an LSM tree, each row is rewritten
+O(log folds) times over the life of the state.
 """
 
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import minhash as MH
 from . import canonicalize as CANON
 from . import incremental as INC
 from . import linking as LINK
+
+DATASETS = ("nodes", "bands")
 
 
 def mention_names(triples: DataFrame) -> DataFrame:
@@ -86,19 +111,53 @@ def canon_state(
     return CANON.label_components(names, comps), bands
 
 
-def write_canon_state(
-    nodes: DataFrame, bands: DataFrame, path: str
-) -> None:
-    nodes.write.mode("overwrite").parquet(os.path.join(path, "nodes"))
-    bands.write.mode("overwrite").parquet(os.path.join(path, "bands"))
+def resolve_nodes(segments: list[DataFrame]) -> DataFrame:
+    """Node segments, oldest first -> the map they make up: for every
+    node_id, its (name, component) from the newest segment holding
+    it."""
+    if len(segments) == 1:
+        return segments[0].select("node_id", "name", "component")
+    tagged = [
+        seg.select("node_id", "name", "component", F.lit(i).alias("seg"))
+        for i, seg in enumerate(segments)
+    ]
+    # a node's name never changes (node_id is a function of it)
+    return (
+        reduce(DataFrame.unionByName, tagged)
+        .groupBy("node_id", "name")
+        .agg(F.max_by("component", "seg").alias("component"))
+    )
+
+
+def _read_segments(
+    spark: SparkSession, path: str
+) -> dict[str, list[DataFrame]]:
+    """The segments the manifest of version directory ``path`` lists,
+    per dataset, oldest first.  Only the first segment's schema is
+    inferred (a Spark job per read); the rest reuse it."""
+    state_dir = os.path.dirname(os.path.normpath(path))
+    frames: dict[str, list[DataFrame]] = {}
+    for dataset, segments in INC.read_manifest(path).items():
+        frames[dataset] = []
+        for v, _rows in segments:
+            reader = spark.read
+            if frames[dataset]:
+                reader = reader.schema(frames[dataset][0].schema)
+            frames[dataset].append(
+                reader.parquet(INC.segment_path(state_dir, v, dataset))
+            )
+    return frames
 
 
 def read_canon_state(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame]:
+    """The full (nodes, bands) state of the committed version directory
+    ``path``, resolved from the segments its manifest lists."""
+    frames = _read_segments(spark, path)
     return (
-        spark.read.parquet(os.path.join(path, "nodes")),
-        spark.read.parquet(os.path.join(path, "bands")),
+        resolve_nodes(frames["nodes"]),
+        reduce(DataFrame.unionByName, frames["bands"]),
     )
 
 
@@ -108,11 +167,16 @@ def fold_into(
     delta_names: DataFrame,
     jaccard_threshold: float = 0.6,
 ) -> tuple[DataFrame, DataFrame, dict]:
-    """The pure fold: standing (nodes, bands) + delta mentions -> new
-    (nodes, bands, stats), stats = the ``new_nodes`` and
-    ``touched_components`` counts, observed on checkpoints the fold
-    takes anyway (no extra job).  Disk-free core shared by
-    :func:`fold_mentions_delta` and the in-memory
+    """The pure fold: standing (nodes, bands) + delta mentions -> the
+    rows the fold adds, (nodes, bands, stats).  ``nodes`` holds the new
+    nodes and the standing members of every component the delta
+    relabelled, each with its new component; ``bands`` the new nodes'
+    band rows.  The folded map is ``resolve_nodes([std_nodes, nodes])``
+    and the folded band index ``std_bands ∪ bands``.  ``std_nodes`` is
+    read five times: pass it materialized.  stats = the ``new_nodes``,
+    ``touched_components`` and ``relabelled_nodes`` counts, observed on
+    checkpoints the fold takes anyway (no extra job).  Disk-free core
+    shared by :func:`fold_mentions_delta` and the in-memory
     ``kg_canonical_map_incremental`` oracle query (whose DuckDB twin
     rebuilds in one pass — the hash compare IS fold==rebuild,
     cross-engine)."""
@@ -156,44 +220,74 @@ def fold_into(
     rcomp = CANON.connected_components(reduced)
     # relabel map for standing components the delta touched —
     # delta-sized: only component ids appearing in the reduced graph
-    # can move
+    # can move.  ``size`` counts each one's members, so the relabelled
+    # rows are counted here rather than by a job of their own.
     touched = (
         rcomp.join(
-            std_nodes.select(
-                F.col("component").alias("node_id")
-            ).distinct(),
+            std_nodes.groupBy(F.col("component").alias("node_id")).agg(
+                F.count(F.lit(1)).alias("size")
+            ),
             "node_id",
         )
         .select(
             F.col("node_id").alias("old_component"),
             F.col("component").alias("new_component"),
+            "size",
         )
         .filter(F.col("old_component") != F.col("new_component"))
-        .observe(n_touched, F.count(F.lit(1)).alias("n"))
+        .observe(
+            n_touched,
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.sum("size"), F.lit(0)).alias("members"),
+        )
         .localCheckpoint(eager=True)
     )
-    nodes_kept = (
-        std_nodes.join(
-            F.broadcast(
-                touched.withColumnRenamed("old_component", "component")
-            ),
-            "component", "left",
-        )
-        .select(
-            "node_id", "name",
-            F.coalesce("new_component", "component").alias("component"),
-        )
-    )
-    nodes_new = CANON.label_components(new_names, rcomp)
-    nodes = nodes_kept.unionByName(nodes_new)
-    bands = std_bands.unionByName(
-        dbands.select("node_id", "band", "band_hash")
-    )
+    relabelled = std_nodes.join(
+        F.broadcast(
+            touched.select(
+                F.col("old_component").alias("component"), "new_component"
+            )
+        ),
+        "component",
+    ).select("node_id", "name", F.col("new_component").alias("component"))
+    nodes = relabelled.unionByName(CANON.label_components(new_names, rcomp))
     stats = {
         "new_nodes": n_new.get["n"],
         "touched_components": n_touched.get["n"],
+        "relabelled_nodes": n_touched.get["members"],
     }
-    return nodes, bands, stats
+    return nodes, dbands.select("node_id", "band", "band_hash"), stats
+
+
+def _merge_from(rows: list[int], new: int) -> int:
+    """Where the segment a fold writes starts, given the row counts of
+    the standing segments (oldest first) and of the fold's own rows:
+    at the oldest segment holding no more rows than everything newer
+    together, which the new segment absorbs with all newer ones; past
+    the end when none does.  Afterwards every segment again holds more
+    rows than all newer ones together.  No knob: the rule is the row
+    counts alone."""
+    start, newer = len(rows), new
+    for i in range(len(rows) - 1, -1, -1):
+        if rows[i] <= newer:
+            start = i
+        newer += rows[i]
+    return start
+
+
+def _tree_bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(path)
+        for f in files
+    )
+
+
+def _write_segment(df: DataFrame, path: str) -> int:
+    """Write one segment; its row count is observed on the write."""
+    n = Observation()
+    df.observe(n, F.count(F.lit(1)).alias("n")).write.parquet(path)
+    return n.get["n"]
 
 
 def fold_mentions_delta(
@@ -207,26 +301,64 @@ def fold_mentions_delta(
     the standing canonical map under ``state_dir``.  Versioning,
     replays and the commit follow operators/incremental.py's
     :func:`~.incremental.fold_version`, exactly as the edge fold does;
-    a replay reports zero new nodes and touched components."""
+    a replay reports zero new nodes and touched components.  The
+    summary adds ``version_bytes`` (everything the version wrote, 0
+    for a replay) and ``live_segments`` (segments per dataset its state
+    is made of)."""
 
     def write(base: str | None, out: str) -> dict:
         delta_names = mentions.select("node_id", "name").distinct()
-        if base is not None:
-            std_nodes, std_bands = read_canon_state(spark, base)
-            nodes, bands, stats = fold_into(
-                std_nodes, std_bands, delta_names, jaccard_threshold
-            )
-        else:
+        if base is None:
+            manifest = {d: [] for d in DATASETS}
+            frames = {d: [] for d in DATASETS}
             nodes, bands = canon_state(delta_names, jaccard_threshold)
-            stats = {
-                "new_nodes": delta_names.count(),
-                "touched_components": 0,
+            stats = {"touched_components": 0, "relabelled_nodes": 0}
+            planned = {d: 0 for d in DATASETS}
+        else:
+            manifest = INC.read_manifest(base)
+            frames = _read_segments(spark, base)
+            nodes, bands, stats = fold_into(
+                resolve_nodes(frames["nodes"]).localCheckpoint(eager=True),
+                reduce(DataFrame.unionByName, frames["bands"]),
+                delta_names, jaccard_threshold,
+            )
+            planned = {
+                "nodes": stats["new_nodes"] + stats["relabelled_nodes"],
+                # minhash_bands stacks exactly this many rows per name
+                "bands": stats["new_nodes"] * MH.MINHASH_BANDS,
             }
-        write_canon_state(nodes, bands, out)
-        return stats
+        for dataset, delta in zip(DATASETS, (nodes, bands)):
+            segs = manifest[dataset]
+            start = _merge_from([r for _, r in segs], planned[dataset])
+            run = frames[dataset][start:] + [delta]
+            if dataset == "nodes":
+                merged = resolve_nodes(run)
+            elif len(run) > 1:
+                # shuffled, so a merged segment gets the files its size
+                # needs, not one per file of the segments it absorbs
+                merged = reduce(DataFrame.unionByName, run).repartition(
+                    "node_id"
+                )
+            else:
+                merged = delta
+            rows = _write_segment(merged, os.path.join(out, dataset))
+            manifest[dataset] = segs[:start] + [
+                [INC.staged_version(out), rows]
+            ]
+        if base is None:
+            stats["new_nodes"] = manifest["nodes"][0][1]
+        INC.write_manifest(out, manifest)
+        return {**stats, "version_bytes": _tree_bytes(out)}
 
+    summary = INC.fold_version(state_dir, version, write)
+    manifest = INC.read_manifest(
+        os.path.join(state_dir, f"v{summary['state_version']}")
+    )
     return {
         "new_nodes": 0,
         "touched_components": 0,
-        **INC.fold_version(state_dir, version, write),
+        "relabelled_nodes": 0,
+        "version_bytes": 0,
+        **summary,
+        "live_segments": {d: len(segs) for d, segs in manifest.items()},
     }

@@ -1531,12 +1531,11 @@ def _kg_canonical_map_incremental_spark(
         F.conv(F.substring(F.md5("name"), 2, 15), 16, 10).cast("long") % 2
     )
     nodes0, bands0 = IC.canon_state(mentions.where(parity == 0))
-    nodes, _bands, _stats = IC.fold_into(
-        nodes0.localCheckpoint(eager=True),
-        bands0.localCheckpoint(eager=True),
-        mentions.where(parity == 1),
+    nodes0 = nodes0.localCheckpoint(eager=True)
+    folded, _bands, _stats = IC.fold_into(
+        nodes0, bands0.localCheckpoint(eager=True), mentions.where(parity == 1)
     )
-    return nodes.select("node_id", "name", "component")
+    return IC.resolve_nodes([nodes0, folded])
 
 
 def _canonical_map_incremental_oracle() -> str:

@@ -21,7 +21,10 @@ directory under ``<state>`` and commits it by renaming it to
 The job never overwrites the version it is lazily reading (Spark cannot
 overwrite its own input), old versions remain for rollback (prune them
 with ``--keep-last-k``), and a crash before the rename is harmless: the
-previous version stays current and the next run folds onto it.
+previous version stays current and the next run folds onto it.  A
+canonical-map version (``--canon-state``) holds only its fold's segment
+plus a manifest of the older segments it is made of; pruning keeps
+every segment a kept version lists.
 
 The stage logic lives in :func:`maintain` so tests drive it directly
 (tests/test_maintain_kg.py proves a two-day simulation lands on exactly
@@ -60,8 +63,8 @@ def maintain(
     Returns ``(report, conflicts, summary)`` — the refreshed rollup and
     conflict DataFrames (both derived from the new state version) plus a
     JSON-able summary of the fold.  The fold/persist core lives in
-    operators/incremental.py::fold_pages_delta (shared with the
-    Structured Streaming path).
+    operators/incremental.py (``fold_observations_delta``; the
+    Structured Streaming path folds through ``fold_pages_delta``).
 
     ``canon_state_dir`` additionally folds the delta's entity-mention
     surfaces into the STANDING canonical-component map
@@ -76,19 +79,23 @@ def maintain(
         incremental_canon as IC,
     )
     from relation_extraction_transformer_spark.plans import kg_sql as KQ
-    from relation_extraction_transformer_spark.plans import pipeline as PL
 
-    summary = INC.fold_pages_delta(spark, pages, state_dir)
+    # one extraction serves both folds: the edge fold reads the
+    # observation rows once per state dataset, and the canonical fold
+    # takes the delta's mention names from their subj/obj
+    obs = INC.page_observations(spark, pages).localCheckpoint(eager=True)
+    summary = INC.fold_observations_delta(spark, obs, state_dir)
 
     if canon_state_dir is not None:
-        triples = PL.triples_plan(pages, spark, keep_probs=False)
         cs = IC.fold_mentions_delta(
-            spark, IC.mention_names(triples), canon_state_dir
+            spark, IC.mention_names(obs), canon_state_dir
         )
         summary["canon"] = {
-            "state_version": cs["state_version"],
-            "new_nodes": cs["new_nodes"],
-            "touched_components": cs["touched_components"],
+            k: cs[k]
+            for k in (
+                "state_version", "new_nodes", "touched_components",
+                "version_bytes", "live_segments",
+            )
         }
         if keep_last_k is not None:
             summary["canon"]["vacuumed"] = INC.vacuum_state(

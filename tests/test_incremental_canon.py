@@ -15,6 +15,7 @@ The bridge fixture is tuned against the repo's real LSH parameters
 (J~0.82), while 'alpha bet' collides with both (J 0.89/0.80) — md5
 minhash is deterministic, so these facts are frozen."""
 
+import math
 import os
 
 import pytest
@@ -143,3 +144,137 @@ def test_replay_is_noop_and_crash_before_commit_keeps_previous_version(
     assert removed == [1, 2]
     assert INC.committed_versions(state_dir) == [3]
     assert _nodes_map(spark, state_dir, 3) == v3
+
+
+# ---- the segment log: each version writes only what its fold added ----
+
+
+def _tree_bytes(path):
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(path)
+        for f in files
+    )
+
+
+def _unrelated(i):
+    """A surface sharing no trigram run with any other index's."""
+    letters = "".join(chr(97 + (i * 7 + k * 11) % 26) for k in range(6))
+    return f"{letters} {i:05d} standing"
+
+
+def test_version_bytes_do_not_grow_with_the_standing_map(spark, tmp_path):
+    delta = [(100_000, "glimmering sasquatch syndicate western canyons"),
+             (100_001, "glimmering sasquatch syndicate western canyonz")]
+    written = []
+    for n in (40, 400):
+        state_dir = str(tmp_path / f"state{n}")
+        os.makedirs(state_dir)
+        IC.fold_mentions_delta(
+            spark, _df(spark, [(i, _unrelated(i)) for i in range(n)]),
+            state_dir,
+        )
+        s = IC.fold_mentions_delta(spark, _df(spark, delta), state_dir)
+        assert s["new_nodes"] == 2 and s["touched_components"] == 0
+        assert s["version_bytes"] == _tree_bytes(
+            os.path.join(state_dir, "v2"))
+        assert s["live_segments"] == {"nodes": 2, "bands": 2}
+        written.append(s["version_bytes"])
+    small, large = written
+    assert abs(large - small) <= 0.1 * small, written
+
+
+def _days():
+    """Two-name daily deltas: unrelated surfaces, plus variants that
+    join earlier days' components — day 4's bridge merges the two
+    standing components of day 0 (see the module doc)."""
+    days = [[(10, f"{_STEM} alpha"), (20, f"{_STEM} beta")]]
+    days += [[(1000 + 2 * d, _unrelated(2 * d)),
+              (1001 + 2 * d, _unrelated(2 * d + 1))] for d in range(1, 8)]
+    days[2][1] = (40, f"{_STEM2} alpha")
+    days[4][1] = (30, f"{_STEM} alpha bet")
+    days[6][1] = (41, f"{_STEM2} alphq")
+    return days
+
+
+def test_segment_log_stays_logarithmic_and_equals_rebuild(spark, tmp_path):
+    state_dir = str(tmp_path / "state")
+    os.makedirs(state_dir)
+    seen, live, merges = [], {"nodes": 0, "bands": 0}, {}
+    for folds, day in enumerate(_days(), start=1):
+        seen += day
+        s = IC.fold_mentions_delta(spark, _df(spark, day), state_dir)
+        assert _nodes_map(spark, state_dir, folds) == _rebuild_map(
+            spark, seen)
+        for d, n in s["live_segments"].items():
+            assert n <= 1 + math.ceil(math.log2(folds)), (folds, d, n)
+            merges[d] = merges.get(d, 0) + (n <= live[d])
+        live = s["live_segments"]
+    assert s["touched_components"] == 0 and min(merges.values()) >= 2
+    # a merged version holds its rows once: bands never change, so the
+    # band segments partition the band index
+    _, bands = IC.read_canon_state(spark, os.path.join(state_dir, "v8"))
+    assert bands.count() == 2 * len(seen) == bands.distinct().count()
+
+
+def _listed_files(state_dir, version):
+    """Every file the manifest of ``version`` lists, by segment."""
+    manifest = INC.read_manifest(os.path.join(state_dir, f"v{version}"))
+    return {
+        (k, d): sorted(
+            (f, os.path.getsize(os.path.join(INC.segment_path(
+                state_dir, k, d), f)))
+            for f in os.listdir(INC.segment_path(state_dir, k, d))
+        )
+        for d, segs in manifest.items()
+        for k, _rows in segs
+    }
+
+
+def test_vacuum_retires_listed_segments_and_keeps_the_map(spark, tmp_path):
+    state_dir = str(tmp_path / "state")
+    os.makedirs(state_dir)
+    days = _days()
+    for day in days[:3]:
+        IC.fold_mentions_delta(spark, _df(spark, day), state_dir)
+    before = _listed_files(state_dir, 3)
+    assert {k for k, _ in before} == {2, 3}, "fixture drifted: no v2 segment"
+    v3 = _nodes_map(spark, state_dir, 3)
+    assert INC.vacuum_state(state_dir, 1) == [1, 2]
+    assert INC.committed_versions(state_dir) == [3]
+    assert _listed_files(state_dir, 3) == before
+    assert sorted(os.listdir(state_dir)) == ["_r2", "v3"]
+    assert sorted(os.listdir(os.path.join(state_dir, "_r2"))) == sorted(
+        d for k, d in before if k == 2)
+    assert _nodes_map(spark, state_dir, 3) == v3
+    # the next fold reads the retired segments; once no kept manifest
+    # lists them, the next vacuum deletes them
+    IC.fold_mentions_delta(spark, _df(spark, days[3]), state_dir)
+    assert _nodes_map(spark, state_dir, 4) == _rebuild_map(
+        spark, [r for day in days[:4] for r in day])
+    assert INC.vacuum_state(state_dir, 1) == [3]
+    assert sorted(os.listdir(state_dir)) == ["v4"]
+
+
+def test_crash_at_commit_of_a_merging_fold_keeps_the_previous_version(
+    spark, tmp_path, fail_at
+):
+    state_dir = str(tmp_path / "state")
+    os.makedirs(state_dir)
+    days = _days()
+    for day in days[:3]:
+        IC.fold_mentions_delta(spark, _df(spark, day), state_dir)
+    INC.vacuum_state(state_dir, 1)
+    listing = sorted(os.listdir(state_dir))
+    v3 = _nodes_map(spark, state_dir, 3)
+    # day 3's fold merges every band segment into one
+    fail_at(os, "rename")
+    with pytest.raises(OSError, match="injected"):
+        IC.fold_mentions_delta(spark, _df(spark, days[3]), state_dir)
+    assert sorted(os.listdir(state_dir)) == listing
+    assert INC.latest_version(state_dir) == 3
+    assert _nodes_map(spark, state_dir, 3) == v3
+    s = IC.fold_mentions_delta(spark, _df(spark, days[3]), state_dir)
+    assert s["state_version"] == 4 and s["live_segments"]["bands"] == 1
+    assert _nodes_map(spark, state_dir, 4) == _rebuild_map(
+        spark, [r for day in days[:4] for r in day])

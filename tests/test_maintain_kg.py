@@ -117,3 +117,37 @@ def test_two_day_canon_fold_equals_batch_rebuild(spark, tmp_path, split_pages):
         # (its component now contains a day-2-connected node), never a
         # gratuitous relabel: the new label is the global min, <= old
         assert after[n] <= before[n]
+
+
+def test_maintain_with_canon_state_extracts_the_delta_once(
+    spark, tmp_path, split_pages, monkeypatch
+):
+    """One ``maintain`` call with a canonical-map state runs the
+    extraction (``triples_plan``: scan -> candidates -> inference UDF)
+    once; both folds read the same checkpointed observation rows."""
+    from relation_extraction_transformer_spark.operators import (
+        incremental_canon as IC,
+    )
+
+    day1, _, _ = split_pages
+    state_dir, canon_dir = str(tmp_path / "state"), str(tmp_path / "canon")
+    os.makedirs(state_dir)
+    os.makedirs(canon_dir)
+    real, builds = PL.triples_plan, []
+
+    def counted(*args, **kwargs):
+        builds.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(PL, "triples_plan", counted)
+    _, _, s = maintain(spark, day1, state_dir, canon_state_dir=canon_dir)
+    assert len(builds) == 1
+    monkeypatch.setattr(PL, "triples_plan", real)
+
+    obs = INC.page_observations(spark, day1)
+    assert s["state_version"] == 1 and s["canon"]["state_version"] == 1
+    assert s["edges"] == INC.edge_state(obs).stats.count()
+    assert s["canon"]["new_nodes"] == IC.mention_names(obs).count()
+    assert s["canon"]["touched_components"] == 0
+    assert s["canon"]["live_segments"] == {"nodes": 1, "bands": 1}
+    assert s["canon"]["version_bytes"] > 0
