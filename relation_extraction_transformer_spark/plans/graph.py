@@ -26,13 +26,36 @@ def build_graph(
     spark: SparkSession,
     jaccard_threshold: float = 0.6,
 ) -> tuple[DataFrame, DataFrame]:
-    """Returns (nodes, edges)."""
+    """Returns (nodes, edges).
+
+    Runs jobs when called, as the LSH and connected-components steps
+    inside it always did: it materializes two frames with
+    ``localCheckpoint(eager=True)``, so that everything after them reads
+    each one once instead of re-deriving it per action (the band and
+    verify checkpoints, the canon-map checkpoint and both writes of
+    :func:`write_graph`):
+
+    - ``linked``, projected first to the seven columns the graph reads
+      (entity ids and canonical names of both ends, ``pred``, ``prob``,
+      ``url``).  The projection keeps the checkpoint at about the size
+      of the shuffles it replaces; checkpointing every column of the
+      linked triples would store the raw surfaces, types and sentence
+      keys that no later step reads.
+    - ``canon_map``, after :func:`canonicalize.label_components`: the
+      nodes aggregate and both edge joins read it.
+
+    A local checkpoint is no cache entry: the session's ``CacheManager``
+    stays empty, and the blocks are freed once the returned frames are
+    garbage-collected."""
     if "subj_type" not in triples.columns:
         triples = triples.withColumn(
             "subj_type", F.lit(None).cast("string")
         ).withColumn("obj_type", F.lit(None).cast("string"))
     dictionary = LINK.entity_dictionary(spark)
-    linked = LINK.link_triples(triples, dictionary)
+    linked = LINK.link_triples(triples, dictionary).select(
+        "subj_entity_id", "subj_canonical", "obj_entity_id", "obj_canonical",
+        "pred", "prob", "url",
+    ).localCheckpoint(eager=True)
 
     # raw entity nodes from both endpoints
     ends = linked.select(
@@ -57,7 +80,9 @@ def build_graph(
     )
     canon_map = CANON.label_components(
         raw_nodes, comps, out="canonical_id"
-    ).select("node_id", "canonical_id", "name", "mention_count")
+    ).select(
+        "node_id", "canonical_id", "name", "mention_count"
+    ).localCheckpoint(eager=True)
 
     nodes = canon_map.groupBy("canonical_id").agg(
         F.min_by("name", "node_id").alias("name"),

@@ -76,6 +76,30 @@ def test_pipeline_deterministic_across_partitioning(spark):
     assert t2 == t7
 
 
+def test_triples_do_not_depend_on_arrow_batch_size(spark):
+    """The same pages give the same triples, probabilities included, at
+    every Arrow batch size the engine runs with: 512 (the tests and
+    perfbench), 1024 (scripts/run_pipeline.py) and 64, which splits
+    every partition's candidates into many batches."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    pages = PG.synthetic_pages(spark, N_PAGES, seed=SEED, partitions=2)
+    before = spark.conf.get(key)
+    got = {}
+    try:
+        for size in (64, 512, 1024):
+            spark.conf.set(key, str(size))
+            got[size] = sorted(
+                (tuple(r) for r in PL.triples_plan(pages, spark).collect()),
+                key=lambda t: t[:3],
+            )
+    finally:
+        spark.conf.set(key, before)
+    # more triples than two batches of 64 hold: at 64 the two partitions'
+    # candidates are split over several batches
+    assert len(got[512]) > 2 * 64
+    assert got[64] == got[512] == got[1024]
+
+
 def test_triple_precision_recall_meets_north_rule(spark):
     """The north rule's literal criterion: emitted (subj, pred, obj)
     triples at P/R >= 0.95 vs the reference-semantics oracle.  This

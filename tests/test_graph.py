@@ -141,6 +141,40 @@ def test_resolution_leaves_no_cache_entries(spark, tmp_path):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_build_graph_links_each_triple_once(spark, tmp_path):
+    """build_graph links the triples once: the LSH band and verify
+    checkpoints, the canon-map checkpoint and both writes of write_graph
+    read one materialized copy of the linked triples, so a build plus a
+    write reads every input row exactly once."""
+    rows = [
+        (s, p, o, 0.5 + 0.01 * (i % 40), f"u{i % 23}")
+        for i, (s, p, o) in enumerate(
+            (f"{first} {last}", pred, org)
+            for first in ("Alice", "alice", "Alicia", "Bob", "Quintar")
+            for last in ("Turner", "Turnr", "Stone")
+            for pred in ("works_for", "lives_in")
+            for org in ("Acme Corp", "Acme Corp.", "Springfield", "Globex")
+        )
+    ]
+    triples = spark.createDataFrame(
+        rows, "subj string, pred string, obj string, prob double, url string"
+    ).repartition(3)
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    counted = triples.mapInPandas(count_rows, triples.schema)
+    nodes, edges = GRAPH.build_graph(counted, spark)
+    out = str(tmp_path / "graph")
+    GRAPH.write_graph(nodes, edges, out)
+    assert seen.value == len(rows)
+    written = spark.read.parquet(f"{out}/edges").agg(F.sum("weight"))
+    assert written.first()[0] == len(rows)
+
+
 def test_linking_best_candidate(spark):
     dictionary = LINK.entity_dictionary(spark)
     df = spark.createDataFrame(
