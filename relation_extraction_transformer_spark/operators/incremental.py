@@ -33,13 +33,14 @@ shuffle-reuse join).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import uuid
 from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import sketches as SK
@@ -59,20 +60,25 @@ class EdgeState(NamedTuple):
 _SCORE_DEC = "decimal(28,6)"
 
 
+def noisy_or_term() -> Column:
+    """One observation's noisy-or term, ``ROUND(ln(1 - prob), 6)`` as
+    DECIMAL(18,6), prob capped below 1; fused belief = -sum of terms."""
+    return F.round(
+        F.log(F.lit(1.0) - F.least(F.col("prob"), F.lit(0.999999))), 6
+    ).cast("decimal(18,6)")
+
+
 def edge_state(obs: DataFrame) -> EdgeState:
     """Fold one observation delta — rows of
     ``(subj, pred, obj, url, prob, ts)`` — into edge-rollup state.
 
     ``score_dec`` is the noisy-or fused belief (kg_sql's kg_fusion
-    formula: -sum of ROUND(ln(1-p), 6) quantized to DECIMAL) — a plain
-    sum, so fusion itself is incrementally maintainable; the DECIMAL
+    formula: -sum of :func:`noisy_or_term`) — a plain sum, so fusion
+    itself is incrementally maintainable; the DECIMAL
     type is pinned so merged and rebuilt states carry identical
     schemas."""
-    nl = F.round(
-        F.log(F.lit(1.0) - F.least(F.col("prob"), F.lit(0.999999))), 6
-    ).cast("decimal(18,6)")
     stats = (
-        obs.withColumn("nl", nl)
+        obs.withColumn("nl", noisy_or_term())
         .groupBy(*EDGE_KEYS)
         .agg(
             F.count(F.lit(1)).alias("n_obs"),
@@ -325,7 +331,7 @@ def vacuum_state(state_dir: str, keep_last_k: int) -> list[int]:
 
 
 def page_observations(spark: SparkSession, pages: DataFrame) -> DataFrame:
-    """The edge fold's input from a crawl delta: the triples the audited
+    """Both folds' input from a crawl delta: the triples the audited
     narrow batch plan extracts, as ``(url, subj, pred, obj, prob, ts)``
     observation rows."""
     from ..plans import pipeline as PL
@@ -349,48 +355,43 @@ def _write_edge_fold(
     return {}
 
 
-def fold_observations_delta(
-    spark: SparkSession,
-    obs: DataFrame,
-    state_dir: str,
-    version: int | None = None,
-) -> dict:
-    """Fold observation rows (:func:`page_observations`) into the
-    standing state under ``state_dir`` — versioning, replays and the
-    commit follow :func:`fold_version`.  ``obs`` is read once per state
-    dataset, so pass it materialized (``localCheckpoint``); a caller
-    that also derives the delta's mentions from it then extracts the
-    crawl once."""
-    return fold_version(
-        state_dir, version,
-        lambda base, out: _write_edge_fold(spark, obs, base, out),
-    )
-
-
 def fold_pages_delta(
     spark: SparkSession,
     pages: DataFrame,
     state_dir: str,
     version: int | None = None,
+    canon_state_dir: str | None = None,
 ) -> dict:
-    """Fold one crawl delta of pages into the standing state under
-    ``state_dir``: extract its observations, fold them into delta
-    state, merge with the newest committed version and commit
-    ``v<version>`` — versioning, replays and the commit follow
-    :func:`fold_version`; a replay extracts nothing."""
+    """Fold one crawl delta of pages into the standing edge state under
+    ``state_dir`` and, given ``canon_state_dir``, its mention names into
+    the canonical map there (summary entry ``canon``).  Both folds
+    follow :func:`fold_version` with the same ``version`` and read one
+    observation checkpoint, taken when a fold first writes: the delta
+    is extracted at most once, and a call whose folds both replay runs
+    no Spark job.  The edge version commits first, so re-delivering a
+    ``version`` that crashed between the commits replays the edge fold
+    and folds only the canonical map."""
+    from . import incremental_canon as IC
 
-    def write(base: str | None, out: str) -> dict:
-        # write_edge_state is TWO actions (stats, regs), and both
-        # datasets derive from obs — without a materialization the full
-        # delta extraction (the Arrow inference pipeline, the dominant
-        # fold cost) runs once per dataset.  Checkpoint the edge-keyed
-        # observation rows once; both aggregations then read the
-        # delta-sized checkpoint (r8: halves the extract share of the
-        # fold wall, measured in OPTIMIZATION_r08.md).
-        obs = page_observations(spark, pages).localCheckpoint(eager=True)
-        return _write_edge_fold(spark, obs, base, out)
+    @functools.cache
+    def observations() -> DataFrame:
+        # both state datasets and the canonical fold's several reads
+        # would each re-run the extraction (the inference UDF) without it
+        return page_observations(spark, pages).localCheckpoint(eager=True)
 
-    return fold_version(state_dir, version, write)
+    summary = fold_version(
+        state_dir, version,
+        lambda base, out: _write_edge_fold(spark, observations(), base, out),
+    )
+    if canon_state_dir is not None:
+        canon = fold_version(
+            canon_state_dir, version,
+            lambda base, out: IC.write_canon_fold(
+                spark, IC.mention_names(observations()), base, out
+            ),
+        )
+        summary["canon"] = IC.canon_fold_summary(canon_state_dir, canon)
+    return summary
 
 
 def edge_report(state: EdgeState) -> DataFrame:

@@ -176,7 +176,7 @@ def fold_into(
     read five times: pass it materialized.  stats = the ``new_nodes``,
     ``touched_components`` and ``relabelled_nodes`` counts, observed on
     checkpoints the fold takes anyway (no extra job).  Disk-free core
-    shared by :func:`fold_mentions_delta` and the in-memory
+    shared by :func:`write_canon_fold` and the in-memory
     ``kg_canonical_map_incremental`` oracle query (whose DuckDB twin
     rebuilds in one pass — the hash compare IS fold==rebuild,
     cross-engine)."""
@@ -290,67 +290,61 @@ def _write_segment(df: DataFrame, path: str) -> int:
     return n.get["n"]
 
 
-def fold_mentions_delta(
+def write_canon_fold(
     spark: SparkSession,
     mentions: DataFrame,
-    state_dir: str,
-    version: int | None = None,
+    base: str | None,
+    out: str,
     jaccard_threshold: float = 0.6,
 ) -> dict:
-    """Fold one delta of entity mentions — (node_id, name) rows — into
-    the standing canonical map under ``state_dir``.  Versioning,
-    replays and the commit follow operators/incremental.py's
-    :func:`~.incremental.fold_version`, exactly as the edge fold does;
-    a replay reports zero new nodes and touched components.  The
-    summary adds ``version_bytes`` (everything the version wrote, 0
-    for a replay) and ``live_segments`` (segments per dataset its state
-    is made of)."""
-
-    def write(base: str | None, out: str) -> dict:
-        delta_names = mentions.select("node_id", "name").distinct()
-        if base is None:
-            manifest = {d: [] for d in DATASETS}
-            frames = {d: [] for d in DATASETS}
-            nodes, bands = canon_state(delta_names, jaccard_threshold)
-            stats = {"touched_components": 0, "relabelled_nodes": 0}
-            planned = {d: 0 for d in DATASETS}
-        else:
-            manifest = INC.read_manifest(base)
-            frames = _read_segments(spark, base)
-            nodes, bands, stats = fold_into(
-                resolve_nodes(frames["nodes"]).localCheckpoint(eager=True),
-                reduce(DataFrame.unionByName, frames["bands"]),
-                delta_names, jaccard_threshold,
+    """The canonical fold's ``write(base, out)`` for
+    :func:`~.incremental.fold_version`, folding (node_id, name)
+    ``mentions``."""
+    delta_names = mentions.select("node_id", "name").distinct()
+    if base is None:
+        manifest = {d: [] for d in DATASETS}
+        frames = {d: [] for d in DATASETS}
+        nodes, bands = canon_state(delta_names, jaccard_threshold)
+        stats = {"touched_components": 0, "relabelled_nodes": 0}
+        planned = {d: 0 for d in DATASETS}
+    else:
+        manifest = INC.read_manifest(base)
+        frames = _read_segments(spark, base)
+        nodes, bands, stats = fold_into(
+            resolve_nodes(frames["nodes"]).localCheckpoint(eager=True),
+            reduce(DataFrame.unionByName, frames["bands"]),
+            delta_names, jaccard_threshold,
+        )
+        planned = {
+            "nodes": stats["new_nodes"] + stats["relabelled_nodes"],
+            # minhash_bands stacks exactly this many rows per name
+            "bands": stats["new_nodes"] * MH.MINHASH_BANDS,
+        }
+    for dataset, delta in zip(DATASETS, (nodes, bands)):
+        segs = manifest[dataset]
+        start = _merge_from([r for _, r in segs], planned[dataset])
+        run = frames[dataset][start:] + [delta]
+        if dataset == "nodes":
+            merged = resolve_nodes(run)
+        elif len(run) > 1:
+            # shuffled, so a merged segment gets the files its size
+            # needs, not one per file of the segments it absorbs
+            merged = reduce(DataFrame.unionByName, run).repartition(
+                "node_id"
             )
-            planned = {
-                "nodes": stats["new_nodes"] + stats["relabelled_nodes"],
-                # minhash_bands stacks exactly this many rows per name
-                "bands": stats["new_nodes"] * MH.MINHASH_BANDS,
-            }
-        for dataset, delta in zip(DATASETS, (nodes, bands)):
-            segs = manifest[dataset]
-            start = _merge_from([r for _, r in segs], planned[dataset])
-            run = frames[dataset][start:] + [delta]
-            if dataset == "nodes":
-                merged = resolve_nodes(run)
-            elif len(run) > 1:
-                # shuffled, so a merged segment gets the files its size
-                # needs, not one per file of the segments it absorbs
-                merged = reduce(DataFrame.unionByName, run).repartition(
-                    "node_id"
-                )
-            else:
-                merged = delta
-            rows = _write_segment(merged, os.path.join(out, dataset))
-            manifest[dataset] = segs[:start] + [
-                [INC.staged_version(out), rows]
-            ]
-        if base is None:
-            stats["new_nodes"] = manifest["nodes"][0][1]
-        INC.write_manifest(out, manifest)
-        return {**stats, "version_bytes": _tree_bytes(out)}
+        else:
+            merged = delta
+        rows = _write_segment(merged, os.path.join(out, dataset))
+        manifest[dataset] = segs[:start] + [[INC.staged_version(out), rows]]
+    if base is None:
+        stats["new_nodes"] = manifest["nodes"][0][1]
+    INC.write_manifest(out, manifest)
+    return {**stats, "version_bytes": _tree_bytes(out)}
 
-    summary = INC.fold_version(state_dir, version, write)
+
+def canon_fold_summary(state_dir: str, summary: dict) -> dict:
+    """A canonical fold's summary: a replay reports zero counts and
+    ``version_bytes``; ``live_segments`` counts segments per dataset."""
     manifest = INC.read_manifest(
         os.path.join(state_dir, f"v{summary['state_version']}")
     )
@@ -362,3 +356,23 @@ def fold_mentions_delta(
         **summary,
         "live_segments": {d: len(segs) for d, segs in manifest.items()},
     }
+
+
+def fold_mentions_delta(
+    spark: SparkSession,
+    mentions: DataFrame,
+    state_dir: str,
+    version: int | None = None,
+    jaccard_threshold: float = 0.6,
+) -> dict:
+    """Fold one delta of entity mentions — (node_id, name) rows — into
+    the standing canonical map under ``state_dir`` through
+    :func:`~.incremental.fold_version` and :func:`write_canon_fold`,
+    as ``incremental.fold_pages_delta`` folds a crawl delta's names."""
+    summary = INC.fold_version(
+        state_dir, version,
+        lambda base, out: write_canon_fold(
+            spark, mentions, base, out, jaccard_threshold
+        ),
+    )
+    return canon_fold_summary(state_dir, summary)

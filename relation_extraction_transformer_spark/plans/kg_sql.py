@@ -1508,22 +1508,16 @@ def _kg_canonical_map_incremental_spark(
     the law non-trivially (planted variants that band-collide fold
     into their base's component; which ones collide is a deterministic
     md5 fact, identical cross-engine)."""
-    from ..operators import canonicalize as CANON  # noqa: F401
     from ..operators import incremental_canon as IC
     from ..operators import linking as LINK
 
-    tri = spark.read.parquet(TRIPLES_PARQUET)
-    base = (
-        tri.select(F.col("subj").alias("surface"))
-        .unionAll(tri.select(F.col("obj").alias("surface")))
-        .select(LINK.normalize_surface(F.col("surface")).alias("name"))
-        .distinct()
+    base = IC.mention_names(spark.read.parquet(TRIPLES_PARQUET))
+    planted = base.where(F.col("node_id") % 5 == 0).select(
+        F.concat(F.col("name"), F.lit(" co")).alias("name")
     )
-    planted = base.where(
-        LINK.stable_id(F.col("name")) % 5 == 0
-    ).select(F.concat(F.col("name"), F.lit(" co")).alias("name"))
     mentions = (
-        base.unionAll(planted)
+        base.select("name")
+        .unionAll(planted)
         .distinct()
         .select(LINK.stable_id(F.col("name")).alias("node_id"), "name")
     )
@@ -1642,12 +1636,11 @@ def _fused_triples(
     breadth, and the noisy-or fused score as an exact DECIMAL."""
     if triples is None:
         triples = spark.read.parquet(TRIPLES_PARQUET)
+    from ..operators.incremental import noisy_or_term
+
     obs = triples.select("subj", "pred", "obj", "url", "prob")
-    nl = F.round(
-        F.log(F.lit(1.0) - F.least(F.col("prob"), F.lit(0.999999))), 6
-    ).cast("decimal(18,6)")
     return (
-        obs.withColumn("nl", nl)
+        obs.withColumn("nl", noisy_or_term())
         .groupBy("subj", "pred", "obj")
         .agg(
             F.count(F.lit(1)).alias("n_obs"),

@@ -8,8 +8,13 @@ incremental forms of the same computations for continuously crawled pages:
   is narrow until the inference UDF, which is stateless per row),
 - ``windowed_event_counts``: watermarked tumbling-window aggregation over
   an events stream (late data bounded by the watermark),
-- sinks via ``foreachBatch`` so each micro-batch reuses the resumable
-  batch writer (checkpointed by Spark's streaming offset log).
+- ``run_stream_to_parquet``: a parquet sink, resumable through Spark's
+  streaming offset log,
+- ``run_streaming_fold``: the 24/7 fold as a ``foreachBatch`` sink;
+  each micro-batch folds into the standing edge state and, optionally,
+  the canonical map through the batch script's one fold
+  (``incremental.fold_pages_delta``), exactly-once through the durable
+  ``batch_id`` recorded in Spark's streaming offset log.
 """
 
 from __future__ import annotations
@@ -147,76 +152,35 @@ def streaming_hll_registers(
     return SK.hll_registers(toks, "tok")
 
 
-def run_streaming_edge_fold(
+def run_streaming_fold(
     spark: SparkSession,
     pages_dir: str,
     state_dir: str,
     checkpoint_path: str,
+    canon_state_dir: str | None = None,
     max_files_per_trigger: int = 8,
     once: bool = True,
 ):
-    """Always-on KG maintenance: each micro-batch of crawled pages folds
-    into the standing per-edge rollup state (operators/incremental.py)
-    via ``foreachBatch`` — the streaming form of scripts/maintain_kg.py.
+    """Always-on KG maintenance, the streaming form of
+    scripts/maintain_kg.py: ``foreachBatch`` folds each micro-batch of
+    crawled pages into the edge state under ``state_dir`` and, given
+    ``canon_state_dir``, the canonical map there, by one
+    ``operators/incremental.py::fold_pages_delta`` call.
 
-    Exactly-once state: the fold version is derived from the durable
-    streaming ``batch_id``, so a batch re-delivered after a crash finds
-    its version already committed and is skipped
-    (``fold_pages_delta``'s replay check); Spark's offset checkpoint
-    guarantees batch ids are stable across restarts.  State size is
-    bounded per edge no matter how long the stream runs — the property
-    that makes a 24/7 rollup viable where re-aggregating crawl history
-    per trigger is not.
-
-    The stream owns ``state_dir``: versions are ``batch_id + 1`` from a
-    fresh bootstrap, so do not point it at a directory already advanced
-    by the batch script (those versions would read as replays)."""
+    Exactly-once state: the fold version is ``batch_id + 1``, stable
+    across restarts through Spark's offset checkpoint, so a re-delivered
+    batch replays its committed versions.  State stays bounded per edge
+    and per name however long the stream runs.  The stream owns both
+    state directories: do not point it at one already advanced by the
+    batch script (those versions would read as replays)."""
     from ..operators import incremental as INC
 
     pages = _read_pages(spark, pages_dir, max_files_per_trigger)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         INC.fold_pages_delta(
-            spark, batch_df, state_dir, version=int(batch_id) + 1
-        )
-
-    writer = pages.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_path
-    )
-    return _start(writer, once)
-
-
-def run_streaming_canon_fold(
-    spark: SparkSession,
-    pages_dir: str,
-    state_dir: str,
-    checkpoint_path: str,
-    max_files_per_trigger: int = 8,
-    once: bool = True,
-):
-    """Always-on canonical-map maintenance: each micro-batch of crawled
-    pages extracts its mention surfaces and folds them into the STANDING
-    canonical-component map (operators/incremental_canon.py) — the
-    streaming twin of ``maintain_kg.py --canon-state`` and the canon
-    counterpart of :func:`run_streaming_edge_fold`.
-
-    Exactly-once state: versions derive from the durable streaming
-    ``batch_id``, so a re-delivered batch finds its version committed
-    and is a no-op.  Stable ids hold across triggers: a micro-batch that
-    touches no standing component leaves every existing canonical id
-    byte-identical — the fold only ever relabels components the batch's
-    mentions actually connect.  The standing band index makes per-batch
-    work delta-sized (delta×delta + delta×standing candidate joins,
-    reduced-graph CC), never a re-canonicalization of the world."""
-    from ..operators import incremental_canon as IC
-
-    pages = _read_pages(spark, pages_dir, max_files_per_trigger)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        triples = PL.triples_plan(batch_df, spark, keep_probs=False)
-        IC.fold_mentions_delta(
-            spark, IC.mention_names(triples), state_dir,
-            version=int(batch_id) + 1,
+            spark, batch_df, state_dir, version=int(batch_id) + 1,
+            canon_state_dir=canon_state_dir,
         )
 
     writer = pages.writeStream.foreachBatch(fold).option(

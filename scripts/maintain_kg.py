@@ -62,36 +62,31 @@ def maintain(
 
     Returns ``(report, conflicts, summary)`` — the refreshed rollup and
     conflict DataFrames (both derived from the new state version) plus a
-    JSON-able summary of the fold.  The fold/persist core lives in
-    operators/incremental.py (``fold_observations_delta``; the
-    Structured Streaming path folds through ``fold_pages_delta``).
+    JSON-able summary of the fold.  The fold/persist core is
+    operators/incremental.py's ``fold_pages_delta``, the same call the
+    Structured Streaming fold makes per micro-batch.
 
     ``canon_state_dir`` additionally folds the delta's entity-mention
     surfaces into the STANDING canonical-component map
-    (operators/incremental_canon.py): canonical ids stay stable for
-    entities the delta does not touch — the property a 24/7 KG needs
-    that per-run batch canonicalization cannot give.
+    (operators/incremental_canon.py), from the same extraction:
+    canonical ids stay stable for entities the delta does not touch —
+    the property a 24/7 KG needs that per-run batch canonicalization
+    cannot give.  A run has no durable delta id, so a re-run after a
+    crash between the edge and canonical commits folds the edge delta
+    again (``n_obs`` and the fused score count it twice); the stream
+    (``run_streaming_fold``) is exactly-once through its ``batch_id``.
     """
     from relation_extraction_transformer_spark.operators import (
         incremental as INC,
     )
-    from relation_extraction_transformer_spark.operators import (
-        incremental_canon as IC,
-    )
     from relation_extraction_transformer_spark.plans import kg_sql as KQ
 
-    # one extraction serves both folds: the edge fold reads the
-    # observation rows once per state dataset, and the canonical fold
-    # takes the delta's mention names from their subj/obj
-    obs = INC.page_observations(spark, pages).localCheckpoint(eager=True)
-    summary = INC.fold_observations_delta(spark, obs, state_dir)
-
+    summary = INC.fold_pages_delta(
+        spark, pages, state_dir, canon_state_dir=canon_state_dir
+    )
     if canon_state_dir is not None:
-        cs = IC.fold_mentions_delta(
-            spark, IC.mention_names(obs), canon_state_dir
-        )
         summary["canon"] = {
-            k: cs[k]
+            k: summary["canon"][k]
             for k in (
                 "state_version", "new_nodes", "touched_components",
                 "version_bytes", "live_segments",
@@ -133,8 +128,10 @@ def main(argv=None) -> int:
     )
     ap.add_argument(
         "--keep-last-k", type=int, default=None,
-        help="retention: delete committed state versions (v<N> "
-        "directories) older than the newest K; default keeps all",
+        help="retention: vacuum committed state versions (v<N> "
+        "directories) older than the newest K — a version whose segments "
+        "a kept version still lists is retired, the rest deleted; "
+        "default keeps all",
     )
     args = ap.parse_args(argv)
 

@@ -1,6 +1,7 @@
-"""Streaming KG maintenance: foreachBatch fold-in over micro-batches
-must land on exactly the single-pass batch rebuild, and a re-delivered
-batch must be a no-op (exactly-once via durable batch-id versions)."""
+"""KG maintenance folds: foreachBatch fold-in over micro-batches must
+land on exactly the single-pass batch rebuild, a re-delivered batch
+must be a no-op (exactly-once via durable batch-id versions), and a
+crash at any commit leaves state the next delivery completes."""
 
 import errno
 import os
@@ -8,6 +9,9 @@ import os
 from pyspark.sql import functions as F
 
 from relation_extraction_transformer_spark.operators import incremental as INC
+from relation_extraction_transformer_spark.operators import (
+    incremental_canon as IC,
+)
 from relation_extraction_transformer_spark.plans import pipeline as PL
 from relation_extraction_transformer_spark.streaming import stream as ST
 
@@ -24,104 +28,124 @@ def _obs(spark, pages):
     )
 
 
+def _count_builds(monkeypatch):
+    """Record every ``triples_plan`` build (the delta extraction: scan ->
+    candidates -> inference UDF) in the returned list."""
+    real, builds = PL.triples_plan, []
+
+    def counted(*args, **kwargs):
+        builds.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(PL, "triples_plan", counted)
+    return builds
+
+
+def _node_map(nodes):
+    return {r.node_id: (r.name, r.component) for r in nodes.collect()}
+
+
+def _canon_map(spark, canon_dir, version):
+    return _node_map(IC.read_canon_state(spark, f"{canon_dir}/v{version}")[0])
+
+
 def test_streamed_fold_equals_batch_rebuild_and_replay_is_noop(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
+    """One stream maintains both states: folding micro-batches of pages
+    lands on exactly the single-pass rebuild of the edge state and of
+    the canonical map, each micro-batch extracts once for both, and a
+    re-delivered batch is a committed-version no-op."""
     pages = spark.read.parquet(PAGES)
     pages_dir = str(tmp_path / "pages")
     pages.repartition(4).write.parquet(pages_dir)
-    state_dir = str(tmp_path / "state")
+    state_dir, canon_dir = str(tmp_path / "state"), str(tmp_path / "canon")
     os.makedirs(state_dir)
+    os.makedirs(canon_dir)
 
-    ST.run_streaming_edge_fold(
+    builds = _count_builds(monkeypatch)
+    ST.run_streaming_fold(
         spark, pages_dir, state_dir,
         checkpoint_path=str(tmp_path / "ckpt"),
+        canon_state_dir=canon_dir,
         max_files_per_trigger=2,  # forces >= 2 micro-batches
     )
     n_versions = INC.latest_version(state_dir)
     assert n_versions >= 2, "expected multiple micro-batches"
+    assert INC.latest_version(canon_dir) == n_versions
+    assert len(builds) == n_versions, "one extraction per micro-batch"
 
-    final = INC.read_edge_state(spark, f"{state_dir}/v{n_versions}")
-    streamed = sorted(map(tuple, INC.edge_report(final).collect()))
+    streamed = _report(spark, state_dir, n_versions)
     rebuilt = sorted(
         map(tuple, INC.edge_report(INC.edge_state(_obs(spark, pages))).collect())
     )
     assert streamed == rebuilt
+    canon = _canon_map(spark, canon_dir, n_versions)
+    triples = PL.triples_plan(pages, spark, keep_probs=False)
+    assert canon == _node_map(IC.canon_state(IC.mention_names(triples))[0])
 
-    # crash-replay of the last batch: version already committed -> no-op
+    # crash-replay of the last batch: both versions already committed
+    del builds[:]
     summary = INC.fold_pages_delta(
-        spark, pages, state_dir, version=n_versions
+        spark, pages, state_dir, version=n_versions, canon_state_dir=canon_dir
     )
-    assert summary["replayed"] is True
-    after = INC.read_edge_state(spark, f"{state_dir}/v{n_versions}")
-    assert sorted(map(tuple, INC.edge_report(after).collect())) == streamed
+    assert summary["replayed"] is True and summary["canon"]["replayed"] is True
+    assert builds == [], "a replay extracts nothing"
+    assert _report(spark, state_dir, n_versions) == streamed
+    assert _canon_map(spark, canon_dir, n_versions) == canon
+    for d in (state_dir, canon_dir):
+        assert sorted(os.listdir(d)) == sorted(
+            f"v{i}" for i in range(1, n_versions + 1)
+        ), "a replay writes nothing, not even a staging directory"
 
 
-def test_streamed_canon_fold_equals_batch_rebuild_and_replay_is_noop(
-    spark, tmp_path
+def test_crash_between_edge_and_canon_commits_refolds_only_the_canon_map(
+    spark, tmp_path, fail_at, monkeypatch
 ):
-    """Streaming canonical-map maintenance: folding micro-batches of
-    pages must land on EXACTLY the single-pass batch canonicalization
-    of the full corpus's mention surfaces, and a re-delivered batch is
-    a committed-version no-op."""
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from relation_extraction_transformer_spark.operators import (
-        incremental_canon as IC,
-    )
-    from relation_extraction_transformer_spark.operators import (
-        linking as LINK,
-    )
+    """A fold of both states that crashes after the edge version commits
+    and before the canonical one does: re-delivering the same version
+    replays the edge fold and folds only the canonical map, extracting
+    the delta once; a third delivery runs no Spark job at all."""
+    import pytest
 
     pages = spark.read.parquet(PAGES)
-    pages_dir = str(tmp_path / "pages")
-    pages.repartition(4).write.parquet(pages_dir)
-    state_dir = str(tmp_path / "canon")
-    os.makedirs(state_dir)
+    state_dir, canon_dir = str(tmp_path / "state"), str(tmp_path / "canon")
+    fail_at(INC.os, "rename", call=2)
+    with pytest.raises(OSError, match="injected"):
+        INC.fold_pages_delta(
+            spark, pages, state_dir, version=1, canon_state_dir=canon_dir
+        )
+    assert INC.committed_versions(state_dir) == [1]
+    assert os.listdir(canon_dir) == [], "staging directory left behind"
+    monkeypatch.undo()
 
-    ST.run_streaming_canon_fold(
-        spark, pages_dir, state_dir,
-        checkpoint_path=str(tmp_path / "ckpt"),
-        max_files_per_trigger=2,  # forces >= 2 micro-batches
+    builds = _count_builds(monkeypatch)
+    s = INC.fold_pages_delta(
+        spark, pages, state_dir, version=1, canon_state_dir=canon_dir
     )
-    n_versions = INC.latest_version(state_dir)
-    assert n_versions >= 2, "expected multiple micro-batches"
-
-    nodes, _ = IC.read_canon_state(spark, f"{state_dir}/v{n_versions}")
-    streamed = {(r.node_id): (r.name, r.component) for r in nodes.collect()}
-
-    triples = PL.triples_plan(pages, spark, keep_probs=False)
-    mentions = (
-        triples.select(F.col("subj").alias("surface"))
-        .unionAll(triples.select(F.col("obj").alias("surface")))
-        .select(LINK.normalize_surface(F.col("surface")).alias("name"))
-        .distinct()
-        .select(LINK.stable_id(F.col("name")).alias("node_id"), "name")
-    )
-    rebuilt_nodes, _ = IC.canon_state(mentions)
-    rebuilt = {
-        (r.node_id): (r.name, r.component)
-        for r in rebuilt_nodes.collect()
-    }
-    assert streamed == rebuilt
-
-    # crash-replay of the last batch: version already committed -> no-op
-    s = IC.fold_mentions_delta(
-        spark,
-        mentions.limit(0),
-        state_dir,
-        version=n_versions,
-    )
+    assert len(builds) == 1
     assert s["replayed"] is True
-    after, _ = IC.read_canon_state(spark, f"{state_dir}/v{n_versions}")
-    assert {
-        (r.node_id): (r.name, r.component) for r in after.collect()
-    } == streamed
-    assert sorted(_os.listdir(state_dir)) == sorted(
-        f"v{i}" for i in range(1, n_versions + 1)
-    ), "a replay writes nothing, not even a staging directory"
+    assert s["canon"]["replayed"] is False and s["canon"]["state_version"] == 1
+    obs = _obs(spark, pages)
+    assert _n_obs(spark, state_dir, 1) == obs.count(), "edge delta folded twice"
+    assert _canon_map(spark, canon_dir, 1) == _node_map(
+        IC.canon_state(IC.mention_names(obs))[0]
+    )
+
+    del builds[:]
+    sc = spark.sparkContext
+    group = "fold-replay"
+    sc.setJobGroup(group, "a fold whose versions are all committed")
+    try:
+        s = INC.fold_pages_delta(
+            spark, pages, state_dir, version=1, canon_state_dir=canon_dir
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert s["replayed"] is True and s["canon"]["replayed"] is True
+    assert builds == []
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_unwritten_out_of_order_version_is_rejected(spark, tmp_path):
@@ -340,11 +364,9 @@ def test_once_run_that_times_out_is_stopped_and_raises(
         "parquet": lambda d: ST.run_stream_to_parquet(
             ST.streaming_triples(spark, pages_dir), f"{d}/out", f"{d}/ckpt"
         ),
-        "edge_fold": lambda d: ST.run_streaming_edge_fold(
-            spark, pages_dir, f"{d}/state", f"{d}/ckpt"
-        ),
-        "canon_fold": lambda d: ST.run_streaming_canon_fold(
-            spark, pages_dir, f"{d}/state", f"{d}/ckpt"
+        "fold": lambda d: ST.run_streaming_fold(
+            spark, pages_dir, f"{d}/state", f"{d}/ckpt",
+            canon_state_dir=f"{d}/canon",
         ),
     }
     for name, run in runs.items():
