@@ -99,6 +99,56 @@ def test_streamed_fold_equals_batch_rebuild_and_replay_is_noop(
         ), "a replay writes nothing, not even a staging directory"
 
 
+def test_streamed_canon_fold_equals_batch_rebuild_and_replay_is_noop(
+    spark, tmp_path
+):
+    """Streaming canonical-map maintenance: folding micro-batches of
+    pages must land on EXACTLY the single-pass batch canonicalization
+    of the full corpus's mention surfaces, and a re-delivered batch is
+    a committed-version no-op."""
+    from relation_extraction_transformer_spark.operators import (
+        linking as LINK,
+    )
+
+    pages = spark.read.parquet(PAGES)
+    pages_dir = str(tmp_path / "pages")
+    pages.repartition(4).write.parquet(pages_dir)
+    state_dir, canon_dir = str(tmp_path / "state"), str(tmp_path / "canon")
+    os.makedirs(state_dir)
+    os.makedirs(canon_dir)
+
+    ST.run_streaming_fold(
+        spark, pages_dir, state_dir,
+        checkpoint_path=str(tmp_path / "ckpt"),
+        canon_state_dir=canon_dir,
+        max_files_per_trigger=2,  # forces >= 2 micro-batches
+    )
+    n_versions = INC.latest_version(canon_dir)
+    assert n_versions >= 2, "expected multiple micro-batches"
+    streamed = _canon_map(spark, canon_dir, n_versions)
+
+    # an independent oracle for IC.mention_names
+    triples = PL.triples_plan(pages, spark, keep_probs=False)
+    mentions = (
+        triples.select(F.col("subj").alias("surface"))
+        .unionAll(triples.select(F.col("obj").alias("surface")))
+        .select(LINK.normalize_surface(F.col("surface")).alias("name"))
+        .distinct()
+        .select(LINK.stable_id(F.col("name")).alias("node_id"), "name")
+    )
+    assert streamed == _node_map(IC.canon_state(mentions)[0])
+
+    # crash-replay of the last batch: version already committed -> no-op
+    s = IC.fold_mentions_delta(
+        spark, mentions.limit(0), canon_dir, version=n_versions
+    )
+    assert s["replayed"] is True
+    assert _canon_map(spark, canon_dir, n_versions) == streamed
+    assert sorted(os.listdir(canon_dir)) == sorted(
+        f"v{i}" for i in range(1, n_versions + 1)
+    ), "a replay writes nothing, not even a staging directory"
+
+
 def test_crash_between_edge_and_canon_commits_refolds_only_the_canon_map(
     spark, tmp_path, fail_at, monkeypatch
 ):
