@@ -59,14 +59,14 @@ def verify_pairs_jaccard(
 
 def canonical_components(
     names: DataFrame, threshold: float = 0.6
-) -> tuple[DataFrame, DataFrame]:
-    """names (node_id, name) -> (components, bands): LSH bands, their
-    candidate pairs, the Jaccard-verified pairs and the connected
-    components over those.  ``components`` holds only the names in some
-    verified pair; :func:`label_components` labels the rest."""
+) -> DataFrame:
+    """names (node_id, name) -> components: LSH bands, their candidate
+    pairs, the Jaccard-verified pairs and the connected components over
+    those.  The result holds only the names in some verified pair;
+    :func:`label_components` labels the rest."""
     bands = minhash_band_hashes(names, "name")
     verified = verify_pairs_jaccard(candidate_pairs(bands), names, threshold)
-    return connected_components(verified), bands
+    return connected_components(verified)
 
 
 def label_components(

@@ -11,13 +11,15 @@ the min-id convention, so the surviving id is the smaller).
 
 The trick that makes the fold exact AND delta-sized:
 
-1. The state persists the LSH **band index** (node_id, band, band_hash)
-   alongside the component map.  A delta's candidate pairs are then
-   delta×delta (self-join on the delta's bands) plus delta×standing
-   (equi-join of the delta's bands against the standing index) — the
+1. The standing LSH **band index** (node_id, band, band_hash) is
+   derived from the standing names, which every fold reads anyway: band
+   hashes are a pure function of the name, so the index is never
+   persisted.  A delta's candidate pairs are then delta×delta
+   (self-join on the delta's bands) plus delta×standing (equi-join of
+   the delta's bands against the standing index) — the
    standing×standing pairs were all discovered by earlier folds, so
    across folds the union of discovered pairs is EXACTLY the batch
-   run's pair set (band hashes are a pure function of the name).
+   run's pair set.
 2. Connected components run over a **reduced graph**: every standing
    endpoint of a verified pair is replaced by its standing COMPONENT id
    (all members of a standing component are already connected, so the
@@ -33,22 +35,21 @@ State layout: the versioned directories of the edge rollup in
 operators/incremental.py (a version is committed by renaming its fully
 written staging directory to ``v<N>``; the newest ``v<N>`` is the
 standing state), but each version holds only what its fold ADDED, as
-one immutable parquet **segment** per dataset, plus a manifest
+one immutable parquet **segment**, plus a manifest
 (:func:`~.incremental.write_manifest`) listing, oldest first, the
-segments of every version that make up its state:
-
-- ``nodes``:  (node_id, name, component) — the fold's new nodes plus
-  the standing members of every component it relabelled.  A node's row
-  is the one in the newest segment that holds it (:func:`resolve_nodes`).
-- ``bands``:  (node_id, band, band_hash) — the new nodes' band rows
-  only; bands are a pure function of the name and never change.
+segments of every version that make up its state.  The state is one
+dataset, ``nodes``: (node_id, name, component) — each segment holds the
+fold's new nodes plus the standing members of every component it
+relabelled, and a node's row is the one in the newest segment that
+holds it (:func:`resolve_nodes`).  The band index is not stored: it is
+a function of the names.
 
 Segments are merged by size alone, like an LSM tree's binary counter:
 the log keeps every segment larger than all newer segments together,
 so after a fold appends its rows, the segments from the oldest one that
 no longer is are rewritten as one (:func:`_merge_from`).  The row
 counts from each segment on thus at least double towards the oldest,
-and the live segment count per dataset stays at most 1 + log2(total
+and the live segment count stays at most 1 + log2(total
 rows / newest segment's rows).  :func:`~.incremental.vacuum_state`
 retires a removed version whose segments a kept manifest lists instead
 of deleting it.
@@ -59,16 +60,17 @@ surface is a no-op (dropped by an anti-join).
 
 Scale shape: the standing nodes are resolved once per fold (one
 shuffle on node_id over the live segments, checkpointed); then one
-anti-join (new vs known), one band build over the delta only, two
+anti-join (new vs known), one band build over the delta, two
 equi-joins for candidates, pairwise Jaccard on candidates, CC on the
 reduced graph, and one equi-join on ``component`` to pick out the
 members of touched components (the relabel map is delta-sized and
-broadcastable).  Nothing scales with total corpus except the standing
-band index join — an equi-join on (band, band_hash), the same shape as
-the batch LSH join — and the node resolution.  What a version writes
-is delta-sized (new nodes + relabelled members, and their bands), except
-when a merge lands on it; as in an LSM tree, each row is rewritten
-O(log folds) times over the life of the state.
+broadcastable).  Nothing scales with total corpus except the node
+resolution and the standing band index — a narrow projection of the
+resolved names, hashed per fold, and its equi-join on (band,
+band_hash), the same shape as the batch LSH join.  What a version
+writes is delta-sized (new nodes + relabelled members), except when a
+merge lands on it; as in an LSM tree, each row is rewritten O(log
+folds) times over the life of the state.
 """
 
 from __future__ import annotations
@@ -79,12 +81,12 @@ from functools import reduce
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import minhash as MH
 from . import canonicalize as CANON
 from . import incremental as INC
 from . import linking as LINK
 
-DATASETS = ("nodes", "bands")
+# the datasets a version's manifest lists
+DATASETS = ("nodes",)
 
 
 def mention_names(triples: DataFrame) -> DataFrame:
@@ -102,13 +104,13 @@ def mention_names(triples: DataFrame) -> DataFrame:
 
 def canon_state(
     mentions: DataFrame, jaccard_threshold: float = 0.6
-) -> tuple[DataFrame, DataFrame]:
-    """Bootstrap (or rebuild) the canonical state from scratch:
+) -> DataFrame:
+    """Bootstrap (or rebuild) the canonical map from scratch:
     ``mentions`` = (node_id, name) with node_id a deterministic function
-    of name.  Returns (nodes, bands)."""
+    of name.  Returns the nodes (node_id, name, component)."""
     names = mentions.select("node_id", "name").distinct()
-    comps, bands = CANON.canonical_components(names, jaccard_threshold)
-    return CANON.label_components(names, comps), bands
+    comps = CANON.canonical_components(names, jaccard_threshold)
+    return CANON.label_components(names, comps)
 
 
 def resolve_nodes(segments: list[DataFrame]) -> DataFrame:
@@ -132,14 +134,17 @@ def resolve_nodes(segments: list[DataFrame]) -> DataFrame:
 def _read_segments(
     spark: SparkSession, path: str
 ) -> dict[str, list[DataFrame]]:
-    """The segments the manifest of version directory ``path`` lists,
-    per dataset, oldest first.  Only the first segment's schema is
-    inferred (a Spark job per read); the rest reuse it."""
+    """The segments of each of :data:`DATASETS` the manifest of version
+    directory ``path`` lists, oldest first; any other dataset a manifest
+    lists (the ``bands`` of a state written before the band index was
+    derived) is not read.  Only the first segment's schema is inferred
+    (a Spark job per read); the rest reuse it."""
     state_dir = os.path.dirname(os.path.normpath(path))
+    manifest = INC.read_manifest(path)
     frames: dict[str, list[DataFrame]] = {}
-    for dataset, segments in INC.read_manifest(path).items():
+    for dataset in DATASETS:
         frames[dataset] = []
-        for v, _rows in segments:
+        for v, _rows in manifest[dataset]:
             reader = spark.read
             if frames[dataset]:
                 reader = reader.schema(frames[dataset][0].schema)
@@ -152,28 +157,27 @@ def _read_segments(
 def read_canon_state(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame]:
-    """The full (nodes, bands) state of the committed version directory
-    ``path``, resolved from the segments its manifest lists."""
-    frames = _read_segments(spark, path)
-    return (
-        resolve_nodes(frames["nodes"]),
-        reduce(DataFrame.unionByName, frames["bands"]),
-    )
+    """The (nodes, bands) state of the committed version directory
+    ``path``: the map resolved from the segments its manifest lists, and
+    its band index, derived from the names (lazily: no job runs until
+    it is read)."""
+    nodes = resolve_nodes(_read_segments(spark, path)["nodes"])
+    return nodes, CANON.minhash_band_hashes(nodes, "name")
 
 
 def fold_into(
     std_nodes: DataFrame,
-    std_bands: DataFrame,
     delta_names: DataFrame,
     jaccard_threshold: float = 0.6,
-) -> tuple[DataFrame, DataFrame, dict]:
-    """The pure fold: standing (nodes, bands) + delta mentions -> the
-    rows the fold adds, (nodes, bands, stats).  ``nodes`` holds the new
-    nodes and the standing members of every component the delta
-    relabelled, each with its new component; ``bands`` the new nodes'
-    band rows.  The folded map is ``resolve_nodes([std_nodes, nodes])``
-    and the folded band index ``std_bands ∪ bands``.  ``std_nodes`` is
-    read five times: pass it materialized.  stats = the ``new_nodes``,
+) -> tuple[DataFrame, dict]:
+    """The pure fold: standing nodes + delta mentions -> the rows the
+    fold adds, (nodes, stats).  ``nodes`` holds the new nodes and the
+    standing members of every component the delta relabelled, each with
+    its new component; the folded map is
+    ``resolve_nodes([std_nodes, nodes])``.  The standing band index is
+    derived from ``std_nodes``' names, so ``std_nodes`` is scanned seven
+    times, one of them to hash its names: pass it materialized.
+    stats = the ``new_nodes``,
     ``touched_components`` and ``relabelled_nodes`` counts, observed on
     checkpoints the fold takes anyway (no extra job).  Disk-free core
     shared by :func:`write_canon_fold` and the in-memory
@@ -193,7 +197,7 @@ def fold_into(
     ds = (
         dbands.select(F.col("node_id").alias("src"), "band", "band_hash")
         .join(
-            std_bands.select(
+            CANON.minhash_band_hashes(std_nodes, "name").select(
                 F.col("node_id").alias("dst"), "band", "band_hash"
             ),
             ["band", "band_hash"],
@@ -256,7 +260,7 @@ def fold_into(
         "touched_components": n_touched.get["n"],
         "relabelled_nodes": n_touched.get["members"],
     }
-    return nodes, dbands.select("node_id", "band", "band_hash"), stats
+    return nodes, stats
 
 
 def _merge_from(rows: list[int], new: int) -> int:
@@ -302,43 +306,30 @@ def write_canon_fold(
     ``mentions``."""
     delta_names = mentions.select("node_id", "name").distinct()
     if base is None:
-        manifest = {d: [] for d in DATASETS}
-        frames = {d: [] for d in DATASETS}
-        nodes, bands = canon_state(delta_names, jaccard_threshold)
+        segs, frames = [], []
+        nodes = canon_state(delta_names, jaccard_threshold)
         stats = {"touched_components": 0, "relabelled_nodes": 0}
-        planned = {d: 0 for d in DATASETS}
+        planned = 0
     else:
-        manifest = INC.read_manifest(base)
-        frames = _read_segments(spark, base)
-        nodes, bands, stats = fold_into(
-            resolve_nodes(frames["nodes"]).localCheckpoint(eager=True),
-            reduce(DataFrame.unionByName, frames["bands"]),
+        # a manifest written before the band index was derived also
+        # lists ``bands``; this version's lists only the nodes, so the
+        # next vacuum_state deletes the band segments
+        segs = INC.read_manifest(base)["nodes"]
+        frames = _read_segments(spark, base)["nodes"]
+        nodes, stats = fold_into(
+            resolve_nodes(frames).localCheckpoint(eager=True),
             delta_names, jaccard_threshold,
         )
-        planned = {
-            "nodes": stats["new_nodes"] + stats["relabelled_nodes"],
-            # minhash_bands stacks exactly this many rows per name
-            "bands": stats["new_nodes"] * MH.MINHASH_BANDS,
-        }
-    for dataset, delta in zip(DATASETS, (nodes, bands)):
-        segs = manifest[dataset]
-        start = _merge_from([r for _, r in segs], planned[dataset])
-        run = frames[dataset][start:] + [delta]
-        if dataset == "nodes":
-            merged = resolve_nodes(run)
-        elif len(run) > 1:
-            # shuffled, so a merged segment gets the files its size
-            # needs, not one per file of the segments it absorbs
-            merged = reduce(DataFrame.unionByName, run).repartition(
-                "node_id"
-            )
-        else:
-            merged = delta
-        rows = _write_segment(merged, os.path.join(out, dataset))
-        manifest[dataset] = segs[:start] + [[INC.staged_version(out), rows]]
+        planned = stats["new_nodes"] + stats["relabelled_nodes"]
+    start = _merge_from([r for _, r in segs], planned)
+    rows = _write_segment(
+        resolve_nodes(frames[start:] + [nodes]), os.path.join(out, "nodes")
+    )
     if base is None:
-        stats["new_nodes"] = manifest["nodes"][0][1]
-    INC.write_manifest(out, manifest)
+        stats["new_nodes"] = rows
+    INC.write_manifest(
+        out, {"nodes": segs[:start] + [[INC.staged_version(out), rows]]}
+    )
     return {**stats, "version_bytes": _tree_bytes(out)}
 
 

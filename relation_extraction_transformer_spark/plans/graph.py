@@ -72,7 +72,7 @@ def build_graph(
     )
 
     # canonicalization: LSH blocking -> exact verify -> components
-    comps, _ = CANON.canonical_components(
+    comps = CANON.canonical_components(
         raw_nodes.select(
             "node_id", LINK.normalize_surface(F.col("name")).alias("name")
         ),

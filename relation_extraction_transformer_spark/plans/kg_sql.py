@@ -1495,8 +1495,8 @@ def _kg_canonical_map_incremental_spark(
     """Incremental twin of the canonicalization chain (r7,
     operators/incremental_canon.py): the corpus's distinct normalized
     mention surfaces split into two deterministic deltas (md5(name)
-    parity), delta 0 bootstraps the standing component map + band
-    index, delta 1 FOLDS in via the reduced-graph fold — and the result
+    parity), delta 0 bootstraps the standing component map, delta 1
+    FOLDS in via the reduced-graph fold — and the result
     must equal the single-pass batch canonicalization, which is exactly
     what the DuckDB oracle computes.  The driver's hash comparison IS
     the fold==rebuild law for canonical ids, checked cross-engine.
@@ -1524,11 +1524,10 @@ def _kg_canonical_map_incremental_spark(
     parity = (
         F.conv(F.substring(F.md5("name"), 2, 15), 16, 10).cast("long") % 2
     )
-    nodes0, bands0 = IC.canon_state(mentions.where(parity == 0))
-    nodes0 = nodes0.localCheckpoint(eager=True)
-    folded, _bands, _stats = IC.fold_into(
-        nodes0, bands0.localCheckpoint(eager=True), mentions.where(parity == 1)
+    nodes0 = IC.canon_state(mentions.where(parity == 0)).localCheckpoint(
+        eager=True
     )
+    folded, _stats = IC.fold_into(nodes0, mentions.where(parity == 1))
     return IC.resolve_nodes([nodes0, folded])
 
 

@@ -9,6 +9,7 @@ import pytest
 from relation_extraction_transformer_spark.operators import canonicalize as CANON
 from relation_extraction_transformer_spark.operators import linking as LINK
 from relation_extraction_transformer_spark.plans import graph as GRAPH
+from relation_extraction_transformer_spark.plans import kg_sql as KQ
 from relation_extraction_transformer_spark.plans import pipeline as PL
 from relation_extraction_transformer_spark.sources import pages as PG
 
@@ -387,7 +388,7 @@ def test_linking_sort_merge_path_matches_broadcast(spark):
     broadcast path."""
     import pyspark.sql.functions as F
 
-    triples = spark.read.parquet("/root/repo/artifacts/kg_triples.parquet")
+    triples = spark.read.parquet(KQ.TRIPLES_PARQUET)
     dictionary = LINK.entity_dictionary(spark)
 
     cols = ["subj", "obj", "subj_entity_id", "obj_entity_id",

@@ -2,9 +2,10 @@
 
 Laws under test:
 - fold(d1); fold(d2) == rebuild(d1 ∪ d2) exactly, at two split keys
-  (the persisted band index makes the union of per-fold candidate pairs
-  identical to the batch pair set, and reduced-graph min-labels equal
-  global min-labels).
+  (the standing band index, derived from the standing names and never
+  persisted, makes the union of per-fold candidate pairs identical to
+  the batch pair set, and reduced-graph min-labels equal global
+  min-labels).
 - stable ids: a delta that does not touch a standing component leaves
   every (node_id, component) row of that component byte-identical.
 - a delta node bridging two standing components merges them to the
@@ -21,6 +22,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from relation_extraction_transformer_spark.operators import (
+    canonicalize as CANON,
+)
 from relation_extraction_transformer_spark.operators import (
     incremental as INC,
 )
@@ -43,7 +47,7 @@ def _nodes_map(spark, state_dir, v):
 
 
 def _rebuild_map(spark, rows):
-    nodes, _ = IC.canon_state(_df(spark, rows))
+    nodes = IC.canon_state(_df(spark, rows))
     return {(r.node_id): (r.name, r.component) for r in nodes.collect()}
 
 
@@ -178,7 +182,7 @@ def test_version_bytes_do_not_grow_with_the_standing_map(spark, tmp_path):
         assert s["new_nodes"] == 2 and s["touched_components"] == 0
         assert s["version_bytes"] == _tree_bytes(
             os.path.join(state_dir, "v2"))
-        assert s["live_segments"] == {"nodes": 2, "bands": 2}
+        assert s["live_segments"] == {"nodes": 2}
         written.append(s["version_bytes"])
     small, large = written
     assert abs(large - small) <= 0.1 * small, written
@@ -200,7 +204,7 @@ def _days():
 def test_segment_log_stays_logarithmic_and_equals_rebuild(spark, tmp_path):
     state_dir = str(tmp_path / "state")
     os.makedirs(state_dir)
-    seen, live, merges = [], {"nodes": 0, "bands": 0}, {}
+    seen, live, merges = [], {"nodes": 0}, {}
     for folds, day in enumerate(_days(), start=1):
         seen += day
         s = IC.fold_mentions_delta(spark, _df(spark, day), state_dir)
@@ -211,10 +215,10 @@ def test_segment_log_stays_logarithmic_and_equals_rebuild(spark, tmp_path):
             merges[d] = merges.get(d, 0) + (n <= live[d])
         live = s["live_segments"]
     assert s["touched_components"] == 0 and min(merges.values()) >= 2
-    # a merged version holds its rows once: bands never change, so the
-    # band segments partition the band index
-    _, bands = IC.read_canon_state(spark, os.path.join(state_dir, "v8"))
-    assert bands.count() == 2 * len(seen) == bands.distinct().count()
+    # the band index is derived from the names: no version stores it
+    for v in range(1, 9):
+        assert sorted(os.listdir(os.path.join(state_dir, f"v{v}"))) == [
+            "manifest.json", "nodes"]
 
 
 def _listed_files(state_dir, version):
@@ -267,7 +271,8 @@ def test_crash_at_commit_of_a_merging_fold_keeps_the_previous_version(
     INC.vacuum_state(state_dir, 1)
     listing = sorted(os.listdir(state_dir))
     v3 = _nodes_map(spark, state_dir, 3)
-    # day 3's fold merges every band segment into one
+    # day 3's fold merges both node segments into one
+    assert len(INC.read_manifest(os.path.join(state_dir, "v3"))["nodes"]) == 2
     fail_at(os, "rename")
     with pytest.raises(OSError, match="injected"):
         IC.fold_mentions_delta(spark, _df(spark, days[3]), state_dir)
@@ -275,6 +280,34 @@ def test_crash_at_commit_of_a_merging_fold_keeps_the_previous_version(
     assert INC.latest_version(state_dir) == 3
     assert _nodes_map(spark, state_dir, 3) == v3
     s = IC.fold_mentions_delta(spark, _df(spark, days[3]), state_dir)
-    assert s["state_version"] == 4 and s["live_segments"]["bands"] == 1
+    assert s["state_version"] == 4 and s["live_segments"] == {"nodes": 1}
     assert _nodes_map(spark, state_dir, 4) == _rebuild_map(
         spark, [r for day in days[:4] for r in day])
+
+
+def test_a_state_with_a_stored_band_index_folds_and_vacuums_it(
+    spark, tmp_path
+):
+    """A state written when the band index was still stored lists a
+    ``bands`` dataset in its manifest: it still folds, the new version's
+    manifest drops the entry, and the next vacuum deletes the band
+    segments."""
+    state_dir = str(tmp_path / "state")
+    os.makedirs(state_dir)
+    days = _days()
+    first = days[0] + days[1]
+    IC.fold_mentions_delta(spark, _df(spark, first), state_dir)
+    v1 = os.path.join(state_dir, "v1")
+    bands = CANON.minhash_band_hashes(_df(spark, first), "name")
+    bands.write.parquet(os.path.join(v1, "bands"))
+    manifest = INC.read_manifest(v1)
+    INC.write_manifest(v1, {**manifest, "bands": [[1, bands.count()]]})
+    s = IC.fold_mentions_delta(spark, _df(spark, days[2]), state_dir)
+    assert s["live_segments"] == {"nodes": 2}, "fixture drifted: v2 merged"
+    want = _rebuild_map(spark, first + days[2])
+    assert _nodes_map(spark, state_dir, 2) == want
+    assert "bands" not in INC.read_manifest(os.path.join(state_dir, "v2"))
+    assert INC.vacuum_state(state_dir, 1) == [1]
+    assert sorted(os.listdir(state_dir)) == ["_r1", "v2"]
+    assert not [d for d, sub, _ in os.walk(state_dir) if "bands" in sub]
+    assert _nodes_map(spark, state_dir, 2) == want

@@ -21,7 +21,7 @@ from relation_extraction_transformer_spark.operators import (  # noqa: E402
 from relation_extraction_transformer_spark.plans import kg_sql as KQ  # noqa: E402
 from relation_extraction_transformer_spark.plans import pipeline as PL  # noqa: E402
 
-PAGES = "/root/repo/artifacts/kg_pages.parquet"
+PAGES = KQ.PAGES_PARQUET
 
 
 @pytest.fixture(scope="module")
@@ -105,7 +105,7 @@ def test_two_day_canon_fold_equals_batch_rebuild(spark, tmp_path, split_pages):
             .select(LINK.stable_id(F.col("name")).alias("node_id"), "name")
         )
 
-    rebuilt_nodes, _ = IC.canon_state(mentions(full))
+    rebuilt_nodes = IC.canon_state(mentions(full))
     want = {r.node_id: r.component for r in rebuilt_nodes.collect()}
     assert after == want, "fold-fold != batch rebuild"
 
@@ -149,5 +149,5 @@ def test_maintain_with_canon_state_extracts_the_delta_once(
     assert s["edges"] == INC.edge_state(obs).stats.count()
     assert s["canon"]["new_nodes"] == IC.mention_names(obs).count()
     assert s["canon"]["touched_components"] == 0
-    assert s["canon"]["live_segments"] == {"nodes": 1, "bands": 1}
+    assert s["canon"]["live_segments"] == {"nodes": 1}
     assert s["canon"]["version_bytes"] > 0

@@ -11,7 +11,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-PAGES = "/root/repo/artifacts/kg_pages.parquet"
+from relation_extraction_transformer_spark.plans import kg_sql as KQ
+
+PAGES = KQ.PAGES_PARQUET
 
 
 def _plan(df) -> str:
@@ -44,9 +46,7 @@ def test_linking_has_no_window_and_no_fact_side_exchange(spark):
     columns (the only Exchanges aggregate the tiny dictionary)."""
     from relation_extraction_transformer_spark.operators import linking as L
 
-    triples = spark.read.parquet(
-        "/root/repo/artifacts/kg_triples.parquet"
-    )
+    triples = spark.read.parquet(KQ.TRIPLES_PARQUET)
     linked = L.link_triples(triples, L.entity_dictionary(spark))
     plan = _plan(linked)
     assert "Window" not in plan

@@ -12,10 +12,11 @@ from relation_extraction_transformer_spark.operators import incremental as INC
 from relation_extraction_transformer_spark.operators import (
     incremental_canon as IC,
 )
+from relation_extraction_transformer_spark.plans import kg_sql as KQ
 from relation_extraction_transformer_spark.plans import pipeline as PL
 from relation_extraction_transformer_spark.streaming import stream as ST
 
-PAGES = "/root/repo/artifacts/kg_pages.parquet"
+PAGES = KQ.PAGES_PARQUET
 
 
 def _obs(spark, pages):
@@ -82,7 +83,7 @@ def test_streamed_fold_equals_batch_rebuild_and_replay_is_noop(
     assert streamed == rebuilt
     canon = _canon_map(spark, canon_dir, n_versions)
     triples = PL.triples_plan(pages, spark, keep_probs=False)
-    assert canon == _node_map(IC.canon_state(IC.mention_names(triples))[0])
+    assert canon == _node_map(IC.canon_state(IC.mention_names(triples)))
 
     # crash-replay of the last batch: both versions already committed
     del builds[:]
@@ -136,7 +137,7 @@ def test_streamed_canon_fold_equals_batch_rebuild_and_replay_is_noop(
         .distinct()
         .select(LINK.stable_id(F.col("name")).alias("node_id"), "name")
     )
-    assert streamed == _node_map(IC.canon_state(mentions)[0])
+    assert streamed == _node_map(IC.canon_state(mentions))
 
     # crash-replay of the last batch: version already committed -> no-op
     s = IC.fold_mentions_delta(
@@ -179,7 +180,7 @@ def test_crash_between_edge_and_canon_commits_refolds_only_the_canon_map(
     obs = _obs(spark, pages)
     assert _n_obs(spark, state_dir, 1) == obs.count(), "edge delta folded twice"
     assert _canon_map(spark, canon_dir, 1) == _node_map(
-        IC.canon_state(IC.mention_names(obs))[0]
+        IC.canon_state(IC.mention_names(obs))
     )
 
     del builds[:]
