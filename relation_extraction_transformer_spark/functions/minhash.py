@@ -26,6 +26,13 @@ construction.  Round 1 computed k separate salted md5s per shingle; one
 md5 + k multiply-adds is ~4x cheaper on the dominant dedup-path cost.
 Every fragment has a DuckDB twin built HERE (``duck_*``) so the Spark
 plan and the oracle SQL can never diverge.
+
+The 60-bit base hash is the pipeline's one stable hash, and this module
+is its only home, in three forms: :func:`stable_id` (Column),
+:func:`base_hash_sql` (Spark SQL text) and :data:`BASE_HASH_DUCK`
+(DuckDB text).  Entity ids (operators/linking.py), the HLL and
+count-min sketches (functions/sketches.py) and every oracle-paired
+query that hashes a value use these forms.
 """
 
 from __future__ import annotations
@@ -45,12 +52,22 @@ def _affine_consts(k: int) -> tuple[int, int]:
     return a, b
 
 
+def stable_id(col) -> Column:
+    """Cross-engine-stable 60-bit hash: md5 hex chars [2..16] read as a
+    BIGINT, so always in [0, 2**60) and NULL for NULL.  DuckDB computes
+    the same value with :data:`BASE_HASH_DUCK` (xxhash64 has no DuckDB
+    twin), which is what makes linking -> canonicalization -> graph and
+    the sketches oracle-checkable end to end; tests/test_stable_hash.py
+    checks all three forms against Python's md5."""
+    return F.conv(F.substring(F.md5(col), 2, 15), 16, 10).cast("long")
+
+
 def base_hash_sql(x: str) -> str:
-    """Shingle -> 60-bit integer: md5 hex chars [2..16] as BIGINT
-    (identical in DuckDB: see BASE_HASH_DUCK)."""
+    """:func:`stable_id` as Spark SQL text, for the SQL-text builders."""
     return f"CAST(conv(substring(md5({x}), 2, 15), 16, 10) AS BIGINT)"
 
 
+# :func:`stable_id` as DuckDB text; fill with ``.format(x=<sql expr>)``
 BASE_HASH_DUCK = "CAST(('0x' || substr(md5({x}), 2, 15)) AS BIGINT)"
 
 

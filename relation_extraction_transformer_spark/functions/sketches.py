@@ -11,11 +11,17 @@ surface at all; ivan-bilan/Relation-Extraction-Transformer consumes
 pre-tokenized TACRED JSON — see ``data/loader.py:47`` — so vocabulary
 cardinality there is an exact in-memory dict).
 
+One keyed implementation: every sketch step takes a list of group
+keys, and the global sketch is the zero-key case (``keys=[]``: one
+register set, one estimate row — also on empty input, where the
+estimate is 0.0).  Registers fold by :func:`hll_registers_by`, merge by
+:func:`hll_merge` and estimate by :func:`hll_estimate_by`.
+
 Cross-engine determinism (module-header rules of plans/sql_queries.py):
 
-- the hash is the same md5-hex -> BIGINT used by operators.linking.
-  stable_id (60 bits, identical in Spark and DuckDB; xxhash64 has no
-  DuckDB twin);
+- the hash is the pipeline's one stable hash, ``minhash.stable_id``
+  (60 bits, identical in Spark and DuckDB through ``BASE_HASH_DUCK``;
+  xxhash64 has no DuckDB twin);
 - the register harmonic sum is computed as an exact BIGINT: each
   register contributes ``2**(51 - rho)`` (rho in 1..51 -> term in
   1..2**50) and each empty bucket ``2**51``; the total is at most
@@ -31,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .minhash import BASE_HASH_DUCK, stable_id
 
 # p = 10 -> m = 1024 registers (standard error 1.04/sqrt(m) ~ 3.25%)
 HLL_P = 10
@@ -48,26 +56,22 @@ _B_LIT = 1.7013287633207432e21
 _LC_THRESHOLD = 2.5 * HLL_M
 
 
-def hll_hash(col) -> F.Column:
-    """60-bit non-negative BIGINT hash: md5 hex chars [2..16].  The exact
-    ``stable_id`` construction (operators/linking.py:35) — chosen over
-    xxhash64 because DuckDB can reproduce it verbatim."""
-    return F.conv(F.substring(F.md5(col), 2, 15), 16, 10).cast("long")
+def hll_registers_by(df: DataFrame, keys: list[str], col: str) -> DataFrame:
+    """Per-group HLL registers: ``(*keys, bucket, rho)`` with one row
+    per NON-EMPTY bucket per group (empty buckets are implicit — a
+    sparse representation, so a group with k distinct values carries at
+    most min(k, m) rows).  With ``keys=[]`` this is the global sketch.
 
-
-def hll_registers(df: DataFrame, col: str) -> DataFrame:
-    """Sketch one column into HLL registers: ``(bucket, rho)`` with one
-    row per NON-EMPTY bucket (empty buckets are implicit — a sparse
-    representation, so a sketch of few distincts is few rows).
-
-    One narrow projection + one groupBy(max): the aggregation is
-    map-side combinable and lands on at most ``HLL_M`` groups, so the
-    shuffle is O(partitions * m) regardless of input size."""
-    h = hll_hash(F.col(col))
+    One narrow projection + one groupBy(max) — the register fold is the
+    :func:`hll_merge` of one-value sketches.  The aggregation is
+    map-side combinable and lands on at most ``HLL_M`` groups per key,
+    so the shuffle is O(partitions * m) regardless of input size."""
+    h = stable_id(F.col(col))
     x = F.expr(f"h DIV {HLL_M}")  # upper 50 bits
-    return (
-        df.select(h.alias("h"))
-        .select(
+    return hll_merge(
+        keys,
+        df.select(*keys, h.alias("h")).select(
+            *keys,
             (F.col("h") % HLL_M).alias("bucket"),
             # rho = leading zeros of the 50-bit field + 1; bin(x) has no
             # leading zeros, so rho = 51 - bit_length(x); x = 0 -> 51
@@ -75,43 +79,28 @@ def hll_registers(df: DataFrame, col: str) -> DataFrame:
             .otherwise(F.lit(_RHO_MAX) - F.length(F.bin(x)))
             .cast("int")
             .alias("rho"),
-        )
-        .groupBy("bucket")
-        .agg(F.max("rho").alias("rho"))
+        ),
     )
 
 
-def hll_registers_by(df: DataFrame, keys: list[str], col: str) -> DataFrame:
-    """Per-group HLL registers: ``(*keys, bucket, rho)`` with one row
-    per non-empty bucket per group — the sparse form, so a group with k
-    distinct values carries at most min(k, m) rows.  This is the
-    mergeable state for incremental per-group distinct counting (e.g.
-    distinct urls per KG edge): two state frames merge by
-    ``groupBy(*keys, bucket).max(rho)``, exactly like the global
-    sketch, and the per-group estimate never re-reads raw data."""
-    h = hll_hash(F.col(col))
-    x = F.expr(f"h DIV {HLL_M}")
-    return (
-        df.select(*keys, h.alias("h"))
-        .select(
-            *keys,
-            (F.col("h") % HLL_M).alias("bucket"),
-            F.when(x == 0, F.lit(_RHO_MAX))
-            .otherwise(F.lit(_RHO_MAX) - F.length(F.bin(x)))
-            .cast("int")
-            .alias("rho"),
-        )
-        .groupBy(*keys, "bucket")
-        .agg(F.max("rho").alias("rho"))
-    )
+def hll_merge(keys: list[str], *register_dfs: DataFrame) -> DataFrame:
+    """Merge register frames: element-wise register MAX per group.  This
+    is the whole point at scale — per-shard / per-day sketches union +
+    one small groupBy, never re-reading the raw data."""
+    out = register_dfs[0]
+    for other in register_dfs[1:]:
+        out = out.unionAll(other)
+    return out.groupBy(*keys, "bucket").agg(F.max("rho").alias("rho"))
 
 
 def hll_estimate_by(registers: DataFrame, keys: list[str]) -> DataFrame:
-    """Per-group estimate ``(*keys, est_hll)`` from grouped registers —
-    the same all-integer harmonic sum / single-division / ROUND-gated
-    linear-counting branch as :func:`hll_estimate`, per group.  Small
+    """Per-group estimate ``(*keys, v_zero, scaled_sum, est_hll)`` from
+    register frames: the all-integer harmonic sum (see module header),
+    one division and the ROUND-gated linear-counting branch.  Small
     groups (the per-edge case) always land in the linear-counting
-    regime, where the estimate is near-exact."""
+    regime, where the estimate is near-exact.  With ``keys=[]`` it is
+    one row, also for an empty register frame (``v_zero = m``,
+    ``est_hll`` 0.0)."""
     agg = registers.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n_present"),
         F.sum(
@@ -126,13 +115,19 @@ def hll_estimate_by(registers: DataFrame, keys: list[str]) -> DataFrame:
     raw = F.round(F.lit(_B_LIT) / scaled.cast("double"), 3)
     est = F.when(
         (v_zero > 0) & (raw <= F.lit(_LC_THRESHOLD)),
+        # linear counting: m * ln(m / V)
         F.round(
             F.lit(float(HLL_M))
             * F.log(F.lit(float(HLL_M)) / v_zero.cast("double")),
             3,
         ),
     ).otherwise(raw)
-    return agg.select(*keys, est.alias("est_hll"))
+    return agg.select(
+        *keys,
+        v_zero.alias("v_zero"),
+        scaled.alias("scaled_sum"),
+        est.alias("est_hll"),
+    )
 
 
 def duck_hll_by_sql(source_cte: str, keys: list[str], col: str) -> str:
@@ -142,7 +137,7 @@ def duck_hll_by_sql(source_cte: str, keys: list[str], col: str) -> str:
     return f"""
     hll_by_h AS (
       SELECT {ks},
-             CAST(('0x' || substr(md5({col}), 2, 15)) AS BIGINT) AS h
+             {BASE_HASH_DUCK.format(x=col)} AS h
       FROM {source_cte}
     ),
     hll_by_regs AS (
@@ -178,64 +173,15 @@ def duck_hll_by_sql(source_cte: str, keys: list[str], col: str) -> str:
     )"""
 
 
-def hll_merge(*register_dfs: DataFrame) -> DataFrame:
-    """Merge sketches: element-wise register MAX.  This is the whole
-    point at scale — per-shard sketches union + one tiny groupBy, never
-    re-reading the shards."""
-    out = register_dfs[0]
-    for other in register_dfs[1:]:
-        out = out.unionAll(other)
-    return out.groupBy("bucket").agg(F.max("rho").alias("rho"))
-
-
-def hll_estimate(registers: DataFrame) -> DataFrame:
-    """One-row estimate frame ``(m, v_zero, scaled_sum, est_hll)`` from a
-    register frame.  All-integer harmonic sum (see module header); the
-    only floats are the final division and the linear-counting branch."""
-    agg = registers.agg(
-        F.count(F.lit(1)).alias("n_present"),
-        F.sum(
-            F.expr(f"CAST(pow(2, {_RHO_MAX} - rho) AS BIGINT)")
-        ).alias("present_sum"),
-    )
-    v_zero = F.lit(HLL_M) - F.col("n_present")
-    scaled = (
-        F.coalesce(F.col("present_sum"), F.lit(0))
-        + v_zero * F.lit(1 << _RHO_MAX)
-    ).cast("long")
-    raw = F.round(F.lit(_B_LIT) / F.col("scaled_sum").cast("double"), 3)
-    return (
-        agg.select(
-            F.lit(HLL_M).alias("m"),
-            v_zero.cast("long").alias("v_zero"),
-            scaled.alias("scaled_sum"),
-        )
-        .select(
-            "m",
-            "v_zero",
-            "scaled_sum",
-            F.when(
-                (F.col("v_zero") > 0) & (raw <= F.lit(_LC_THRESHOLD)),
-                # linear counting: m * ln(m / V)
-                F.round(
-                    F.lit(float(HLL_M))
-                    * F.log(F.lit(float(HLL_M)) / F.col("v_zero").cast("double")),
-                    3,
-                ),
-            )
-            .otherwise(raw)
-            .alias("est_hll"),
-        )
-    )
-
-
 def duck_hll_sql(source_cte: str, col: str) -> str:
-    """DuckDB twin of hll_registers + hll_estimate over ``source_cte``
-    (a CTE name exposing ``col``).  Emits CTEs ending in ``hll_est``
-    with the same four columns as :func:`hll_estimate`."""
+    """DuckDB twin of the zero-key hll_registers_by + hll_estimate_by
+    over ``source_cte`` (a CTE name exposing ``col``).  Emits CTEs
+    ending in ``hll_est`` with columns ``(m, v_zero, scaled_sum,
+    est_hll)``.  Kept apart from :func:`duck_hll_by_sql` because the
+    oracle text of ``hll_distinct`` is frozen."""
     return f"""
     hll_h AS (
-      SELECT CAST(('0x' || substr(md5({col}), 2, 15)) AS BIGINT) AS h
+      SELECT {BASE_HASH_DUCK.format(x=col)} AS h
       FROM {source_cte}
     ),
     hll_regs AS (
@@ -275,8 +221,8 @@ def duck_hll_sql(source_cte: str, col: str) -> str:
 # unless every row collides.  Like the HLL above it is (a) built by ONE
 # map-side-combinable groupBy onto d*w cells regardless of input size,
 # (b) mergeable by cell-wise SUM, and (c) cross-engine exact: the per-row
-# hash is the md5->BIGINT construction with the row index prefixed into
-# the hashed string, and every quantity is integer arithmetic end-to-end.
+# hash is the stable hash of the value with the row index prefixed, and
+# every quantity is integer arithmetic end-to-end.
 
 CMS_D = 4
 CMS_W = 256
@@ -284,14 +230,7 @@ CMS_W = 256
 
 def cms_hash(col, j: int) -> F.Column:
     """Row-j hash: stable_id of '<j>|<value>' modulo the grid width."""
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(f"{j}|"), col)), 2, 15
-        ),
-        16,
-        10,
-    ).cast("long")
-    return (h % CMS_W).cast("int")
+    return (stable_id(F.concat(F.lit(f"{j}|"), col)) % CMS_W).cast("int")
 
 
 def cms_sketch(df: DataFrame, col: str) -> DataFrame:
@@ -334,10 +273,17 @@ def cms_estimate(sketch: DataFrame, candidates: DataFrame, col: str) -> DataFram
 
 def duck_cms_sql(source_cte: str, col: str) -> str:
     """DuckDB twin: CTEs ending in ``cms_grid`` (j, cell, cnt)."""
+    # the line break inside each cell expression is part of the frozen
+    # cms_heavy_hitters oracle text
+    cells = [
+        duck_cms_probe(col, j).replace(
+            ") AS BIGINT)", ")\n" + " " * 18 + "AS BIGINT)"
+        )
+        for j in range(CMS_D)
+    ]
     rows = "\n      UNION ALL\n".join(
         f"""      SELECT {j} AS j,
-             CAST(CAST(('0x' || substr(md5('{j}|' || {col}), 2, 15))
-                  AS BIGINT) % {CMS_W} AS INTEGER) AS cell
+             {cells[j]} AS cell
       FROM {source_cte}"""
         for j in range(CMS_D)
     )
@@ -351,7 +297,5 @@ def duck_cms_sql(source_cte: str, col: str) -> str:
 
 
 def duck_cms_probe(col_expr: str, j: int) -> str:
-    return (
-        f"CAST(CAST(('0x' || substr(md5('{j}|' || {col_expr}), 2, 15)) "
-        f"AS BIGINT) % {CMS_W} AS INTEGER)"
-    )
+    h = BASE_HASH_DUCK.format(x=f"'{j}|' || {col_expr}")
+    return f"CAST({h} % {CMS_W} AS INTEGER)"

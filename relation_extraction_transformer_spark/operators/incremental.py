@@ -109,12 +109,7 @@ def merge_edge_state(a: EdgeState, b: EdgeState) -> EdgeState:
             F.sum("score_dec").cast(_SCORE_DEC).alias("score_dec"),
         )
     )
-    regs = (
-        a.regs.unionAll(b.regs)
-        .groupBy(*EDGE_KEYS, "bucket")
-        .agg(F.max("rho").alias("rho"))
-    )
-    return EdgeState(stats, regs)
+    return EdgeState(stats, SK.hll_merge(EDGE_KEYS, a.regs, b.regs))
 
 
 def conflicts_from_stats(stats: DataFrame, preds: tuple[str, ...]) -> DataFrame:

@@ -16,6 +16,9 @@ classification); mandated by the north rule.  Three deterministic steps:
 At web scale the alias dictionary outgrows a broadcast; the same plan
 shape then runs as a salted sort-merge join (AQE skew-join enabled), which
 is why candidate generation is expressed as a plain equi-join here.
+
+Entity ids are ``stable_id``: the pipeline's one stable hash, which lives
+in functions/minhash.py and is imported here under that name.
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.minhash import stable_id
 from ..sources import gazetteer as G
 
 
@@ -30,15 +34,6 @@ def normalize_surface(col):
     """Deterministic surface normalization shared by dictionary and
     mentions: lowercase + whitespace squeeze."""
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
-
-
-def stable_id(col):
-    """Cross-engine-stable 60-bit entity id: md5 hex chars [2..16] as a
-    BIGINT (always positive, fits signed 64-bit exactly).  DuckDB form:
-    ``CAST(('0x' || substr(md5(x), 2, 15)) AS BIGINT)`` — which is what
-    makes the linking -> canonicalization -> graph chain oracle-checkable
-    end to end (xxhash64 has no DuckDB equivalent)."""
-    return F.conv(F.substring(F.md5(col), 2, 15), 16, 10).cast("long")
 
 
 def entity_dictionary(spark: SparkSession) -> DataFrame:

@@ -16,8 +16,11 @@ the transformer forward pass IS SQL-expressible, so this module pairs:
 ``kg_triples`` itself stays rows-only: its forward pass is gated by the
 NumPy-oracle parity suite (tests/test_end_to_end.py), not by SQL.
 
-Cross-engine notes: entity ids use operators.linking.stable_id (md5-hex
--> BIGINT, identical in both engines); the sentence split emulates
+Cross-engine notes: entity ids, delta splits and sketch registers use
+the one stable hash of functions/minhash.py (``stable_id`` / its DuckDB
+text ``BASE_HASH_DUCK``: md5-hex -> BIGINT, identical in both engines);
+the HLL sketches are functions/sketches.py's keyed fold, whose global
+case is the zero-key one; the sentence split emulates
 Spark's lookbehind regex ``(?<=\\.)\\s+`` with a replace-then-split (RE2
 has no lookbehind); binary payloads hash via md5(upper(hex(payload)))
 because DuckDB's md5 only accepts VARCHAR.
@@ -30,6 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import minhash as MH
 from ..sources import gazetteer as G
 from .sql_queries import QuerySpec
 
@@ -72,15 +76,13 @@ def _dictionary_values() -> str:
 
 _NORM = "lower(trim(regexp_replace({x}, '\\s+', ' ', 'g')))"
 
-_STABLE_ID = "CAST(('0x' || substr(md5({x}), 2, 15)) AS BIGINT)"
-
 
 def _norm(x: str) -> str:
     return _NORM.format(x=x)
 
 
 def _sid(x: str) -> str:
-    return _STABLE_ID.format(x=x)
+    return MH.BASE_HASH_DUCK.format(x=x)
 
 
 def _char_shingle_bands_sql(names_cte: str) -> str:
@@ -88,8 +90,6 @@ def _char_shingle_bands_sql(names_cte: str) -> str:
     cbands (node_id, band, band_hash) plus a shing CTE for the Jaccard
     verify — built from the SAME dual-dialect minhash core the Spark side
     uses (functions/minhash.py)."""
-    from ..functions import minhash as MH
-
     return f"""
     shing AS (
       SELECT node_id, {MH.duck_char_shingles('nname')} AS sh
@@ -1445,9 +1445,7 @@ def _kg_edge_history_incremental_spark(
         "url", F.unix_timestamp("warc_ts").cast("bigint").alias("ts")
     )
     obs = tri.join(pages, "url")
-    parity = (
-        F.conv(F.substring(F.md5("url"), 2, 15), 16, 10).cast("long") % 2
-    )
+    parity = MH.stable_id(F.col("url")) % 2
     s0 = INC.edge_state(obs.where(parity == 0))
     s1 = INC.edge_state(obs.where(parity == 1))
     return INC.edge_report(INC.merge_edge_state(s0, s1))
@@ -1509,7 +1507,6 @@ def _kg_canonical_map_incremental_spark(
     into their base's component; which ones collide is a deterministic
     md5 fact, identical cross-engine)."""
     from ..operators import incremental_canon as IC
-    from ..operators import linking as LINK
 
     base = IC.mention_names(spark.read.parquet(TRIPLES_PARQUET))
     planted = base.where(F.col("node_id") % 5 == 0).select(
@@ -1519,11 +1516,10 @@ def _kg_canonical_map_incremental_spark(
         base.select("name")
         .unionAll(planted)
         .distinct()
-        .select(LINK.stable_id(F.col("name")).alias("node_id"), "name")
+        .select(MH.stable_id(F.col("name")).alias("node_id"), "name")
     )
-    parity = (
-        F.conv(F.substring(F.md5("name"), 2, 15), 16, 10).cast("long") % 2
-    )
+    # node_id is the stable id of name, so this is the md5(name) parity
+    parity = F.col("node_id") % 2
     nodes0 = IC.canon_state(mentions.where(parity == 0)).localCheckpoint(
         eager=True
     )

@@ -950,9 +950,7 @@ def _spark_simhash(spark, sf):
     tok_hash = (
         t(spark, sf, "documents")
         .select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-        .withColumn(
-            "h", F.conv(F.substring(F.md5("tok"), 2, 15), 16, 10).cast("long")
-        )
+        .withColumn("h", MH.stable_id(F.col("tok")))
     )
     sums = tok_hash.groupBy("doc_id").agg(
         *[
@@ -976,13 +974,13 @@ def _spark_simhash(spark, sf):
 
 register(
     "simhash_64",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
     ),
     hashed AS (
       SELECT doc_id,
-             CAST(('0x' || substr(md5(tok), 2, 15)) AS BIGINT) AS h
+             {MH.BASE_HASH_DUCK.format(x="tok")} AS h
       FROM toks
     ),
     bits AS (
@@ -1958,18 +1956,11 @@ register(
 _WINNOW_K = 8
 _WINNOW_W = 4
 
-_STABLE_HASH_DUCK = "CAST(('0x' || substr(md5({x}), 2, 15)) AS BIGINT)"
-
-
-def _stable_hash_spark(col):
-    return F.conv(F.substring(F.md5(col), 2, 15), 16, 10).cast("long")
-
-
 def _spark_winnow(spark, sf):
     text = F.col("text")
     kgram_hashes = F.transform(
         F.sequence(F.lit(1), F.length(text) - _WINNOW_K + 1),
-        lambda i: _stable_hash_spark(text.substr(i, F.lit(_WINNOW_K))),
+        lambda i: MH.stable_id(text.substr(i, F.lit(_WINNOW_K))),
     )
     df = (
         t(spark, sf, "documents")
@@ -1996,7 +1987,7 @@ register(
       SELECT doc_id,
              list_transform(
                range(1, length(text) - {_WINNOW_K} + 2),
-               i -> {_STABLE_HASH_DUCK.format(
+               i -> {MH.BASE_HASH_DUCK.format(
                  x=f"substr(text, CAST(i AS INT), {_WINNOW_K})")}) AS H
       FROM documents WHERE length(text) >= {_WINNOW_K}
     ),
@@ -3113,11 +3104,11 @@ def _spark_hll_distinct(spark, sf):
         .select(F.explode(F.split(F.lower(F.col("text")), " ")).alias("tok"))
         .filter(F.col("tok") != "")
     )
-    est = SK.hll_estimate(SK.hll_registers(toks, "tok"))
+    est = SK.hll_estimate_by(SK.hll_registers_by(toks, [], "tok"), [])
     exact = toks.agg(F.count_distinct("tok").alias("exact_distinct"))
     ex_d = F.col("exact_distinct").cast("double")
     return est.crossJoin(exact).select(
-        "m",
+        F.lit(SK.HLL_M).alias("m"),
         "v_zero",
         "scaled_sum",
         "est_hll",

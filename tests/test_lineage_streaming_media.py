@@ -679,7 +679,9 @@ def test_streaming_hll_registers_match_batch(spark, tmp_path):
         toks = df.selectExpr(
             "explode(split(lower(text), ' ')) AS tok"
         ).filter("tok <> ''")
-        return sorted(map(tuple, SK.hll_registers(toks, "tok").collect()))
+        return sorted(
+            map(tuple, SK.hll_registers_by(toks, [], "tok").collect())
+        )
 
     assert run_once() == batch_regs(d1)
 

@@ -243,7 +243,7 @@ def test_hll_plan_is_jvm_side_with_partial_aggregation(spark):
         .select(F.explode(F.split(F.lower(F.col("text")), " ")).alias("tok"))
         .filter(F.col("tok") != "")
     )
-    plan = _plan(SK.hll_registers(toks, "tok"))
+    plan = _plan(SK.hll_registers_by(toks, [], "tok"))
     assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
     assert "partial_max" in plan, "register max must combine map-side"
     assert "Exchange SinglePartition" not in plan, (

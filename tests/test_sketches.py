@@ -1,11 +1,14 @@
 """HyperLogLog sketch tests: exact register parity vs a pure-Python
 oracle, the merge property, partition independence, and accuracy bounds.
+The merge and estimate laws run with no key (the global sketch) and with
+one key column, since both are the one keyed implementation.
 """
 
 import hashlib
 import math
 
 import pyspark.sql.functions as F
+import pytest
 
 from relation_extraction_transformer_spark.functions import sketches as SK
 
@@ -35,26 +38,52 @@ def _py_estimate(regs):
 
 
 def _toks(spark, n, prefix="tok"):
+    """tok0..tok<n-1>, with the key column grp = i % 2."""
     return spark.range(n).select(
-        F.concat(F.lit(prefix), F.col("id").cast("string")).alias("tok")
+        F.concat(F.lit(prefix), F.col("id").cast("string")).alias("tok"),
+        (F.col("id") % 2).alias("grp"),
     )
+
+
+def _groups(n, keys):
+    """The groups of ``_toks(n)``: key tuple -> its tokens.  With no key
+    there is one group, also for n = 0."""
+    if not keys:
+        return {(): [f"tok{i}" for i in range(n)]}
+    out = {}
+    for i in range(n):
+        out.setdefault((i % 2,), []).append(f"tok{i}")
+    return out
+
+
+KEYS = pytest.mark.parametrize(
+    "keys", [[], ["grp"]], ids=["no_key", "one_key"]
+)
 
 
 def test_registers_match_python_oracle(spark):
     df = _toks(spark, 3000)
-    got = {r.bucket: r.rho for r in SK.hll_registers(df, "tok").collect()}
+    got = {
+        r.bucket: r.rho
+        for r in SK.hll_registers_by(df, [], "tok").collect()
+    }
     want = _py_registers([f"tok{i}" for i in range(3000)])
     assert got == want
 
 
 def test_registers_partition_independent(spark):
     df = _toks(spark, 2000)
-    a = sorted(map(tuple, SK.hll_registers(df.repartition(1), "tok").collect()))
-    b = sorted(map(tuple, SK.hll_registers(df.repartition(7), "tok").collect()))
+    a = sorted(
+        map(tuple, SK.hll_registers_by(df.repartition(1), [], "tok").collect())
+    )
+    b = sorted(
+        map(tuple, SK.hll_registers_by(df.repartition(7), [], "tok").collect())
+    )
     assert a == b
 
 
-def test_merge_equals_union_sketch(spark):
+@KEYS
+def test_merge_equals_union_sketch(spark, keys):
     """sketch(A) merge sketch(B) == sketch(A union B), EXACTLY — the
     property that lets per-shard sketches roll up without re-reading
     shards.  A and B overlap to exercise the max."""
@@ -62,24 +91,34 @@ def test_merge_equals_union_sketch(spark):
     b = _toks(spark, 2500).filter(F.col("tok") >= F.lit("tok1"))
     union = a.unionAll(b).distinct()
     merged = SK.hll_merge(
-        SK.hll_registers(a, "tok"), SK.hll_registers(b, "tok")
+        keys,
+        SK.hll_registers_by(a, keys, "tok"),
+        SK.hll_registers_by(b, keys, "tok"),
     )
-    direct = SK.hll_registers(union, "tok")
+    direct = SK.hll_registers_by(union, keys, "tok")
     assert sorted(map(tuple, merged.collect())) == sorted(
         map(tuple, direct.collect())
     )
 
 
-def test_estimate_matches_python_and_is_accurate(spark):
+@KEYS
+def test_estimate_matches_python_and_is_accurate(spark, keys):
     """Estimate equals the pure-Python computation bit-for-bit, and the
     relative error stays inside 3 standard errors (1.04/sqrt(1024) ~
-    3.25% -> <10%) at both the linear-counting and HLL regimes."""
-    for n in (150, 800, 6000):
-        df = _toks(spark, n)
-        row = SK.hll_estimate(SK.hll_registers(df, "tok")).first()
-        want = _py_estimate(_py_registers([f"tok{i}" for i in range(n)]))
-        assert row.est_hll == want, (n, row.est_hll, want)
-        assert abs(row.est_hll - n) / n < 0.10, (n, row.est_hll)
+    3.25% -> <10%) at both the linear-counting and HLL regimes.  On
+    empty input the global sketch is still one row, estimate 0.0."""
+    for n in (0, 150, 800, 6000):
+        regs = SK.hll_registers_by(_toks(spark, n), keys, "tok")
+        got = {
+            tuple(r[k] for k in keys): r.est_hll
+            for r in SK.hll_estimate_by(regs, keys).collect()
+        }
+        groups = _groups(n, keys)
+        assert set(got) == set(groups), (n, sorted(got))
+        for g, vals in groups.items():
+            want = _py_estimate(_py_registers(vals))
+            assert got[g] == want, (n, g, got[g], want)
+            assert abs(got[g] - len(vals)) <= 0.10 * len(vals), (n, g, got[g])
 
 
 def test_duplicates_do_not_move_estimate(spark):
@@ -89,9 +128,9 @@ def test_duplicates_do_not_move_estimate(spark):
     fat = df.crossJoin(spark.range(20).select(F.lit(1).alias("_x"))).select(
         "tok"
     )
-    assert sorted(map(tuple, SK.hll_registers(df, "tok").collect())) == sorted(
-        map(tuple, SK.hll_registers(fat, "tok").collect())
-    )
+    assert sorted(
+        map(tuple, SK.hll_registers_by(df, [], "tok").collect())
+    ) == sorted(map(tuple, SK.hll_registers_by(fat, [], "tok").collect()))
 
 
 # Count-min sketch ----------------------------------------------------------
