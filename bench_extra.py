@@ -9,6 +9,11 @@ Per-layer splits of the pipeline and the folds come from
     python bench_extra.py queries q1_pricing_summary dup_clusters ...
     python bench_extra.py plans OUT_DIR [names...]   # dump explain(formatted)
 
+A plan dump also holds the plan of every frame the query
+``localCheckpoint``s on its way, in order: an iterative operator's
+rounds run behind those checkpoints, so its final plan alone is one
+``Scan ExistingRDD``.
+
 Environment contract matches bench.py ($SPARK_GRAFT_SF_DIR /
 $SPARK_GRAFT_CPUS); numbers printed here never go into the driver's
 JSON line.
@@ -76,31 +81,55 @@ def normalize_plan(text: str) -> str:
     diff-equal: the checkout and the testdata directory become
     ``<repo>`` and ``<sf_dir>``, and every per-session id is renumbered
     in order of first appearance: lambda variables (``x_54``, ``sp``,
-    ... -> ``v0``, ``v1``, ...), ``#<exprId>`` suffixes, ``plan_id=``
-    and ``RDD[<id>]``.  Lambda variables are keyed by exprId, not name,
-    so a name reused across lambdas (SQL text) and a fresh name per
-    lambda (the Column API) normalize alike."""
+    ... -> ``v0``, ``v1``, ...), ``#<exprId>`` suffixes, ``plan_id=``,
+    ``RDD[<id>]`` and the random names of ``Observation``s.  Lambda
+    variables are keyed by exprId, not name, so a name reused across
+    lambdas (SQL text) and a fresh name per lambda (the Column API)
+    normalize alike."""
     text = text.replace(os.path.dirname(os.path.abspath(__file__)), "<repo>")
     text = text.replace(os.path.abspath(SF_DIR), "<sf_dir>")
     text = _renumber(r"lambda \w+#(\d+)", "lambda v{}", text)
     text = _renumber(r"#(\d+)", "#{}", text)
     text = _renumber(r"plan_id=(\d+)", "plan_id={}", text)
-    return _renumber(r"RDD\[(\d+)\]", "RDD[{}]", text)
+    text = _renumber(r"RDD\[(\d+)\]", "RDD[{}]", text)
+    return _renumber(
+        r"\b([0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12})\b",
+        "observation{}", text,
+    )
+
+
+def _explain(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
 
 
 def section_plans(spark, out_dir: str, names: list[str]) -> None:
     import __spark_entry__ as entry
+    from pyspark.sql.classic.dataframe import DataFrame
 
     qs = entry.queries()
     # match the bench's warehouse-section scan config so adaptive reads
     # (tb) see the same split counts the timed run sees
     spark.conf.set("spark.sql.files.maxPartitionBytes", "128m")
     os.makedirs(out_dir, exist_ok=True)
+    real_checkpoint = DataFrame.localCheckpoint
     for name in names:
-        df = qs[name](spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        checkpoints: list[str] = []
+
+        def recorded(df, *args, **kwargs):
+            checkpoints.append(_explain(df))
+            return real_checkpoint(df, *args, **kwargs)
+
+        DataFrame.localCheckpoint = recorded
+        try:
+            df = qs[name](spark, SF_DIR)
+        finally:
+            DataFrame.localCheckpoint = real_checkpoint
+        plan = "".join(
+            f"== localCheckpoint {i} ==\n{p}\n"
+            for i, p in enumerate(checkpoints, 1)
+        ) + _explain(df)
         path = os.path.join(out_dir, f"{name}.txt")
         with open(path, "w") as fh:
             fh.write(normalize_plan(plan))

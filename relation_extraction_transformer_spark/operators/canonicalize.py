@@ -12,10 +12,11 @@ canonical node:
    matters, and it is an equi-join on band_hash, AQE-skew-splittable)
 3. verification: trigram Jaccard >= threshold on candidate pairs (the
    shared ``MH.verify_pairs``, also used by document dedup)
-4. connected components by iterative min-label propagation with
-   ``localCheckpoint`` per iteration to cut lineage growth (SURVEY §4) —
-   the Spark-idiomatic form of map-side label exchange; iteration count
-   is O(log(diameter)) for name-similarity graphs (tiny diameters).
+4. connected components by iterative min-label propagation, run to its
+   fixpoint by operators/fixpoint.py (a ``localCheckpoint`` per round
+   cuts lineage growth, SURVEY §4) — the Spark-idiomatic form of
+   map-side label exchange; the round count is O(log(diameter)) for
+   name-similarity graphs (tiny diameters).
 5. labelling: every item takes its component's lowest id; an item in no
    verified pair is its own component (:func:`label_components`, also
    used by document dedup).
@@ -23,10 +24,11 @@ canonical node:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import minhash as MH
+from . import fixpoint as FX
 
 
 def minhash_band_hashes(df: DataFrame, text_col: str) -> DataFrame:
@@ -92,10 +94,9 @@ def connected_components(
     one shuffle; ``localCheckpoint`` truncates lineage so the plan does not
     grow exponentially across iterations.  Converges in O(log d) rounds via
     label shortcutting (labels jump to the component minimum, not just the
-    neighbor minimum).  Stops at the first round in which no label
-    changed, counted by an ``Observation`` on that round's own checkpoint
-    (no extra job, any id type).  Raises ``RuntimeError`` if labels still
-    change in round ``max_iter`` rather than return unconverged labels.
+    neighbor minimum).  :func:`fixpoint.fixpoint` stops at the first round
+    in which no label changed (any id type) and raises ``RuntimeError``
+    if labels still change in round ``max_iter``.
     """
     # the symmetric edge list is referenced by EVERY round's propagation
     # join; checkpoint it once so rounds read a materialized frame
@@ -110,7 +111,8 @@ def connected_components(
         .withColumn("component", F.col("node_id"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+
+    def propagate(labels: DataFrame, changed) -> DataFrame:
         # each node proposes its current label to every neighbor; only
         # the node's own row carries its pre-round label ``old``.  sym is
         # symmetric, so every message target is a src of sym and has an
@@ -132,31 +134,15 @@ def connected_components(
         lbl2 = new_labels.select(
             F.col("node_id").alias("c_node"), F.col("component").alias("c_comp")
         )
-        # the round's own checkpoint counts the changed labels: a retried
-        # task or re-run stage can only inflate a non-zero count, never
-        # move it to or from 0, so the stop test is exact
-        changed = Observation()
-        labels = (
-            new_labels.join(
-                lbl2, new_labels["component"] == lbl2["c_node"], "left"
-            )
-            .select(
-                "node_id",
-                F.coalesce("c_comp", "component").alias("component"),
-                "old",
-            )
-            .observe(
-                changed,
-                F.count_if(F.col("component") != F.col("old")).alias("n"),
-            )
-            .select("node_id", "component")
-            .localCheckpoint(eager=True)
+        relabelled = new_labels.join(
+            lbl2, new_labels["component"] == lbl2["c_node"], "left"
+        ).select(
+            "node_id",
+            F.coalesce("c_comp", "component").alias("component"),
+            "old",
         )
-        if changed.get["n"] == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            "rounds: labels still changed in the last one"
-        )
-    return labels
+        return changed(
+            relabelled, F.col("component") != F.col("old")
+        ).select("node_id", "component")
+
+    return FX.fixpoint(labels, propagate, "connected_components", max_iter)

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import minhash as MH
+from ..operators import fixpoint as FX
 from ..sources import gazetteer as G
 from .sql_queries import QuerySpec
 
@@ -722,9 +723,6 @@ _PR_ITERS = 5
 _PR_DAMP = 0.85
 
 
-_PR_CHECKPOINT_EVERY = 5
-
-
 def _kg_pagerank_spark(
     spark: SparkSession,
     sf_dir: str,
@@ -743,10 +741,9 @@ def _kg_pagerank_spark(
     Scale shape: per iteration one shuffle join on src + one aggregation
     on dst — the standard distributed PR round; the edge cache is
     hash-partitioned on the join key so power iterations reuse its
-    partitioning, and the rank frame ``localCheckpoint``s every
-    ``_PR_CHECKPOINT_EVERY`` rounds so plan depth stays bounded at any
-    ``n_iters`` (r6; the fixture's 5 rounds fit under one window, so
-    the recorded oracle plan is unchanged)."""
+    partitioning, and ``fixpoint.rounds`` checkpoints the rank frame
+    periodically so plan depth stays bounded at any ``n_iters`` (r6; the
+    fixture's 5 rounds fit under one window)."""
     tri = triples if triples is not None else spark.read.parquet(
         TRIPLES_PARQUET
     )
@@ -784,7 +781,8 @@ def _kg_pagerank_spark(
         "pr",
         F.round(F.lit(1.0) / F.lit(float(n)), 12).cast("decimal(28,12)"),
     )
-    for it in range(n_iters):
+
+    def power_step(pr: DataFrame) -> DataFrame:
         contrib = (
             edges_deg.join(pr.withColumnRenamed("node", "subj"), "subj")
             .select(
@@ -796,7 +794,7 @@ def _kg_pagerank_spark(
             .groupBy("node")
             .agg(F.sum("c").alias("mass"))
         )
-        pr = nodes.join(contrib, "node", "left").select(
+        return nodes.join(contrib, "node", "left").select(
             "node",
             F.round(
                 base
@@ -805,12 +803,8 @@ def _kg_pagerank_spark(
                 12,
             ).cast("decimal(28,12)").alias("pr"),
         )
-        # every iteration appends two joins + one agg to pr's lineage —
-        # linear plan growth, fine at the fixture's 5 rounds but not at
-        # arbitrary n_iters (VERDICT r5 #2): truncate periodically so
-        # plan depth stays bounded regardless of iteration count
-        if (it + 1) % _PR_CHECKPOINT_EVERY == 0 and (it + 1) < n_iters:
-            pr = pr.localCheckpoint(eager=True)
+
+    pr = FX.rounds(pr, power_step, n_iters)
     return _materialize_release(
         pr.select("node", F.col("pr").cast("double").alias("pagerank")),
         edges, nodes, edges_deg,
@@ -1032,47 +1026,55 @@ KG_REGISTRY["kg_triangle_count"] = QuerySpec(
 
 
 _KCORE_K = 8
+# the DuckDB twin unrolls this many peel rounds; the frozen fixture's
+# peel is stable after 2, so the twin's rows are the Spark fixpoint's
 _KCORE_ROUNDS = 4
+_KCORE_MAX_ROUNDS = 100
 
 
 def _kg_kcore_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core decomposition (k=_KCORE_K) of the extracted entity graph by
     iterative peeling: drop every node whose degree in the surviving
-    subgraph is < k, re-induce, repeat.  _KCORE_ROUNDS fixed rounds — enough for
-    convergence on this graph (the pytest gate proves the fixpoint by
-    running the same peel with an unbounded while-loop in plain Python
-    and asserting identical survivors), and fixed so the DuckDB twin can
-    unroll the identical computation.
+    subgraph is < k, re-induce, repeat until a round peels no edge
+    (``fixpoint.fixpoint``: a graph still peeling in round
+    _KCORE_MAX_ROUNDS raises).  The DuckDB twin unrolls _KCORE_ROUNDS
+    rounds; the pytest gate checks the survivors against an unbounded
+    while-loop peel in plain Python.
 
-    Scale shape: each round is one degree aggregation plus two semi-joins
+    Scale shape: each round is one degree aggregation plus two joins
     against the (shrinking) alive set — the same driver-loop shape as the
     canonicalizer's min-label propagation.  Each round's edge frame is
     localCheckpoint()-ed: the round references its input FOUR times
-    (twice in the degree union, once per semi-join side), so an
+    (twice in the degree union, once per join side), so an
     unmaterialized loop grows the logical plan ~4^rounds and OOMs the
     driver during analysis long before any data moves — the checkpoint
     pins plan depth constant, exactly as in canonicalize.py.  At real
     scale the alive set is additionally broadcast once it fits (it only
     shrinks)."""
     edges0 = _und_edges(spark).persist()
-    edges = edges0
 
     def degrees(e: DataFrame) -> DataFrame:
         return _und_degrees(e, "core_degree")
 
-    for _ in range(_KCORE_ROUNDS):
-        alive = (
-            degrees(edges)
-            .filter(F.col("core_degree") >= _KCORE_K)
-            .select("node")
-        )
-        edges = (
-            edges.join(
-                alive.withColumnRenamed("node", "a"), "a", "left_semi"
+    def peel(edges: DataFrame, changed) -> DataFrame:
+        alive = degrees(edges).filter(F.col("core_degree") >= _KCORE_K)
+
+        def mark(end: str) -> DataFrame:
+            return alive.select(
+                F.col("node").alias(end), F.lit(True).alias(f"{end}_ok")
             )
-            .join(alive.withColumnRenamed("node", "b"), "b", "left_semi")
-            .localCheckpoint(eager=True)
+
+        # outer joins keep the peeled edges up to the round's checkpoint:
+        # counted there, at the top of the plan, the stop test cannot be
+        # pruned by an empty-relation rewrite (an Observation under a
+        # semi-join's empty side is, and then never fills)
+        marked = edges.join(mark("a"), "a", "left").join(
+            mark("b"), "b", "left"
         )
+        kept = F.col("a_ok").isNotNull() & F.col("b_ok").isNotNull()
+        return changed(marked, ~kept).where(kept).select("a", "b")
+
+    edges = FX.fixpoint(edges0, peel, "kg_kcore", _KCORE_MAX_ROUNDS)
     return _materialize_release(
         degrees(edges).filter(F.col("core_degree") >= _KCORE_K), edges0
     )
@@ -1201,7 +1203,8 @@ def _kg_khop_spark(
     round is one join + one min-aggregation, and the frontier — NOT the
     full visited set — drives the next join, so round cost tracks the
     frontier size.  Plan depth is bounded by k (3 here); an unbounded-k
-    variant would localCheckpoint like the k-core peel."""
+    variant would run through fixpoint.fixpoint like the k-core peel,
+    with a checkpoint per round and a stop when the frontier is empty."""
     tri = triples if triples is not None else spark.read.parquet(
         TRIPLES_PARQUET
     )
@@ -1873,7 +1876,7 @@ def _kg_communities_spark(
 
     Scale shape: per round one edge⋈label join (both sides hash-
     partitioned on the join key) and two map-side-combinable groupBys;
-    the label frame localCheckpoints every _PR_CHECKPOINT_EVERY rounds
+    fixpoint.rounds localCheckpoints the label frame periodically
     (r8: each round references its predecessor exactly ONCE, so lazy
     chaining grows the plan linearly, not exponentially — a periodic
     truncation bounds depth at any round count while letting the rounds
@@ -1892,7 +1895,8 @@ def _kg_communities_spark(
         .distinct()
         .withColumn("label", F.col("node"))
     )
-    for it in range(n_rounds):
+
+    def lpa_step(labels: DataFrame) -> DataFrame:
         nb = (
             sym.join(
                 labels.select(
@@ -1903,7 +1907,7 @@ def _kg_communities_spark(
             .groupBy(F.col("src").alias("node"), "label")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        labels = (
+        return (
             nb.groupBy("node")
             .agg(
                 F.min(
@@ -1915,8 +1919,8 @@ def _kg_communities_spark(
             )
             .select("node", F.col("w.label").alias("label"))
         )
-        if (it + 1) % _PR_CHECKPOINT_EVERY == 0 and (it + 1) < n_rounds:
-            labels = labels.localCheckpoint(eager=True)
+
+    labels = FX.rounds(labels, lpa_step, n_rounds)
     return labels.select("node", F.col("label").alias("community"))
 
 

@@ -71,6 +71,17 @@ def test_connected_components_id_types(spark, union_find, ids, id_type, ansi):
     assert got == union_find(path)
 
 
+def _forbid_driver_actions(monkeypatch, frame, who):
+    """Make collect/count/first/take on ``frame``'s class raise, so only
+    checkpoints can act until the patches are undone."""
+
+    def no_action(*args, **kwargs):
+        raise AssertionError(f"{who} ran a driver action")
+
+    for name in ("collect", "count", "first", "take"):
+        monkeypatch.setattr(type(frame), name, no_action)
+
+
 def test_connected_components_convergence_adds_no_job(
     spark, union_find, monkeypatch
 ):
@@ -84,12 +95,7 @@ def test_connected_components_convergence_adds_no_job(
         spark.createDataFrame(paths[0], "src long, dst long"),
         spark.createDataFrame(paths[1], "src string, dst string"),
     ]
-
-    def no_action(*args, **kwargs):
-        raise AssertionError("connected_components ran a driver action")
-
-    for name in ("collect", "count", "first", "take"):
-        monkeypatch.setattr(type(frames[0]), name, no_action)
+    _forbid_driver_actions(monkeypatch, frames[0], "connected_components")
     comps = [CANON.connected_components(f) for f in frames]
     monkeypatch.undo()
     for path, comp in zip(paths, comps):
@@ -448,12 +454,28 @@ def test_triangle_count_matches_bruteforce(spark):
     assert row.clustering == round(3.0 * n_tri / n_wedges, 6)
 
 
+def _python_kcore(edges, k):
+    """Peel undirected ``edges`` with an unbounded while-loop to the
+    true fixpoint: sorted (node, core degree) of the k-core."""
+    while True:
+        deg: dict[str, int] = {}
+        for a, b in edges:
+            deg[a] = deg.get(a, 0) + 1
+            deg[b] = deg.get(b, 0) + 1
+        alive = {n for n, d in deg.items() if d >= k}
+        kept = {e for e in edges if e[0] in alive and e[1] in alive}
+        if kept == edges:
+            return sorted((n, d) for n, d in deg.items() if d >= k)
+        edges = kept
+
+
 def test_kcore_matches_unbounded_python_peel(spark):
-    """kg_kcore runs a FIXED number of peel rounds (so its DuckDB twin
-    can unroll the identical computation); this gate peels the same
-    graph with an unbounded Python while-loop to the true fixpoint and
-    asserts identical survivors + degrees — proving both the peeling
-    logic and that the fixed round count reaches convergence."""
+    """kg_kcore peels to its fixpoint; its DuckDB twin unrolls a fixed
+    _KCORE_ROUNDS rounds.  This gate peels the same graph with an
+    unbounded Python while-loop to the true fixpoint and asserts
+    identical survivors + degrees — proving the peeling logic and,
+    through the oracle pairing, that the twin's rounds reach the
+    fixpoint on the frozen graph."""
     import pandas as pd
 
     from relation_extraction_transformer_spark.plans import kg_sql as KQ
@@ -466,22 +488,39 @@ def test_kcore_matches_unbounded_python_peel(spark):
     tri = pd.read_parquet(KQ.TRIPLES_PARQUET, columns=["subj", "obj"])
     tri = tri[tri.subj != tri.obj]
     edges = {tuple(sorted(p)) for p in zip(tri.subj, tri.obj)}
-    while True:
-        deg: dict[str, int] = {}
-        for a, b in edges:
-            deg[a] = deg.get(a, 0) + 1
-            deg[b] = deg.get(b, 0) + 1
-        alive = {n for n, d in deg.items() if d >= KQ._KCORE_K}
-        kept = {e for e in edges if e[0] in alive and e[1] in alive}
-        if kept == edges:
-            break
-        edges = kept
     want = pd.DataFrame(
-        sorted((n, d) for n, d in deg.items() if d >= KQ._KCORE_K),
-        columns=["node", "core_degree"],
+        _python_kcore(edges, KQ._KCORE_K), columns=["node", "core_degree"]
     )
     assert got.node.tolist() == want.node.tolist()
     assert got.core_degree.astype(int).tolist() == want.core_degree.tolist()
+
+
+def test_kcore_peels_band_graph_to_fixpoint_and_raises_at_cap(
+    spark, monkeypatch
+):
+    """A 60-node band graph (i ~ i+1..i+4) has an empty 8-core, and
+    peeling it takes 8 rounds, more than the DuckDB twin's unroll.  The
+    Spark peel reaches the true fixpoint without a driver action (only
+    its checkpoints act), and a graph still peeling at the round cap
+    raises instead of returning survivors."""
+    from relation_extraction_transformer_spark.plans import kg_sql as KQ
+
+    band = [
+        (f"n{i:02d}", f"n{j:02d}")
+        for i in range(60)
+        for j in range(i + 1, min(i + 5, 60))
+    ]
+    edges = spark.createDataFrame(band, "a string, b string")
+    monkeypatch.setattr(KQ, "_und_edges", lambda spark, triples=None: edges)
+    with monkeypatch.context() as no_actions:
+        _forbid_driver_actions(no_actions, edges, "kg_kcore")
+        got = KQ._kg_kcore_spark(spark, "")
+    assert _python_kcore(set(band), KQ._KCORE_K) == []
+    assert got.collect() == []
+
+    monkeypatch.setattr(KQ, "_KCORE_MAX_ROUNDS", 4)
+    with pytest.raises(RuntimeError, match="kg_kcore did not converge"):
+        KQ._kg_kcore_spark(spark, "")
 
 
 def test_dup_clusters_matches_independent_union_find(spark):
@@ -548,12 +587,14 @@ def test_dup_clusters_oracle_round_scheme_converges_on_long_chains():
     assert set(labels.values()) == {0}, sorted(set(labels.values()))
 
 
-def test_pagerank_converges_and_plan_stays_bounded(spark):
+def test_pagerank_converges_and_plan_stays_bounded(spark, raw_graph_plans):
     """VERDICT r5 #5: n_iters is a parameter and the rank frame is
     localCheckpointed every 5 rounds inside the loop.  (a) successive-
     iterate L1 deltas shrink (the damped power iteration is a
     contraction), (b) plan depth at 12 iterations is no deeper than at
-    5 (the pre-r6 plan grew linearly per iteration)."""
+    5 (the pre-r6 plan grew linearly per iteration), for PageRank and
+    for label propagation, which share the loop.  The result is left
+    unmaterialized (``raw_graph_plans``), so the plan is the loop's."""
     from relation_extraction_transformer_spark.plans import kg_sql as KQ
 
     def ranks(k):
@@ -578,15 +619,20 @@ def test_pagerank_converges_and_plan_stays_bounded(spark):
     }
     assert default == r[KQ._PR_ITERS]
 
-    def plan_lines(k):
-        df = KQ._kg_pagerank_spark(spark, "", n_iters=k)
+    def plan_lines(op, **rounds):
+        df = op(spark, "", **rounds)
         return len(
             df._jdf.queryExecution().executedPlan().toString().splitlines()
         )
 
-    assert plan_lines(12) <= plan_lines(5), (
-        "in-loop localCheckpoint missing: plan grew with n_iters"
-    )
+    for op, arg in (
+        (KQ._kg_pagerank_spark, "n_iters"),
+        (KQ._kg_communities_spark, "n_rounds"),
+    ):
+        assert plan_lines(op, **{arg: 12}) <= plan_lines(op, **{arg: 5}), (
+            f"in-loop localCheckpoint missing: {op.__name__}'s plan grew "
+            f"with {arg}"
+        )
 
 
 # kg_khop / kg_link_prediction brute-force parity ---------------------------

@@ -50,6 +50,16 @@ def _canon_map(spark, canon_dir, version):
     return _node_map(IC.read_canon_state(spark, f"{canon_dir}/v{version}")[0])
 
 
+def _write_crawl_in_two_days(pages, pages_dir):
+    """Write day 1 (the quarter with ``crc32(url) % 4 == 0``) as two
+    files, then the rest, so the stream's first micro-batch folds day 1
+    and a later one folds names day 1 never saw.  A round-robin split
+    of the whole crawl puts every name in the first micro-batch."""
+    day1 = F.crc32("url") % 4 == 0
+    pages.where(day1).repartition(2).write.parquet(pages_dir)
+    pages.where(~day1).repartition(2).write.mode("append").parquet(pages_dir)
+
+
 def test_streamed_fold_equals_batch_rebuild_and_replay_is_noop(
     spark, tmp_path, monkeypatch
 ):
@@ -59,7 +69,7 @@ def test_streamed_fold_equals_batch_rebuild_and_replay_is_noop(
     re-delivered batch is a committed-version no-op."""
     pages = spark.read.parquet(PAGES)
     pages_dir = str(tmp_path / "pages")
-    pages.repartition(4).write.parquet(pages_dir)
+    _write_crawl_in_two_days(pages, pages_dir)
     state_dir, canon_dir = str(tmp_path / "state"), str(tmp_path / "canon")
     os.makedirs(state_dir)
     os.makedirs(canon_dir)
@@ -82,6 +92,9 @@ def test_streamed_fold_equals_batch_rebuild_and_replay_is_noop(
     )
     assert streamed == rebuilt
     canon = _canon_map(spark, canon_dir, n_versions)
+    assert len(canon) > len(_canon_map(spark, canon_dir, 1)), (
+        "no later micro-batch folded a new name"
+    )
     triples = PL.triples_plan(pages, spark, keep_probs=False)
     assert canon == _node_map(IC.canon_state(IC.mention_names(triples)))
 
@@ -113,7 +126,7 @@ def test_streamed_canon_fold_equals_batch_rebuild_and_replay_is_noop(
 
     pages = spark.read.parquet(PAGES)
     pages_dir = str(tmp_path / "pages")
-    pages.repartition(4).write.parquet(pages_dir)
+    _write_crawl_in_two_days(pages, pages_dir)
     state_dir, canon_dir = str(tmp_path / "state"), str(tmp_path / "canon")
     os.makedirs(state_dir)
     os.makedirs(canon_dir)
@@ -127,6 +140,9 @@ def test_streamed_canon_fold_equals_batch_rebuild_and_replay_is_noop(
     n_versions = INC.latest_version(canon_dir)
     assert n_versions >= 2, "expected multiple micro-batches"
     streamed = _canon_map(spark, canon_dir, n_versions)
+    assert len(streamed) > len(_canon_map(spark, canon_dir, 1)), (
+        "no later micro-batch folded a new name"
+    )
 
     # an independent oracle for IC.mention_names
     triples = PL.triples_plan(pages, spark, keep_probs=False)
