@@ -26,9 +26,12 @@ Scale shape: building state from a delta is one url-keyed join
 projection plus two map-side-combinable groupBys (stats on the edge key,
 registers on (edge, bucket)); merging two states is a unionAll plus the
 same two groupBys — the raw deltas are never re-read.  The report joins
-stats with the per-edge estimate on the edge key (both sides already
-hash-partitioned on it by their aggregations, so AQE plans a
-shuffle-reuse join).
+stats with the per-edge estimate (a groupBy of the registers) on the
+edge key.
+
+Stored layout (:func:`write_edge_state`): zstd parquet, each file's
+rows sorted by its key.  That is all a state read back carries: no
+partitioning, so the next fold's merge shuffles both sides again.
 """
 
 from __future__ import annotations
@@ -44,6 +47,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import sketches as SK
+from ..sources import tables as TB
 
 EDGE_KEYS = ["subj", "pred", "obj"]
 
@@ -149,10 +153,20 @@ def write_edge_state(state: EdgeState, path: str) -> None:
     """Persist standing state as two parquet datasets (``stats/`` and
     ``regs/``) — the durable handoff between daily fold-in jobs.  Both
     frames are edge-keyed aggregates, orders of magnitude smaller than
-    the raw crawl; writing them partitioned-as-aggregated keeps the next
-    fold's merge a local groupBy after the union."""
-    state.stats.write.mode("overwrite").parquet(os.path.join(path, "stats"))
-    state.regs.write.mode("overwrite").parquet(os.path.join(path, "regs"))
+    the raw crawl.  Both go through the one table writer: zstd, each
+    file's rows sorted by its key (``stats`` by the edge key, ``regs``
+    by edge key and bucket), so equal and near-equal values sit next to
+    each other in every column.  Always parquet: a version is committed
+    by renaming its directory (:func:`fold_version`), never through a
+    catalog."""
+    TB.write_table(
+        state.stats, os.path.join(path, "stats"), fmt="parquet",
+        cluster_by=EDGE_KEYS,
+    )
+    TB.write_table(
+        state.regs, os.path.join(path, "regs"), fmt="parquet",
+        cluster_by=EDGE_KEYS + ["bucket"],
+    )
 
 
 def read_edge_state(spark: SparkSession, path: str) -> EdgeState:

@@ -35,7 +35,9 @@ State layout: the versioned directories of the edge rollup in
 operators/incremental.py (a version is committed by renaming its fully
 written staging directory to ``v<N>``; the newest ``v<N>`` is the
 standing state), but each version holds only what its fold ADDED, as
-one immutable parquet **segment**, plus a manifest
+one immutable parquet **segment** (zstd, rows sorted by ``node_id``;
+a log written before zstd was the codec mixes codecs across segments,
+which parquet reads per file), plus a manifest
 (:func:`~.incremental.write_manifest`) listing, oldest first, the
 segments of every version that make up its state.  The state is one
 dataset, ``nodes``: (node_id, name, component) — each segment holds the
@@ -84,6 +86,7 @@ from pyspark.sql import functions as F
 from . import canonicalize as CANON
 from . import incremental as INC
 from . import linking as LINK
+from ..sources import tables as TB
 
 # the datasets a version's manifest lists
 DATASETS = ("nodes",)
@@ -288,9 +291,13 @@ def _tree_bytes(path: str) -> int:
 
 
 def _write_segment(df: DataFrame, path: str) -> int:
-    """Write one segment; its row count is observed on the write."""
+    """Write one segment, clustered by ``node_id``; its row count is
+    observed on the write."""
     n = Observation()
-    df.observe(n, F.count(F.lit(1)).alias("n")).write.parquet(path)
+    TB.write_table(
+        df.observe(n, F.count(F.lit(1)).alias("n")), path, fmt="parquet",
+        mode="error", cluster_by=["node_id"],
+    )
     return n.get["n"]
 
 

@@ -9,7 +9,8 @@ Completes the north-rule pipeline after triple extraction:
           -> edges (src, pred, dst, weight, prob aggregates, source urls)
 
 Written back as parquet here (Iceberg in production — identical DataFrame
-code path; the sandbox has no Iceberg jars).
+code path; the sandbox has no Iceberg jars): zstd, nodes sorted by
+``canonical_id`` and edges by ``(src, pred, dst)`` within each file.
 """
 
 from __future__ import annotations
@@ -144,5 +145,7 @@ def write_graph(
 ) -> None:
     from ..sources.tables import write_table
 
-    write_table(nodes, f"{base_path}/nodes")
-    write_table(edges, f"{base_path}/edges")
+    write_table(nodes, f"{base_path}/nodes", cluster_by=["canonical_id"])
+    write_table(
+        edges, f"{base_path}/edges", cluster_by=["src", "pred", "dst"]
+    )

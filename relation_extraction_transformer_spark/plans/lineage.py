@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Observation
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig, DEFAULT_PIPELINE
+from ..sources.tables import write_table
 from . import pipeline as PL
 
 
@@ -71,9 +72,10 @@ def write_bucketed_pages(
 ) -> None:
     """Materialize pages partitioned by the resume bucket key (the
     production layout: each resume group then prunes to its own files)."""
-    pages.withColumn("bucket", _bucket(n_buckets)).write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(path)
+    write_table(
+        pages.withColumn("bucket", _bucket(n_buckets)), path, fmt="parquet",
+        partition_by=["bucket"], cluster_by=["url"],
+    )
 
 
 def materialize_triples_resumable(
@@ -130,11 +132,9 @@ def materialize_triples_resumable(
             obs, F.count(F.lit(1)).alias("rows_out")
         )
 
-        (
-            triples.write.mode("overwrite")
-            .partitionBy("bucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(f"{out_path}/triples")
+        write_table(
+            triples, f"{out_path}/triples", fmt="parquet", mode="dynamic",
+            partition_by=["bucket"], cluster_by=["url", "sent_id", "pair_id"],
         )
         wall_ms = int((time.perf_counter() - t0) * 1000)
         rows_out = int(obs.get["rows_out"])
@@ -145,17 +145,24 @@ def materialize_triples_resumable(
             (run_id, b, n_buckets, rows_out, wall_ms, int(time.time()))
             for b in group
         ]
-        spark.createDataFrame(
-            manifest_rows,
-            "run_id string, bucket int, n_buckets int, group_rows_out long, "
-            "wall_ms long, finished_ts long",
-        ).write.mode("append").parquet(_manifest_path(out_path))
-
-        spark.createDataFrame(
-            [(run_id, "triples", ",".join(map(str, group)), rows_out, wall_ms)],
-            "run_id string, stage string, buckets string, rows_out long, "
-            "wall_ms long",
-        ).write.mode("append").parquet(f"{out_path}/_metrics")
+        write_table(
+            spark.createDataFrame(
+                manifest_rows,
+                "run_id string, bucket int, n_buckets int, "
+                "group_rows_out long, wall_ms long, finished_ts long",
+            ),
+            _manifest_path(out_path), fmt="parquet", mode="append",
+            cluster_by=["bucket"],
+        )
+        write_table(
+            spark.createDataFrame(
+                [(run_id, "triples", ",".join(map(str, group)), rows_out,
+                  wall_ms)],
+                "run_id string, stage string, buckets string, rows_out long, "
+                "wall_ms long",
+            ),
+            f"{out_path}/_metrics", fmt="parquet", mode="append",
+        )
         done_now.extend(group)
 
     return RunReport(

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig, DEFAULT_PIPELINE
 from ..plans import pipeline as PL
+from ..sources import tables as TB
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -122,6 +123,7 @@ def run_stream_to_parquet(
         stream_df.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_path)
         .format("parquet")
+        .option("compression", TB.PARQUET_CODEC)
         .option("path", out_path)
     )
     return _start(writer, once)

@@ -60,6 +60,7 @@ def main() -> None:
         inference as INF,
         scorer as SC,
     )
+    from relation_extraction_transformer_spark.sources import tables as TB
     from relation_extraction_transformer_spark.sources import tacred as TJ
 
     examples = TJ.read_tacred_json(spark, args.data)
@@ -105,10 +106,13 @@ def main() -> None:
     print(f"       F1 (micro): {m.f1_micro:.3%}")
 
     if args.out:
-        predicted.select(
-            "example_id", "gold_relation", "pred", "pred_label", "prob",
-            "probs",
-        ).write.mode("overwrite").parquet(args.out)
+        TB.write_table(
+            predicted.select(
+                "example_id", "gold_relation", "pred", "pred_label", "prob",
+                "probs",
+            ),
+            args.out, fmt="parquet", cluster_by=["example_id"],
+        )
         print(f"\nPredictions saved to {args.out}")
 
     spark.stop()

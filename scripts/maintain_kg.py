@@ -137,6 +137,11 @@ def main(argv=None) -> int:
 
     from pyspark.sql import SparkSession
 
+    from relation_extraction_transformer_spark.operators import (
+        incremental as INC,
+    )
+    from relation_extraction_transformer_spark.sources import tables as TB
+
     spark = (
         SparkSession.builder.appName("maintain_kg")
         .config("spark.sql.session.timeZone", "UTC")
@@ -149,11 +154,13 @@ def main(argv=None) -> int:
             canon_state_dir=args.canon_state,
         )
         if args.report_out:
-            report.write.mode("overwrite").parquet(
-                os.path.join(args.report_out, "report")
+            TB.write_table(
+                report, os.path.join(args.report_out, "report"),
+                fmt="parquet", cluster_by=INC.EDGE_KEYS,
             )
-            conflicts.write.mode("overwrite").parquet(
-                os.path.join(args.report_out, "conflicts")
+            TB.write_table(
+                conflicts, os.path.join(args.report_out, "conflicts"),
+                fmt="parquet", cluster_by=["subj", "pred"],
             )
         print(json.dumps(summary))
     finally:
