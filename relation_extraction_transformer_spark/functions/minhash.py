@@ -1,14 +1,17 @@
 """Shared MinHash / LSH-band core.
 
-One parameterized implementation used by BOTH near-dup surfaces so the
-LSH parameters (k, bands, salt format, band digest) and the exact
-Jaccard verification (:func:`verify_pairs`) cannot diverge:
+One implementation used by BOTH near-dup surfaces so the LSH
+parameters (k, bands, salt format, band digest) and the exact Jaccard
+verification (:func:`verify_pairs`) cannot diverge:
 
 - document near-dup (plans/sql_queries.py: minhash_bands,
-  minhash_candidate_pairs, ngram_jaccard_buckets) over word 3-gram
-  shingles
-- entity canonicalization (operators/canonicalize.py) over char 3-gram
-  shingles of normalized names
+  minhash_candidate_pairs, ngram_jaccard_buckets) over word
+  :data:`WORD_SHINGLE_N`-gram shingles
+- entity canonicalization (operators/canonicalize.py) over char
+  :data:`CHAR_SHINGLE_N`-gram shingles of normalized names
+
+The LSH shape and both shingle sizes are the constants below, not
+arguments: each Spark form and its DuckDB twin reads them when called.
 
 Scale shape (round-3 rewrite): signatures are NARROW — one projection
 computes the per-shingle base hashes as an array column and each of the k
@@ -42,6 +45,8 @@ from pyspark.sql import functions as F
 
 MINHASH_K = 8
 MINHASH_BANDS = 2  # 2 bands x 4 rows
+CHAR_SHINGLE_N = 3  # entity names: character trigrams of ^name$
+WORD_SHINGLE_N = 3  # documents: word 3-grams
 
 _P = (1 << 31) - 1  # Mersenne prime; (h%P)*a + b stays well under 2^63
 
@@ -76,15 +81,17 @@ BASE_HASH_DUCK = "CAST(('0x' || substr(md5({x}), 2, 15)) AS BIGINT)"
 _WORD_A = 1103515245
 
 
-def word_shingle_hashes_sql(text: str, n: int = 3) -> str:
-    """Word n-gram shingle HASHES without building shingle strings: hash
-    each token once (md5 -> 60-bit -> mod P), then combine n consecutive
-    token hashes with a Horner chain mod P.  Round 3 measurement: the
+def word_shingle_hashes_sql(text: str) -> str:
+    """Word n-gram (n = :data:`WORD_SHINGLE_N`) shingle HASHES without
+    building shingle strings: hash each token once (md5 -> 60-bit ->
+    mod P), then combine n consecutive token hashes with a Horner chain
+    mod P.  Round 3 measurement: the
     round-2 form spent most of its time in split+slice+concat_ws string
     construction, not in md5 — hashing tokens and combining
     arithmetically removes the string building entirely.  Short texts
     fall back to the whole-text hash (one shingle).  DuckDB twin:
     :func:`duck_word_shingle_hashes` (identical arithmetic)."""
+    n = WORD_SHINGLE_N
     th = f"transform(split({text}, ' '), t -> {base_hash_sql('t')} % {_P})"
     # Horner chain via slice + zip_with, NOT element_at inside a lambda:
     # a lambda body referencing th would re-evaluate the whole token-hash
@@ -103,11 +110,12 @@ def word_shingle_hashes_sql(text: str, n: int = 3) -> str:
     )
 
 
-def duck_word_shingle_hashes(text_col: str, n: int = 3) -> str:
+def duck_word_shingle_hashes(text_col: str) -> str:
     """DuckDB twin of :func:`word_shingle_hashes_sql` — same base hash, same
     mod-P Horner combination, 1-based list indexing.  The token-hash
     array is inlined at each use (no CTE/subquery needed by callers); the
     oracle recomputing it is irrelevant at gate scale."""
+    n = WORD_SHINGLE_N
     base = BASE_HASH_DUCK.format(x="t")
     th = f"list_transform(string_split({text_col}, ' '), t -> ({base}) % {_P})"
     acc = f"({th})[i]"
@@ -121,9 +129,10 @@ def duck_word_shingle_hashes(text_col: str, n: int = 3) -> str:
     )
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Word n-gram shingles of a space-tokenized text column; short texts
-    fall back to the whole text as a single shingle."""
+def word_shingles(col: Column) -> Column:
+    """Word :data:`WORD_SHINGLE_N`-gram shingles of a space-tokenized text
+    column; short texts fall back to the whole text as one shingle."""
+    n = WORD_SHINGLE_N
     toks = F.split(col, " ")
     return F.when(
         F.size(toks) >= n,
@@ -134,9 +143,10 @@ def word_shingles(col: Column, n: int = 3) -> Column:
     ).otherwise(F.array(col))
 
 
-def char_shingles_sql(text: str, n: int = 3) -> str:
-    """Character n-gram shingles of ^text$ (boundary-marked); short
-    strings fall back to the whole marked string."""
+def char_shingles_sql(text: str) -> str:
+    """Character :data:`CHAR_SHINGLE_N`-gram shingles of ^text$ (boundary-
+    marked); short strings fall back to the whole marked string."""
+    n = CHAR_SHINGLE_N
     s = f"concat('^', {text}, '$')"
     return (
         f"CASE WHEN length({s}) >= {n} "
@@ -150,8 +160,6 @@ def minhash_bands(
     df: DataFrame,
     id_col: str,
     shingles: str | None = None,
-    k: int = MINHASH_K,
-    bands: int = MINHASH_BANDS,
     hashes: str | None = None,
 ) -> DataFrame:
     """(id_col, shingle-array SQL) -> (id_col, band, band_hash), one row
@@ -171,6 +179,7 @@ def minhash_bands(
         if shingles is None:
             raise ValueError("minhash_bands: pass either shingles or hashes")
         hashes = f"transform({shingles}, s -> {base_hash_sql('s')})"
+    k, bands = MINHASH_K, MINHASH_BANDS
     rows_per_band = k // bands
     hashed = df.selectExpr(id_col, f"{hashes} AS __hs")
     sigs = hashed.selectExpr(
@@ -205,7 +214,8 @@ def _affine_sql(h: str, k: int) -> str:
 # ---- DuckDB twins (used by plans/sql_queries.py and plans/kg_sql.py) ----
 
 
-def duck_word_shingles(text_col: str, n: int = 3) -> str:
+def duck_word_shingles(text_col: str) -> str:
+    n = WORD_SHINGLE_N
     toks = f"string_split({text_col}, ' ')"
     return (
         f"CASE WHEN len({toks}) >= {n} THEN "
@@ -215,7 +225,8 @@ def duck_word_shingles(text_col: str, n: int = 3) -> str:
     )
 
 
-def duck_char_shingles(col: str, n: int = 3) -> str:
+def duck_char_shingles(col: str) -> str:
+    n = CHAR_SHINGLE_N
     mk = f"('^' || {col} || '$')"
     return (
         f"CASE WHEN len({mk}) >= {n} THEN "
@@ -229,8 +240,6 @@ def duck_minhash_ctes(
     id_col: str,
     shingles_expr: str | None = None,
     prefix: str = "mh",
-    k: int = MINHASH_K,
-    bands: int = MINHASH_BANDS,
     hashes_expr: str | None = None,
 ) -> str:
     """CTE text '<prefix>_sh AS (...), <prefix>_sigs AS (...),
@@ -239,6 +248,7 @@ def duck_minhash_ctes(
     narrow array expressions — same min over the same affine transforms
     of the same base hashes, so values are identical).  Embed after a
     WITH keyword."""
+    k, bands = MINHASH_K, MINHASH_BANDS
     rows_per_band = k // bands
     sig_cols = ", ".join(f"MIN({_affine_sql('h', i)}) AS sig{i}" for i in range(k))
     band_selects = " UNION ALL ".join(

@@ -19,7 +19,7 @@ SUBJECT_TYPES = ("PERSON", "ORGANIZATION")
 
 
 def generate_pairs(
-    mentions_df: DataFrame, max_pairs_per_sentence: int = 12
+    mentions_df: DataFrame, max_pairs_per_sentence: int
 ) -> DataFrame:
     """mentions_df: url, sent_id, tokens, mentions array<struct<m_start,
     m_end, surface, ner_type>> (sorted) -> one row per candidate pair."""

@@ -10,8 +10,9 @@ canonical node:
 2. LSH band self-join -> candidate equivalence edges (only pairs sharing
    a band are ever compared: at 10^12 scale this is the only join that
    matters, and it is an equi-join on band_hash, AQE-skew-splittable)
-3. verification: trigram Jaccard >= threshold on candidate pairs (the
-   shared ``MH.verify_pairs``, also used by document dedup)
+3. verification: trigram Jaccard >= :data:`JACCARD_THRESHOLD` on
+   candidate pairs (the shared ``MH.verify_pairs``, also used by
+   document dedup)
 4. connected components by iterative min-label propagation, run to its
    fixpoint by operators/fixpoint.py (a ``localCheckpoint`` per round
    cuts lineage growth, SURVEY §4) — the Spark-idiomatic form of
@@ -20,6 +21,11 @@ canonical node:
 5. labelling: every item takes its component's lowest id; an item in no
    verified pair is its own component (:func:`label_components`, also
    used by document dedup).
+
+Which names are one entity is fixed by constants that both engines
+read when called: :data:`JACCARD_THRESHOLD` here, the LSH shape and
+``CHAR_SHINGLE_N`` in functions/minhash.py.  No call takes its own, so a
+canonical state is only foldable under the values it was built with.
 """
 
 from __future__ import annotations
@@ -29,6 +35,10 @@ from pyspark.sql import functions as F
 
 from ..functions import minhash as MH
 from . import fixpoint as FX
+
+# the trigram-Jaccard similarity at or above which two names are one entity
+JACCARD_THRESHOLD = 0.6
+_CC_MAX_ROUNDS = 15
 
 
 def minhash_band_hashes(df: DataFrame, text_col: str) -> DataFrame:
@@ -44,7 +54,7 @@ def candidate_pairs(bands_df: DataFrame) -> DataFrame:
 
 
 def verify_pairs_jaccard(
-    pairs: DataFrame, names: DataFrame, threshold: float = 0.6
+    pairs: DataFrame, names: DataFrame, threshold: float
 ) -> DataFrame:
     """Exact trigram-Jaccard verification of LSH candidates: names
     (node_id, name) -> the (src, dst) pairs at or above ``threshold``,
@@ -59,15 +69,13 @@ def verify_pairs_jaccard(
     )
 
 
-def canonical_components(
-    names: DataFrame, threshold: float = 0.6
-) -> DataFrame:
+def canonical_components(names: DataFrame) -> DataFrame:
     """names (node_id, name) -> components: LSH bands, their candidate
-    pairs, the Jaccard-verified pairs and the connected components over
-    those.  The result holds only the names in some verified pair;
-    :func:`label_components` labels the rest."""
-    bands = minhash_band_hashes(names, "name")
-    verified = verify_pairs_jaccard(candidate_pairs(bands), names, threshold)
+    pairs, the pairs verified at :data:`JACCARD_THRESHOLD` and the
+    connected components over those.  The result holds only the names
+    in some verified pair; :func:`label_components` labels the rest."""
+    pairs = candidate_pairs(minhash_band_hashes(names, "name"))
+    verified = verify_pairs_jaccard(pairs, names, JACCARD_THRESHOLD)
     return connected_components(verified)
 
 
@@ -86,9 +94,7 @@ def label_components(
     )
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 15
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """(src, dst) undirected edges -> (node_id, component) with component =
     min node_id reachable.  Iterative min-label propagation; each round is
     one shuffle; ``localCheckpoint`` truncates lineage so the plan does not
@@ -96,7 +102,7 @@ def connected_components(
     label shortcutting (labels jump to the component minimum, not just the
     neighbor minimum).  :func:`fixpoint.fixpoint` stops at the first round
     in which no label changed (any id type) and raises ``RuntimeError``
-    if labels still change in round ``max_iter``.
+    if labels still change in round :data:`_CC_MAX_ROUNDS`.
     """
     # the symmetric edge list is referenced by EVERY round's propagation
     # join; checkpoint it once so rounds read a materialized frame
@@ -145,4 +151,5 @@ def connected_components(
             relabelled, F.col("component") != F.col("old")
         ).select("node_id", "component")
 
-    return FX.fixpoint(labels, propagate, "connected_components", max_iter)
+    return FX.fixpoint(labels, propagate, "connected_components",
+                       _CC_MAX_ROUNDS)

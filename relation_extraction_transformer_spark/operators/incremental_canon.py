@@ -60,6 +60,11 @@ of deleting it.
 (the rule :func:`mention_names` applies), so re-observing a known
 surface is a no-op (dropped by an anti-join).
 
+A state is only foldable under the values it was built with: the
+fold law needs every fold to use ``canonicalize.JACCARD_THRESHOLD`` and
+functions/minhash.py's LSH shape and ``CHAR_SHINGLE_N``, constants that
+no fold can override.
+
 Scale shape: the standing nodes are resolved once per fold (one
 shuffle on node_id over the live segments, checkpointed); then one
 anti-join (new vs known), one band build over the delta, two
@@ -105,14 +110,12 @@ def mention_names(triples: DataFrame) -> DataFrame:
     )
 
 
-def canon_state(
-    mentions: DataFrame, jaccard_threshold: float = 0.6
-) -> DataFrame:
+def canon_state(mentions: DataFrame) -> DataFrame:
     """Bootstrap (or rebuild) the canonical map from scratch:
     ``mentions`` = (node_id, name) with node_id a deterministic function
     of name.  Returns the nodes (node_id, name, component)."""
     names = mentions.select("node_id", "name").distinct()
-    comps = CANON.canonical_components(names, jaccard_threshold)
+    comps = CANON.canonical_components(names)
     return CANON.label_components(names, comps)
 
 
@@ -169,9 +172,7 @@ def read_canon_state(
 
 
 def fold_into(
-    std_nodes: DataFrame,
-    delta_names: DataFrame,
-    jaccard_threshold: float = 0.6,
+    std_nodes: DataFrame, delta_names: DataFrame
 ) -> tuple[DataFrame, dict]:
     """The pure fold: standing nodes + delta mentions -> the rows the
     fold adds, (nodes, stats).  ``nodes`` holds the new nodes and the
@@ -210,7 +211,7 @@ def fold_into(
     )
     all_names = std_nodes.select("node_id", "name").unionByName(new_names)
     verified = CANON.verify_pairs_jaccard(
-        dd.unionByName(ds), all_names, jaccard_threshold
+        dd.unionByName(ds), all_names, CANON.JACCARD_THRESHOLD
     ).localCheckpoint(eager=True)
     # reduce standing endpoints to their component super-node
     comp_of = std_nodes.select("node_id", "component")
@@ -302,11 +303,7 @@ def _write_segment(df: DataFrame, path: str) -> int:
 
 
 def write_canon_fold(
-    spark: SparkSession,
-    mentions: DataFrame,
-    base: str | None,
-    out: str,
-    jaccard_threshold: float = 0.6,
+    spark: SparkSession, mentions: DataFrame, base: str | None, out: str
 ) -> dict:
     """The canonical fold's ``write(base, out)`` for
     :func:`~.incremental.fold_version`, folding (node_id, name)
@@ -314,7 +311,7 @@ def write_canon_fold(
     delta_names = mentions.select("node_id", "name").distinct()
     if base is None:
         segs, frames = [], []
-        nodes = canon_state(delta_names, jaccard_threshold)
+        nodes = canon_state(delta_names)
         stats = {"touched_components": 0, "relabelled_nodes": 0}
         planned = 0
     else:
@@ -324,8 +321,7 @@ def write_canon_fold(
         segs = INC.read_manifest(base)["nodes"]
         frames = _read_segments(spark, base)["nodes"]
         nodes, stats = fold_into(
-            resolve_nodes(frames).localCheckpoint(eager=True),
-            delta_names, jaccard_threshold,
+            resolve_nodes(frames).localCheckpoint(eager=True), delta_names
         )
         planned = stats["new_nodes"] + stats["relabelled_nodes"]
     start = _merge_from([r for _, r in segs], planned)
@@ -361,7 +357,6 @@ def fold_mentions_delta(
     mentions: DataFrame,
     state_dir: str,
     version: int | None = None,
-    jaccard_threshold: float = 0.6,
 ) -> dict:
     """Fold one delta of entity mentions — (node_id, name) rows — into
     the standing canonical map under ``state_dir`` through
@@ -369,8 +364,6 @@ def fold_mentions_delta(
     as ``incremental.fold_pages_delta`` folds a crawl delta's names."""
     summary = INC.fold_version(
         state_dir, version,
-        lambda base, out: write_canon_fold(
-            spark, mentions, base, out, jaccard_threshold
-        ),
+        lambda base, out: write_canon_fold(spark, mentions, base, out),
     )
     return canon_fold_summary(state_dir, summary)

@@ -60,7 +60,6 @@ def pos_tags_sql(tokens: str) -> str:
 def detect_mentions(
     tokenized: DataFrame,
     gaz_map: dict[str, str] | None = None,
-    max_phrase_tokens: int = G.MAX_PHRASE_TOKENS,
 ) -> DataFrame:
     """Longest-match gazetteer NER against a SMALL dictionary, entirely as
     array expressions over a map literal — no join, no explode, no shuffle.
@@ -70,15 +69,13 @@ def detect_mentions(
     Output: url, sent_id, tokens, mentions array<struct> (sorted).
     """
     gaz_map = gaz_map if gaz_map is not None else G.build_gazetteer()
-    mentions = _mentions_sql(sorted(gaz_map.items()), max_phrase_tokens)
+    mentions = _mentions_sql(sorted(gaz_map.items()))
     return tokenized.select(
         "url", "sent_id", "tokens", F.expr(mentions).alias("mentions")
     )
 
 
-def _mentions_sql(
-    gaz_items: list[tuple[str, str]], max_phrase_tokens: int
-) -> str:
+def _mentions_sql(gaz_items: list[tuple[str, str]]) -> str:
     """The mentions expression over the ``tokens`` column, as SQL text."""
     gmap = M.sql_map(dict(gaz_items))
     # Catalyst's GetMapValue on a literal map is a LINEAR scan of all
@@ -99,7 +96,7 @@ def _mentions_sql(
         f"THEN transform(sequence(0, size(tokens) - {n}), "
         f"i -> struct(i AS m_start, i + {n} - 1 AS m_end)) "
         "ELSE CAST(array() AS ARRAY<STRUCT<m_start: INT, m_end: INT>>) END"
-        for n in range(1, max_phrase_tokens + 1)
+        for n in range(1, G.MAX_PHRASE_TOKENS + 1)
     )
     candidates = (
         f"transform(filter(concat({bare}), "

@@ -23,9 +23,7 @@ from ..operators import linking as LINK
 
 
 def build_graph(
-    triples: DataFrame,
-    spark: SparkSession,
-    jaccard_threshold: float = 0.6,
+    triples: DataFrame, spark: SparkSession
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (nodes, edges).
 
@@ -76,8 +74,7 @@ def build_graph(
     comps = CANON.canonical_components(
         raw_nodes.select(
             "node_id", LINK.normalize_surface(F.col("name")).alias("name")
-        ),
-        jaccard_threshold,
+        )
     )
     canon_map = CANON.label_components(
         raw_nodes, comps, out="canonical_id"

@@ -33,7 +33,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..config import DEFAULT_PIPELINE
 from ..functions import minhash as MH
+from ..operators import canonicalize as CANON
 from ..operators import fixpoint as FX
 from ..sources import gazetteer as G
 from .sql_queries import QuerySpec
@@ -179,7 +181,7 @@ def _kg_candidates_oracle() -> str:
     SELECT url, CAST(sent_id AS INT) AS sent_id,
            CAST(pair_id AS INT) AS pair_id,
            subj_surface, subj_type, obj_surface, obj_type
-    FROM pairs WHERE pair_id < 12
+    FROM pairs WHERE pair_id < {DEFAULT_PIPELINE.max_pairs_per_sentence}
     """
 
 
@@ -202,7 +204,7 @@ KG_REGISTRY["kg_candidates"] = QuerySpec(
 # kg_nodes / kg_edges -------------------------------------------------------
 
 
-def _graph_common_sql(jaccard_threshold: float = 0.6) -> str:
+def _graph_common_sql() -> str:
     """CTE chain from the frozen triples parquet to canon_map/linked —
     the DuckDB twin of operators/linking.py + operators/canonicalize.py +
     plans/graph.py:24-69 (connected components as a recursive CTE)."""
@@ -286,7 +288,7 @@ def _graph_common_sql(jaccard_threshold: float = 0.6) -> str:
                     JOIN dsh b ON b.node_id = c.dst
       )
       WHERE CAST(inter_cnt AS DOUBLE) / (na + nb - inter_cnt)
-            >= {jaccard_threshold}
+            >= {CANON.JACCARD_THRESHOLD}
     ),
     sym AS (
       SELECT src, dst FROM verified
@@ -308,15 +310,16 @@ def _graph_common_sql(jaccard_threshold: float = 0.6) -> str:
     )"""
 
 
-KG_REGISTRY["kg_nodes"] = QuerySpec(
-    spark=None,  # filled below
-    oracle=_graph_common_sql()
-    + """
+_KG_NODES_SELECT = """
     SELECT canonical_id, min_by(name, node_id) AS name,
            CAST(SUM(mention_count) AS BIGINT) AS mention_count,
            count(*) AS merged_surface_forms
     FROM canon_map GROUP BY canonical_id
-    """,
+    """
+
+KG_REGISTRY["kg_nodes"] = QuerySpec(
+    spark=None,  # filled below
+    oracle=_graph_common_sql() + _KG_NODES_SELECT,
 )
 
 KG_REGISTRY["kg_edges"] = QuerySpec(
@@ -1502,7 +1505,7 @@ def _kg_canonical_map_incremental_spark(
     what the DuckDB oracle computes.  The driver's hash comparison IS
     the fold==rebuild law for canonical ids, checked cross-engine.
 
-    The fixture's 127 surfaces share no 0.6-Jaccard pairs, so — like
+    The fixture's 127 surfaces share no pair at the threshold, so — like
     dedup_exact / media_dedup — the query self-plants near-duplicate
     variants (``name || ' co'`` for every surface whose stable id is
     ≡ 0 mod 5) identically in both engines, proving the MERGE path of
@@ -1570,7 +1573,7 @@ def _canonical_map_incremental_oracle() -> str:
         FROM cand c JOIN dsh a ON a.node_id = c.src
                     JOIN dsh b ON b.node_id = c.dst
       )
-      WHERE CAST(inter_cnt AS DOUBLE) / (na + nb - inter_cnt) >= 0.6
+      WHERE CAST(inter_cnt AS DOUBLE) / (na + nb - inter_cnt) >= {CANON.JACCARD_THRESHOLD}
     ),
     sym AS (
       SELECT src, dst FROM verified

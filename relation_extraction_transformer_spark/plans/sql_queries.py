@@ -69,11 +69,12 @@ def tb(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     Use ONLY where the per-row compute dwarfs a row's shuffle cost —
     the minhash signature build (per-token md5 + Horner + k affine
-    minima per document), the shingle-array construction of the Jaccard
-    verify stage, and the DECIMAL fact-side aggregation of the TPC-H
-    core.  Measured r8: the same balancing applied to explode+aggregate
-    queries (vocab counts, simhash bit sums, HLL/CMS sketches) made
-    them SLOWER — their single-task compute is smaller than the added
+    minima per document) and the shingle-array construction of the
+    Jaccard verify stage, each about twice as fast with it in 10 of 10
+    interleaved pairs.  The same balancing made explode+aggregate
+    queries (vocab counts, simhash bit sums, HLL/CMS sketches) and the
+    TPC-H lineitem scans (q1 lost 8 of 10 pairs, q3 was slower in r8)
+    SLOWER — their single-task compute is smaller than the added
     exchange + extra stage, so those read with t().
 
     Detection is BYTES-based, not split-count-based: Spark's
@@ -127,10 +128,7 @@ register(
     GROUP BY l_returnflag, l_linestatus
     """,
 )(
-    # r8: tb() — the single-row-group testdata file otherwise runs the
-    # whole DECIMAL partial aggregation in one task (identity at
-    # production split counts)
-    lambda spark, sf: tb(spark, sf, "lineitem")
+    lambda spark, sf: t(spark, sf, "lineitem")
     .filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
     .groupBy("l_returnflag", "l_linestatus")
     .agg(
@@ -170,10 +168,6 @@ register(
         F.col("c_custkey") == F.col("o_custkey"),
     )
     .join(
-        # r8: tb() measured a LOSS here (the lineitem side feeds a
-        # broadcast-join probe chain, not a direct aggregation — the
-        # added exchange costs more than the parallel probe saves);
-        # only q1's scan->aggregate shape keeps the balanced read
         t(spark, sf, "lineitem").filter(
             F.col("l_shipdate") > F.lit("1998-03-15").cast("timestamp")
         ),
@@ -842,12 +836,6 @@ register(
 
 from ..functions import minhash as MH
 
-_MINHASH_K = MH.MINHASH_K
-_MINHASH_BANDS = MH.MINHASH_BANDS  # 2 bands x 4 rows
-
-
-_spark_shingles = MH.word_shingles  # shared LSH core (functions/minhash.py)
-
 _DUCK_SHINGLES = MH.duck_word_shingles("text")  # Jaccard verify stage
 
 # the DuckDB twin of MH.minhash_bands over the documents table; embed
@@ -871,8 +859,6 @@ def _spark_minhash_bands(spark, sf):
         tb(spark, sf, "documents"),
         "doc_id",
         hashes=MH.word_shingle_hashes_sql("text"),
-        k=_MINHASH_K,
-        bands=_MINHASH_BANDS,
     )
 
 
@@ -907,7 +893,7 @@ def _spark_ngram_jaccard(spark, sf):
     # web scale; this is the exact-verify stage over LSH candidates
     pairs = _spark_minhash_pairs(spark, sf)
     sh = tb(spark, sf, "documents").select(
-        "doc_id", F.array_distinct(_spark_shingles(F.col("text"))).alias("s")
+        "doc_id", F.array_distinct(MH.word_shingles(F.col("text"))).alias("s")
     )
     return MH.verify_pairs(
         pairs, sh, "doc_id", 0.1, "doc_a", "doc_b"

@@ -45,9 +45,8 @@ import json
 import os
 import sys
 
-sys.path.insert(
-    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 os.environ.setdefault("OMP_NUM_THREADS", "1")
 
 
@@ -134,6 +133,11 @@ def main(argv=None) -> int:
         "default keeps all",
     )
     args = ap.parse_args(argv)
+    # Spark's Python workers import the engine too, and they see this
+    # process's environment as the session starts, not its sys.path
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (_REPO, os.environ.get("PYTHONPATH")) if p
+    )
 
     from pyspark.sql import SparkSession
 

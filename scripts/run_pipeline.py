@@ -11,7 +11,7 @@ Cluster launch (north-rule shape):
 
 Sandbox smoke:
 
-    PYTHONPATH=. python scripts/run_pipeline.py --synthetic 500 \
+    python scripts/run_pipeline.py --synthetic 500 \
         --out /tmp/kg_out --run-id demo
 
 The job is checkpoint-resumable: rerunning with the same --out skips
@@ -25,10 +25,8 @@ import argparse
 import os
 import sys
 
-sys.path.insert(
-    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 os.environ.setdefault("OMP_NUM_THREADS", "1")
 
 
@@ -45,6 +43,11 @@ def main() -> None:
     ap.add_argument("--salt-partitions", type=int, default=0,
                     help="salted repartition width before inference (0=off)")
     args = ap.parse_args()
+    # Spark's Python workers import the engine too, and they see this
+    # process's environment as the session starts, not its sys.path
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (_REPO, os.environ.get("PYTHONPATH")) if p
+    )
 
     from pyspark.sql import SparkSession
 

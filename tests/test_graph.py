@@ -307,7 +307,7 @@ def test_build_graph_canonical_ids_match_union_find(spark, union_find):
         [(s, p, o, 0.9, f"u{i}") for i, (s, p, o) in enumerate(planted)],
         "subj string, pred string, obj string, prob double, url string",
     )
-    nodes, edges = GRAPH.build_graph(triples, spark, jaccard_threshold=0.6)
+    nodes, edges = GRAPH.build_graph(triples, spark)
 
     linked = LINK.link_triples(
         triples.withColumn("subj_type", F.lit(None).cast("string"))
@@ -329,11 +329,13 @@ def test_build_graph_canonical_ids_match_union_find(spark, union_find):
     cand = {(r.src, r.dst) for r in cdf.collect()}
     verified = {
         (r.src, r.dst)
-        for r in CANON.verify_pairs_jaccard(cdf, ndf, 0.6).collect()
+        for r in CANON.verify_pairs_jaccard(
+            cdf, ndf, CANON.JACCARD_THRESHOLD
+        ).collect()
     }
     want = {
         (a, b) for a, b in cand
-        if _char_trigram_jaccard(names[a], names[b]) >= 0.6
+        if _char_trigram_jaccard(names[a], names[b]) >= CANON.JACCARD_THRESHOLD
     }
     assert verified == want
     comp = union_find(want)
@@ -352,6 +354,51 @@ def test_build_graph_canonical_ids_match_union_find(spark, union_find):
         (label[r.subj_entity_id], r.pred, label[r.obj_entity_id])
         for r in linked
     )
+
+
+def test_both_engines_and_the_fold_follow_the_one_threshold(
+    spark, monkeypatch, tmp_path
+):
+    """The entity threshold has one definition,
+    ``CANON.JACCARD_THRESHOLD``, which Spark's ``build_graph``, its DuckDB
+    twin (``kg_nodes``) and the canonical fold read when called.  The
+    frozen triples' names hold no verified pair at the shipped value, so
+    the cross-engine ``kg_nodes`` check never sees a merge.  Lowered to
+    0.4, names merge: both engines still agree, on a node count unlike
+    the shipped one, and two folds of the crawl's names equal their
+    rebuild, merges included (one joins names of different folds, so a
+    fold that ignored the constant would split it)."""
+    import duckdb
+    from relation_extraction_transformer_spark.operators import (
+        incremental_canon as IC,
+    )
+
+    con = duckdb.connect()
+
+    def duck_nodes():
+        sql = KQ._graph_common_sql() + KQ._KG_NODES_SELECT
+        return sorted(con.sql(sql).fetchall())
+
+    shipped = len(duck_nodes())
+    monkeypatch.setattr(CANON, "JACCARD_THRESHOLD", 0.4)
+    want = duck_nodes()
+    nodes, _ = GRAPH.build_graph(KQ._frozen_triples(spark), spark)
+    assert sorted(map(tuple, nodes.collect())) == want
+    assert len(want) != shipped
+    assert any(merged > 1 for *_, merged in want)
+
+    mentions = IC.mention_names(KQ._frozen_triples(spark))
+    parity = F.col("node_id") % 2
+    state_dir = str(tmp_path / "canon")
+    os.makedirs(state_dir)
+    for d in (0, 1):
+        IC.fold_mentions_delta(spark, mentions.where(parity == d), state_dir)
+    folded, _ = IC.read_canon_state(spark, os.path.join(state_dir, "v2"))
+    rebuilt = {
+        r.node_id: r.component for r in IC.canon_state(mentions).collect()
+    }
+    assert {r.node_id: r.component for r in folded.collect()} == rebuilt
+    assert any(n != c for n, c in rebuilt.items())
 
 
 def test_linking_dictionary_reduction_preserves_argmin(spark):

@@ -22,6 +22,10 @@ from relation_extraction_transformer_spark.plans import kg_sql as KQ  # noqa: E4
 from relation_extraction_transformer_spark.plans import pipeline as PL  # noqa: E402
 
 PAGES = KQ.PAGES_PARQUET
+SCRIPT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "scripts", "maintain_kg.py",
+)
 
 
 @pytest.fixture(scope="module")
@@ -163,3 +167,22 @@ def test_maintain_with_canon_state_extracts_the_delta_once(
     assert s["canon"]["touched_components"] == 0
     assert s["canon"]["live_segments"] == {"nodes": 1}
     assert s["canon"]["version_bytes"] > 0
+
+
+def test_script_runs_from_outside_the_checkout(tmp_path):
+    """``python scripts/maintain_kg.py`` started outside the checkout
+    with no PYTHONPATH: the Python workers of the script's session import
+    the engine as its driver does, and the fold commits ``v1``."""
+    import json
+    import subprocess
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    state_dir = tmp_path / "state"
+    state_dir.mkdir()
+    run = subprocess.run(
+        [sys.executable, SCRIPT, "--pages", PAGES, "--state", str(state_dir)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=900,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert sorted(os.listdir(state_dir)) == ["v1"]
+    assert json.loads(run.stdout.splitlines()[-1])["state_version"] == 1

@@ -69,12 +69,16 @@ def test_connected_components_random_graph_vs_union_find(spark, union_find):
     assert got == want
 
 
-def test_connected_components_raises_when_iteration_cap_hit(spark, union_find):
+def test_connected_components_raises_when_iteration_cap_hit(
+    spark, union_find, monkeypatch
+):
     # a 6-node path needs more than one propagation round
     path = [(i, i + 1) for i in range(5)]
     edges = spark.createDataFrame(path, "src: long, dst: long")
-    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
-        CANON.connected_components(edges, max_iter=1)
+    with monkeypatch.context() as capped:
+        capped.setattr(CANON, "_CC_MAX_ROUNDS", 1)
+        with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+            CANON.connected_components(edges)
     got = {
         r.node_id: r.component
         for r in CANON.connected_components(edges).collect()
