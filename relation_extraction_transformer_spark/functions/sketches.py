@@ -11,11 +11,27 @@ surface at all; ivan-bilan/Relation-Extraction-Transformer consumes
 pre-tokenized TACRED JSON — see ``data/loader.py:47`` — so vocabulary
 cardinality there is an exact in-memory dict).
 
-One keyed implementation: every sketch step takes a list of group
-keys, and the global sketch is the zero-key case (``keys=[]``: one
-register set, one estimate row — also on empty input, where the
-estimate is 0.0).  Registers fold by :func:`hll_registers_by`, merge by
-:func:`hll_merge` and estimate by :func:`hll_estimate_by`.
+Two stored forms of one sketch, with one hash -> register derivation
+(:func:`_register`) and one estimate (:func:`_estimate`: the all-integer
+harmonic sum, one division and the linear-counting branch):
+
+- the ROW form, one ``(bucket, rho)`` row per non-empty bucket, for the
+  single global sketch: :func:`hll_registers` folds it as one
+  ``groupBy(bucket).agg(max(rho))`` that combines map-side and stays
+  hash-partitioned on the 1024 buckets (``hll_distinct``,
+  ``streaming.streaming_hll_registers``); :func:`hll_merge` merges and
+  :func:`hll_estimate` estimates it.  An estimate is one row, also on
+  empty input, where it is 0.0.
+- the PACKED form, one sorted ``array<int>`` column per group holding
+  one code ``bucket * 64 + rho`` per non-empty bucket (rho <= 51 fits
+  in 6 bits; the sparse encoding of HLL++, Heule et al., EDBT 2013),
+  for per-group sketches that live in the group's own aggregate row
+  (the per-edge url counts of operators/incremental.py and the
+  per-host language counts of ``kg_host_stats``).  A value's sketch is
+  ``array(hll_code(h))``; sketches merge inside the group's
+  ``groupBy`` as :func:`hll_union`, reduced by :func:`hll_reduce` to
+  each bucket's max rho; :func:`hll_estimate_regs` estimates one row's
+  array with no aggregation.
 
 Cross-engine determinism (module-header rules of plans/sql_queries.py):
 
@@ -35,7 +51,7 @@ Cross-engine determinism (module-header rules of plans/sql_queries.py):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .minhash import BASE_HASH_DUCK, stable_id
@@ -48,6 +64,8 @@ HLL_M = 1 << HLL_P
 _HASH_BITS = 60
 _RHO_BITS = _HASH_BITS - HLL_P  # 50
 _RHO_MAX = _RHO_BITS + 1  # 51
+# a packed register is bucket * _CODE_RHO + rho; rho <= 51 < 64
+_CODE_RHO = 64
 # alpha_m * m^2 * 2^51 precomputed in Python to one double literal, so
 # both engines do a single division by the scaled sum:
 #   alpha_1024 = 0.7213 / (1 + 1.079/1024)
@@ -56,61 +74,35 @@ _B_LIT = 1.7013287633207432e21
 _LC_THRESHOLD = 2.5 * HLL_M
 
 
-def hll_registers_by(df: DataFrame, keys: list[str], col: str) -> DataFrame:
-    """Per-group HLL registers: ``(*keys, bucket, rho)`` with one row
-    per NON-EMPTY bucket per group (empty buckets are implicit — a
-    sparse representation, so a group with k distinct values carries at
-    most min(k, m) rows).  With ``keys=[]`` this is the global sketch.
-
-    One narrow projection + one groupBy(max) — the register fold is the
-    :func:`hll_merge` of one-value sketches.  The aggregation is
-    map-side combinable and lands on at most ``HLL_M`` groups per key,
-    so the shuffle is O(partitions * m) regardless of input size."""
-    h = stable_id(F.col(col))
-    x = F.expr(f"h DIV {HLL_M}")  # upper 50 bits
-    return hll_merge(
-        keys,
-        df.select(*keys, h.alias("h")).select(
-            *keys,
-            (F.col("h") % HLL_M).alias("bucket"),
-            # rho = leading zeros of the 50-bit field + 1; bin(x) has no
-            # leading zeros, so rho = 51 - bit_length(x); x = 0 -> 51
-            F.when(x == 0, F.lit(_RHO_MAX))
-            .otherwise(F.lit(_RHO_MAX) - F.length(F.bin(x)))
-            .cast("int")
-            .alias("rho"),
-        ),
+def _register(h: str) -> tuple[Column, Column]:
+    """The one hash -> register derivation, from the 60-bit hash
+    column ``h``: ``(bucket, rho)``, the low p bits and the leading
+    zeros of the upper 50 bits + 1."""
+    x = F.expr(f"{h} DIV {HLL_M}")  # upper 50 bits
+    return (
+        F.col(h) % HLL_M,
+        # bin(x) has no leading zeros, so rho = 51 - bit_length(x);
+        # x = 0 -> 51
+        F.when(x == 0, F.lit(_RHO_MAX))
+        .otherwise(F.lit(_RHO_MAX) - F.length(F.bin(x)))
+        .cast("int"),
     )
 
 
-def hll_merge(keys: list[str], *register_dfs: DataFrame) -> DataFrame:
-    """Merge register frames: element-wise register MAX per group.  This
-    is the whole point at scale — per-shard / per-day sketches union +
-    one small groupBy, never re-reading the raw data."""
-    out = register_dfs[0]
-    for other in register_dfs[1:]:
-        out = out.unionAll(other)
-    return out.groupBy(*keys, "bucket").agg(F.max("rho").alias("rho"))
+def _term_sql(rho: str) -> str:
+    """One present register's exact share of the harmonic sum."""
+    return f"CAST(pow(2, {_RHO_MAX} - {rho}) AS BIGINT)"
 
 
-def hll_estimate_by(registers: DataFrame, keys: list[str]) -> DataFrame:
-    """Per-group estimate ``(*keys, v_zero, scaled_sum, est_hll)`` from
-    register frames: the all-integer harmonic sum (see module header),
-    one division and the ROUND-gated linear-counting branch.  Small
-    groups (the per-edge case) always land in the linear-counting
-    regime, where the estimate is near-exact.  With ``keys=[]`` it is
-    one row, also for an empty register frame (``v_zero = m``,
-    ``est_hll`` 0.0)."""
-    agg = registers.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("n_present"),
-        F.sum(
-            F.expr(f"CAST(pow(2, {_RHO_MAX} - rho) AS BIGINT)")
-        ).alias("present_sum"),
-    )
-    v_zero = (F.lit(HLL_M) - F.col("n_present")).cast("long")
+def _estimate(n_present: Column, present_sum: Column) -> list[Column]:
+    """``(v_zero, scaled_sum, est_hll)`` from the count of present
+    registers and their summed terms: the all-integer harmonic sum (see
+    module header), one division and the ROUND-gated linear-counting
+    branch.  Small groups (the per-edge case) always land in the
+    linear-counting regime, where the estimate is near-exact."""
+    v_zero = (F.lit(HLL_M) - n_present).cast("long")
     scaled = (
-        F.coalesce(F.col("present_sum"), F.lit(0))
-        + v_zero * F.lit(1 << _RHO_MAX)
+        F.coalesce(present_sum, F.lit(0)) + v_zero * F.lit(1 << _RHO_MAX)
     ).cast("long")
     raw = F.round(F.lit(_B_LIT) / scaled.cast("double"), 3)
     est = F.when(
@@ -122,17 +114,98 @@ def hll_estimate_by(registers: DataFrame, keys: list[str]) -> DataFrame:
             3,
         ),
     ).otherwise(raw)
-    return agg.select(
-        *keys,
+    return [
         v_zero.alias("v_zero"),
         scaled.alias("scaled_sum"),
         est.alias("est_hll"),
+    ]
+
+
+# Row form: the global sketch ---------------------------------------------
+
+
+def hll_registers(df: DataFrame, col: str) -> DataFrame:
+    """The global sketch of ``col``: ``(bucket, rho)`` with one row per
+    NON-EMPTY bucket (empty buckets are implicit).
+
+    One narrow projection + one groupBy(max) — the register fold is the
+    :func:`hll_merge` of one-value sketches.  The aggregation is
+    map-side combinable and lands on at most ``HLL_M`` groups, so the
+    shuffle is O(partitions * m) regardless of input size."""
+    bucket, rho = _register("h")
+    return hll_merge(
+        df.select(stable_id(F.col(col)).alias("h")).select(
+            bucket.alias("bucket"), rho.alias("rho")
+        )
     )
 
 
+def hll_merge(*register_dfs: DataFrame) -> DataFrame:
+    """Merge register frames: element-wise register MAX.  This is the
+    whole point at scale — per-shard / per-day sketches union + one
+    small groupBy, never re-reading the raw data."""
+    out = register_dfs[0]
+    for other in register_dfs[1:]:
+        out = out.unionAll(other)
+    return out.groupBy("bucket").agg(F.max("rho").alias("rho"))
+
+
+def hll_estimate(registers: DataFrame) -> DataFrame:
+    """One row ``(v_zero, scaled_sum, est_hll)`` from a register frame,
+    also for an empty one (``v_zero = m``, ``est_hll`` 0.0)."""
+    agg = registers.agg(
+        F.count(F.lit(1)).alias("n_present"),
+        F.sum(F.expr(_term_sql("rho"))).alias("present_sum"),
+    )
+    return agg.select(*_estimate(F.col("n_present"), F.col("present_sum")))
+
+
+# Packed form: one sketch per aggregate row ---------------------------------
+
+
+def hll_code(h: str) -> Column:
+    """The packed register ``bucket * 64 + rho`` of one value, from its
+    :func:`~.minhash.stable_id` hash column ``h``; ``array(hll_code(h))``
+    is the value's sketch."""
+    bucket, rho = _register(h)
+    return (bucket * _CODE_RHO + rho).cast("int")
+
+
+def hll_union(regs: str) -> Column:
+    """Aggregate expression: every code of the group's ``regs`` arrays,
+    sorted.  :func:`hll_reduce` over the result is the merged sketch."""
+    return F.array_sort(F.flatten(F.collect_list(regs)))
+
+
+def hll_reduce(regs: str) -> Column:
+    """The sketch of a sorted code array column ``regs``: one code per
+    bucket, its max rho.  Codes of one bucket sit together, largest
+    rho last, so a code is kept when the next one starts another bucket
+    (element-wise register MAX).  ``regs`` is a column, not an
+    expression, so the lambda reads it without sorting it again."""
+    return F.expr(
+        f"filter({regs}, (x, i) -> coalesce("
+        f"try_element_at({regs}, i + 2) DIV {_CODE_RHO} "
+        f"!= x DIV {_CODE_RHO}, true))"
+    )
+
+
+def hll_estimate_regs(regs: str) -> Column:
+    """``est_hll`` of one row's packed sketch column ``regs``: no
+    aggregation, the same integer sum and branch as
+    :func:`hll_estimate`."""
+    present_sum = F.expr(
+        f"aggregate({regs}, 0L, (a, x) -> a + "
+        f"{_term_sql(f'x % {_CODE_RHO}')})"
+    )
+    return _estimate(F.size(regs), present_sum)[2]
+
+
 def duck_hll_by_sql(source_cte: str, keys: list[str], col: str) -> str:
-    """DuckDB twin of hll_registers_by + hll_estimate_by: emits CTEs
-    ending in ``hll_by_est`` with columns ``(*keys, est_hll)``."""
+    """DuckDB twin of a per-group packed sketch and
+    :func:`hll_estimate_regs`: it keeps each group's registers as
+    ``(bucket, max rho)`` rows, the pairs the packed codes hold.  Emits
+    CTEs ending in ``hll_by_est`` with columns ``(*keys, est_hll)``."""
     ks = ", ".join(keys)
     return f"""
     hll_by_h AS (
@@ -174,7 +247,7 @@ def duck_hll_by_sql(source_cte: str, keys: list[str], col: str) -> str:
 
 
 def duck_hll_sql(source_cte: str, col: str) -> str:
-    """DuckDB twin of the zero-key hll_registers_by + hll_estimate_by
+    """DuckDB twin of :func:`hll_registers` + :func:`hll_estimate`
     over ``source_cte`` (a CTE name exposing ``col``).  Emits CTEs
     ending in ``hll_est`` with columns ``(m, v_zero, scaled_sum,
     est_hll)``.  Kept apart from :func:`duck_hll_by_sql` because the

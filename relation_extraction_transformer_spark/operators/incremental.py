@@ -11,27 +11,31 @@ observations into deltas:
 - ``first_seen``        -> MIN
 - ``last_seen``         -> MAX
 - ``max_prob``          -> MAX
-- distinct-url count    -> per-edge sparse HLL registers, merged by
-  element-wise MAX (functions/sketches.py).  An exact COUNT(DISTINCT) is
-  NOT mergeable from aggregates — you would have to keep every url ever
-  seen per edge; the register state is bounded at min(urls, 1024) rows
-  per edge and merge==rebuild holds BIT-exactly because max is
-  associative, commutative and idempotent.
+- distinct-url count    -> the edge's sparse HLL registers, packed into
+  one sorted ``regs`` array of its row (functions/sketches.py) and
+  merged by register MAX.  An exact COUNT(DISTINCT) is NOT mergeable
+  from aggregates — you would have to keep every url ever seen per
+  edge; the sketch is bounded at min(urls, 1024) elements per edge and
+  merge==rebuild holds BIT-exactly because max is associative,
+  commutative and idempotent.
 
 The reference pipeline has no incremental surface (it consumes a static
 TACRED dump — ref ``data/loader.py:40``); this is the KG-construct
 maintenance operation the north rule's always-on crawl implies.
 
-Scale shape: building state from a delta is one url-keyed join
-projection plus two map-side-combinable groupBys (stats on the edge key,
-registers on (edge, bucket)); merging two states is a unionAll plus the
-same two groupBys — the raw deltas are never re-read.  The report joins
-stats with the per-edge estimate (a groupBy of the registers) on the
-edge key.
+Scale shape: state is one edge-keyed frame, and every state operation
+is one map-side-combinable ``groupBy(subj, pred, obj)``.  A delta's
+state is the merge of its one-observation states; merging states is a
+union plus the same groupBy, and a fold merges the read base state
+with the delta's one-observation states in that one groupBy, so the
+raw deltas are never re-read and the fold plans one aggregation
+Exchange and one write.  The report is a projection of the state rows:
+no Exchange and no join.
 
-Stored layout (:func:`write_edge_state`): zstd parquet, each file's
-rows sorted by its key.  That is all a state read back carries: no
-partitioning, so the next fold's merge shuffles both sides again.
+Stored layout (:func:`write_edge_state`): one dataset per version,
+``stats/``, zstd parquet with each file's rows sorted by the edge key.
+That is all a state read back carries: no partitioning, so the next
+fold's merge shuffles both sides again.
 """
 
 from __future__ import annotations
@@ -47,17 +51,24 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import sketches as SK
+from ..functions.minhash import stable_id
 from ..sources import tables as TB
 
 EDGE_KEYS = ["subj", "pred", "obj"]
 
 
 class EdgeState(NamedTuple):
-    """Mergeable rollup state: per-edge stats + per-edge url registers."""
+    """Mergeable rollup state: one row per edge."""
 
-    # subj, pred, obj, n_obs, first_seen, last_seen, max_prob, score_dec
+    # subj, pred, obj, n_obs, first_seen, last_seen, max_prob, score_dec,
+    # regs (the packed url sketch, functions/sketches.py)
     stats: DataFrame
-    regs: DataFrame  # subj, pred, obj, bucket, rho
+
+    @property
+    def regs(self) -> DataFrame:
+        """The url sketch of each edge, ``(subj, pred, obj, regs)``: a
+        projection of :attr:`stats`, not a second frame."""
+        return self.stats.select(*EDGE_KEYS, "regs")
 
 
 # sums of per-delta DECIMAL(18,6) sums; 28,6 holds ~10^22 observations
@@ -72,48 +83,63 @@ def noisy_or_term() -> Column:
     ).cast("decimal(18,6)")
 
 
-def edge_state(obs: DataFrame) -> EdgeState:
-    """Fold one observation delta — rows of
-    ``(subj, pred, obj, url, prob, ts)`` — into edge-rollup state.
-
-    ``score_dec`` is the noisy-or fused belief (kg_sql's kg_fusion
-    formula: -sum of :func:`noisy_or_term`) — a plain sum, so fusion
-    itself is incrementally maintainable; the DECIMAL
-    type is pinned so merged and rebuilt states carry identical
-    schemas."""
-    stats = (
-        obs.withColumn("nl", noisy_or_term())
-        .groupBy(*EDGE_KEYS)
-        .agg(
-            F.count(F.lit(1)).alias("n_obs"),
-            F.min("ts").alias("first_seen"),
-            F.max("ts").alias("last_seen"),
-            F.max("prob").alias("max_prob"),
-            (-F.sum("nl")).cast(_SCORE_DEC).alias("score_dec"),
+def _observation_states(obs: DataFrame) -> DataFrame:
+    """Each observation ``(subj, pred, obj, url, prob, ts)`` as the
+    state of an edge seen once: ``n_obs`` 1, ``first_seen = last_seen =
+    ts``, ``max_prob = prob``, its negated noisy-or term as
+    ``score_dec`` and the url's one-register sketch."""
+    return (
+        obs.select(
+            *EDGE_KEYS,
+            F.lit(1).cast("long").alias("n_obs"),
+            F.col("ts").alias("first_seen"),
+            F.col("ts").alias("last_seen"),
+            F.col("prob").alias("max_prob"),
+            (-noisy_or_term()).cast(_SCORE_DEC).alias("score_dec"),
+            stable_id(F.col("url")).alias("h"),
         )
+        .withColumn("regs", F.array(SK.hll_code("h")))
+        .drop("h")
     )
-    regs = SK.hll_registers_by(obs, EDGE_KEYS, "url")
-    return EdgeState(stats, regs)
 
 
-def merge_edge_state(a: EdgeState, b: EdgeState) -> EdgeState:
-    """state(d1) ⊕ state(d2): field-wise SUM/MIN/MAX on the stats,
-    element-wise register MAX on the sketches.  Exact merge==rebuild for
-    disjoint observation deltas; n_obs and score_dec are sums, so a
-    RE-delivered (non-disjoint) delta inflates exactly those two — every
-    other field is idempotent."""
-    stats = (
-        a.stats.unionAll(b.stats)
-        .groupBy(*EDGE_KEYS)
+def _merged(states: DataFrame) -> EdgeState:
+    """One state row per edge from any union of state rows: field-wise
+    SUM/MIN/MAX, and register MAX over the sketches — one groupBy."""
+    return EdgeState(
+        states.groupBy(*EDGE_KEYS)
         .agg(
             F.sum("n_obs").alias("n_obs"),
             F.min("first_seen").alias("first_seen"),
             F.max("last_seen").alias("last_seen"),
             F.max("max_prob").alias("max_prob"),
             F.sum("score_dec").cast(_SCORE_DEC).alias("score_dec"),
+            SK.hll_union("regs").alias("regs"),
         )
+        .withColumn("regs", SK.hll_reduce("regs"))
     )
-    return EdgeState(stats, SK.hll_merge(EDGE_KEYS, a.regs, b.regs))
+
+
+def edge_state(obs: DataFrame) -> EdgeState:
+    """Fold one observation delta — rows of
+    ``(subj, pred, obj, url, prob, ts)`` — into edge-rollup state: the
+    merge of its one-observation states.
+
+    ``score_dec`` is the noisy-or fused belief (kg_sql's kg_fusion
+    formula: -sum of :func:`noisy_or_term`) — a plain sum, so fusion
+    itself is incrementally maintainable; the DECIMAL
+    type is pinned so merged and rebuilt states carry identical
+    schemas."""
+    return _merged(_observation_states(obs))
+
+
+def merge_edge_state(a: EdgeState, b: EdgeState) -> EdgeState:
+    """state(d1) ⊕ state(d2): field-wise SUM/MIN/MAX and register MAX,
+    in one groupBy over both states' rows.  Exact merge==rebuild for
+    disjoint observation deltas; n_obs and score_dec are sums, so a
+    RE-delivered (non-disjoint) delta inflates exactly those two — every
+    other field is idempotent."""
+    return _merged(a.stats.unionByName(b.stats))
 
 
 def conflicts_from_stats(stats: DataFrame, preds: tuple[str, ...]) -> DataFrame:
@@ -150,31 +176,31 @@ def conflicts_from_stats(stats: DataFrame, preds: tuple[str, ...]) -> DataFrame:
 
 
 def write_edge_state(state: EdgeState, path: str) -> None:
-    """Persist standing state as two parquet datasets (``stats/`` and
-    ``regs/``) — the durable handoff between daily fold-in jobs.  Both
-    frames are edge-keyed aggregates, orders of magnitude smaller than
-    the raw crawl.  Both go through the one table writer: zstd, each
-    file's rows sorted by its key (``stats`` by the edge key, ``regs``
-    by edge key and bucket), so equal and near-equal values sit next to
-    each other in every column.  Always parquet: a version is committed
-    by renaming its directory (:func:`fold_version`), never through a
-    catalog."""
+    """Persist standing state as one parquet dataset, ``stats/`` — the
+    durable handoff between daily fold-in jobs.  It is an edge-keyed
+    aggregate, orders of magnitude smaller than the raw crawl, written
+    by the one table writer: zstd, each file's rows sorted by the edge
+    key, so equal and near-equal values sit next to each other in every
+    column.  Always parquet: a version is committed by renaming its
+    directory (:func:`fold_version`), never through a catalog."""
     TB.write_table(
         state.stats, os.path.join(path, "stats"), fmt="parquet",
         cluster_by=EDGE_KEYS,
     )
-    TB.write_table(
-        state.regs, os.path.join(path, "regs"), fmt="parquet",
-        cluster_by=EDGE_KEYS + ["bucket"],
-    )
 
 
 def read_edge_state(spark: SparkSession, path: str) -> EdgeState:
-    """Load persisted state written by :func:`write_edge_state`."""
-    return EdgeState(
-        stats=spark.read.parquet(os.path.join(path, "stats")),
-        regs=spark.read.parquet(os.path.join(path, "regs")),
-    )
+    """Load persisted state written by :func:`write_edge_state`.  A
+    version in the two-dataset layout (a ``regs/`` dataset beside
+    ``stats/``, from before the registers moved into the stats rows)
+    raises ``ValueError``: its stats rows carry no sketch."""
+    if os.path.isdir(os.path.join(path, "regs")):
+        raise ValueError(
+            f"{path} holds edge state in the two-dataset layout (stats/ "
+            f"and regs/); the registers now live in the stats rows, so "
+            f"rebuild this state from its crawl"
+        )
+    return EdgeState(spark.read.parquet(os.path.join(path, "stats")))
 
 
 def committed_versions(state_dir: str) -> list[int]:
@@ -215,9 +241,11 @@ def fold_version(
 
     Otherwise ``write(base_dir, out_dir)`` writes the new version into
     a fresh staging directory (``base_dir`` is None when there is no
-    state yet) and returns fold statistics; the commit is one
-    ``os.rename`` of the staging directory to ``v<version>``.  A
-    failure before the rename leaves the base current.  A concurrent
+    state yet) and returns fold statistics; the summary adds
+    ``version_bytes``, the bytes under the staging directory (0 on a
+    replay).  The commit is one ``os.rename`` of the staging directory
+    to ``v<version>``.  A failure before the rename leaves the base
+    current.  A concurrent
     writer that committed the same version first makes the rename fail
     (the target is a non-empty directory), so the loser raises.  Either
     way the staging directory is removed; one left by a killed process
@@ -229,7 +257,7 @@ def fold_version(
     summary = {"state_version": version, "bootstrap": cur == 0}
     target = os.path.join(state_dir, f"v{version}")
     if os.path.isdir(target):
-        return {**summary, "replayed": True}
+        return {**summary, "replayed": True, "version_bytes": 0}
     if version <= cur:
         raise ValueError(
             f"version {version} <= current version {cur} but v{version} was "
@@ -243,11 +271,20 @@ def fold_version(
     try:
         base = os.path.join(state_dir, f"v{cur}") if cur else None
         stats = write(base, staging)
+        written = _tree_bytes(staging)
         os.rename(staging, target)
     except BaseException:
         shutil.rmtree(staging, ignore_errors=True)
         raise
-    return {**summary, "replayed": False, **stats}
+    return {**summary, "replayed": False, **stats, "version_bytes": written}
+
+
+def _tree_bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(path)
+        for f in files
+    )
 
 
 def staged_version(staging: str) -> int:
@@ -357,10 +394,10 @@ def page_observations(spark: SparkSession, pages: DataFrame) -> DataFrame:
 def _write_edge_fold(
     spark: SparkSession, obs: DataFrame, base: str | None, out: str
 ) -> dict:
-    delta = edge_state(obs)
+    states = _observation_states(obs)
     if base is not None:
-        delta = merge_edge_state(read_edge_state(spark, base), delta)
-    write_edge_state(delta, out)
+        states = read_edge_state(spark, base).stats.unionByName(states)
+    write_edge_state(_merged(states), out)
     return {}
 
 
@@ -404,20 +441,17 @@ def fold_pages_delta(
 
 
 def edge_report(state: EdgeState) -> DataFrame:
-    """Human-facing rollup: stats + the per-edge distinct-url estimate
-    from the register state.  Per-edge url counts are tiny relative to
-    the 1024 registers, so the estimate sits in the near-exact
-    linear-counting regime."""
-    est = SK.hll_estimate_by(state.regs, EDGE_KEYS)
-    return (
-        state.stats.join(est, EDGE_KEYS)
-        .select(
-            *EDGE_KEYS,
-            "n_obs",
-            "first_seen",
-            "last_seen",
-            F.round(F.col("max_prob"), 6).alias("max_prob"),
-            F.col("score_dec").cast("double").alias("fused_score"),
-            F.col("est_hll").alias("est_urls"),
-        )
+    """Human-facing rollup: each state row with its distinct-url
+    estimate computed from its own ``regs``, a projection (no Exchange,
+    no join).  Per-edge url counts are tiny relative to the 1024
+    registers, so the estimate sits in the near-exact linear-counting
+    regime."""
+    return state.stats.select(
+        *EDGE_KEYS,
+        "n_obs",
+        "first_seen",
+        "last_seen",
+        F.round(F.col("max_prob"), 6).alias("max_prob"),
+        F.col("score_dec").cast("double").alias("fused_score"),
+        SK.hll_estimate_regs("regs").alias("est_urls"),
     )

@@ -283,14 +283,6 @@ def _merge_from(rows: list[int], new: int) -> int:
     return start
 
 
-def _tree_bytes(path: str) -> int:
-    return sum(
-        os.path.getsize(os.path.join(d, f))
-        for d, _, files in os.walk(path)
-        for f in files
-    )
-
-
 def _write_segment(df: DataFrame, path: str) -> int:
     """Write one segment, clustered by ``node_id``; its row count is
     observed on the write."""
@@ -333,12 +325,13 @@ def write_canon_fold(
     INC.write_manifest(
         out, {"nodes": segs[:start] + [[INC.staged_version(out), rows]]}
     )
-    return {**stats, "version_bytes": _tree_bytes(out)}
+    return stats
 
 
 def canon_fold_summary(state_dir: str, summary: dict) -> dict:
-    """A canonical fold's summary: a replay reports zero counts and
-    ``version_bytes``; ``live_segments`` counts segments per dataset."""
+    """A canonical fold's summary: a replay reports zero counts (and,
+    from :func:`~.incremental.fold_version`, zero ``version_bytes``);
+    ``live_segments`` counts segments per dataset."""
     manifest = INC.read_manifest(
         os.path.join(state_dir, f"v{summary['state_version']}")
     )
@@ -346,7 +339,6 @@ def canon_fold_summary(state_dir: str, summary: dict) -> dict:
         "new_nodes": 0,
         "touched_components": 0,
         "relabelled_nodes": 0,
-        "version_bytes": 0,
         **summary,
         "live_segments": {d: len(segs) for d, segs in manifest.items()},
     }

@@ -36,21 +36,39 @@ def normalize_surface(col):
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 
-def entity_dictionary(spark: SparkSession) -> DataFrame:
-    """alias -> (entity_id, canonical_name, ner_type, alias_rank).
+def sql_quote(s: str) -> str:
+    """``s`` as a single-quoted SQL string literal."""
+    return "'" + s.replace("'", "''") + "'"
 
-    entity ids are stable_id of 'type:canonical_name' — stable across runs
-    and cluster sizes, no sequence/driver state.
+
+def dictionary_values() -> str:
+    """The alias dictionary's rows as the text of a SQL ``VALUES`` list
+    of ``(alias, canonical_name, ner_type, alias_rank)``, read by Spark
+    (:func:`entity_dictionary`) and by the DuckDB oracles alike.
     alias_rank: 0 = canonical surface, 1 = partial alias (person family
-    name), used by the scorer.
-    """
+    name), used by the scorer."""
     rows = []
     for phrase, typ in sorted(G.build_gazetteer().items()):
         rows.append((phrase, phrase, typ, 0))
         if typ == "PERSON" and " " in phrase:
             rows.append((phrase.split(" ")[-1], phrase, typ, 1))
-    df = spark.createDataFrame(
-        rows, "alias string, canonical_name string, ner_type string, alias_rank int"
+    return ", ".join(
+        f"({sql_quote(a)}, {sql_quote(c)}, {sql_quote(t)}, {r})"
+        for a, c, t, r in rows
+    )
+
+
+def entity_dictionary(spark: SparkSession) -> DataFrame:
+    """alias -> (entity_id, canonical_name, ner_type, alias_rank).
+
+    entity ids are stable_id of 'type:canonical_name' — stable across runs
+    and cluster sizes, no sequence/driver state.  The rows are an inline
+    ``VALUES`` table (:func:`dictionary_values`), a ``LocalRelation``:
+    building it runs no Python worker.
+    """
+    df = spark.sql(
+        f"SELECT * FROM VALUES {dictionary_values()} "
+        "AS t(alias, canonical_name, ner_type, alias_rank)"
     )
     return df.select(
         normalize_surface(F.col("alias")).alias("alias_norm"),

@@ -3090,7 +3090,7 @@ def _spark_hll_distinct(spark, sf):
         .select(F.explode(F.split(F.lower(F.col("text")), " ")).alias("tok"))
         .filter(F.col("tok") != "")
     )
-    est = SK.hll_estimate_by(SK.hll_registers_by(toks, [], "tok"), [])
+    est = SK.hll_estimate(SK.hll_registers(toks, "tok"))
     exact = toks.agg(F.count_distinct("tok").alias("exact_distinct"))
     ex_d = F.col("exact_distinct").cast("double")
     return est.crossJoin(exact).select(

@@ -20,8 +20,7 @@ sorted by the table's key, which each call site fixes as
 ``cluster_by``:
 
 - graph ``nodes`` by ``canonical_id``; ``edges`` by ``(src, pred, dst)``
-- edge state ``stats`` by ``(subj, pred, obj)``; ``regs`` by
-  ``(subj, pred, obj, bucket)``
+- edge state ``stats`` by ``(subj, pred, obj)``
 - canonical-map ``nodes`` segments by ``node_id``
 - the maintenance report by ``(subj, pred, obj)``; conflicts by
   ``(subj, pred)``

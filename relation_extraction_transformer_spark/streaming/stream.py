@@ -140,8 +140,8 @@ def streaming_hll_registers(
     through, which is exactly the sketch property that makes a
     complete-mode distinct-count scale-safe where the exact streaming
     ``COUNT(DISTINCT)`` (unbounded key state) is not.  The emitted
-    register frame feeds ``sketches.hll_estimate_by`` / ``hll_merge``
-    with no keys, unchanged — a batch sketch and a streamed sketch of
+    register frame feeds ``sketches.hll_estimate`` / ``hll_merge``
+    unchanged — a batch sketch and a streamed sketch of
     the same data are identical rows (tests pin this)."""
     from pyspark.sql import functions as F
 
@@ -151,7 +151,7 @@ def streaming_hll_registers(
     toks = docs.select(
         F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("tok")
     ).filter(F.col("tok") != "")
-    return SK.hll_registers_by(toks, [], "tok")
+    return SK.hll_registers(toks, "tok")
 
 
 def run_streaming_fold(

@@ -31,11 +31,13 @@ The stage logic lives in :func:`maintain` so tests drive it directly
 the single-pass full rebuild — report AND conflicts).
 
 Scale notes: the delta pipeline is the audited narrow extract plan; the
-fold is two map-side-combinable groupBys; the merge unions two
-edge-keyed aggregate frames (orders of magnitude smaller than crawls)
-and re-aggregates; conflicts are one partitioned window over standing
-stats.  Nothing in the loop scales with total crawl history except the
-state itself, which is bounded per edge.
+fold is one map-side-combinable groupBy over the standing edge-keyed
+state (orders of magnitude smaller than crawls) unioned with the
+delta's observations, and one write; conflicts are one partitioned
+window over standing stats.  The printed summary carries each fold's
+``version_bytes``, the bytes its new version wrote.  Nothing in the
+loop scales with total crawl history except the state itself, which is
+bounded per edge.
 """
 
 from __future__ import annotations

@@ -3,6 +3,8 @@ fold-in pipeline exact — merge==rebuild under any disjoint split,
 commutativity/associativity, idempotent sketch state — plus per-edge
 distinct-url estimate accuracy in the linear-counting regime."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -34,6 +36,13 @@ def _report_rows(state):
 
 def _rebuilt(obs):
     return _report_rows(INC.edge_state(obs))
+
+
+def _regs(state):
+    """Each edge's packed url sketch, edge key -> tuple of codes."""
+    return {
+        (r.subj, r.pred, r.obj): tuple(r.regs) for r in state.regs.collect()
+    }
 
 
 @pytest.mark.parametrize("split_col,mod", [("ts", 2), ("url", 3)])
@@ -78,9 +87,7 @@ def test_redelivered_delta_is_idempotent_except_sums(spark):
         (n2, f2, l2, m2, s2, e2) = r2[k]
         assert n2 == 2 * n1 and s2 == 2 * s1
         assert (f1, l1, m1, e1) == (f2, l2, m2, e2)
-    regs_once = sorted(map(tuple, once.regs.collect()))
-    regs_twice = sorted(map(tuple, twice.regs.collect()))
-    assert regs_once == regs_twice
+    assert _regs(once) == _regs(twice)
 
 
 def test_est_urls_tracks_exact_distinct_in_lc_regime(spark):
@@ -103,28 +110,24 @@ def test_est_urls_tracks_exact_distinct_in_lc_regime(spark):
 
 
 def test_register_state_is_bounded_and_partition_invariant(spark):
-    """Register rows per edge never exceed min(distinct urls, 1024), and
-    the state frames are identical under repartitioning of the input."""
+    """Each edge's sketch holds exactly the pure-Python oracle's
+    registers of its urls, one sorted code per bucket, so never more
+    than min(distinct urls, 1024) of them; and the state is identical
+    under repartitioning of the input."""
+    from test_sketches import _decoded, _py_registers
+
     obs = _obs_df(spark)
     st = INC.edge_state(obs)
-    sizes = {
-        (r.subj, r.pred, r.obj): r.n
-        for r in st.regs.groupBy("subj", "pred", "obj")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    exact = {
-        (r.subj, r.pred, r.obj): r.d
-        for r in obs.groupBy("subj", "pred", "obj")
-        .agg(F.countDistinct("url").alias("d"))
-        .collect()
-    }
-    for k, n in sizes.items():
-        assert n <= min(exact[k], 1024)
+    urls = {}
+    for r in obs.collect():
+        urls.setdefault((r.subj, r.pred, r.obj), set()).add(r.url)
+    regs = _regs(st)
+    assert regs.keys() == urls.keys()
+    for k, codes in regs.items():
+        assert _decoded(codes) == _py_registers(urls[k]), k
+        assert len(codes) <= min(len(urls[k]), 1024)
     st7 = INC.edge_state(obs.repartition(7))
-    assert sorted(map(tuple, st7.regs.collect())) == sorted(
-        map(tuple, st.regs.collect())
-    )
+    assert _regs(st7) == regs
     assert _report_rows(st7) == _report_rows(st)
 
 
@@ -140,9 +143,59 @@ def test_state_persists_and_folds_after_reload(spark, tmp_path):
     loaded = INC.read_edge_state(spark, str(tmp_path / "state"))
     # parquet round-trips relax nullability; names + types must survive
     fresh = INC.edge_state(d0)
-    for got, want in ((loaded.stats, fresh.stats), (loaded.regs, fresh.regs)):
-        assert [(f.name, f.dataType) for f in got.schema] == [
-            (f.name, f.dataType) for f in want.schema
-        ]
+    assert [(f.name, f.dataType) for f in loaded.stats.schema] == [
+        (f.name, f.dataType) for f in fresh.stats.schema
+    ]
     merged = INC.merge_edge_state(loaded, INC.edge_state(d1))
     assert _report_rows(merged) == _rebuilt(obs)
+
+
+def test_both_folds_report_the_bytes_of_their_version(spark, tmp_path):
+    """For the edge and the canonical fold alike, ``version_bytes`` is
+    the size of the committed ``v<N>``; a replay wrote nothing and
+    reports 0."""
+    from test_incremental_canon import _tree_bytes
+    from test_tables import _fold_edges
+
+    from relation_extraction_transformer_spark.operators import (
+        incremental_canon as IC,
+    )
+
+    obs = _obs_df(spark)
+    edge_dir = str(tmp_path / "edges")
+    for i in range(2):
+        s = _fold_edges(spark, obs.where(F.crc32("url") % 2 == i), edge_dir)
+        v = os.path.join(edge_dir, f"v{s['state_version']}")
+        assert s["version_bytes"] == _tree_bytes(v) > 0
+    replay = INC.fold_version(edge_dir, 2, lambda base, out: {})
+    assert replay["replayed"] and replay["version_bytes"] == 0
+
+    canon_dir = str(tmp_path / "canon")
+    names = spark.createDataFrame(
+        [(i, f"name {i:03d}") for i in range(20)], "node_id long, name string"
+    )
+    c = IC.fold_mentions_delta(spark, names, canon_dir)
+    assert c["version_bytes"] == _tree_bytes(
+        os.path.join(canon_dir, "v1")) > 0
+    replay = IC.fold_mentions_delta(spark, names, canon_dir, version=1)
+    assert replay["replayed"] and replay["version_bytes"] == 0
+
+
+def test_two_dataset_layout_is_refused_before_anything_commits(
+    spark, tmp_path
+):
+    """A version with a ``regs/`` dataset beside ``stats/`` (the layout
+    before the sketches moved into the stats rows) is neither read nor
+    folded onto: both raise, the fold before it commits, and its
+    staging directory is gone."""
+    from test_tables import _fold_edges
+
+    obs = _obs_df(spark)
+    state_dir = tmp_path / "state"
+    _fold_edges(spark, obs, str(state_dir))
+    os.makedirs(state_dir / "v1" / "regs")
+    with pytest.raises(ValueError, match="two-dataset layout"):
+        INC.read_edge_state(spark, str(state_dir / "v1"))
+    with pytest.raises(ValueError, match="two-dataset layout"):
+        _fold_edges(spark, obs, str(state_dir))
+    assert os.listdir(state_dir) == ["v1"]

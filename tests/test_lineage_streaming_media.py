@@ -680,7 +680,7 @@ def test_streaming_hll_registers_match_batch(spark, tmp_path):
             "explode(split(lower(text), ' ')) AS tok"
         ).filter("tok <> ''")
         return sorted(
-            map(tuple, SK.hll_registers_by(toks, [], "tok").collect())
+            map(tuple, SK.hll_registers(toks, "tok").collect())
         )
 
     assert run_once() == batch_regs(d1)

@@ -40,6 +40,35 @@ def test_triples_plan_is_shuffle_free_and_pruned(spark):
     )
 
 
+def test_alias_dictionary_is_a_local_relation_of_the_gazetteer(spark):
+    """The alias dictionary is an inline table: its optimized plan holds
+    no ``LogicalRDD`` (a Python RDD whose build runs Python workers),
+    and its rows are the ones a pure-Python derivation from the
+    gazetteer gives."""
+    import hashlib
+    import re
+
+    from relation_extraction_transformer_spark.operators import linking as L
+    from relation_extraction_transformer_spark.sources import gazetteer as G
+
+    d = L.entity_dictionary(spark)
+    optimized = d._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in optimized, optimized
+
+    def sid(s):
+        return int(hashlib.md5(s.encode()).hexdigest()[1:16], 16)
+
+    want = []
+    for phrase, typ in G.build_gazetteer().items():
+        aliases = [(phrase, 0)]
+        if typ == "PERSON" and " " in phrase:
+            aliases.append((phrase.split(" ")[-1], 1))
+        for alias, rank in aliases:
+            norm = re.sub(r"\s+", " ", alias.strip().lower())
+            want.append((norm, phrase, typ, rank, sid(f"{typ}:{phrase}")))
+    assert sorted(map(tuple, d.collect())) == sorted(want)
+
+
 def test_linking_has_no_window_and_no_fact_side_exchange(spark):
     """Entity linking: best-candidate selection is an array argmin over a
     broadcast dictionary — no Window operator, no Exchange keyed on fact
@@ -243,12 +272,55 @@ def test_hll_plan_is_jvm_side_with_partial_aggregation(spark):
         .select(F.explode(F.split(F.lower(F.col("text")), " ")).alias("tok"))
         .filter(F.col("tok") != "")
     )
-    plan = _plan(SK.hll_registers_by(toks, [], "tok"))
+    plan = _plan(SK.hll_registers(toks, "tok"))
     assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
     assert "partial_max" in plan, "register max must combine map-side"
     assert "Exchange SinglePartition" not in plan, (
         "register frame must stay hash-partitioned (1024 buckets)"
     )
+
+
+def test_edge_fold_is_one_aggregation_and_its_report_a_projection(
+    spark, tmp_path, monkeypatch
+):
+    """A fold onto a standing edge state writes one dataset whose plan
+    has exactly one aggregation Exchange (the read state and the delta
+    merge in one groupBy), and the report over a read state is a
+    projection: no Exchange and no join."""
+    from relation_extraction_transformer_spark.operators import (
+        incremental as INC,
+    )
+    from relation_extraction_transformer_spark.sources import tables as TB
+    from test_tables import _fold_edges
+
+    obs = spark.createDataFrame(
+        [(f"s{i % 3}", "p", f"o{i % 5}", f"https://h.example/{i}", 0.5,
+          1_700_000_000 + i) for i in range(40)],
+        "subj string, pred string, obj string, url string, prob double, "
+        "ts long",
+    )
+    state_dir = str(tmp_path / "edges")
+    _fold_edges(spark, obs.where(F.col("ts") % 2 == 0), state_dir)
+    written = []
+    real_write = TB.write_table
+
+    def recorded(df, *args, **kwargs):
+        written.append(_plan(df))
+        return real_write(df, *args, **kwargs)
+
+    monkeypatch.setattr(TB, "write_table", recorded)
+    s = _fold_edges(spark, obs.where(F.col("ts") % 2 == 1), state_dir)
+    assert len(written) == 1, "one dataset per edge version"
+    exchanges = [
+        line for line in written[0].splitlines()
+        if "Exchange hashpartitioning" in line
+    ]
+    assert len(exchanges) == 1, exchanges
+
+    state = INC.read_edge_state(
+        spark, os.path.join(state_dir, f"v{s['state_version']}"))
+    report = _plan(INC.edge_report(state))
+    assert "Exchange" not in report and "Join" not in report, report
 
 
 def test_cms_plan_is_jvm_side_with_partial_aggregation(spark):

@@ -1,7 +1,9 @@
 """HyperLogLog sketch tests: exact register parity vs a pure-Python
 oracle, the merge property, partition independence, and accuracy bounds.
-The merge and estimate laws run with no key (the global sketch) and with
-one key column, since both are the one keyed implementation.
+Each law runs on both stored forms: with no key on the row form (the
+global sketch) and with one key on the packed form (one sorted
+``regs`` array per group, built and merged inside the group's one
+groupBy).
 """
 
 import hashlib
@@ -11,6 +13,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from relation_extraction_transformer_spark.functions import sketches as SK
+from relation_extraction_transformer_spark.functions.minhash import stable_id
 
 
 def _py_registers(values):
@@ -56,30 +59,62 @@ def _groups(n, keys):
     return out
 
 
+def _packed_merge(sketches):
+    """Merge per-group packed sketches ``(grp, regs)`` in one groupBy."""
+    return (
+        sketches.groupBy("grp")
+        .agg(SK.hll_union("regs").alias("regs"))
+        .withColumn("regs", SK.hll_reduce("regs"))
+    )
+
+
+def _packed(df):
+    """Per-group packed sketch of ``tok``: the merge of one-value
+    sketches, as the edge state builds its url sketch."""
+    return _packed_merge(
+        df.select("grp", stable_id(F.col("tok")).alias("h")).select(
+            "grp", F.array(SK.hll_code("h")).alias("regs")
+        )
+    )
+
+
+def _sketch(df, keys):
+    """Comparable rows of the sketch of ``tok``: ``(bucket, rho)`` of the
+    row form with no key; ``(grp, regs)`` of the packed form with one."""
+    if not keys:
+        return sorted(map(tuple, SK.hll_registers(df, "tok").collect()))
+    return sorted((r.grp, tuple(r.regs)) for r in _packed(df).collect())
+
+
+def _decoded(regs):
+    """A packed array as ``{bucket: rho}``; each bucket appears once."""
+    out = {c // SK._CODE_RHO: c % SK._CODE_RHO for c in regs}
+    assert len(out) == len(regs) and list(regs) == sorted(regs), regs
+    return out
+
+
 KEYS = pytest.mark.parametrize(
     "keys", [[], ["grp"]], ids=["no_key", "one_key"]
 )
 
 
 def test_registers_match_python_oracle(spark):
+    """Both forms hold exactly the oracle's registers: the row form for
+    all tokens, the packed form for each group."""
     df = _toks(spark, 3000)
-    got = {
-        r.bucket: r.rho
-        for r in SK.hll_registers_by(df, [], "tok").collect()
-    }
-    want = _py_registers([f"tok{i}" for i in range(3000)])
-    assert got == want
+    got = {r.bucket: r.rho for r in SK.hll_registers(df, "tok").collect()}
+    assert got == _py_registers([f"tok{i}" for i in range(3000)])
+    packed = {r.grp: _decoded(r.regs) for r in _packed(df).collect()}
+    groups = _groups(3000, ["grp"])
+    assert packed == {g: _py_registers(v) for (g,), v in groups.items()}
 
 
 def test_registers_partition_independent(spark):
     df = _toks(spark, 2000)
-    a = sorted(
-        map(tuple, SK.hll_registers_by(df.repartition(1), [], "tok").collect())
-    )
-    b = sorted(
-        map(tuple, SK.hll_registers_by(df.repartition(7), [], "tok").collect())
-    )
-    assert a == b
+    for keys in ([], ["grp"]):
+        assert _sketch(df.repartition(1), keys) == _sketch(
+            df.repartition(7), keys
+        )
 
 
 @KEYS
@@ -90,15 +125,16 @@ def test_merge_equals_union_sketch(spark, keys):
     a = _toks(spark, 1500)                       # tok0..tok1499
     b = _toks(spark, 2500).filter(F.col("tok") >= F.lit("tok1"))
     union = a.unionAll(b).distinct()
-    merged = SK.hll_merge(
-        keys,
-        SK.hll_registers_by(a, keys, "tok"),
-        SK.hll_registers_by(b, keys, "tok"),
-    )
-    direct = SK.hll_registers_by(union, keys, "tok")
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, direct.collect())
-    )
+    if not keys:
+        merged = sorted(map(tuple, SK.hll_merge(
+            SK.hll_registers(a, "tok"), SK.hll_registers(b, "tok"),
+        ).collect()))
+    else:
+        merged = sorted(
+            (r.grp, tuple(r.regs))
+            for r in _packed_merge(_packed(a).unionAll(_packed(b))).collect()
+        )
+    assert merged == _sketch(union, keys)
 
 
 @KEYS
@@ -108,11 +144,20 @@ def test_estimate_matches_python_and_is_accurate(spark, keys):
     3.25% -> <10%) at both the linear-counting and HLL regimes.  On
     empty input the global sketch is still one row, estimate 0.0."""
     for n in (0, 150, 800, 6000):
-        regs = SK.hll_registers_by(_toks(spark, n), keys, "tok")
-        got = {
-            tuple(r[k] for k in keys): r.est_hll
-            for r in SK.hll_estimate_by(regs, keys).collect()
-        }
+        df = _toks(spark, n)
+        if not keys:
+            got = {
+                (): r.est_hll
+                for r in SK.hll_estimate(
+                    SK.hll_registers(df, "tok")).collect()
+            }
+        else:
+            got = {
+                (r.grp,): r.est_hll
+                for r in _packed(df).select(
+                    "grp", SK.hll_estimate_regs("regs").alias("est_hll")
+                ).collect()
+            }
         groups = _groups(n, keys)
         assert set(got) == set(groups), (n, sorted(got))
         for g, vals in groups.items():
@@ -123,14 +168,13 @@ def test_estimate_matches_python_and_is_accurate(spark, keys):
 
 def test_duplicates_do_not_move_estimate(spark):
     """Cardinality, not count: replicating every value 20x leaves the
-    registers (and so the estimate) identical."""
+    registers (and so the estimate) identical, in both forms."""
     df = _toks(spark, 1000)
     fat = df.crossJoin(spark.range(20).select(F.lit(1).alias("_x"))).select(
-        "tok"
+        "tok", "grp"
     )
-    assert sorted(
-        map(tuple, SK.hll_registers_by(df, [], "tok").collect())
-    ) == sorted(map(tuple, SK.hll_registers_by(fat, [], "tok").collect()))
+    for keys in ([], ["grp"]):
+        assert _sketch(df, keys) == _sketch(fat, keys)
 
 
 # Count-min sketch ----------------------------------------------------------

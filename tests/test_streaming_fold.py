@@ -290,7 +290,11 @@ def test_crash_before_commit_does_not_swallow_next_delta(
     assert os.listdir(state_dir) == ["v1"], "staging directory left behind"
 
     s = INC.fold_pages_delta(spark, d2, state_dir)
-    assert s == {"state_version": 2, "bootstrap": False, "replayed": False}
+    v2_bytes = sum(map(len, _tree(f"{state_dir}/v2").values()))
+    assert s == {
+        "state_version": 2, "bootstrap": False, "replayed": False,
+        "version_bytes": v2_bytes,
+    }
     # exact integer law: the new version is the old one plus the delta
     assert _n_obs(spark, state_dir, 2) == (
         _n_obs(spark, state_dir, 1) + _obs(spark, d2).count()
